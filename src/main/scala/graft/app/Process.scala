@@ -38,7 +38,15 @@ object Process {
   }
 
   /** The whole per-upload lifecycle, session provided by the caller
-    * (so tests can drive it on the shared session). */
+    * (so tests can drive it on the shared session).
+    *
+    * Each upload parses its raw document once and computes its refined
+    * frame once: the parsed, corrupt-filtered document is persisted for
+    * every sink that derives from it (released in `finally`, also when
+    * a sink throws), and the refined frame is materialized with
+    * `localCheckpoint`, which keeps its coalesced partitioning, so its
+    * JSON sink and its zone table read one result. The report lines
+    * print the row counts the JSON sinks wrote instead of re-counting. */
   def run(spark: org.apache.spark.sql.SparkSession, domain: String,
       rawFile: String, root: String): Unit = {
     import org.apache.spark.sql.functions.col
@@ -54,38 +62,41 @@ object Process {
     val raw0 = lake.readJsonArray(rawFile,
       graft.schema.DomainSchemas.byName.get(domain))
     val raw =
-      if (raw0.columns.contains("_corrupt_record"))
+      (if (raw0.columns.contains("_corrupt_record"))
         raw0.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
-      else raw0
-    val frames = Normalize.unwrap(raw)
-    // parking's dynamic-key slots struct flattens via the map coercion,
-    // not the generic detection explode
-    val flat =
-      if (domain == "parking") Sessionization.explodeSlots(frames)
-      else Normalize.flatten(cfg)(raw)
+      else raw0).persist()
+    try {
+      val frames = Normalize.unwrap(raw)
+      // parking's dynamic-key slots struct flattens via the map coercion,
+      // not the generic detection explode
+      val flat =
+        if (domain == "parking") Sessionization.explodeSlots(frames)
+        else Normalize.flatten(cfg)(raw)
 
-    // processed zone: parity JSON + scale-path parquet
-    val grouped =
-      if (domain == "parking") frames
-      else {
-        val detectionFields = flat.columns.filterNot(c =>
-          cfg.frameCols.contains(c) || c == "_empty_frame").toSeq
-        Normalize.regroupByFrame(cfg, detectionFields)(flat)
+      // processed zone: parity JSON + scale-path parquet
+      val grouped =
+        if (domain == "parking") frames
+        else {
+          val detectionFields = flat.columns.filterNot(c =>
+            cfg.frameCols.contains(c) || c == "_empty_frame").toSeq
+          Normalize.regroupByFrame(cfg, detectionFields)(flat)
+        }
+      val framesWritten = lake.writeWrappedJson(grouped, "frame_detections",
+        s"${lake.zonePath("processed", domain)}/preprocessed_$fileName")
+      lake.writeZoneTable(flat.drop("_empty_frame"), "processed", domain, fileName)
+
+      // refine zone: per-entity records
+      enrichFor(domain, flat, frames).foreach { enriched =>
+        val refined = enriched.localCheckpoint()
+        val entities = lake.writeJsonArray(refined,
+          s"${lake.zonePath("refine", domain)}/refine_$fileName")
+        lake.writeZoneTable(refined, "refine", domain, fileName)
+        if (domain == "parking")
+          lake.writeJsonArray(Sessionization.configSummary(flat),
+            s"${lake.zonePath("refine", domain)}/parking_config_$fileName")
+        println(s"[graft] $domain: $entities refined entities")
       }
-    lake.writeWrappedJson(grouped, "frame_detections",
-      s"${lake.zonePath("processed", domain)}/preprocessed_$fileName")
-    lake.writeZoneTable(flat.drop("_empty_frame"), "processed", domain, fileName)
-
-    // refine zone: per-entity records
-    enrichFor(domain, flat, frames).foreach { refined =>
-      lake.writeJsonArray(refined,
-        s"${lake.zonePath("refine", domain)}/refine_$fileName")
-      lake.writeZoneTable(refined, "refine", domain, fileName)
-      if (domain == "parking")
-        lake.writeJsonArray(Sessionization.configSummary(flat),
-          s"${lake.zonePath("refine", domain)}/parking_config_$fileName")
-      println(s"[graft] $domain: ${refined.count()} refined entities")
-    }
-    println(s"[graft] $domain: ${grouped.count()} frames processed")
+      println(s"[graft] $domain: $framesWritten frames processed")
+    } finally raw.unpersist()
   }
 }

@@ -45,25 +45,29 @@ final case class Lake(spark: SparkSession, root: String) {
 
   /** S2: write a DataFrame as a single pretty JSON array object —
     * parity with `minio_connector.py:45-80` (small per-video documents
-    * only; the reference collects these too). */
-  def writeJsonArray(df: DataFrame, path: String): Unit = {
+    * only; the reference collects these too). Returns the number of
+    * rows written, so callers need no separate `count()` job. */
+  def writeJsonArray(df: DataFrame, path: String): Int = {
     val rows = df.toJSON.collect()
     val body = rows.mkString("[\n", ",\n", "\n]")
     val p = Paths.get(path)
     Files.createDirectories(p.getParent)
     Files.write(p, body.getBytes("UTF-8"),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    rows.length
   }
 
   /** S3: wrapped-JSON sink — rows under a top-level key
-    * (`minio_connector.py:82-112`). */
-  def writeWrappedJson(df: DataFrame, key: String, path: String): Unit = {
+    * (`minio_connector.py:82-112`). Returns the number of rows
+    * written. */
+  def writeWrappedJson(df: DataFrame, key: String, path: String): Int = {
     val rows = df.toJSON.collect()
     val body = rows.mkString(s"""{"$key": [""" + "\n", ",\n", "\n]}")
     val p = Paths.get(path)
     Files.createDirectories(p.getParent)
     Files.write(p, body.getBytes("UTF-8"),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    rows.length
   }
 
   /** Scale path: append to the partitioned parquet zone table. */

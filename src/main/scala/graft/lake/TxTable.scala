@@ -19,19 +19,24 @@ import scala.jdk.CollectionConverters._
   *   root/_log/v00000000000000000042.txt   one manifest per version:
   *                                         the COMPLETE relative file
   *                                         list of that snapshot
+  *   root/_log/.pending-<uuid>             a manifest body being
+  *                                         published (transient)
   *   root/data/<uuid>.parquet              immutable data files
   * }}}
   *
   * Commit protocol: read the latest version's file list, write new data
-  * files (invisible until committed), then publish manifest `v(N+1)`
-  * with CREATE_NEW — an atomic create-if-absent, so exactly one of two
-  * racing writers wins; the loser re-reads the new latest and retries
-  * against it. Compaction retries re-base on the current list, so rows
-  * appended DURING a compaction survive it (the concurrent-write spec
-  * drives exactly that interleaving). Readers always see a complete
-  * committed snapshot — never a half-written directory.
+  * files (invisible until committed), write the manifest body to a
+  * private temp file in `_log` (a `.`-prefixed name no reader lists),
+  * then publish it as `v(N+1)` with a hard link — an atomic
+  * create-if-absent, so exactly one of two racing writers wins and no
+  * reader ever sees a partly written manifest; the loser re-reads the
+  * new latest and retries against it. Compaction retries re-base on
+  * the current list, so rows appended DURING a compaction survive it
+  * (the concurrent-write spec drives exactly that interleaving).
+  * Readers always see a complete committed snapshot — never a
+  * half-written directory.
   *
-  * On a real object store CREATE_NEW needs a conditional-put (S3
+  * On a real object store the link needs a conditional-put (S3
   * If-None-Match) or a lock service — precisely the part Delta's
   * LogStore / an Iceberg catalog abstracts; swap this class for one of
   * them when the jars are available. Replaced files are not deleted at
@@ -99,6 +104,10 @@ final case class TxTable(spark: SparkSession, root: String) {
 
   private def manifestPath(v: Long): Path =
     logDir.resolve(f"v$v%020d.txt")
+
+  /** Prefix of a manifest body written but not yet linked into place;
+    * `manifestVersions` skips it, `vacuum` reclaims stranded ones. */
+  private val TempManifestPrefix = ".pending-"
 
   // manifest lines starting with '#' are annotations (e.g. the
   // streaming batch marker), not data files
@@ -324,12 +333,14 @@ final case class TxTable(spark: SparkSession, root: String) {
       val pin = evolveSchema(cur.flatMap(c => pinnedSchemaOf(c.version)))
       val schemaLine = pin.map(s => s"#schema=${s.json}").toSeq
       val body = (schemaLine ++ annotations ++ files).mkString("\n").getBytes("UTF-8")
+      val tmp = logDir.resolve(s"$TempManifestPrefix${UUID.randomUUID()}")
+      Files.write(tmp, body, StandardOpenOption.CREATE_NEW)
       try {
-        Files.write(manifestPath(v), body, StandardOpenOption.CREATE_NEW)
+        Files.createLink(manifestPath(v), tmp)
         return Some(v)
       } catch {
         case _: java.nio.file.FileAlreadyExistsException => attempts += 1
-      }
+      } finally Files.delete(tmp)
     }
     throw new IllegalStateException(
       s"tx commit lost ${64} races at $root — livelocked writers?")
@@ -790,6 +801,8 @@ final case class TxTable(spark: SparkSession, root: String) {
     * Superseded MANIFESTS are kept: they are tiny, they carry the
     * streaming batch markers idempotency depends on, and they are what
     * lets the first rule distinguish "replaced" from "in flight".
+    * Temp manifest bodies a crashed commit stranded in `_log` are
+    * removed under the same age rule as unreferenced data files.
     * Returns the number of data files reclaimed. */
   def vacuum(retention: java.time.Duration =
       java.time.Duration.ofMinutes(15)): Int = {
@@ -809,6 +822,13 @@ final case class TxTable(spark: SparkSession, root: String) {
           Files.getLastModifiedTime(p).toMillis < cutoff)
     }
     dead.foreach(Files.delete)
+    val l = Files.list(logDir)
+    // a live commit deletes its own temp file, possibly mid-listing
+    try l.iterator().asScala.filter { p =>
+      p.getFileName.toString.startsWith(TempManifestPrefix) &&
+        scala.util.Try(Files.getLastModifiedTime(p).toMillis).toOption.exists(_ < cutoff)
+    }.toSeq.foreach(p => Files.deleteIfExists(p))
+    finally l.close()
     dead.size
   }
 }

@@ -62,6 +62,58 @@ class TxTableSpec extends SparkSpec {
     assert(t.latest().get.version == 7L) // 8 commits, each its own version
   }
 
+  test("racing idempotent batches all land: no reader sees a torn manifest") {
+    val t = freshTable()
+    val pool = Executors.newFixedThreadPool(4)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val start = new CountDownLatch(1)
+    val done = new CountDownLatch(4)
+    (0 until 4).foreach { w =>
+      pool.submit(new Runnable {
+        def run(): Unit = {
+          start.await()
+          try (0 until 25).foreach { i =>
+            val id = w * 25L + i
+            // a Bloom column makes every manifest entry ~2 KB, so a
+            // manifest is written in several chunks a reader could split
+            t.appendBatchIdempotent(Seq((id, s"b$id")).toDF("id", "s"), batchId = id,
+              bloomCols = Seq("id"))
+          } catch { case e: Throwable => failures.add(e) }
+          finally done.countDown()
+        }
+      })
+    }
+    start.countDown()
+    assert(done.await(600, TimeUnit.SECONDS), "writers timed out")
+    pool.shutdown()
+    assert(failures.isEmpty, s"writer failed: ${failures.peek()}")
+    val lost = (0L until 100L).toSet -- t.read().collect().map(_.getLong(0))
+    assert(lost.isEmpty, s"rows lost: ${lost.toSeq.sorted}")
+    assert(t.read().count() == 100)
+    assert(t.committedBatches() == (0L until 100L).toSet)
+    assert(t.latest().get.version == 99L)
+  }
+
+  test("a stranded temp manifest is invisible to readers and vacuumed") {
+    val t = freshTable()
+    t.appendBatchIdempotent(Seq((1L, "a")).toDF("id", "s"), batchId = 1L)
+    // a commit that died between writing its body and linking it
+    val tmp = java.nio.file.Paths.get(t.root, "_log", ".pending-crashed")
+    Files.writeString(tmp, "#batch=2\ndata/none.parquet")
+    assert(t.latest().get.version == 0L)
+    assert(t.committedBatches() == Set(1L))
+    assert(t.read().count() == 1)
+    assert(t.vacuum() == 0)
+    assert(Files.exists(tmp), "a young temp manifest may be a live commit's")
+    Files.setLastModifiedTime(tmp, java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 3600_000L))
+    t.vacuum()
+    assert(!Files.exists(tmp))
+    assert(t.appendBatchIdempotent(Seq((2L, "b")).toDF("id", "s"), batchId = 2L)
+      .contains(1L))
+    assert(t.read().count() == 2)
+  }
+
   test("vacuum reclaims replaced files; the live snapshot is untouched") {
     val t = freshTable()
     (1 to 3).foreach(i => t.append(Seq((i.toLong, s"f$i")).toDF("id", "s")))
