@@ -2,10 +2,14 @@ package graft.lake
 
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.util.UUID
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.util.CollectionAccumulator
 import scala.jdk.CollectionConverters._
+import TxTable.{PartFileName, PartStats}
 
 /** Transactional zone table: a minimal versioned-manifest log over
   * parquet, the mechanism Delta/Iceberg provide in full (BASELINE.json
@@ -21,6 +25,9 @@ import scala.jdk.CollectionConverters._
   *                                         list of that snapshot
   *   root/_log/.pending-<uuid>             a manifest body being
   *                                         published (transient)
+  *   root/_staging/<uuid>/                 one stage's write output
+  *                                         (transient; removed when
+  *                                         the stage ends, either way)
   *   root/data/<uuid>.parquet              immutable data files
   * }}}
   *
@@ -47,6 +54,7 @@ final case class TxTable(spark: SparkSession, root: String) {
 
   private val logDir: Path = Paths.get(root, "_log")
   private val dataDir: Path = Paths.get(root, "data")
+  private val stagingDir: Path = Paths.get(root, "_staging")
 
   /** `files` holds manifest ENTRIES: a relative file name, optionally
     * followed by TAB and per-file column stats (`col=min..max;…`) —
@@ -230,10 +238,21 @@ final case class TxTable(spark: SparkSession, root: String) {
     *
     * `statsCols` names integral columns whose per-file [min,max] is
     * recorded in the entry — the file-skipping index Delta keeps in
-    * its checkpoint stats / Iceberg in manifest metrics. Stats for ALL
-    * staged files come from ONE aggregate keyed by `input_file_name()`
-    * (a metadata-sized job, like Delta's stats collection); at object-
-    * store scale the same numbers come straight from parquet footers. */
+    * its checkpoint stats / Iceberg in manifest metrics; `bloomCols`
+    * get a per-file Bloom bitmap. Both are computed INSIDE the task
+    * that writes the file, as Delta collects stats while writing: the
+    * stats inputs ride along as trailing columns (the same expressions
+    * the probe side uses), each partition folds them as its rows stream
+    * to the writer and reports the result once, and the trailing
+    * columns never reach the file. A part file maps to its partition
+    * through Spark's `part-NNNNN-` name, so staging with stats is the
+    * write job alone. A partition with no rows reports nothing and its
+    * schema-only file is dropped: it adds no rows, and a stats-less
+    * entry would defeat skipping forever.
+    *
+    * The write goes to `_staging/<uuid>` under the table root, so the
+    * move into `data/` is a same-filesystem rename; the staging
+    * directory is removed whether or not the write succeeds. */
   private def stage(df: DataFrame, statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil, bloomBits: Int = 8192): Seq[String] = {
     // the bitmap is Long words: a non-multiple-of-64 size would truncate
@@ -243,64 +262,65 @@ final case class TxTable(spark: SparkSession, root: String) {
     require(bloomCols.isEmpty || (bloomBits > 0 && bloomBits % 64 == 0),
       s"bloomBits must be a positive multiple of 64, got $bloomBits")
     Files.createDirectories(dataDir)
-    val scratch =
-      Files.createTempDirectory("graft-tx-stage").resolve("out").toString
-    df.write.parquet(scratch)
-    val s = Files.list(Paths.get(scratch))
-    val parts =
-      try s.iterator().asScala.toSeq.filter(_.getFileName.toString.endsWith(".parquet"))
-      finally s.close()
-    val statsByScratchName: Map[String, String] =
-      if ((statsCols.isEmpty && bloomCols.isEmpty) || parts.isEmpty) Map.empty
-      else {
-        val aggs = statsCols.flatMap(c => Seq(
-          min(col(c).cast("long")).as(s"min_$c"),
-          max(col(c).cast("long")).as(s"max_$c"))) ++
-          // set-bit POSITIONS per file (≤ bits, usually far fewer) —
-          // the bitmap assembles driver-side; a giant per-word CASE
-          // aggregate would bloat codegen for no gain at metadata size
-          bloomCols.flatMap(c => bloomSeeds.map(seed =>
-            collect_set(bloomPos(col(c), seed, bloomBits))
-              .as(s"bloom_${c}_$seed")))
-        spark.read.parquet(scratch)
-          .groupBy(input_file_name().as("_file"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect() // one row per staged file — metadata, not data
-          .map { r =>
-            val fname = r.getAs[String]("_file").split('/').last
-            val rangeToks = statsCols.flatMap { c =>
-              (Option(r.getAs[Any](s"min_$c")), Option(r.getAs[Any](s"max_$c"))) match {
-                case (Some(lo), Some(hi)) => Some(s"$c=$lo..$hi")
-                case _ => None // all-null column in this file: no stat
-              }
-            }
-            val bloomToks = bloomCols.map { c =>
-              val words = new Array[Long](bloomBits / 64)
-              bloomSeeds.foreach { seed =>
-                r.getAs[collection.Seq[Long]](s"bloom_${c}_$seed").foreach { p =>
-                  words(p.toInt / 64) |= 1L << (p.toInt % 64)
-                }
-              }
-              s"$c~$BloomHashVersion~" + words.map(w => f"$w%016x").mkString
-            }
-            fname -> (rangeToks ++ bloomToks).mkString(";")
-          }.toMap
+    val scratch = stagingDir.resolve(UUID.randomUUID().toString)
+    try {
+      val statsByPartition =
+        if (statsCols.isEmpty && bloomCols.isEmpty) {
+          df.write.parquet(scratch.toString)
+          None
+        } else Some(writeWithStats(df, scratch.toString, statsCols, bloomCols, bloomBits))
+      val s = Files.list(scratch)
+      val parts =
+        try s.iterator().asScala.toSeq.filter(_.getFileName.toString.endsWith(".parquet"))
+        finally s.close()
+      // every name is resolved before any file moves: a file that
+      // cannot be matched to its partition fails the stage, never
+      // commits without stats
+      val keep = statsByPartition match {
+        case None => parts.map(_ -> "")
+        case Some(stats) => parts.flatMap(p => stats.get(partitionOf(p)).map(p -> _))
       }
-    // when stats ran, a part file absent from the aggregate has ZERO
-    // rows (an empty partition's schema-only file) — committing it
-    // would add a stats-less entry that defeats skipping forever;
-    // an empty file adds nothing to the table, so drop it
-    val keep =
-      if (statsCols.isEmpty && bloomCols.isEmpty) parts
-      else parts.filter(p => statsByScratchName.contains(p.getFileName.toString))
-    keep.map { p =>
-      val name = s"${UUID.randomUUID()}.parquet"
-      Files.move(p, dataDir.resolve(name))
-      statsByScratchName.get(p.getFileName.toString).filter(_.nonEmpty) match {
-        case Some(stat) => s"$name\t$stat"
-        case None => name
+      keep.map { case (p, stat) =>
+        val name = s"${UUID.randomUUID()}.parquet"
+        Files.move(p, dataDir.resolve(name))
+        if (stat.nonEmpty) s"$name\t$stat" else name
       }
-    }
+    } finally FileUtils.deleteDirectory(scratch.toFile)
+  }
+
+  /** Writes `df` to `out` as parquet and returns each non-empty
+    * partition's entry stats string, keyed by partition id, from the
+    * write job itself. Only a result task's first successful attempt
+    * merges into the accumulator; the map keeps one entry per partition
+    * regardless. */
+  private def writeWithStats(df: DataFrame, out: String, statsCols: Seq[String],
+      bloomCols: Seq[String], bloomBits: Int): Map[Int, String] = {
+    val inputs = statsCols.map(c => col(c).cast("long")) ++
+      bloomCols.flatMap(c => bloomSeeds.map(seed => bloomPos(col(c), seed, bloomBits)))
+    val withInputs = df.select(col("*") +: inputs.zipWithIndex.map {
+      case (e, i) => e.as(s"_tx_stat_$i")
+    }: _*)
+    val acc = spark.sparkContext.collectionAccumulator[PartStats]("tx stage stats")
+    val fold = TxTable.foldStats(df.schema.length, statsCols.length,
+      bloomCols.length, bloomSeeds.length, bloomBits, acc)
+    withInputs.mapPartitions(fold)(Encoders.row(df.schema)).write.parquet(out)
+    acc.value.asScala.map { p =>
+      val rangeToks = statsCols.indices.collect {
+        case i if p.lo(i) <= p.hi(i) => s"${statsCols(i)}=${p.lo(i)}..${p.hi(i)}"
+      } // an all-null column in this file gets no range token
+      val bloomToks = bloomCols.indices.map { i =>
+        s"${bloomCols(i)}~$BloomHashVersion~" + p.blooms(i).map(w => f"$w%016x").mkString
+      }
+      p.partition -> (rangeToks ++ bloomToks).mkString(";")
+    }.toMap
+  }
+
+  /** Partition id of a Spark part file (`part-00003-<job>-c000...`). */
+  private def partitionOf(p: Path): Int = {
+    val name = p.getFileName.toString
+    PartFileName.findPrefixMatchOf(name).map(_.group(1).toInt).getOrElse(
+      throw new IllegalStateException(
+        s"staged file $name at $root does not name its partition; cannot record its stats"))
   }
 
   /** Publish a successor of whatever version is current, transforming
@@ -351,21 +371,32 @@ final case class TxTable(spark: SparkSession, root: String) {
     staged.foreach(e => Files.deleteIfExists(dataPath(e)))
 
   /** Streaming-batch ids already committed (from manifest annotations). */
-  def committedBatches(): Set[Long] =
-    manifestVersions().flatMap { v =>
+  def committedBatches(): Set[Long] = batchesAfter(-1L)._1
+
+  /** Batch ids recorded in manifests newer than version `after`, and
+    * the highest version read (`after` when none is newer) — published
+    * manifests never change, so a caller that has scanned up to a
+    * version need only read past it. */
+  private def batchesAfter(after: Long): (Set[Long], Long) = {
+    val vs = manifestVersions().filter(_ > after)
+    val ids = vs.flatMap { v =>
       Files.readAllLines(manifestPath(v)).asScala
         .filter(_.startsWith("#batch="))
         .map(_.stripPrefix("#batch=").toLong)
     }.toSet
+    (ids, (after +: vs).max)
+  }
 
   /** Idempotent streaming commit: `foreachBatch` delivers each batch
     * at-least-once, so the batch id is recorded as an annotation INSIDE
     * the same atomic manifest as its files — a redelivered batch finds
     * its marker and commits nothing (the exactly-once trick Delta's
     * txnAppId/txnVersion provides). The marker scan walks the small
-    * per-version manifests; a production table keeps a side index.
-    * Returns the committed version, or None when the batch was already
-    * in the log.
+    * per-version manifests once per commit: the up-front check reads
+    * every manifest and remembers the highest version it read, and each
+    * in-loop re-check reads only manifests published since; a
+    * production table keeps a side index. Returns the committed
+    * version, or None when the batch was already in the log.
     *
     * The marker is validated INSIDE the commit retry loop, not just
     * up front: two writers replaying the same batch (driver failover
@@ -378,14 +409,18 @@ final case class TxTable(spark: SparkSession, root: String) {
       beforeCommit: () => Unit = () => (),
       statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil): Option[Long] = {
-    if (committedBatches().contains(batchId)) return None // cheap fast-path
+    val (seen, upTo) = batchesAfter(-1L)
+    if (seen.contains(batchId)) return None // cheap fast-path
+    var scanned = upTo
     val staged = stage(df, statsCols, bloomCols)
     beforeCommit()
     val v = guardStaged(staged) {
       commit(
-        cur =>
-          if (committedBatches().contains(batchId)) None
-          else Some(cur ++ staged),
+        cur => {
+          val (newer, last) = batchesAfter(scanned)
+          scanned = last
+          if (newer.contains(batchId)) None else Some(cur ++ staged)
+        },
         Seq(s"#batch=$batchId"),
         evolveSchema = appendEvolution(df.schema))
     }
@@ -830,5 +865,64 @@ final case class TxTable(spark: SparkSession, root: String) {
     }.toSeq.foreach(p => Files.deleteIfExists(p))
     finally l.close()
     dead.size
+  }
+}
+
+object TxTable {
+
+  /** What one write task folded from its partition's stats inputs:
+    * per stats column the [lo, hi] of its non-null values (lo > hi when
+    * every value was null), and per Bloom column the bitmap words. */
+  private final case class PartStats(partition: Int, lo: Array[Long],
+      hi: Array[Long], blooms: Array[Array[Long]])
+
+  /** Spark names each output file after the task's partition id. */
+  private val PartFileName = "^part-(\\d+)-".r
+
+  /** Per-partition pass of a stats-collecting write. Each input row is
+    * `width` data columns followed by `nStats` long stats inputs and
+    * `nBloom * k` Bloom positions in [0, bits); the pass emits the data
+    * columns only and, once its rows are exhausted, reports the folded
+    * [[PartStats]] to `acc` — nothing for a partition with no rows. */
+  private def foldStats(width: Int, nStats: Int, nBloom: Int, k: Int,
+      bits: Int, acc: CollectionAccumulator[PartStats])
+      : Iterator[Row] => Iterator[Row] = rows => new Iterator[Row] {
+    private val lo = Array.fill(nStats)(Long.MaxValue)
+    private val hi = Array.fill(nStats)(Long.MinValue)
+    private val blooms = Array.fill(nBloom)(new Array[Long](bits / 64))
+    private var any = false
+    private var reported = false
+
+    def hasNext: Boolean = {
+      val more = rows.hasNext
+      if (!more && any && !reported) {
+        reported = true
+        acc.add(PartStats(TaskContext.getPartitionId(), lo, hi, blooms))
+      }
+      more
+    }
+
+    def next(): Row = {
+      val r = rows.next()
+      any = true
+      var i = 0
+      while (i < nStats) {
+        if (!r.isNullAt(width + i)) {
+          val v = r.getLong(width + i)
+          if (v < lo(i)) lo(i) = v
+          if (v > hi(i)) hi(i) = v
+        }
+        i += 1
+      }
+      // never null: xxhash64 of a null key is its seed, so null keys
+      // set the seed positions, as the probe side expects
+      var j = 0
+      while (j < nBloom * k) {
+        val p = r.getLong(width + nStats + j).toInt
+        blooms(j / k)(p / 64) |= 1L << (p % 64)
+        j += 1
+      }
+      Row.fromSeq(r.toSeq.take(width))
+    }
   }
 }

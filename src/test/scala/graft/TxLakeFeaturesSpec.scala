@@ -1,17 +1,16 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.lake.{Lake, TxTable}
 import graft.functions.ZOrder
 
 /** Round-5 table-format features: per-file stats + data skipping,
   * copy-on-write MERGE, row-level CDC, Z-order clustering. */
-class TxLakeFeaturesSpec extends SparkSpec {
+class TxLakeFeaturesSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def freshTable(): TxTable =
-    Lake(spark, Files.createTempDirectory("graft-tx5").toString)
+    Lake(spark, tempDir("graft-tx5").toString)
       .txTable("refine", "vehicle")
 
   private def kv(pairs: (Long, String)*) = pairs.toDF("k", "s")

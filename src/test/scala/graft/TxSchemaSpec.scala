@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.lake.{Lake, TxTable}
 
@@ -9,11 +8,11 @@ import graft.lake.{Lake, TxTable}
   * append-conflict rules, canonical Bloom hashing, and delete()'s
   * non-integral-key safety — each spec drives the failure the fix
   * closes. */
-class TxSchemaSpec extends SparkSpec {
+class TxSchemaSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def freshTable(): TxTable =
-    Lake(spark, Files.createTempDirectory("graft-tx6").toString)
+    Lake(spark, tempDir("graft-tx6").toString)
       .txTable("refine", "vehicle")
 
   private def kv(pairs: (Long, String)*) = pairs.toDF("k", "s")
