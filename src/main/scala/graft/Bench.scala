@@ -54,53 +54,13 @@ object Bench {
     val subset = sys.env.get("SPARK_GRAFT_BENCH_SUBSET")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty) // set-but-empty means the full suite
-    // explicit query-name -> standing-index registry: each serving
-    // query pre-builds EXACTLY the index it reads, so subset runs pay
-    // only the warm-ups they need (at x100 the five builds cost ~10
-    // min — the r9 substring-only investigation paid them for nothing
-    // under the old substring matching) and a future serving query
-    // that is missing from this map fails LOUDLY in review, not by
-    // silently folding its index build into its timed number. The
+    // each serving query pre-builds exactly the standing index it
+    // reads (IndexCatalog), so subset runs pay only the warm-ups they
+    // need and no timed serving row folds its index build in. The
     // sim_*_build / text_fts_build queries own the build costs as
     // their own timed entries.
-    val fts = graft.operators.TextAnalysis.ensureFts _
-    val ivf = graft.operators.Similarity.ensureIvf _
-    val ivfSqrt = graft.operators.Similarity.ensureIvfSqrt _
-    val ivfSq8 = graft.operators.Similarity.ensureIvfSq8 _
-    val ivfSample = graft.operators.Similarity.ensureIvfSample _
-    val ivfSq8Smp = graft.operators.Similarity.ensureIvfSq8Sample _
-    val ivfPq = graft.operators.Similarity.ensureIvfPq _
-    val ivfPqSmp = graft.operators.Similarity.ensureIvfPqSample _
-    val indexOf = Map[String, (SparkSession, String) => Any](
-      "text_bm25_indexed" -> fts,
-      // stream_fts_serve builds its OWN fresh tx_fts_stream index via
-      // Scratch.fresh and never reads the standing one — no entry here
-      "sim_ann_indexed" -> ivf,
-      "sim_ann_indexed_sqrt" -> ivfSqrt,
-      "sim_ann_filtered" -> ivfSqrt,
-      "sim_ann_filtered_recall" -> ivfSqrt,
-      "sim_ann_filtered_adaptive" -> ivfSqrt,
-      "sim_ann_filtered_adaptive_recall" -> ivfSqrt,
-      "sim_ann_ivfsq8" -> ivfSq8,
-      "sim_ann_ivfsq8_recall" -> ivfSq8,
-      "sim_ann_indexed_sample" -> ivfSample,
-      "sim_ann_recall_sample" -> ivfSample,
-      "sim_ann_ivfsq8_sample" -> ivfSq8Smp,
-      "sim_ann_ivfsq8_sample_recall" -> ivfSq8Smp,
-      "sim_ann_ivfpq" -> ivfPq,
-      "sim_ann_ivfpq_recall" -> ivfPq,
-      "sim_ann_ivfpq_sample" -> ivfPqSmp,
-      "sim_ann_ivfpq_sample_recall" -> ivfPqSmp,
-      // serve-only streamed rows (r14): the seed+stream is the warmed
-      // standing state; the *_serve lifecycle rows build their own
-      "stream_ivfsq8_serve_only" -> graft.streaming.StreamIvfSq8.ensureStreamed _,
-      "stream_ivfpq_serve_only" -> graft.streaming.StreamIvfPq.ensureStreamed _,
-      "stream_fts_serve_only" -> graft.streaming.StreamFts.ensureStreamed _,
-      "stream_ivf_serve_only" -> graft.streaming.StreamIvf.ensureStreamed _)
-    indexOf.toSeq
-      .filter { case (q, _) => subset.forall(_(q)) }
-      .map(_._2).distinct
-      .foreach(build => build(spark, sfDir))
+    IndexCatalog.warm(spark, sfDir,
+      subset.getOrElse(IndexCatalog.byQuery.keySet))
     val selected = subset match {
       case Some(s) => SparkEntry.queries.filter { case (n, _) => s(n) }
       case None => SparkEntry.queries

@@ -18,7 +18,7 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   *    the executor cores (FIFO pools; fairness is not the point of a
   *    smoke, utilization is).
   *  - The standing registries ([[graft.operators.TextAnalysis.ensureFts]],
-  *    [[graft.operators.Similarity.ensureIvfSqrt]]) are warmed BEFORE
+  *    [[graft.operators.VectorIndex.ensure]]) are warmed BEFORE
   *    the clock starts and are read-only afterwards — the measured
   *    path holds no shared mutable state beyond Spark's own planner.
   *  - Queries are DISTINCT point reads (rotating term triples pulled
@@ -43,7 +43,8 @@ object ConcurrencyBench {
     val t = graft.core.Tables(spark, sfDir)
     t.documents.count(); t.embeddings.count()
     val fts = graft.operators.TextAnalysis.ensureFts(spark, sfDir)
-    graft.operators.Similarity.ensureIvfSqrt(spark, sfDir)
+    graft.operators.VectorIndex.ensure(spark, sfDir,
+      graft.operators.VectorIndex.Sqrt)
 
     // distinct term triples from the index's own term dictionary (the
     // 12 highest-df terms — guaranteed non-empty posting lists), paid

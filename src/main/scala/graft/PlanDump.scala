@@ -7,7 +7,7 @@ package graft
   *   SPARK_GRAFT_SF_DIR=... runMain graft.PlanDump <outDir> [suffix] [queryName ...]
   *
   * Writes <outDir>/<query>_<suffix>.txt. Queries that read standing
-  * indexes get their ensure-hooks run first (same map as Bench), so
+  * indexes get them built first ([[IndexCatalog]], as in Bench), so
   * the dumped plan is the serving plan, not a build-then-serve plan.
   */
 object PlanDump {
@@ -23,39 +23,9 @@ object PlanDump {
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    // same standing-index warmups Bench runs, so serving plans read
-    // the built index instead of folding the build into the plan
-    val fts = graft.operators.TextAnalysis.ensureFts _
-    val ivf = graft.operators.Similarity.ensureIvf _
-    val ivfSqrt = graft.operators.Similarity.ensureIvfSqrt _
-    val ivfSq8 = graft.operators.Similarity.ensureIvfSq8 _
-    val ivfSample = graft.operators.Similarity.ensureIvfSample _
-    val ivfSq8Smp = graft.operators.Similarity.ensureIvfSq8Sample _
-    val ivfPq = graft.operators.Similarity.ensureIvfPq _
-    val ivfPqSmp = graft.operators.Similarity.ensureIvfPqSample _
-    val indexOf = Map[String, (org.apache.spark.sql.SparkSession, String) => Any](
-      "text_bm25_indexed" -> fts,
-      "sim_ann_indexed" -> ivf,
-      "sim_ann_indexed_sqrt" -> ivfSqrt,
-      "sim_ann_filtered" -> ivfSqrt,
-      "sim_ann_filtered_recall" -> ivfSqrt,
-      "sim_ann_filtered_adaptive" -> ivfSqrt,
-      "sim_ann_filtered_adaptive_recall" -> ivfSqrt,
-      "sim_ann_ivfsq8" -> ivfSq8,
-      "sim_ann_ivfsq8_recall" -> ivfSq8,
-      "sim_ann_indexed_sample" -> ivfSample,
-      "sim_ann_recall_sample" -> ivfSample,
-      "sim_ann_ivfsq8_sample" -> ivfSq8Smp,
-      "sim_ann_ivfsq8_sample_recall" -> ivfSq8Smp,
-      "sim_ann_ivfpq" -> ivfPq,
-      "sim_ann_ivfpq_recall" -> ivfPq,
-      "sim_ann_ivfpq_sample" -> ivfPqSmp,
-      "sim_ann_ivfpq_sample_recall" -> ivfPqSmp,
-      "stream_ivfsq8_serve_only" -> graft.streaming.StreamIvfSq8.ensureStreamed _,
-      "stream_ivfpq_serve_only" -> graft.streaming.StreamIvfPq.ensureStreamed _,
-      "stream_fts_serve_only" -> graft.streaming.StreamFts.ensureStreamed _,
-      "stream_ivf_serve_only" -> graft.streaming.StreamIvf.ensureStreamed _)
-    names.flatMap(indexOf.get).distinct.foreach(b => b(spark, sfDir))
+    // the warm-ups Bench runs, so serving plans read the built index
+    // instead of folding the build into the plan
+    IndexCatalog.warm(spark, sfDir, names)
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => System.err.println(s"[plandump] unknown query: $name")

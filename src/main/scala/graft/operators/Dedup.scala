@@ -569,7 +569,7 @@ object Dedup {
     *
     * THE GATE IS md5-PREFIX ON PURPOSE — the "cheap pre-gate so md5
     * runs only on survivors" idea (VERDICT r10 task 4a) was built and
-    * REFUTED twice by matched x100 A/Bs (`tools/WinnowAB`, r11):
+    * REFUTED twice by matched x100 A/Bs (r11; recorded in BASELINE.md):
     * (1) gating on a 5-char ascii mix of a materialized window string
     * lost 134.2 s vs 59.0 s — a 40-char string alloc per window costs
     * more than the md5 it avoids; (2) gating on the same five chars

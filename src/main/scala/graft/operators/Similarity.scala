@@ -16,6 +16,12 @@ import graft.core.Tables
   *   `label` column stands in for the nearest-centroid assignment): at
   *   scale the bucket equi-join touches 1/k of the data — the path that
   *   survives 100 TB.
+  * - The standing indexes (label-seeded, √N and sample-trained cells;
+  *   flat, SQ8 and PQ codes; batch, streamed and grow lifecycles) are
+  *   one [[VectorIndex]] type with one registry, one loader and one
+  *   commit path; the queries here name a family and serve through it.
+  *   `graft.IndexCatalog` maps each serving query to the index it
+  *   reads, for the warm-ups in `Bench` and `PlanDump`.
   *
   * Numerics: embeddings are quantized to exact integers
   * (floor(x·10⁴ + 0.5)), so dot products and norms are
@@ -548,24 +554,13 @@ object Similarity {
       .orderBy(col("qid"), col("rn"))
   }
 
-  /** A standing IVF-ANN index — the vector twin of [[TextAnalysis]]'s
-    * FTS index: cell-clustered postings (cell, vec_id, embedding) in
-    * tx-table format with a per-file Bloom bitmap on `cell`, plus the
-    * centroid table (cell, dim, c) pinned at build time. Serving
-    * reads ONLY the probed cells' files; the corpus is never
-    * re-clustered per query. `stats` is the √N family's pinned
-    * per-label selectivity histogram root ("" for the families that
-    * don't pin one). */
-  final case class IvfIndex(postings: String, centroids: String,
-      stats: String = "")
-
-  /** The index layout IS the durable artifact, not JVM state (VERDICT
-    * r12 gap 3): every companion-table root is written to a manifest
-    * file inside the postings root (underscore-prefixed — invisible to
+  /** A standing index's layout IS the durable artifact, not JVM
+    * state: every companion-table root is written to a manifest file
+    * inside the postings root (underscore-prefixed — invisible to
     * Spark's readers, like the tx log itself), so a session that holds
-    * only the postings path can reconstruct the full handle —
-    * including the selectivity histogram — instead of silently falling
-    * back to per-serve corpus aggregates. */
+    * only the postings path can reconstruct the full handle
+    * ([[VectorIndex.load]], [[TextAnalysis.loadFts]]) instead of
+    * silently rebuilding. */
   private val IndexManifest = "_graft_index_manifest"
 
   /** A manifest that cannot be loaded — missing file (not an index
@@ -624,166 +619,12 @@ object Similarity {
         s"family mismatch: manifest says '$got', loader expects '$expected'")
     }
 
-  /** Reconstruct (and re-register) a standing √N index handle from its
-    * on-disk layout alone — the COLD-SESSION path: a fresh JVM that
-    * knows only where the postings live gets back the same handle the
-    * building session held, pinned histogram included, so its filtered
-    * serves estimate selectivity from the histogram point read rather
-    * than recomputing the corpus aggregate. */
-  def loadIvfSqrt(spark: SparkSession, dir: String,
-      postingsRoot: String): IvfIndex = {
-    val m = readIndexManifest(postingsRoot)
-    requireFamily(m, postingsRoot, "ivf_sqrt")
-    val idx = IvfIndex(postingsRoot,
-      manifestKey(m, postingsRoot, "centroids"), m.getOrElse("stats", ""))
-    ivfStanding.put(dir + "#sqrt", idx)
-    idx
-  }
-
-  /** Cold-session loaders for the remaining standing families (VERDICT
-    * r13 task 4) — same contract as [[loadIvfSqrt]]: a fresh JVM that
-    * holds only the postings root reconstructs the exact handle the
-    * building session registered (companion roots from the manifest,
-    * never re-derived), so serving reads the standing layout instead
-    * of silently rebuilding it.
-    *
-    * Lifetime caveat: these loaders read whatever layout sits at the
-    * given root. A DEPLOYMENT pins its tx tables at durable paths (the
-    * README "swap points" contract) and the loaders then survive any
-    * restart; the test/bench builds here write under [[Scratch]]
-    * roots, which a clean JVM exit deletes — so in-repo the cold
-    * session is simulated by dropping the registration
-    * ([[dropStandingForTest]]), not by cycling the JVM. */
-  def loadIvf(spark: SparkSession, dir: String,
-      postingsRoot: String): IvfIndex = {
-    val m = readIndexManifest(postingsRoot)
-    requireFamily(m, postingsRoot, "ivf")
-    val idx = IvfIndex(postingsRoot, manifestKey(m, postingsRoot, "centroids"))
-    ivfStanding.put(dir, idx)
-    idx
-  }
-
-  def loadIvfSample(spark: SparkSession, dir: String,
-      postingsRoot: String): IvfIndex = {
-    val m = readIndexManifest(postingsRoot)
-    requireFamily(m, postingsRoot, "ivf_sample")
-    val idx = IvfIndex(postingsRoot, manifestKey(m, postingsRoot, "centroids"))
-    ivfStanding.put(dir + "#sample", idx)
-    idx
-  }
-
-  def loadIvfSq8(spark: SparkSession, dir: String,
-      postingsRoot: String): IvfSq8Index = {
-    val m = readIndexManifest(postingsRoot)
-    requireFamily(m, postingsRoot, "ivf_sq8")
-    val idx = IvfSq8Index(postingsRoot,
-      manifestKey(m, postingsRoot, "centroids"),
-      manifestKey(m, postingsRoot, "stats"))
-    ivfSq8Standing.put(dir, idx)
-    idx
-  }
-
-  def loadIvfSq8Sample(spark: SparkSession, dir: String,
-      postingsRoot: String): IvfSq8Index = {
-    val m = readIndexManifest(postingsRoot)
-    requireFamily(m, postingsRoot, "ivf_sq8#sample")
-    val idx = IvfSq8Index(postingsRoot,
-      manifestKey(m, postingsRoot, "centroids"),
-      manifestKey(m, postingsRoot, "stats"))
-    ivfSq8Standing.put(dir + "#sample", idx)
-    idx
-  }
-
-  def loadIvfPq(spark: SparkSession, dir: String,
-      postingsRoot: String): IvfPqIndex = {
-    val m = readIndexManifest(postingsRoot)
-    requireFamily(m, postingsRoot, "ivf_pq")
-    val idx = IvfPqIndex(postingsRoot,
-      manifestKey(m, postingsRoot, "centroids"),
-      manifestKey(m, postingsRoot, "codebook"))
-    ivfPqStanding.put(dir, idx)
-    idx
-  }
-
-  def loadIvfPqSample(spark: SparkSession, dir: String,
-      postingsRoot: String): IvfPqIndex = {
-    val m = readIndexManifest(postingsRoot)
-    requireFamily(m, postingsRoot, "ivf_pq#sample")
-    val idx = IvfPqIndex(postingsRoot,
-      manifestKey(m, postingsRoot, "centroids"),
-      manifestKey(m, postingsRoot, "codebook"))
-    ivfPqStanding.put(dir + "#sample", idx)
-    idx
-  }
-
-  /** Test hook: forget every standing vector-index registration for
-    * `dir` (simulates the cold session the load* functions exist for)
-    * without touching disk. */
-  private[graft] def dropStandingForTest(dir: String): Unit = {
-    Seq(dir, dir + "#sqrt", dir + "#sample").foreach(ivfStanding.remove)
-    Seq(dir, dir + "#sample").foreach(ivfSq8Standing.remove)
-    Seq(dir, dir + "#sample").foreach(ivfPqStanding.remove)
-    ()
-  }
-
-  /** Standing IVF index registry: corpus dir → index. Process-scoped
-    * like the FTS registry (README "swap points") — a deployment pins
-    * the tx tables at real paths and this becomes a catalog lookup;
-    * the serving plan is unchanged by that swap. */
-  private val ivfStanding =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfIndex]()
-
-  /** One pass over the corpus into the standing postings + centroid
-    * tables: train the quantizer, assign every vector to its argmin
-    * cell, lay the postings out cell-range-partitioned so a probe's
-    * point read touches a contiguous file subset, Bloom bitmap on
-    * `cell` per file. Registers and returns the index (last build
-    * wins). */
-  private def buildIvfIndex(spark: SparkSession, dir: String): IvfIndex = {
-    import graft.lake.TxTable
-    import graft.core.Scratch
-    val cents = labelCentroids(qe4(spark, dir)).localCheckpoint()
-    val pDir = Scratch.fresh("tx_ivf")
-    // r16: argmin cell computed ON the scan row against the broadcast
-    // centroid pack — the former N·d·k dim-join + window + join-back
-    // (two corpus-sized exchanges) collapse into one codegen pass
-    TxTable(spark, pDir).append(
-      withArgminCell(Tables(spark, dir).embeddingsSpread
-          .select(col("vec_id"), col("embedding")), cents)
-        .select(col("cell"), col("vec_id"), col("embedding"))
-        .repartitionByRange(8, col("cell")),
-      bloomCols = Seq("cell"))
-    val cDir = Scratch.fresh("tx_ivf_cents")
-    TxTable(spark, cDir).append(cents)
-    writeIndexManifest(pDir, "family" -> "ivf", "centroids" -> cDir)
-    val idx = IvfIndex(pDir, cDir)
-    ivfStanding.put(dir, idx)
-    idx
-  }
-
-  /** Get-or-build the standing IVF index (idempotent; Bench warms it
-    * so `sim_ann_indexed` times the point-read serving path — what a
-    * deployment pays per query). */
-  def ensureIvf(spark: SparkSession, dir: String): IvfIndex = {
-    val hit = ivfStanding.get(dir)
-    if (hit != null) hit else buildIvfIndex(spark, dir)
-  }
-
-  /** The BUILD half as its own declared query — owns the quantizer
-    * training and the two tx commits, and returns the cell-population
-    * audit (count, total, min/max occupancy: the balance signal that
-    * decides whether cells need splitting at scale). Always builds
-    * fresh and re-registers the standing index. */
-  def ivfBuild(spark: SparkSession, dir: String): DataFrame = {
-    import graft.lake.TxTable
-    val idx = buildIvfIndex(spark, dir)
-    TxTable(spark, idx.postings).read()
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_cells"),
-        sum(col("n")).cast("long").as("n_vecs"),
-        min(col("n")).cast("long").as("min_cell_pop"),
-        max(col("n")).cast("long").as("max_cell_pop"))
-  }
+  /** The label-seeded index's BUILD as its own declared query: trains
+    * the quantizer, commits postings and centroids, re-registers the
+    * standing index, and returns the cell-population audit
+    * ([[VectorIndex.buildAudit]]). */
+  def ivfBuild(spark: SparkSession, dir: String): DataFrame =
+    VectorIndex.buildAudit(spark, dir, VectorIndex.Ivf)
 
   /** Incremental IVF maintenance + serve, as one verified lifecycle —
     * the production pattern every vector store follows: the quantizer
@@ -802,46 +643,23 @@ object Similarity {
       nprobe: Int = 3): DataFrame = {
     import graft.lake.TxTable
     import graft.core.Scratch
-    val qe = qe4(spark, dir)
     val isDelta = pmod(col("vec_id"), lit(10L)) === 9L
     // quantizer pinned at build: centroids from the BASE subset only,
     // checkpointed once so build, append, and serve share one frame
-    val cents = labelCentroids(qe.filter(!isDelta)).localCheckpoint()
-    // r16: each commit's argmin runs ON the scan row (guide §2.4) —
-    // the former per-commit N·d·k dim-join + window rank + corpus
-    // join-back (two exchanges per commit) are gone
-    def commit(tx: TxTable, pred: Column): Unit = tx.append(
-      withArgminCell(Tables(spark, dir).embeddingsSpread
-          .select(col("vec_id"), col("embedding")).filter(pred), cents)
-        .select(col("cell"), col("vec_id"), col("embedding"))
-        .repartitionByRange(8, col("cell")),
-      bloomCols = Seq("cell"))
+    val cents = labelCentroids(qe4(spark, dir).filter(!isDelta)).localCheckpoint()
     val tx = TxTable(spark, Scratch.fresh("tx_ivf_inc"))
-    commit(tx, !isDelta) // base build
-    commit(tx, isDelta) // delta append, centroids pinned
-    // serve from the merged snapshot, probes ranked on the same
-    // pinned centroid table
-    val probes = rankedAgainst(qe.filter(col("vec_id") < 5), cents)
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cell").as("q_cell"))
-    val cellIds = probes.select(col("q_cell")).distinct()
-      .collect().map(r => lit(r.get(0))).toSeq
-    val queries = probes.join(
-      Tables(spark, dir).embeddings.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("q_emb")),
-      Seq("qid"))
-    val scored = tx.readWhereIn("cell", cellIds)
-      .join(broadcast(queries), col("cell") === col("q_cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_e6",
-        graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("embedding")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_e6").desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("vec_id").as("nid"), col("cos_e6"),
-        col("rn").cast("long").as("rn"))
-      .orderBy(col("qid"), col("rn"))
+    // the base build, then the delta append against the pinned
+    // centroids; each commit's argmin runs ON the scan row
+    for (part <- Seq(!isDelta, isDelta))
+      VectorIndex.appendPostings(tx, withArgminCell(
+          Tables(spark, dir).embeddingsSpread
+            .select(col("vec_id"), col("embedding")).filter(part), cents)
+        .select(col("cell"), col("vec_id"), col("embedding")))
+    // serve from the merged snapshot, probes ranked on the same pinned
+    // centroid table
+    val (probes, members) = VectorIndex.probeRead(spark, dir, tx, cents,
+      nprobe, labelCells = true)
+    topkByCell(spark, dir, members, probes, k)
   }
 
   /** Ranked nearest-centroid assignment — [[assignTo]] without the
@@ -850,7 +668,7 @@ object Similarity {
     * front-end of the trained-quantizer family (crn = 1 is membership,
     * crn ≤ nprobe is the probe list). Hint policy follows the caller's
     * k-provenance, exactly as in [[assignTo]]. */
-  private def rankedTo(qe: DataFrame, cents: DataFrame,
+  private[operators] def rankedTo(qe: DataFrame, cents: DataFrame,
       boundedK: Boolean = false): DataFrame = {
     val centSide = if (boundedK) broadcast(cents) else cents
     val dists = qe.select(col("vec_id"), col("dim"), col("q"))
@@ -915,7 +733,7 @@ object Similarity {
     * through a hash aggregate for the same answer (measured 55.7 s vs
     * ~4 s on the 10× replica's 142-cell training) but carries no
     * broadcast, so it remains the over-bound fallback. */
-  private def rankedByDist(emb: DataFrame, cents: DataFrame): DataFrame = {
+  private[operators] def rankedByDist(emb: DataFrame, cents: DataFrame): DataFrame = {
     val scored = emb.crossJoin(broadcast(centRows(cents)))
       .withColumn("dist2",
         graft.functions.Dist2Q.dist2Q(col("embedding"), col("cvec")))
@@ -945,7 +763,7 @@ object Similarity {
     * the kernel, then the range partition); the over-bound path keeps
     * the relational assignment + join. `extra` columns (e.g. `label`)
     * ride along on the scan row. */
-  private def memberRows(spark: SparkSession, dir: String, cents: DataFrame,
+  private[operators] def memberRows(spark: SparkSession, dir: String, cents: DataFrame,
       bounded: Boolean, extra: Column*): DataFrame = {
     val base = Tables(spark, dir).embeddingsSpread
       .select((col("vec_id") +: col("embedding") +: extra): _*)
@@ -961,7 +779,7 @@ object Similarity {
     * Reads ONLY the narrow (vec_id, embedding) frame — the N·d-row
     * quantized explode the relational form shuffles every round is
     * never materialized (r16, guide §2.3/§2.4). */
-  private def lloydCentroidsFast(emb: DataFrame, k: Int,
+  private[operators] def lloydCentroidsFast(emb: DataFrame, k: Int,
       iters: Int): DataFrame = {
     val hashOrder = Seq(
       graft.functions.PortableHash.phash(col("vec_id").cast("string"), 11).asc,
@@ -992,7 +810,7 @@ object Similarity {
     * rows instead of the N·d scalar rows the relational form moved
     * through two exchanges. Same integers (`KernelEquivalenceSpec`):
     * exact Long sums per dimension, half-up integer mean. */
-  private def lloydFrom(emb: DataFrame, cents0: DataFrame,
+  private[operators] def lloydFrom(emb: DataFrame, cents0: DataFrame,
       iters: Int): DataFrame = {
     var cents = cents0.localCheckpoint()
     for (_ <- 1 to iters) {
@@ -1051,7 +869,7 @@ object Similarity {
     * broadcast side together with the |Q| query vectors) against the
     * member rows (cell, vec_id, embedding), score with the codegen'd
     * [[graft.functions.CosineSimQ]], rank within query. */
-  private def topkByCell(spark: SparkSession, dir: String,
+  private[operators] def topkByCell(spark: SparkSession, dir: String,
       members: DataFrame, probes: DataFrame, k: Int): DataFrame = {
     val queries = probes.join(
       Tables(spark, dir).embeddings.filter(col("vec_id") < 5)
@@ -1110,102 +928,21 @@ object Similarity {
     * definition — drive the postings read. Per-query cost scales with
     * the probed cells' population, not the corpus. */
   def annIndexed(spark: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = 3): DataFrame = {
-    import graft.lake.TxTable
-    val idx = ensureIvf(spark, dir)
-    val cents = TxTable(spark, idx.centroids).read()
-    val qe = qe4(spark, dir).filter(col("vec_id") < 5)
-    val probes = rankedAgainst(qe, cents).filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cell").as("q_cell"))
-    val cellIds = probes.select(col("q_cell")).distinct()
-      .collect().map(r => lit(r.get(0))).toSeq
-    val members = TxTable(spark, idx.postings).readWhereIn("cell", cellIds)
-    val queries = probes.join(
-      Tables(spark, dir).embeddings.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("q_emb")),
-      Seq("qid"))
-    val scored = members
-      .join(broadcast(queries), col("cell") === col("q_cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_e6",
-        graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("embedding")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_e6").desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("vec_id").as("nid"), col("cos_e6"),
-        col("rn").cast("long").as("rn"))
-      .orderBy(col("qid"), col("rn"))
-  }
+      nprobe: Int = 3): DataFrame =
+    VectorIndex.serve(spark, dir, VectorIndex.ensure(spark, dir, VectorIndex.Ivf),
+      k, nprobe)
 
-  /** One pass into a standing √N-cell index: train the ⌈√N⌉ Lloyd
-    * quantizer, lay the postings out cell-range-partitioned with a
-    * Bloom bitmap on `cell`, pin the centroid table. Identical
-    * mechanics to [[buildIvfIndex]] — the index machinery is
-    * orthogonal to the quantizer, which is the point: swapping the
-    * fixed-k quantizer for the √N rule changes ONLY the cell
-    * alphabet, and turns the served fraction from nprobe/k (constant)
-    * into nprobe/√N (shrinking). Registered under its own key so the
-    * fixed-k and √N indices coexist in one session. */
-  private def buildIvfSqrtIndex(spark: SparkSession, dir: String): IvfIndex = {
-    import graft.lake.TxTable
-    import graft.core.Scratch
-    val (cents, bounded) = sqrtQuantizer(spark, dir)
-    val pDir = Scratch.fresh("tx_ivf_sqrt")
-    // `label` rides along in the postings row: attribute columns live
-    // IN the index cells so a filtered serve ([[annFilteredSqrt]])
-    // never joins back to the corpus at query time — at 100 TB the
-    // metadata-fetch join would dwarf the probe itself
-    TxTable(spark, pDir).append(
-      memberRows(spark, dir, cents, bounded, col("label"))
-        .select(col("cell"), col("vec_id"), col("embedding"), col("label"))
-        .repartitionByRange(8, col("cell")),
-      bloomCols = Seq("cell"))
-    val cDir = Scratch.fresh("tx_ivf_sqrt_cents")
-    TxTable(spark, cDir).append(cents)
-    // pin the per-label selectivity histogram BESIDE the index
-    // (VERDICT r11 task 7, the FTS pinned-corpus-stats pattern): one
-    // linear aggregate at build time, |labels| rows, so the adaptive
-    // filtered serve estimates any label-predicate's selectivity from
-    // a metadata-sized point read instead of re-aggregating the corpus
-    // per query. Refresh policy = recompute at (re)build, which is the
-    // only time this index's corpus changes.
-    val sDir = Scratch.fresh("tx_ivf_sqrt_stats")
-    TxTable(spark, sDir).append(
-      Tables(spark, dir).embeddings
-        .groupBy(col("label")).agg(count(lit(1)).as("n")))
-    // the histogram root lives IN the index layout (manifest beside
-    // the postings), not in JVM state — a cold session reloads the
-    // full handle from disk ([[loadIvfSqrt]], VERDICT r12 gap 3)
-    writeIndexManifest(pDir, "family" -> "ivf_sqrt",
-      "centroids" -> cDir, "stats" -> sDir)
-    val idx = IvfIndex(pDir, cDir, sDir)
-    ivfStanding.put(dir + "#sqrt", idx)
-    idx
-  }
-
-  /** Get-or-build the standing √N-cell IVF index (Bench warms it so
-    * `sim_ann_indexed_sqrt` times the point-read serving path). */
-  def ensureIvfSqrt(spark: SparkSession, dir: String): IvfIndex = {
-    val hit = ivfStanding.get(dir + "#sqrt")
-    if (hit != null) hit else buildIvfSqrtIndex(spark, dir)
-  }
-
-  /** The √N-index BUILD as its own declared query: owns the quantizer
-    * training and both tx commits, returns the cell-population audit.
-    * n_cells here GROWS with the corpus (⌈√N⌉) — the audit row is the
-    * measurable witness of the scale rule, where [[ivfBuild]]'s stays
-    * pinned at the label alphabet. */
-  def ivfBuildSqrt(spark: SparkSession, dir: String): DataFrame = {
-    import graft.lake.TxTable
-    val idx = buildIvfSqrtIndex(spark, dir)
-    TxTable(spark, idx.postings).read()
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_cells"),
-        sum(col("n")).cast("long").as("n_vecs"),
-        min(col("n")).cast("long").as("min_cell_pop"),
-        max(col("n")).cast("long").as("max_cell_pop"))
-  }
+  /** The √N-index BUILD as its own declared query: trains the ⌈√N⌉
+    * Lloyd quantizer, commits postings (with `label` in the row),
+    * centroids and the per-label selectivity histogram, and returns the
+    * cell-population audit. The index machinery is orthogonal to the
+    * quantizer: swapping the label alphabet for the √N rule changes
+    * ONLY the cell alphabet, and turns the served fraction from nprobe/k
+    * (constant) into nprobe/√N (shrinking). n_cells here GROWS with the
+    * corpus — the audit row is the measurable witness of the scale
+    * rule, where [[ivfBuild]]'s stays pinned at the label alphabet. */
+  def ivfBuildSqrt(spark: SparkSession, dir: String): DataFrame =
+    VectorIndex.buildAudit(spark, dir, VectorIndex.Sqrt)
 
   /** Multi-probe ANN served from the STANDING √N index — the
     * composition of the two scale levers, and the serving path that
@@ -1221,25 +958,9 @@ object Similarity {
     * centroids to a fresh [[annIvfSqrtK]] train, so the index never
     * changes the answer and the two paths share one oracle. */
   def annIndexedSqrt(spark: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = 3): DataFrame = {
-    import graft.lake.TxTable
-    val idx = ensureIvfSqrt(spark, dir)
-    val cents = TxTable(spark, idx.centroids).read()
-    // the build-pinned centroid table is k·d rows — metadata-sized, so
-    // counting it to prove the broadcast bound costs one point read
-    val bounded = cents.count() * 24L <= (32L << 20)
-    val probes = (if (bounded)
-        rankedByDist(Tables(spark, dir).embeddings
-          .filter(col("vec_id") < 5)
-          .select(col("vec_id"), col("embedding")), cents)
-      else rankedTo(quantized(spark, dir).filter(col("vec_id") < 5), cents))
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cell").as("q_cell"))
-    val cellIds = probes.select(col("q_cell")).distinct()
-      .collect().map(r => lit(r.get(0))).toSeq
-    val members = TxTable(spark, idx.postings).readWhereIn("cell", cellIds)
-    topkByCell(spark, dir, members, probes, k)
-  }
+      nprobe: Int = 3): DataFrame =
+    VectorIndex.serve(spark, dir, VectorIndex.ensure(spark, dir, VectorIndex.Sqrt),
+      k, nprobe)
 
   /** Predicate-FILTERED ANN from the standing √N index — vector search
     * with a WHERE clause (pgvector's `WHERE … ORDER BY embedding`,
@@ -1248,7 +969,7 @@ object Similarity {
     * predicate (here `label % 2 = 1` — the odd-labeled half).
     *
     * Pre-filter inside the probed cells: the attribute was written
-    * INTO the postings rows at build ([[buildIvfSqrtIndex]]), so the
+    * INTO the postings rows at build ([[ivfBuildSqrt]]), so the
     * serve is probe → Bloom point read → predicate on the postings
     * row → exact-cosine top-k — no join back to the corpus, and the
     * predicate prunes BEFORE the distance kernel runs. Post-filtering
@@ -1259,24 +980,9 @@ object Similarity {
     * properties — of [[annIndexedSqrt]]. */
   def annFilteredSqrt(spark: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 3,
-      pred: Column = pmod(col("label"), lit(2)) === 1): DataFrame = {
-    import graft.lake.TxTable
-    val idx = ensureIvfSqrt(spark, dir)
-    val cents = TxTable(spark, idx.centroids).read()
-    val bounded = cents.count() * 24L <= (32L << 20)
-    val probes = (if (bounded)
-        rankedByDist(Tables(spark, dir).embeddings
-          .filter(col("vec_id") < 5)
-          .select(col("vec_id"), col("embedding")), cents)
-      else rankedTo(quantized(spark, dir).filter(col("vec_id") < 5), cents))
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cell").as("q_cell"))
-    val cellIds = probes.select(col("q_cell")).distinct()
-      .collect().map(r => lit(r.get(0))).toSeq
-    val members = TxTable(spark, idx.postings).readWhereIn("cell", cellIds)
-      .filter(pred)
-    topkByCell(spark, dir, members, probes, k)
-  }
+      pred: Column = pmod(col("label"), lit(2)) === 1): DataFrame =
+    VectorIndex.serve(spark, dir, VectorIndex.ensure(spark, dir, VectorIndex.Sqrt),
+      k, nprobe, pred = Some(pred))
 
   /** The nprobe-widening rule for filtered ANN, as a number a spec can
     * pin: to hold the UNFILTERED design point's candidate count under
@@ -1300,26 +1006,26 @@ object Similarity {
   /** The (n, n_match) selectivity aggregate behind [[adaptiveNprobe]],
     * exposed as a frame so `AdaptiveStatsSpec` can pin its plan: when
     * the standing √N index has pinned its per-label histogram
-    * ([[buildIvfSqrtIndex]]) AND the predicate references only the
+    * ([[ivfBuildSqrt]]) AND the predicate references only the
     * `label` column — the one key the histogram groups by — the
     * estimate is a weighted sum over that |labels|-row tx table, NO
     * corpus scan at serve time (r11 task 7). Any OTHER predicate (the
     * public pred: Column contract admits every embeddings column —
     * ADVICE r12 flagged the histogram path for silently narrowing it)
     * keeps the full-row corpus aggregate, as does an unbuilt index or
-    * a cold session without [[loadIvfSqrt]]: same exact counts either
+    * a cold session without [[VectorIndex.load]]: same exact counts either
     * way — the cache can never change an answer, only the plan. */
   private[graft] def selectivityFrame(spark: SparkSession, dir: String,
       pred: Column): DataFrame = {
     import graft.lake.TxTable
-    val idx = ivfStanding.get(dir + "#sqrt")
-    val cached = if (idx == null || idx.stats.isEmpty) None else {
+    val cached = VectorIndex.registered(dir, VectorIndex.Sqrt)
+      .flatMap(_.labelStats).flatMap { stats =>
       // expose ONLY `label` to the predicate (the count column is
       // renamed away): a label-only predicate analyzes and takes the
       // histogram path; any other reference fails analysis here and
       // falls through — never a silent mis-estimate against the
       // histogram's own columns
-      val hist = TxTable(spark, idx.stats).read()
+      val hist = TxTable(spark, stats).read()
         .select(col("label"), col("n").as("__hist_n"))
       // frame construction analyzes eagerly — an unresolvable (non-
       // label) predicate throws right here and takes the fallback
@@ -1346,7 +1052,7 @@ object Similarity {
       pred: Column = col("label") === 1): DataFrame = {
     // ensure first so the selectivity estimate reads the histogram
     // pinned beside the index, not a per-serve corpus aggregate
-    ensureIvfSqrt(spark, dir)
+    VectorIndex.ensure(spark, dir, VectorIndex.Sqrt)
     annFilteredSqrt(spark, dir, k,
       adaptiveNprobe(spark, dir, baseNprobe, maxProbe, pred), pred)
   }
@@ -1446,29 +1152,35 @@ object Similarity {
   /** The gated sample's measured size, as the one-row audit column the
     * three sample-build queries cross-join in — computed from the SAME
     * [[sampleGate]] the quantizer trains through. */
-  private def sampleGateAudit(spark: SparkSession, dir: String): DataFrame = {
+  private[operators] def sampleGateAudit(spark: SparkSession, dir: String): DataFrame = {
     val n = Tables(spark, dir).embeddings.count()
     val (_, _, pred) = sampleGate(n)
     Tables(spark, dir).embeddings.filter(pred)
       .agg(count(lit(1)).as("n_sample"))
   }
 
-  private[graft] def sampleQuantizer(spark: SparkSession, dir: String)
-      : (DataFrame, Boolean) = {
-    val nd = Tables(spark, dir).embeddings
-      .agg(count(lit(1)).as("n"),
-        max(size(col("embedding"))).cast("long").as("d"))
-      .head
-    val n = nd.getLong(0)
-    val (kk, _, gate) = sampleGate(n)
+  /** Gate-sampled ⌈√N⌉ Lloyd training over any (vec_id, embedding)
+    * frame — the corpus table for the standing builds, a merged
+    * snapshot for the grow rebuilds. Returns (centroids, k, whether the
+    * k·d table is under the 32 MB broadcast bound). Linear: the Lloyd
+    * iterations read only the hash-gated 8·⌈√N⌉ sample, so the
+    * composed grow rebuilds retrain from the gate instead of seeding
+    * from the outgrown alphabet ([[VectorIndex.growAppend]]'s
+    * proportional split exists to amortize full Lloyd's N^1.5 — sample
+    * training has no such term). */
+  private[graft] def sampleQuantizer(emb: DataFrame): (DataFrame, Int, Boolean) = {
+    val e = emb.select(col("vec_id"), col("embedding"))
+    val nd = e.agg(count(lit(1)).as("n"),
+      max(size(col("embedding"))).cast("long").as("d")).head
+    val (kk, _, gate) = sampleGate(nd.getLong(0))
     // the gated sample inherits the raw scan's single input split, and
     // every training argmin crosses it k ways in-stage — spread the
     // 8·⌈√N⌉ survivors once (metadata-sized exchange) so the Lloyd
     // iterations parallelize like the full-corpus paths do
-    val sample = Tables(spark, dir).embeddings
-      .filter(gate)
-      .select(col("vec_id"), col("embedding"))
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
+    val sample = e.filter(gate)
+      .repartition(e.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
+    // past the proven bound the fast kernel's argmin would be an
+    // unbounded static broadcast: fall back to the shuffled-join Lloyd
     val bounded = kk.toLong * nd.getLong(1) * 24L <= (32L << 20)
     // persist (NOT localCheckpoint) for the same freeable-block reason
     // as [[sqrtQuantizer]] — though here the pinned input is the
@@ -1479,7 +1191,7 @@ object Similarity {
        else lloydCentroids(quantizedOf(sampleT), kk, 2, boundedK = false))
         .localCheckpoint()
     sampleT.unpersist(blocking = false)
-    (cents, bounded)
+    (cents, kk, bounded)
   }
 
   /** Argmin cell of every vector, computed ON the embedding row by the
@@ -1495,80 +1207,24 @@ object Similarity {
     withArgminCell(emb.select(col("vec_id"), col("embedding")), cents)
       .select(col("vec_id"), col("cell"))
 
-  /** One pass into the standing SAMPLE-trained √N index — identical
-    * layout and serving mechanics to [[buildIvfSqrtIndex]] (the index
-    * machinery is orthogonal to the quantizer), but training reads
-    * only the hash-gated sample and the full-corpus argmin runs
-    * through the map-side-combining [[argminByDist]] kernel. The cell
-    * alphabet DIFFERS from the full-trained index (different training
-    * set ⇒ different centroids), so this family carries its own
-    * oracle rather than sharing [[annIvfSqrtK]]'s. */
-  private def buildIvfSampleIndex(spark: SparkSession, dir: String): IvfIndex = {
-    import graft.lake.TxTable
-    import graft.core.Scratch
-    val (cents, bounded) = sampleQuantizer(spark, dir)
-    val pDir = Scratch.fresh("tx_ivf_sample")
-    TxTable(spark, pDir).append(
-      memberRows(spark, dir, cents, bounded, col("label"))
-        .select(col("cell"), col("vec_id"), col("embedding"), col("label"))
-        .repartitionByRange(8, col("cell")),
-      bloomCols = Seq("cell"))
-    val cDir = Scratch.fresh("tx_ivf_sample_cents")
-    TxTable(spark, cDir).append(cents)
-    writeIndexManifest(pDir, "family" -> "ivf_sample", "centroids" -> cDir)
-    val idx = IvfIndex(pDir, cDir)
-    ivfStanding.put(dir + "#sample", idx)
-    idx
-  }
-
-  /** Get-or-build the standing sample-trained √N index (Bench warms
-    * it so `sim_ann_indexed_sample` times the point-read path). */
-  def ensureIvfSample(spark: SparkSession, dir: String): IvfIndex = {
-    val hit = ivfStanding.get(dir + "#sample")
-    if (hit != null) hit else buildIvfSampleIndex(spark, dir)
-  }
-
-  /** The sample-trained build as its own declared query: owns the
-    * sample gate, the bounded Lloyd training, and both tx commits.
-    * Returns [[ivfBuildSqrt]]'s cell-population audit extended with
-    * `n_sample` — the measured training-set size, the witness that
-    * the N^1.5 term was actually capped (n_sample ≈ 8·⌈√N⌉ ≪ n_vecs
-    * once N outgrows 64·... the mod>1 regime). */
-  def ivfBuildSample(spark: SparkSession, dir: String): DataFrame = {
-    import graft.lake.TxTable
-    val idx = buildIvfSampleIndex(spark, dir)
-    val nSample = sampleGateAudit(spark, dir)
-    TxTable(spark, idx.postings).read()
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_cells"),
-        sum(col("n")).cast("long").as("n_vecs"),
-        min(col("n")).cast("long").as("min_cell_pop"),
-        max(col("n")).cast("long").as("max_cell_pop"))
-      .crossJoin(broadcast(nSample))
-  }
+  /** The sample-trained build as its own declared query: the
+    * [[ivfBuildSqrt]] layout over the sample-trained cell alphabet
+    * (different training set ⇒ different centroids, so this family
+    * carries its own oracle), with `n_sample` in the audit — the
+    * measured training-set size, the witness that the N^1.5 term was
+    * actually capped (n_sample ≈ 8·⌈√N⌉ ≪ n_vecs in the mod > 1
+    * regime). */
+  def ivfBuildSample(spark: SparkSession, dir: String): DataFrame =
+    VectorIndex.buildAudit(spark, dir, VectorIndex.Sample)
 
   /** Multi-probe ANN served from the standing sample-trained index —
     * [[annIndexedSqrt]]'s serving mechanics (build-pinned centroid
     * probe ranking, Bloom-pruned point read of the probed cells) over
     * the sample-trained cell alphabet. */
   def annIndexedSample(spark: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = 3): DataFrame = {
-    import graft.lake.TxTable
-    val idx = ensureIvfSample(spark, dir)
-    val cents = TxTable(spark, idx.centroids).read()
-    val bounded = cents.count() * 24L <= (32L << 20)
-    val probes = (if (bounded)
-        rankedByDist(Tables(spark, dir).embeddings
-          .filter(col("vec_id") < 5)
-          .select(col("vec_id"), col("embedding")), cents)
-      else rankedTo(quantized(spark, dir).filter(col("vec_id") < 5), cents))
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cell").as("q_cell"))
-    val cellIds = probes.select(col("q_cell")).distinct()
-      .collect().map(r => lit(r.get(0))).toSeq
-    val members = TxTable(spark, idx.postings).readWhereIn("cell", cellIds)
-    topkByCell(spark, dir, members, probes, k)
-  }
+      nprobe: Int = 3): DataFrame =
+    VectorIndex.serve(spark, dir,
+      VectorIndex.ensure(spark, dir, VectorIndex.Sample), k, nprobe)
 
   /** Recall@k of the sample-trained serving path vs the brute-force
     * exact top-k — the number that prices what sample training COSTS
@@ -1588,7 +1244,7 @@ object Similarity {
     * quantizer and appended cell-clustered — fragmenting the postings
     * to slices × files), `TxTable.compact` rewrites the fragments into
     * `targetFiles` cell-range-clustered files with fresh Bloom bitmaps
-    * (restoring [[buildIvfSqrtIndex]]'s layout), and the multi-probe
+    * (restoring [[ivfBuildSqrt]]'s layout), and the multi-probe
     * serve runs one Bloom-pruned point read of the compacted snapshot.
     *
     * Deterministic Lloyd + pinned centroids ⇒ every vector lands in
@@ -1602,18 +1258,9 @@ object Similarity {
     import graft.core.Scratch
     val (posts, ct) = ivfChurnTables(spark, dir, slices, targetFiles,
       Scratch.fresh("tx_ivf_churn"), Scratch.fresh("tx_ivf_churn_cents"))
-    val cents = ct.read()
-    val bounded = cents.count() * 24L <= (32L << 20)
-    val probes = (if (bounded)
-        rankedByDist(Tables(spark, dir).embeddings
-          .filter(col("vec_id") < 5)
-          .select(col("vec_id"), col("embedding")), cents)
-      else rankedTo(quantized(spark, dir).filter(col("vec_id") < 5), cents))
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cell").as("q_cell"))
-    val cellIds = probes.select(col("q_cell")).distinct()
-      .collect().map(r => lit(r.get(0))).toSeq
-    topkByCell(spark, dir, posts.readWhereIn("cell", cellIds), probes, k)
+    val (probes, members) = VectorIndex.probeRead(spark, dir, posts, ct.read(),
+      nprobe, labelCells = false)
+    topkByCell(spark, dir, members, probes, k)
   }
 
   /** The churn lifecycle's table half, shared with the spec that
@@ -1636,10 +1283,8 @@ object Similarity {
     ct.append(cents)
     try {
       for (i <- 0 until slices)
-        posts.append(
-          rows.filter(pmod(col("vec_id"), lit(slices)) === i)
-            .repartitionByRange(2, col("cell")),
-          bloomCols = Seq("cell"))
+        VectorIndex.appendPostings(posts,
+          rows.filter(pmod(col("vec_id"), lit(slices)) === i), files = 2)
     } finally rows.unpersist(blocking = false)
     posts.compact(targetFiles, bloomCols = Seq("cell"),
       clusterBy = Seq("cell"))
@@ -1718,147 +1363,66 @@ object Similarity {
   // SQ8 compact codes IN the postings, exact rerank on survivors only.
   // ----------------------------------------------------------------
 
-  /** The composed standing ANN index: cell-clustered postings
-    * (cell, vec_id, codes, embedding) under the ⌈√N⌉ Lloyd quantizer,
-    * where `codes` is the SQ8 scalar quantization of the vector
-    * against the build-pinned GLOBAL [mn,mx] range ([[sq8Rerank]]'s
-    * exact-integer encoding), plus the pinned centroid table and the
-    * one-row range stats table. This is the at-scale ANN serving
-    * layout every production vector store converges on (FAISS
-    * `IVF…,SQ8`): probe 1/√N of the cells, scan their 1-byte-per-dim
-    * codes (4× less memory bandwidth than floats — at 100 TB the scan
-    * IS the cost), exact-rerank only the candK survivors. */
-  final case class IvfSq8Index(postings: String, centroids: String,
-      stats: String)
-
-  private val ivfSq8Standing =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfSq8Index]()
-
-  /** (vec_id, codes): every vector's dim-ordered SQ8 code array
-    * against the broadcast one-row [mn,mx] range — exact integer
+  /** (vec_id, codes, code_sum): every vector's dim-ordered SQ8 code
+    * array against the broadcast one-row [mn,mx] range — exact integer
     * `((q - mn) * 255) div greatest(mx - mn, 1)` per element, so the
     * arrays (and every candidate set scored from them) are
-    * bit-identical cross-engine. One N·d → N aggregate, build-time
-    * only. */
-  private def sq8Codes(qe: DataFrame, range: DataFrame): DataFrame =
+    * bit-identical cross-engine. The serve encodes its |Q| query
+    * vectors here; builds encode on the row ([[sq8EncodeExpr]]). */
+  private[operators] def sq8Codes(qe: DataFrame, range: DataFrame): DataFrame =
     qe.crossJoin(broadcast(range))
       .select(col("vec_id"), col("dim"),
         expr("((q - mn) * 255) div greatest(mx - mn, 1)").as("code"))
       .groupBy(col("vec_id"))
       .agg(expr("transform(array_sort(collect_list(struct(dim, code))), s -> s.code)")
         .as("codes"),
-        // Σcode rides along from build time: the decoded-dot affine
-        // correction needs it per posting, and computing it in the
-        // serving scan would run the interpreted aggregate() HOF per
-        // candidate row — the same interpreted-eval trap the r9
-        // substring fix removed (ADVICE r9)
         sum(col("code")).as("code_sum"))
 
-  /** One pass into the composed standing index: train the ⌈√N⌉
-    * quantizer (deterministic Lloyd — identical centroids to
-    * [[ensureIvfSqrt]]'s, so the cell alphabet is shared), pin the
-    * global SQ8 range, encode every vector, and lay the postings out
-    * cell-range-partitioned with codes AND exact vectors side by side
+  /** The IVF-SQ8 BUILD as its own declared query: trains the ⌈√N⌉
+    * quantizer (deterministic Lloyd — the same cell alphabet as the √N
+    * index), pins the global SQ8 range, encodes every vector on the row,
+    * and commits postings with codes AND exact vectors side by side
     * (codes serve candidate generation; the exact column serves only
-    * the candK rerank and column-prunes out of the scoring scan).
-    * Bloom bitmap on `cell` drives the probe point reads. */
-  private def buildIvfSq8Index(spark: SparkSession, dir: String): IvfSq8Index =
-    buildIvfSq8IndexWith(spark, dir, key = "", scratch = "tx_ivf_sq8",
-      sqrtQuantizer)
+    * the candK rerank and column-prunes out of the scoring scan). The
+    * audit extends the cell populations with the pinned code range —
+    * the two build-time decisions a deployment monitors for drift. This
+    * is the at-scale layout every production vector store converges on
+    * (FAISS `IVF…,SQ8`): probe 1/√N of the cells, scan 1 byte per dim
+    * (4× less memory bandwidth than floats), exact-rerank the
+    * survivors. */
+  def ivfSq8Build(spark: SparkSession, dir: String): DataFrame =
+    VectorIndex.buildAudit(spark, dir, VectorIndex.Sq8Sqrt)
 
-  /** [[buildIvfSq8Index]] with the quantizer as a parameter — the
-    * index machinery (range pin, direct encode, 3-commit layout) is
-    * orthogonal to how the centroids were trained, which is the point
-    * of the r11 composition: the SAMPLE-trained quantizer (linear
-    * training, [[sampleQuantizer]]) drops into the same standing-index
-    * lifecycle the full-trained one uses. Registered under
-    * `dir + key` so both indices coexist in one session. */
-  private def buildIvfSq8IndexWith(spark: SparkSession, dir: String,
-      key: String, scratch: String,
-      quant: (SparkSession, String) => (DataFrame, Boolean)): IvfSq8Index = {
-    import graft.lake.TxTable
-    import graft.core.Scratch
-    val (cents, bounded) = quant(spark, dir)
-    val qe = quantized(spark, dir)
-    val range = qe.agg(min(col("q")).as("mn"), max(col("q")).as("mx"))
-      .localCheckpoint() // one row, pinned: build and serve must agree
-    // corpus-side encode as ONE narrow array projection against the
-    // DRIVER-SCALAR pinned range (the range row is already
-    // materialized above): same exact integers as [[sq8Codes]]'s
-    // posexplode→shuffle→collect_list route, with no N·d exchange at
-    // all — at x100 that exchange was the SQ8 build's measured bound
-    // after the argmin fix (160 s vs the √N build's 102 s, same
-    // training). transform() here is the interpreted HOF, but it runs
-    // integer arithmetic once per element in a single build-time
-    // pass — cheap where the substring case (string alloc per
-    // element, per window) was not. Queries (|Q|=5) keep sq8Codes.
-    val r0 = range.head()
-    val mnv = r0.getAs[Long]("mn")
-    val sv = math.max(r0.getAs[Long]("mx") - mnv, 1L)
-    val encode = expr(
-      s"""transform(embedding, x ->
-            ((CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT) - ${mnv}L)
-              * 255) div ${sv}L)""")
-    val pDir = Scratch.fresh(scratch)
-    TxTable(spark, pDir).append(
-      memberRows(spark, dir, cents, bounded)
-        .withColumn("codes", encode)
-        .withColumn("code_sum", expr("aggregate(codes, 0L, (a, x) -> a + x)"))
-        .select(col("cell"), col("vec_id"), col("codes"), col("code_sum"),
-          col("embedding"))
-        .repartitionByRange(8, col("cell")),
-      bloomCols = Seq("cell"))
-    val cDir = Scratch.fresh(scratch + "_cents")
-    TxTable(spark, cDir).append(cents)
-    val sDir = Scratch.fresh(scratch + "_stats")
-    TxTable(spark, sDir).append(range)
-    writeIndexManifest(pDir, "family" -> ("ivf_sq8" + key),
-      "centroids" -> cDir, "stats" -> sDir)
-    val idx = IvfSq8Index(pDir, cDir, sDir)
-    ivfSq8Standing.put(dir + key, idx)
-    idx
-  }
+  /** The SAMPLE-trained IVF-SQ8 build: gate-sampled Lloyd training
+    * (linear instead of N^1.5, [[sampleQuantizer]]) under the same SQ8
+    * machinery, the full-corpus argmin as the only N·k term; the audit
+    * adds `n_sample`. */
+  def ivfSq8BuildSample(spark: SparkSession, dir: String): DataFrame =
+    VectorIndex.buildAudit(spark, dir, VectorIndex.Sq8Sample)
 
-  /** Get-or-build the standing IVF-SQ8 index (Bench warms it so
-    * `sim_ann_ivfsq8` times the point-read + code-scan serving path). */
-  def ensureIvfSq8(spark: SparkSession, dir: String): IvfSq8Index = {
-    val hit = ivfSq8Standing.get(dir)
-    if (hit != null) hit else buildIvfSq8Index(spark, dir)
-  }
+  /** Multi-probe ANN served from the composed IVF-SQ8 index. Per query:
+    *  1. rank probe cells on the build-pinned centroid table
+    *     (nprobe/⌈√N⌉ of the corpus, a fraction that SHRINKS as N grows);
+    *  2. Bloom-pruned point read of the probed cells' postings, the
+    *     scoring scan projecting ONLY (cell, vec_id, codes, code_sum);
+    *  3. score candidates with the DECODED integer dot, keep candK;
+    *  4. exact-rerank ONLY the survivors against vectors from the SAME
+    *     probed cells (never a corpus join).
+    * Codes are exact integers against the pinned range, so candidate
+    * sets are bit-identical cross-engine and the path shares one oracle
+    * with the unindexed algebra. */
+  def annIvfSq8(spark: SparkSession, dir: String, k: Int = 5,
+      candK: Int = VectorIndex.Sq8CandK, nprobe: Int = 3): DataFrame =
+    VectorIndex.serve(spark, dir,
+      VectorIndex.ensure(spark, dir, VectorIndex.Sq8Sqrt), k, nprobe, Some(candK))
 
-  /** Get-or-build the SAMPLE-trained composed index (Bench warms it so
-    * `sim_ann_ivfsq8_sample` times the serving path alone). */
-  def ensureIvfSq8Sample(spark: SparkSession, dir: String): IvfSq8Index = {
-    val hit = ivfSq8Standing.get(dir + "#sample")
-    if (hit != null) hit
-    else buildIvfSq8IndexWith(spark, dir, key = "#sample",
-      scratch = "tx_ivf_sq8_smp", sampleQuantizer)
-  }
-
-  /** The SAMPLE-trained IVF-SQ8 build as its own declared query — the
-    * r11 composition of the two proven build-cost levers: gate-sampled
-    * Lloyd training (linear instead of N^1.5, [[sampleQuantizer]]) and
-    * the direct SQ8 encode against the pinned range (no N·d exchange,
-    * [[buildIvfSq8IndexWith]]), with the one full-corpus argmin pass
-    * through the map-side-combining [[argminByDist]] kernel as the
-    * only N·k term. Same 3-commit layout as [[ivfSq8Build]]; the audit
-    * row extends its (cell population, pinned range) columns with
-    * `n_sample` — the measured witness that training stayed capped. */
-  def ivfSq8BuildSample(spark: SparkSession, dir: String): DataFrame = {
-    import graft.lake.TxTable
-    val idx = buildIvfSq8IndexWith(spark, dir, key = "#sample",
-      scratch = "tx_ivf_sq8_smp", sampleQuantizer)
-    val nSample = sampleGateAudit(spark, dir)
-    val range = TxTable(spark, idx.stats).read()
-    TxTable(spark, idx.postings).read()
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_cells"),
-        sum(col("n")).cast("long").as("n_vecs"),
-        min(col("n")).cast("long").as("min_cell_pop"),
-        max(col("n")).cast("long").as("max_cell_pop"))
-      .crossJoin(broadcast(range))
-      .crossJoin(broadcast(nSample))
-  }
+  /** [[annIvfSq8]] over the SAMPLE-trained composed index — the serve
+    * never knows how its centroids were trained; different training
+    * set ⇒ different cells ⇒ its own oracle. */
+  def annIvfSq8Sample(spark: SparkSession, dir: String, k: Int = 5,
+      candK: Int = VectorIndex.Sq8CandK, nprobe: Int = 3): DataFrame =
+    VectorIndex.serve(spark, dir,
+      VectorIndex.ensure(spark, dir, VectorIndex.Sq8Sample), k, nprobe, Some(candK))
 
   /** Recall@k of the sample-trained composed serve ([[annIvfSq8Sample]])
     * vs the brute-force exact top-k — prices all three approximations
@@ -1867,145 +1431,9 @@ object Similarity {
     * [[annSampleRecall]] (same centroids, uncompressed candidates) the
     * delta isolates what the codes cost on this alphabet. */
   def annIvfSq8SampleRecall(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = 20, nprobe: Int = 3): DataFrame =
+      candK: Int = VectorIndex.Sq8CandK, nprobe: Int = 3): DataFrame =
     recallOf(spark, dir, annIvfSq8Sample(spark, dir, k, candK, nprobe), k)
 
-  /** The IVF-SQ8 BUILD as its own declared query: owns the quantizer
-    * training, the SQ8 range pin, and all three tx commits; returns
-    * the cell-population audit extended with the pinned code range —
-    * the two build-time decisions (cell alphabet, quantization range)
-    * a deployment monitors for drift. */
-  def ivfSq8Build(spark: SparkSession, dir: String): DataFrame = {
-    import graft.lake.TxTable
-    val idx = buildIvfSq8Index(spark, dir)
-    val range = TxTable(spark, idx.stats).read()
-    TxTable(spark, idx.postings).read()
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_cells"),
-        sum(col("n")).cast("long").as("n_vecs"),
-        min(col("n")).cast("long").as("min_cell_pop"),
-        max(col("n")).cast("long").as("max_cell_pop"))
-      .crossJoin(broadcast(range))
-  }
-
-  /** Multi-probe ANN served from the composed IVF-SQ8 index — the
-    * VERDICT-r8 composition that turns four green parts into the
-    * actual at-scale serving stack. Per query:
-    *  1. rank probe cells on the build-pinned centroid table
-    *     ([[annIndexedSqrt]]'s mechanics — nprobe/⌈√N⌉ of the corpus,
-    *     a fraction that SHRINKS as N grows);
-    *  2. Bloom-pruned point read of the probed cells' postings,
-    *     projecting ONLY (cell, vec_id, codes) — the exact-vector
-    *     column stays unread in the scoring scan (1 B/dim vs 4 B/dim
-    *     memory bandwidth, the SQ8 point);
-    *  3. score candidates with the DECODED integer dot (the codegen'd
-    *     [[graft.functions.DotQ]] kernel plus the exact affine
-    *     correction — see the body comment), keep candK per query;
-    *  4. exact-rerank ONLY the survivors with [[graft.functions
-    *     .CosineSimQ]] against vectors fetched from the SAME probed
-    *     cells (5·candK rows — never a corpus join).
-    * Codes are exact integers against the pinned range, so candidate
-    * sets are bit-identical cross-engine and the whole path shares one
-    * oracle with the unindexed algebra. */
-  def annIvfSq8(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = 20, nprobe: Int = 3): DataFrame =
-    annIvfSq8From(spark, dir, ensureIvfSq8(spark, dir), k, candK, nprobe)
-
-  /** Multi-probe SQ8-compressed ANN served from the SAMPLE-trained
-    * composed index — same serving mechanics as [[annIvfSq8]] (the
-    * serve never knows how its centroids were trained), over the
-    * sample-trained cell alphabet. Different training set ⇒ different
-    * cells ⇒ its own oracle, like the uncompressed sample family. */
-  def annIvfSq8Sample(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = 20, nprobe: Int = 3): DataFrame =
-    annIvfSq8From(spark, dir, ensureIvfSq8Sample(spark, dir), k, candK, nprobe)
-
-  private[graft] def annIvfSq8From(spark: SparkSession, dir: String,
-      idx: IvfSq8Index, k: Int, candK: Int, nprobe: Int): DataFrame = {
-    import graft.lake.TxTable
-    val cents = TxTable(spark, idx.centroids).read()
-    val range = TxTable(spark, idx.stats).read()
-    // build-pinned centroid table is k·d rows — metadata-sized, so
-    // counting it to prove the broadcast bound costs one point read
-    val bounded = cents.count() * 24L <= (32L << 20)
-    val probes = (if (bounded)
-        rankedByDist(Tables(spark, dir).embeddings
-          .filter(col("vec_id") < 5)
-          .select(col("vec_id"), col("embedding")), cents)
-      else rankedTo(quantized(spark, dir).filter(col("vec_id") < 5), cents))
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cell").as("q_cell"))
-    val cellIds = probes.select(col("q_cell")).distinct()
-      .collect().map(r => lit(r.get(0))).toSeq
-    val postings = TxTable(spark, idx.postings).readWhereIn("cell", cellIds)
-    // query codes against the PINNED range — |Q| rows, broadcast;
-    // Σqcode precomputed here once per query, not per candidate row
-    val qCodes = sq8Codes(
-      quantized(spark, dir).filter(col("vec_id") < 5), range)
-      .select(col("vec_id").as("qid"), col("codes").as("qcodes"),
-        col("code_sum").as("qcode_sum"))
-    val queries = probes.join(qCodes, Seq("qid"))
-    // Candidates rank on the DECODED dot product, not the raw code
-    // dot. code = (q - mn)·255 div s (s = mx - mn) centers every code
-    // near 127 for roughly zero-centered embeddings, so the raw code
-    // dot Σc_v·c_q is dominated by 127·Σc_v — it ranks candidates by
-    // their coordinate SUM, uncorrelated with the query (measured:
-    // recall@5 ≈ 0.04 at sf0.1). Undoing the affine shift recovers the
-    // true dot: with dec_i = c_i·s + 255·mn ≈ 255·q_i,
-    //   Σdec(v)·dec(q) = s²·dotQ + 255·mn·s·(Σc_v + Σc_q) + d·(255·mn)²
-    // — exact integer arithmetic end-to-end (|score| ≤ ~1e15 ≪ 2⁶³),
-    // so candidate sets stay bit-identical cross-engine, and for
-    // unit-norm embeddings the ranking ≈ cosine (measured recall@5
-    // 0.52 at sf0.1, equal to the uncompressed probe path's).
-    val r0 = range.head()
-    val mnv = r0.getAs[Long]("mn")
-    val sv = math.max(r0.getAs[Long]("mx") - mnv, 1L)
-    val tv = 255L * mnv
-    // scoring scan is pure codegen arithmetic: the DotQ kernel plus
-    // the build-time Σcode / broadcast-side Σqcode columns — no
-    // interpreted aggregate() HOF runs per candidate row (ADVICE r9)
-    val cand = postings
-      .select(col("cell"), col("vec_id"), col("codes"), col("code_sum"))
-      .join(broadcast(queries), col("cell") === col("q_cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sq8_dot",
-        lit(sv) * lit(sv) *
-          graft.functions.DotQ.dotQ(col("codes"), col("qcodes"))
-          + lit(tv) * lit(sv) * (col("code_sum") + col("qcode_sum"))
-          + size(col("codes")).cast("long") * lit(tv) * lit(tv))
-    val wc = Window.partitionBy(col("qid"))
-      .orderBy(col("sq8_dot").desc, col("vec_id"))
-    val top = cand.withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= candK)
-      .select(col("qid"), col("vec_id").as("nid"), col("sq8_dot"))
-    // exact rerank: survivors' vectors come from the SAME probed-cell
-    // point read (column-pruned to the exact column), never the corpus
-    val rer = top
-      .join(postings.select(col("vec_id").as("nid"),
-        col("embedding").as("n_emb")), Seq("nid"))
-      .join(broadcast(Tables(spark, dir).embeddings
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))),
-        Seq("qid"))
-      .withColumn("cos_e6",
-        graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("n_emb")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_e6").desc, col("nid"))
-    rer.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("sq8_dot"), col("cos_e6"),
-        col("rn").cast("long").as("rn"))
-      .orderBy(col("qid"), col("rn"))
-  }
-
-  /** Recall@k of the composed IVF-SQ8 serving path ([[annIvfSq8]])
-    * against the brute-force exact top-k — the one number that prices
-    * BOTH of the composed index's approximations together: candidate
-    * loss from probing nprobe/⌈√N⌉ cells AND ranking loss from
-    * cutting to candK on the 8-bit code dot before the exact rerank.
-    * Same measured-not-guessed contract as [[annRecall]]: an index
-    * whose recall nobody measured is a wrong-answers generator with
-    * good latency. */
   /** Recall@k of the EXACT √N-cell probe path ([[annIvfSqrtK]]) — the
     * probe-limited ceiling every compressed variant of this index is
     * graded against: [[annIvfSq8Recall]] minus this number is the
@@ -2016,8 +1444,11 @@ object Similarity {
       nprobe: Int = 3): DataFrame =
     recallOf(spark, dir, annIvfSqrtK(spark, dir, k, nprobe), k)
 
+  /** Recall@k of the composed IVF-SQ8 serve — prices candidate loss
+    * from probing nprobe/⌈√N⌉ cells AND ranking loss from cutting to
+    * candK on the code dot before the exact rerank. */
   def annIvfSq8Recall(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = 20, nprobe: Int = 3): DataFrame =
+      candK: Int = VectorIndex.Sq8CandK, nprobe: Int = 3): DataFrame =
     recallOf(spark, dir, annIvfSq8(spark, dir, k, candK, nprobe), k)
 
   // ----------------------------------------------------------------
@@ -2026,247 +1457,63 @@ object Similarity {
   // 8-byte PQ codes, ADC candidate scoring, exact rerank on survivors.
   // ----------------------------------------------------------------
 
-  /** Standing IVF-PQ index: cell-clustered postings
-    * (cell, vec_id, codes, embedding) under the ⌈√N⌉ Lloyd quantizer,
-    * where `codes` is the vector's 8-subspace product-quantization
-    * encoding ([[pqAdc]]'s per-label subspace codebooks — argmin of
-    * exact integer subspace distance), plus the pinned centroid table
-    * and the pinned codebook. Where SQ8 stores 1 B/dim (4×
-    * compression), PQ stores 8 codes for 64 dims (~32×): the scoring
-    * scan reads 8 small ints per candidate and the query's
-    * constant-size distance table does the rest — the FAISS `IVF…,PQ8`
-    * layout. */
-  final case class IvfPqIndex(postings: String, centroids: String,
-      codebook: String)
-
-  private val ivfPqStanding =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfPqIndex]()
+  /** Dims per PQ subspace: 8 subspaces on d = 64 (~32× compression).
+    * The 16-subspace variant reaches the same recall ceiling at
+    * candK = 50 but doubles every candidate's scan bytes (BASELINE.md). */
+  private[graft] val PqDimsPerSub = 8
 
   /** Per-(subspace, label) codebook over e4 coords — half-up integer
     * means, the deterministic stand-in for per-subspace kmeans
-    * ([[pqAdc]]'s construction, (d/dimsPerSub)·|labels|·dimsPerSub
-    * rows, bounded). dimsPerSub=8 on d=64 is the default 8-subspace
-    * (~32×) point; dimsPerSub=4 the 16-subspace (~16×) frontier
-    * variant — more subspaces = finer quantization = better ADC
-    * ranking at proportionally more code bytes per candidate. */
-  private[graft] def pqCodebook(qe: DataFrame, dimsPerSub: Int = 8): DataFrame =
-    qe.withColumn("sub", expr(s"dim div $dimsPerSub"))
+    * ([[pqAdc]]'s construction, (d/8)·|labels|·8 rows, bounded). */
+  private[graft] def pqCodebook(qe: DataFrame): DataFrame =
+    qe.withColumn("sub", expr(s"dim div $PqDimsPerSub"))
       .groupBy(col("sub"), col("label").as("code"), col("dim"))
       .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
       .select(col("sub"), col("code"), col("dim"),
         expr("CAST(floor(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) + 0.5) AS BIGINT)")
           .as("c"))
 
-  /** One pass into the standing IVF-PQ index: train the ⌈√N⌉
-    * quantizer (same deterministic Lloyd ⇒ same cell alphabet as the
-    * √N/SQ8 indices), pin the PQ codebook, encode every vector as its
-    * 8 argmin sub-centroids (map-side-combining `min_by` — the r10
-    * argmin kernel, no N·8·k window sort), and lay the postings out
-    * cell-range-partitioned with codes AND exact vectors side by side
-    * (codes serve ADC candidate generation; the exact column serves
-    * only the candK rerank and column-prunes out of the scoring
-    * scan). */
-  private def buildIvfPqIndex(spark: SparkSession, dir: String): IvfPqIndex =
-    buildIvfPqIndexWith(spark, dir, key = "", scratch = "tx_ivf_pq",
-      sqrtQuantizer)
+  /** The IVF-PQ BUILD as its own declared query: trains the ⌈√N⌉
+    * quantizer (the same cell alphabet as the √N/SQ8 indices), pins the
+    * PQ codebook, encodes every vector on the row as its 8 argmin
+    * sub-centroids, and commits postings with codes AND exact vectors
+    * side by side — the FAISS `IVF…,PQ8` layout: where SQ8 stores
+    * 1 B/dim, PQ stores 8 codes for 64 dims. The audit adds the
+    * codebook row count (the code alphabet size). */
+  def ivfPqBuild(spark: SparkSession, dir: String): DataFrame =
+    VectorIndex.buildAudit(spark, dir, VectorIndex.PqSqrt)
 
-  /** [[buildIvfPqIndex]] with the coarse quantizer as a parameter —
-    * the same composition seam [[buildIvfSq8IndexWith]] opened for the
-    * SQ8 family (r11): the PQ index machinery (codebook pin, `min_by`
-    * encode, 3-commit layout) is orthogonal to how the cell alphabet
-    * was trained, so the SAMPLE-trained quantizer (linear training,
-    * [[sampleQuantizer]]) drops in unchanged. The PQ CODEBOOK stays a
-    * full-corpus aggregate either way — per-(sub, label) means are ONE
-    * linear N·d pass (same cost class as the SQ8 family's full-corpus
-    * [mn,mx] range pin), so sampling it would save nothing asymptotic
-    * while forking the code alphabet; the N^1.5 term this composition
-    * removes is Lloyd's iters·N·k coarse training alone. */
-  private[graft] def buildIvfPqIndexWith(spark: SparkSession, dir: String,
-      key: String, scratch: String,
-      quant: (SparkSession, String) => (DataFrame, Boolean),
-      dimsPerSub: Int = 8): IvfPqIndex = {
-    import graft.lake.TxTable
-    import graft.core.Scratch
-    val (cents, bounded) = quant(spark, dir)
-    val cb = pqCodebook(qe4(spark, dir), dimsPerSub).localCheckpoint() // bounded, pinned
-    // r16 (guide §2.3/§2.4): cell AND codes both computed ON the scan
-    // row ([[memberRows]] + [[withPqCodes]]) — the former N·d·|codes|
-    // subDist join, its two aggregate exchanges, the collect_list
-    // pack, and both join-backs are all gone.
-    val pDir = Scratch.fresh(scratch)
-    TxTable(spark, pDir).append(
-      withPqCodes(memberRows(spark, dir, cents, bounded), cb, dimsPerSub)
-        .select(col("cell"), col("vec_id"), col("codes"), col("embedding"))
-        .repartitionByRange(8, col("cell")),
-      bloomCols = Seq("cell"))
-    val cDir = Scratch.fresh(scratch + "_cents")
-    TxTable(spark, cDir).append(cents)
-    val bDir = Scratch.fresh(scratch + "_cb")
-    TxTable(spark, bDir).append(cb)
-    writeIndexManifest(pDir, "family" -> ("ivf_pq" + key),
-      "centroids" -> cDir, "codebook" -> bDir)
-    val idx = IvfPqIndex(pDir, cDir, bDir)
-    ivfPqStanding.put(dir + key, idx)
-    idx
-  }
-
-  /** Get-or-build the standing IVF-PQ index (Bench warms it so
-    * `sim_ann_ivfpq` times the point-read + ADC serving path). */
-  def ensureIvfPq(spark: SparkSession, dir: String): IvfPqIndex = {
-    val hit = ivfPqStanding.get(dir)
-    if (hit != null) hit else buildIvfPqIndex(spark, dir)
-  }
-
-  /** Get-or-build the SAMPLE-trained IVF-PQ index (Bench warms it so
-    * `sim_ann_ivfpq_sample` times the ADC serving path alone). */
-  def ensureIvfPqSample(spark: SparkSession, dir: String): IvfPqIndex = {
-    val hit = ivfPqStanding.get(dir + "#sample")
-    if (hit != null) hit
-    else buildIvfPqIndexWith(spark, dir, key = "#sample",
-      scratch = "tx_ivf_pq_smp", sampleQuantizer)
-  }
-
-  /** The SAMPLE-trained IVF-PQ build as its own declared query
-    * (VERDICT r11 task 2) — the same two proven build-cost levers the
-    * SQ8 family composed in r11, applied to the PQ index:
-    * gate-sampled Lloyd coarse training (linear instead of N^1.5,
-    * [[sampleQuantizer]]) under the unchanged PQ machinery (linear
-    * full-corpus codebook aggregate, `min_by` encode, 3-commit
-    * layout), leaving the full-corpus argmin assignment and the
-    * encode as the only N-proportional passes. The audit row extends
-    * [[ivfPqBuild]]'s (cell populations, cb_rows) with `n_sample` —
-    * the measured witness that coarse training stayed capped. */
-  def ivfPqBuildSample(spark: SparkSession, dir: String): DataFrame = {
-    import graft.lake.TxTable
-    val idx = buildIvfPqIndexWith(spark, dir, key = "#sample",
-      scratch = "tx_ivf_pq_smp", sampleQuantizer)
-    val nSample = sampleGateAudit(spark, dir)
-    val cbRows = TxTable(spark, idx.codebook).read()
-      .agg(count(lit(1)).as("cb_rows"))
-    TxTable(spark, idx.postings).read()
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_cells"),
-        sum(col("n")).cast("long").as("n_vecs"),
-        min(col("n")).cast("long").as("min_cell_pop"),
-        max(col("n")).cast("long").as("max_cell_pop"))
-      .crossJoin(broadcast(cbRows))
-      .crossJoin(broadcast(nSample))
-  }
-
-  /** The IVF-PQ build as its own declared query: owns the quantizer
-    * training, the codebook pin, the `min_by` encode, and all three
-    * tx commits; returns the cell-population audit extended with the
-    * codebook row count — the build-time decision (code alphabet
-    * size) a deployment monitors alongside the cell alphabet. */
-  def ivfPqBuild(spark: SparkSession, dir: String): DataFrame = {
-    import graft.lake.TxTable
-    val idx = buildIvfPqIndex(spark, dir)
-    val cbRows = TxTable(spark, idx.codebook).read()
-      .agg(count(lit(1)).as("cb_rows"))
-    TxTable(spark, idx.postings).read()
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_cells"),
-        sum(col("n")).cast("long").as("n_vecs"),
-        min(col("n")).cast("long").as("min_cell_pop"),
-        max(col("n")).cast("long").as("max_cell_pop"))
-      .crossJoin(broadcast(cbRows))
-  }
+  /** The SAMPLE-trained IVF-PQ build: gate-sampled coarse training
+    * under the unchanged PQ machinery. The codebook stays a
+    * full-corpus aggregate — one linear N·d pass, so sampling it would
+    * save nothing asymptotic while forking the code alphabet; the
+    * N^1.5 term removed is Lloyd's alone. The audit adds `n_sample`. */
+  def ivfPqBuildSample(spark: SparkSession, dir: String): DataFrame =
+    VectorIndex.buildAudit(spark, dir, VectorIndex.PqSample)
 
   /** Multi-probe ANN served from the standing IVF-PQ index — the ADC
-    * form of [[annIvfSq8]]'s composition. Per query:
-    *  1. rank probe cells on the build-pinned centroid table
-    *     (nprobe/⌈√N⌉ of the corpus, shrinking as N grows);
-    *  2. Bloom-pruned point read of the probed cells' postings,
-    *     projecting ONLY (cell, vec_id, codes) — 8 small ints per
-    *     candidate, the 32× compression the scoring scan pays for;
-    *  3. ADC: the query's exact distance to every (sub, code)
-    *     centroid is a constant-size table (|Q|·8·|codes| rows,
-    *     broadcast); a candidate's approximate distance is the sum of
-    *     8 table lookups over its codes (posexplode + broadcast
-    *     equi-join + map-side-combined sum). Keep candK per query;
-    *  4. exact-rerank ONLY the survivors against vectors from the
-    *     SAME probed-cell read.
-    * Codebook, codes, and distance tables are exact integers, so
-    * candidate sets are bit-identical cross-engine. */
-  /** candK default = 100 BY MEASUREMENT (r12 frontier sweep,
-    * `tools.PqFrontier` + BASELINE.md): at 8 subspaces the ADC ranking
-    * loss goes to ZERO at candK=100 — recall equals the nprobe=3
-    * probe-limited ceiling — while candK=20 (the r11 default) left a
-    * 20% relative recall gap. The dial is rerank-side only: scan bytes
-    * (8 B/candidate, ~32× compression) are unchanged, and the exact
-    * rerank grows to |Q|·100 rows — still metadata-sized. The
-    * 16-subspace variant reaches the same ceiling at candK=50 but
-    * doubles every candidate's scan bytes; 8 subspaces stays the
-    * default. */
+    * form of [[annIvfSq8]]: probe cells on the pinned centroids,
+    * Bloom-pruned point read projecting ONLY (cell, vec_id, codes) for
+    * scoring, ADC against the query's constant-size distance table,
+    * exact rerank of the candK survivors from the same probed cells.
+    * Codebook, codes and distance tables are exact integers, so
+    * candidate sets are bit-identical cross-engine. candK = 100 by
+    * measurement (the r12 frontier sweep in BASELINE.md): at 8
+    * subspaces the ADC ranking loss reaches zero there — recall equals
+    * the nprobe = 3 probe-limited ceiling — where candK = 20 left a 20%
+    * relative recall gap; the rerank grows to |Q|·100 rows, still
+    * metadata-sized. */
   def annIvfPq(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = 100, nprobe: Int = 3): DataFrame =
-    annIvfPqFrom(spark, dir, ensureIvfPq(spark, dir), k, candK, nprobe)
+      candK: Int = VectorIndex.PqCandK, nprobe: Int = 3): DataFrame =
+    VectorIndex.serve(spark, dir,
+      VectorIndex.ensure(spark, dir, VectorIndex.PqSqrt), k, nprobe, Some(candK))
 
-  /** Multi-probe ADC ANN served from the SAMPLE-trained IVF-PQ index —
-    * same serving mechanics as [[annIvfPq]] (the serve never knows how
-    * its coarse cells were trained), over the sample-trained cell
-    * alphabet. Different training set ⇒ different cells ⇒ its own
+  /** [[annIvfPq]] over the SAMPLE-trained IVF-PQ index — its own
     * oracle, mirroring the SQ8 sample family. */
   def annIvfPqSample(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = 100, nprobe: Int = 3): DataFrame =
-    annIvfPqFrom(spark, dir, ensureIvfPqSample(spark, dir), k, candK, nprobe)
-
-  private[graft] def annIvfPqFrom(spark: SparkSession, dir: String,
-      idx: IvfPqIndex, k: Int, candK: Int, nprobe: Int,
-      dimsPerSub: Int = 8): DataFrame = {
-    import graft.lake.TxTable
-    val cents = TxTable(spark, idx.centroids).read()
-    val bounded = cents.count() * 24L <= (32L << 20)
-    val probes = (if (bounded)
-        rankedByDist(Tables(spark, dir).embeddings
-          .filter(col("vec_id") < 5)
-          .select(col("vec_id"), col("embedding")), cents)
-      else rankedTo(quantized(spark, dir).filter(col("vec_id") < 5), cents))
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cell").as("q_cell"))
-    val cellIds = probes.select(col("q_cell")).distinct()
-      .collect().map(r => lit(r.get(0))).toSeq
-    val postings = TxTable(spark, idx.postings).readWhereIn("cell", cellIds)
-    // query distance table against the PINNED codebook: |Q|·8·|codes|
-    // rows — metadata-sized, broadcast with the probe list
-    val cb = TxTable(spark, idx.codebook).read()
-    val qd = qe4(spark, dir).filter(col("vec_id") < 5)
-      .withColumn("sub", expr(s"dim div $dimsPerSub"))
-      .join(broadcast(cb), Seq("sub", "dim"))
-      .groupBy(col("vec_id"), col("sub"), col("code"))
-      .agg(sum((col("q") - col("c")) * (col("q") - col("c"))).as("d2"))
-      .select(col("vec_id").as("qid"), col("sub"), col("code"), col("d2"))
-    val cand = postings
-      .select(col("cell"), col("vec_id"),
-        posexplode(col("codes")).as(Seq("sub", "code")))
-      .withColumn("sub", col("sub").cast("long"))
-      .join(broadcast(probes), col("cell") === col("q_cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .join(broadcast(qd), Seq("qid", "sub", "code"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("d2")).as("adc_dist2"))
-    val wc = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_dist2"), col("vec_id"))
-    val top = cand.withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= candK)
-      .select(col("qid"), col("vec_id").as("nid"), col("adc_dist2"))
-    val rer = top
-      .join(postings.select(col("vec_id").as("nid"),
-        col("embedding").as("n_emb")), Seq("nid"))
-      .join(broadcast(Tables(spark, dir).embeddings
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))),
-        Seq("qid"))
-      .withColumn("cos_e6",
-        graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("n_emb")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_e6").desc, col("nid"))
-    rer.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("adc_dist2"), col("cos_e6"),
-        col("rn").cast("long").as("rn"))
-      .orderBy(col("qid"), col("rn"))
-  }
+      candK: Int = VectorIndex.PqCandK, nprobe: Int = 3): DataFrame =
+    VectorIndex.serve(spark, dir,
+      VectorIndex.ensure(spark, dir, VectorIndex.PqSample), k, nprobe, Some(candK))
 
   /** Recall@k of the IVF-PQ serve vs the brute-force exact top-k —
     * prices the probed-cell candidate loss plus the 8-byte ADC
@@ -2274,136 +1521,19 @@ object Similarity {
     * (same cells, exact candidates) the delta is what PQ's 32×
     * compression costs in candidate quality. */
   def annIvfPqRecall(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = 100, nprobe: Int = 3): DataFrame =
+      candK: Int = VectorIndex.PqCandK, nprobe: Int = 3): DataFrame =
     recallOf(spark, dir, annIvfPq(spark, dir, k, candK, nprobe), k)
 
-  /** Recall@k of the sample-trained IVF-PQ serve vs the brute-force
-    * exact top-k — prices all three approximations together (sampled
-    * coarse centroids, probed-cell candidate loss, ADC ranking loss);
-    * read against [[annIvfPqRecall]] at the same nprobe/candK, the
-    * delta isolates what sample training costs on this index family
-    * (measured 0 for the SQ8 twin in r11). */
+  /** Recall@k of the sample-trained IVF-PQ serve — read against
+    * [[annIvfPqRecall]] at the same nprobe/candK, the delta isolates
+    * what sample training costs on this index family. */
   def annIvfPqSampleRecall(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = 100, nprobe: Int = 3): DataFrame =
+      candK: Int = VectorIndex.PqCandK, nprobe: Int = 3): DataFrame =
     recallOf(spark, dir, annIvfPqSample(spark, dir, k, candK, nprobe), k)
 
   // ----------------------------------------------------------------
-  // Grow-aware √N index maintenance: auto re-bucket under appends.
+  // Codec and quantizer pieces the index lifecycle composes.
   // ----------------------------------------------------------------
-
-  /** Handle on a grow-aware √N IVF index: postings + pinned-centroid
-    * tx tables and the pinned cell count k. Immutable — maintenance
-    * returns a NEW handle (a rebuild retires the old roots), so a
-    * reader holding the old handle keeps a consistent snapshot. */
-  final case class IvfGrowIndex(postings: String, centroids: String, k: Int)
-
-  /** Train a fresh ⌈√N⌉-cell index over `emb` (vec_id, embedding) —
-    * the grow-aware lifecycle's t=0. Same deterministic Lloyd as
-    * [[ensureIvfSqrt]]; postings cell-range-partitioned, Bloom on
-    * `cell`. */
-  def ivfGrowInit(spark: SparkSession, emb: DataFrame): IvfGrowIndex = {
-    val e = emb.select(col("vec_id"), col("embedding")).persist()
-    val k = math.ceil(math.sqrt(e.count().toDouble)).toInt
-    val cents = lloydCentroidsFast(e, k, 2).localCheckpoint()
-    val idx = writeGrowIndex(spark, e, cents, k)
-    e.unpersist(blocking = false)
-    idx
-  }
-
-  private def writeGrowIndex(spark: SparkSession, emb: DataFrame,
-      cents: DataFrame, k: Int): IvfGrowIndex = {
-    import graft.lake.TxTable
-    import graft.core.Scratch
-    val pDir = Scratch.fresh("tx_ivf_grow")
-    TxTable(spark, pDir).append(
-      withArgminCell(emb.select(col("vec_id"), col("embedding")), cents)
-        .select(col("cell"), col("vec_id"), col("embedding"))
-        .repartitionByRange(8, col("cell")),
-      bloomCols = Seq("cell"))
-    val cDir = Scratch.fresh("tx_ivf_grow_cents")
-    TxTable(spark, cDir).append(cents)
-    IvfGrowIndex(pDir, cDir, k)
-  }
-
-  /** Append `delta` vectors to a grow-aware index, RE-BUCKETING when
-    * the corpus outgrows the pinned cell alphabet.
-    *
-    * The cheap path assigns the delta against the PINNED centroids
-    * (touches only the delta — [[ivfAppendServe]]'s semantic) and
-    * commits it into the existing postings. The REBUILD TRIGGER is
-    * N > (k·growthFactor)²: the pinned k has fallen behind ⌈√N⌉ by
-    * more than `growthFactor`, so the probed fraction nprobe/k has
-    * drifted a factor growthFactor above the nprobe/√N design point.
-    * A rebuild retrains k′ = ⌈√N⌉ Lloyd cells seeded by SPLITTING THE
-    * PINNED ALPHABET PROPORTIONALLY: each old cell contributes
-    * ⌈k′·pop/N⌋ seeds (largest-remainder allocation), picked as
-    * hash-ranked MEMBER VECTORS of that cell — so dense cells split
-    * into several and cluster structure carries over instead of
-    * restarting cold. Seeding from members, not from the old centroid
-    * means, matters: a mean is central in high-dimensional space, so
-    * mixing mean-seeds with point-seeds makes every new cell collapse
-    * to a singleton (measured on the sf0.01 corpus: 11 of 11 new
-    * cells degenerate); all-point seeding keeps the alphabet
-    * balanced. Postings + centroids rewrite under fresh roots.
-    * Amortization is geometric: rebuild i processes N_i ≈
-    * growthFactor²·N_{i-1} rows, so total rebuild work over any
-    * append sequence is O(N_final · gf²/(gf²−1)) — a constant factor
-    * over one build, the textbook doubling argument.
-    *
-    * Returns the (possibly new) handle; `ivfProbedFraction` measures
-    * the property this maintains — probed fraction non-increasing as
-    * the corpus grows ([[IvfGrowSpec]]). */
-  def ivfGrowAppend(spark: SparkSession, idx: IvfGrowIndex,
-      delta: DataFrame, growthFactor: Double = 2.0): IvfGrowIndex = {
-    import graft.lake.TxTable
-    val cents = TxTable(spark, idx.centroids).read()
-    val d = delta.select(col("vec_id"), col("embedding"))
-    val tx = TxTable(spark, idx.postings)
-    tx.append(
-      withArgminCell(d, cents)
-        .select(col("cell"), col("vec_id"), col("embedding"))
-        .repartitionByRange(8, col("cell")),
-      bloomCols = Seq("cell"))
-    val n = tx.read().count()
-    val threshold = (idx.k.toDouble * growthFactor) *
-      (idx.k.toDouble * growthFactor)
-    if (n.toDouble <= threshold) idx
-    else {
-      // re-bucket: k' = ceil(sqrt(N)) cells, seeded by splitting the
-      // pinned alphabet proportionally to cell population
-      val kNew = math.ceil(math.sqrt(n.toDouble)).toInt
-      val emb = tx.read().select(col("vec_id"), col("embedding"))
-        .localCheckpoint() // pin the merged snapshot for the rebuild
-      // current assignment under the pinned centroids: the merged
-      // postings already carry it (argmin cell at commit time)
-      val memberNow = tx.read().select(col("vec_id"), col("cell"))
-      val pops = memberNow.groupBy(col("cell"))
-        .agg(count(lit(1)).as("pop"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq // k rows
-      val seats = allocSeats(pops, kNew)
-      import spark.implicits._
-      val seatDf = broadcast(seats.toSeq.toDF("cell", "seats"))
-      val hashOrder = Seq(
-        graft.functions.PortableHash.phash(col("vec_id").cast("string"), 11).asc,
-        col("vec_id").asc)
-      val wCell = Window.partitionBy(col("cell")).orderBy(hashOrder: _*)
-      val picked = memberNow
-        .withColumn("r", row_number().over(wCell))
-        .join(seatDf, Seq("cell"))
-        .filter(col("r") <= col("seats"))
-      val wAll = Window.orderBy(col("cell"), col("r")) // over k' rows only
-      val seeds = picked
-        .withColumn("newcell", (row_number().over(wAll) - 1).cast("long"))
-        .select(col("vec_id"), col("newcell"))
-      val cents0 = emb.join(broadcast(seeds), Seq("vec_id"))
-        .select(col("newcell").as("cell"),
-          posexplode(col("embedding")).as(Seq("dim", "x")))
-        .select(col("cell"), col("dim").cast("long").as("dim"),
-          expr("CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)").as("c"))
-      val centsNew = lloydFrom(emb, cents0, 2).localCheckpoint()
-      writeGrowIndex(spark, emb, centsNew, kNew)
-    }
-  }
 
   /** Largest-remainder seat allocation of `k` rebuild seeds across the
     * old cells, proportional to population and capped by it (a cell
@@ -2429,82 +1559,6 @@ object Similarity {
     seats.toMap
   }
 
-  /** Mean probed corpus fraction for `queries` (vec_id, embedding) at
-    * `nprobe` — the scale property the grow-aware maintenance keeps:
-    * Σ(probed cells' population) / N per query, averaged. Constant
-    * between rebuilds (appends distribute over the fixed alphabet),
-    * dropping to ≈ nprobe/⌈√N⌉ at each re-bucket. */
-  def ivfProbedFraction(spark: SparkSession, idx: IvfGrowIndex,
-      queries: DataFrame, nprobe: Int = 3): Double =
-    probedFractionAt(spark, idx.postings, idx.centroids, queries, nprobe)
-
-  /** [[ivfProbedFraction]] over raw table roots — shared with the
-    * composed-index grow lifecycles ([[ivfSq8GrowAppend]],
-    * [[ivfPqGrowAppend]]), whose handles carry more tables but obey
-    * the same probed-fraction law. */
-  private def probedFractionAt(spark: SparkSession, postingsDir: String,
-      centroidsDir: String, queries: DataFrame, nprobe: Int): Double = {
-    import graft.lake.TxTable
-    val cents = TxTable(spark, centroidsDir).read()
-    val posts = TxTable(spark, postingsDir).read()
-    val pop = posts.groupBy(col("cell")).agg(count(lit(1)).as("pop"))
-    val n = posts.count().toDouble
-    val probes = rankedByDist(
-        queries.select(col("vec_id"), col("embedding")), cents)
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cell"))
-    val perQuery = probes.join(pop, Seq("cell"))
-      .groupBy(col("qid")).agg(sum(col("pop")).as("probed"))
-      .agg(avg(col("probed"))).head().getDouble(0)
-    perQuery / n
-  }
-
-  // ----------------------------------------------------------------
-  // Grow-aware maintenance for the COMPOSED standing indexes
-  // (VERDICT r11 task 5): the SQ8-sample and PQ-sample indexes gain
-  // the same append/trigger/rebuild lifecycle the exact √N index has.
-  // ----------------------------------------------------------------
-
-  /** Handle on a grow-aware SAMPLE-trained IVF-SQ8 index: postings +
-    * pinned centroids + pinned SQ8 range, and the pinned cell count k.
-    * Immutable, like [[IvfGrowIndex]] — a rebuild returns a NEW handle
-    * under fresh roots. */
-  final case class IvfSq8GrowIndex(postings: String, centroids: String,
-      stats: String, k: Int)
-
-  /** [[sampleQuantizer]] over an arbitrary (vec_id, embedding) frame —
-    * the grow lifecycles train on merged snapshots, not the fixed
-    * corpus table. Returns (centroids, k). Linear: the Lloyd
-    * iterations read only the hash-gated 8·⌈√N⌉ sample; rebuilds under
-    * this quantizer are therefore CHEAP enough that the composed grow
-    * path retrains from the gate instead of seeding from the outgrown
-    * alphabet ([[ivfGrowAppend]]'s proportional-split machinery exists
-    * to amortize full Lloyd's N^1.5 — sample training has no such term
-    * to amortize). */
-  private def sampleQuantizerOf(emb: DataFrame): (DataFrame, Int) = {
-    val e = emb.select(col("vec_id"), col("embedding"))
-    val nd = e.agg(count(lit(1)).as("n"),
-      max(size(col("embedding"))).cast("long").as("d")).head
-    val n = nd.getLong(0)
-    val (kk, _, gate) = sampleGate(n)
-    val sample = e
-      .filter(gate)
-      .repartition(e.sparkSession.sparkContext.defaultParallelism,
-        col("vec_id"))
-    // same broadcast budget as [[sampleQuantizer]] (ADVICE r12): the
-    // fast kernel's argmin broadcasts the full k·d centroid table,
-    // which on a large grow rebuild is an unbounded static broadcast —
-    // past the 32 MB proof it falls back to the shuffled-join Lloyd
-    val bounded = kk.toLong * nd.getLong(1) * 24L <= (32L << 20)
-    val sampleT = sample.persist()
-    val cents =
-      (if (bounded) lloydCentroidsFast(sampleT, kk, 2)
-       else lloydCentroids(quantizedOf(sampleT), kk, 2, boundedK = false))
-        .localCheckpoint()
-    sampleT.unpersist(blocking = false)
-    (cents, kk)
-  }
-
   /** The SQ8 encode expression against a DRIVER-PINNED (mn, s) range —
     * shared by the grow init (fresh range) and append (range read back
     * from the pinned stats table): exact integers, never clamped, so a
@@ -2515,90 +1569,6 @@ object Similarity {
     s"""transform(embedding, x ->
           ((CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT) - ${mnv}L)
             * 255) div ${sv}L)""")
-
-  private def writeSq8GrowIndex(spark: SparkSession, emb: DataFrame,
-      cents: DataFrame, k: Int): IvfSq8GrowIndex = {
-    import graft.lake.TxTable
-    import graft.core.Scratch
-    val range = quantizedOf(emb)
-      .agg(min(col("q")).as("mn"), max(col("q")).as("mx"))
-      .localCheckpoint()
-    val r0 = range.head()
-    val mnv = r0.getAs[Long]("mn")
-    val sv = math.max(r0.getAs[Long]("mx") - mnv, 1L)
-    val pDir = Scratch.fresh("tx_sq8_grow")
-    TxTable(spark, pDir).append(
-      withArgminCell(emb.select(col("vec_id"), col("embedding")), cents)
-        .withColumn("codes", sq8EncodeExpr(mnv, sv))
-        .withColumn("code_sum", expr("aggregate(codes, 0L, (a, x) -> a + x)"))
-        .select(col("cell"), col("vec_id"), col("codes"), col("code_sum"),
-          col("embedding"))
-        .repartitionByRange(8, col("cell")),
-      bloomCols = Seq("cell"))
-    val cDir = Scratch.fresh("tx_sq8_grow_cents")
-    TxTable(spark, cDir).append(cents)
-    val sDir = Scratch.fresh("tx_sq8_grow_stats")
-    TxTable(spark, sDir).append(range)
-    IvfSq8GrowIndex(pDir, cDir, sDir, k)
-  }
-
-  /** Train a fresh sample-quantized SQ8 index over `emb`
-    * (vec_id, embedding) — the composed grow lifecycle's t=0. */
-  def ivfSq8GrowInit(spark: SparkSession, emb: DataFrame): IvfSq8GrowIndex = {
-    val e = emb.select(col("vec_id"), col("embedding"))
-    val (cents, kk) = sampleQuantizerOf(e)
-    writeSq8GrowIndex(spark, e, cents, kk)
-  }
-
-  /** Append `delta` vectors to a grow-aware SQ8 index. The cheap path
-    * assigns the delta against the PINNED centroids and encodes it
-    * against the PINNED range — both build-time artifacts stay
-    * immutable, so every previously served answer is unchanged and the
-    * append touches only the delta. The rebuild trigger is
-    * [[ivfGrowAppend]]'s law, N > (k·growthFactor)²; a rebuild
-    * RE-TRAINS the codebooks the task named — fresh gate-sampled
-    * centroids AND a fresh [mn,mx] range over the merged corpus — and
-    * rewrites postings under new roots (geometric amortization, same
-    * doubling argument). */
-  def ivfSq8GrowAppend(spark: SparkSession, idx: IvfSq8GrowIndex,
-      delta: DataFrame, growthFactor: Double = 2.0): IvfSq8GrowIndex = {
-    import graft.lake.TxTable
-    val cents = TxTable(spark, idx.centroids).read()
-    val r0 = TxTable(spark, idx.stats).read().head()
-    val mnv = r0.getAs[Long]("mn")
-    val sv = math.max(r0.getAs[Long]("mx") - mnv, 1L)
-    val d = delta.select(col("vec_id"), col("embedding"))
-    val tx = TxTable(spark, idx.postings)
-    tx.append(
-      withArgminCell(d, cents)
-        .withColumn("codes", sq8EncodeExpr(mnv, sv))
-        .withColumn("code_sum", expr("aggregate(codes, 0L, (a, x) -> a + x)"))
-        .select(col("cell"), col("vec_id"), col("codes"), col("code_sum"),
-          col("embedding"))
-        .repartitionByRange(8, col("cell")),
-      bloomCols = Seq("cell"))
-    val n = tx.read().count()
-    val threshold = (idx.k.toDouble * growthFactor) *
-      (idx.k.toDouble * growthFactor)
-    if (n.toDouble <= threshold) idx
-    else {
-      val emb = tx.read().select(col("vec_id"), col("embedding"))
-        .localCheckpoint() // pin the merged snapshot for the rebuild
-      val (cents2, k2) = sampleQuantizerOf(emb)
-      writeSq8GrowIndex(spark, emb, cents2, k2)
-    }
-  }
-
-  /** Probed fraction of a grow-aware SQ8 index — same law, same
-    * measurement, as [[ivfProbedFraction]]. */
-  def ivfSq8ProbedFraction(spark: SparkSession, idx: IvfSq8GrowIndex,
-      queries: DataFrame, nprobe: Int = 3): Double =
-    probedFractionAt(spark, idx.postings, idx.centroids, queries, nprobe)
-
-  /** Handle on a grow-aware SAMPLE-trained IVF-PQ index: postings +
-    * pinned centroids + pinned per-(sub, code) codebook. */
-  final case class IvfPqGrowIndex(postings: String, centroids: String,
-      codebook: String, k: Int)
 
   /** One-row flattened codebook pack (codes sorted asc; per-code
     * FULL-LENGTH dim-ordered quantized centroid vectors) — the
@@ -2622,93 +1592,9 @@ object Similarity {
     * loops the broadcast [[cbPack]] per row inside the scan's codegen
     * stage — zero Exchange. Same integers, same code-asc tie-break
     * (`KernelEquivalenceSpec`). */
-  private[graft] def withPqCodes(rows: DataFrame, cb: DataFrame,
-      dimsPerSub: Int): DataFrame =
+  private[graft] def withPqCodes(rows: DataFrame, cb: DataFrame): DataFrame =
     rows.crossJoin(broadcast(cbPack(cb)))
       .withColumn("codes", graft.functions.PqEncodeQ.pqEncodeQ(
-        col("embedding"), col("cb_codes"), col("cb_cvecs"), dimsPerSub))
+        col("embedding"), col("cb_codes"), col("cb_cvecs"), PqDimsPerSub))
       .drop("cb_codes", "cb_cvecs")
-
-  /** PQ encode of `emb` (vec_id, embedding) against a PINNED codebook
-    * — [[withPqCodes]] projected to (vec_id, codes). The grow append
-    * and the streamed-PQ maintenance run this over deltas only. */
-  private[graft] def pqEncodeAgainst(emb: DataFrame, cb: DataFrame,
-      dimsPerSub: Int = 8): DataFrame =
-    withPqCodes(emb.select(col("vec_id"), col("embedding")), cb, dimsPerSub)
-      .select(col("vec_id"), col("codes"))
-
-  /** `emb` is (vec_id, embedding, label): the label rides INTO the
-    * postings row — like [[buildIvfSqrtIndex]]'s attribute column — so
-    * a rebuild can retrain the per-(sub, label) codebook from the
-    * merged snapshot without a corpus join. */
-  private def writePqGrowIndex(spark: SparkSession, emb: DataFrame,
-      cents: DataFrame, cb: DataFrame, k: Int): IvfPqGrowIndex = {
-    import graft.lake.TxTable
-    import graft.core.Scratch
-    val pDir = Scratch.fresh("tx_pq_grow")
-    TxTable(spark, pDir).append(
-      withPqCodes(withArgminCell(
-          emb.select(col("vec_id"), col("embedding"), col("label")), cents),
-        cb, dimsPerSub = 8)
-        .select(col("cell"), col("vec_id"), col("codes"), col("label"),
-          col("embedding"))
-        .repartitionByRange(8, col("cell")),
-      bloomCols = Seq("cell"))
-    val cDir = Scratch.fresh("tx_pq_grow_cents")
-    TxTable(spark, cDir).append(cents)
-    val bDir = Scratch.fresh("tx_pq_grow_cb")
-    TxTable(spark, bDir).append(cb)
-    IvfPqGrowIndex(pDir, cDir, bDir, k)
-  }
-
-  /** Train a fresh sample-quantized PQ index over `emb`
-    * (vec_id, embedding, label) — labels seed the per-subspace
-    * codebook, exactly as in [[buildIvfPqIndexWith]]. */
-  def ivfPqGrowInit(spark: SparkSession, emb: DataFrame): IvfPqGrowIndex = {
-    val (cents, kk) = sampleQuantizerOf(emb)
-    val qe = quantizedOf(emb)
-      .join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
-    writePqGrowIndex(spark, emb, cents, pqCodebook(qe).localCheckpoint(), kk)
-  }
-
-  /** Append `delta` (vec_id, embedding, label) to a grow-aware PQ
-    * index: assign + PQ-encode against the PINNED centroids/codebook;
-    * rebuild (fresh sample centroids, fresh codebook, full re-encode)
-    * when N > (k·growthFactor)². */
-  def ivfPqGrowAppend(spark: SparkSession, idx: IvfPqGrowIndex,
-      delta: DataFrame, growthFactor: Double = 2.0): IvfPqGrowIndex = {
-    import graft.lake.TxTable
-    val cents = TxTable(spark, idx.centroids).read()
-    val cb = TxTable(spark, idx.codebook).read()
-    val d = delta.select(col("vec_id"), col("embedding"), col("label"))
-    val tx = TxTable(spark, idx.postings)
-    tx.append(
-      withPqCodes(withArgminCell(d, cents), cb, dimsPerSub = 8)
-        .select(col("cell"), col("vec_id"), col("codes"), col("label"),
-          col("embedding"))
-        .repartitionByRange(8, col("cell")),
-      bloomCols = Seq("cell"))
-    val n = tx.read().count()
-    val threshold = (idx.k.toDouble * growthFactor) *
-      (idx.k.toDouble * growthFactor)
-    if (n.toDouble <= threshold) idx
-    else {
-      // rebuild: merged snapshot (labels live in the postings rows),
-      // fresh gate-sampled centroids, fresh per-(sub, label) codebook,
-      // full re-encode under new roots — geometric amortization
-      val emb = tx.read()
-        .select(col("vec_id"), col("embedding"), col("label"))
-        .localCheckpoint()
-      val (cents2, k2) = sampleQuantizerOf(emb)
-      val qe = quantizedOf(emb.select(col("vec_id"), col("embedding")))
-        .join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
-      writePqGrowIndex(spark, emb, cents2,
-        pqCodebook(qe).localCheckpoint(), k2)
-    }
-  }
-
-  /** Probed fraction of a grow-aware PQ index. */
-  def ivfPqProbedFraction(spark: SparkSession, idx: IvfPqGrowIndex,
-      queries: DataFrame, nprobe: Int = 3): Double =
-    probedFractionAt(spark, idx.postings, idx.centroids, queries, nprobe)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit, max}
 import graft.operators._
 import graft.registry.RegShared._
+import graft.streaming.StreamVector
 
 /** Pipeline slice of the driver contract: sampling, packing, lake ops, data-quality, streaming, multimodal, and format round-trips with their DuckDB oracles.
   *
@@ -92,24 +93,24 @@ object PipelineReg {
     "stream_fts_serve" -> ((s: SparkSession, dir: String) =>
       graft.streaming.StreamFts.streamFtsServe(s, dir)),
     "stream_ivf_serve" -> ((s: SparkSession, dir: String) =>
-      graft.streaming.StreamIvf.streamIvfServe(s, dir)),
+      StreamVector.serve(s, dir, VectorIndex.IvfStream)),
     "stream_ivfsq8_serve" -> ((s: SparkSession, dir: String) =>
-      graft.streaming.StreamIvfSq8.streamIvfSq8Serve(s, dir)),
+      StreamVector.serve(s, dir, VectorIndex.Sq8Stream)),
     "stream_ivfpq_serve" -> ((s: SparkSession, dir: String) =>
-      graft.streaming.StreamIvfPq.streamIvfPqServe(s, dir)),
+      StreamVector.serve(s, dir, VectorIndex.PqStream)),
     // the SERVE half alone, against the get-or-streamed standing
-    // snapshot (r14): Bench warms the seed+stream in its index
-    // registry, so these rows time what a deployment pays per query
-    // on a stream-maintained index — the *_serve rows keep owning the
-    // whole lifecycle
+    // snapshot: Bench warms the seed+stream through IndexCatalog, so
+    // these rows time what a deployment pays per query on a
+    // stream-maintained index — the *_serve rows keep owning the whole
+    // lifecycle
     "stream_ivfsq8_serve_only" -> ((s: SparkSession, dir: String) =>
-      graft.streaming.StreamIvfSq8.streamIvfSq8ServeOnly(s, dir)),
+      StreamVector.serveOnly(s, dir, VectorIndex.Sq8Stream)),
     "stream_ivfpq_serve_only" -> ((s: SparkSession, dir: String) =>
-      graft.streaming.StreamIvfPq.streamIvfPqServeOnly(s, dir)),
+      StreamVector.serveOnly(s, dir, VectorIndex.PqStream)),
     "stream_fts_serve_only" -> ((s: SparkSession, dir: String) =>
       graft.streaming.StreamFts.streamFtsServeOnly(s, dir)),
     "stream_ivf_serve_only" -> ((s: SparkSession, dir: String) =>
-      graft.streaming.StreamIvf.streamIvfServeOnly(s, dir)),
+      StreamVector.serveOnly(s, dir, VectorIndex.IvfStream)),
     "sample_mixture" -> Sampling.sampleMixture _,
     "sample_shuffle" -> Sampling.sampleShuffle _,
     "sample_token_budget" -> Sampling.sampleTokenBudget _,

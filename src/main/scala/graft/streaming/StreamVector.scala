@@ -1,0 +1,97 @@
+package graft.streaming
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
+
+import graft.core.{BuildAudit, Scratch, Tables}
+import graft.lake.TxTable
+import graft.operators.{Similarity, VectorIndex}
+import graft.operators.VectorIndex.{Family, IvfStream, PqStream, Sq8Stream}
+
+/** Streamed maintenance + serve for the standing vector indexes — the
+  * IVF twin of [[StreamFts]], one driver for the exact, SQ8 and PQ
+  * postings (`VectorIndex.{IvfStream, Sq8Stream, PqStream}`).
+  *
+  * Lifecycle: the build-time artifacts are pinned ONCE and never
+  * retrained ([[VectorIndex.train]]: label-seeded centroids from the
+  * base 90%, vec_id % 10 != 9, for the exact family — the
+  * `sim_ivf_append` contract; gate-sampled Lloyd centroids plus the
+  * full-corpus SQ8 range or PQ codebook for the composed ones). The seed
+  * commit writes the base 90% assigned and encoded against them; the
+  * late 10% arrive as parquet files (bit-exact float[] transport) which
+  * the stream tails one file per micro-batch (the reference's
+  * per-uploaded-file transport, `Send_Data_To_DataLake/main.py:64`),
+  * each batch run through the SAME encode function and committed by
+  * `TxTable.appendBatchIdempotent` — the batch marker makes a
+  * redelivered micro-batch a no-op, so the index is exactly-once under
+  * source-side retries (`StreamIvf*Spec`).
+  *
+  * Pinned artifacts + deterministic on-row assignment and encode ⇒
+  * every vector lands with the same (cell, codes) row a one-shot build
+  * gives it, so neither the transport nor redelivery can change an
+  * answer: each serve shares its batch twin's oracle (`sim_ivf_append`,
+  * `sim_ann_ivfsq8_sample`, `sim_ann_ivfpq_sample`). Per-batch work is
+  * |batch|·k plus a |batch|·d encode — independent of the corpus — and
+  * the serve is the standing index's Bloom-pruned point read. */
+object StreamVector {
+
+  /** Each streamed family's tag: `stream_<tag>_serve[_only]` are its
+    * queries, `<tag>_late_{src,chk}` its transport roots. */
+  private val tags = Map(IvfStream -> "ivf", Sq8Stream -> "ivfsq8",
+    PqStream -> "ivfpq")
+
+  /** Seed + stream `family`, then pin its artifacts beside the postings
+    * under a manifest. Returns the handle WITHOUT registering it:
+    * `VectorIndex.ensure` installs it via computeIfAbsent (whose mapping
+    * function must not touch the map); [[serve]] registers explicitly. */
+  private[graft] def seed(spark: SparkSession, dir: String,
+      family: Family): VectorIndex = {
+    val tag = tags(family)
+    val isDelta = pmod(col("vec_id"), lit(10L)) === 9L
+    val pins = VectorIndex.train(spark, dir, family, base = Some(!isDelta))
+    val encode = VectorIndex.encoder(family, pins)
+    // seed and micro-batches run the same function, so a streamed row
+    // can't differ from a seeded one
+    def assigned(part: DataFrame): DataFrame =
+      encode(Similarity.withArgminCell(part, pins.cents))
+    val emb = Tables(spark, dir).embeddings
+      .select(col("vec_id"), col("embedding"))
+    val tx = TxTable(spark, Scratch.fresh(family.scratch))
+    VectorIndex.appendPostings(tx, assigned(emb.filter(!isDelta)))
+
+    val srcDir = Scratch.fresh(s"${tag}_late_src")
+    emb.filter(isDelta).repartition(3).write.mode("overwrite").parquet(srcDir)
+    spark.readStream
+      .schema(StructType.fromDDL("vec_id LONG, embedding ARRAY<FLOAT>"))
+      .option("maxFilesPerTrigger", 1)
+      .parquet(srcDir)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        tx.appendBatchIdempotent(assigned(batch), id, bloomCols = Seq("cell"))
+        ()
+      }
+      .option("checkpointLocation", Scratch.fresh(s"${tag}_late_chk"))
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    VectorIndex.pin(spark, family, tx.root, pins)
+  }
+
+  /** `stream_<tag>_serve`: the full lifecycle — seed + stream (timed
+    * into [[BuildAudit]] under the query's name, so Bench can split the
+    * row's seed_sec from its serve_sec), register (last build wins),
+    * serve from the merged snapshot with the family's defaults. */
+  def serve(spark: SparkSession, dir: String, family: Family): DataFrame = {
+    val idx = BuildAudit.timed(s"stream_${tags(family)}_serve")(
+      VectorIndex.rebuild(spark, dir, family))
+    VectorIndex.serve(spark, dir, idx)
+  }
+
+  /** `stream_<tag>_serve_only`: the SERVE half alone, over the
+    * get-or-streamed snapshot — the streamed transport's serving cost
+    * as its own row. */
+  def serveOnly(spark: SparkSession, dir: String, family: Family): DataFrame =
+    VectorIndex.serve(spark, dir, VectorIndex.ensure(spark, dir, family))
+}

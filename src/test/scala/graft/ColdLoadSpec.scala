@@ -1,22 +1,22 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.operators.{Similarity, TextAnalysis}
+import graft.operators.{Similarity, TextAnalysis, VectorIndex}
+import graft.operators.VectorIndex._
+import graft.streaming.StreamVector
 
 /** Cold-session lifecycle for EVERY standing index family (VERDICT r13
   * task 4): build, forget the JVM registration, reload the handle from
   * the on-disk manifest alone, serve — same answer, and the serve
   * reads the standing layout (the loaded postings root appears in the
-  * executed plan) instead of silently rebuilding. Before this round
-  * only the √N family had the loader; exact-k, sample, SQ8, PQ and the
-  * FTS postings lived in process-local registries a fresh JVM could
-  * not reach.
+  * executed plan) instead of silently rebuilding. Every vector family
+  * goes through the one loader, `VectorIndex.load`; FTS has its own.
   *
   * Plus the torn-manifest contract (task 8): manifests are written
   * atomically (temp + rename), and a missing file or missing required
   * key fails with a typed error NAMING the index root — never a bare
   * NoSuchElementException. */
-class ColdLoadSpec extends SparkSpec {
+class ColdLoadSpec extends SparkSpec with TempDirs {
   private val sf = "/root/testdata/sf0.001"
 
   private def sorted(df: DataFrame): Seq[String] =
@@ -28,88 +28,49 @@ class ColdLoadSpec extends SparkSpec {
   /** Shared drive: build via `ensure`, serve, drop every registration,
     * reload from the postings root, assert handle + answer identity
     * and that the served plan reads the loaded postings. */
-  private def roundTrip[I](ensure: => I, serve: () => DataFrame,
-      postingsOf: I => String, load: String => I): Unit = {
-    val built = ensure
+  private def roundTrip(family: Family, serve: () => DataFrame): Unit = {
+    val built = VectorIndex.ensure(spark, sf, family)
     val before = sorted(serve())
-    Similarity.dropStandingForTest(sf)
-    val loaded = load(postingsOf(built))
+    VectorIndex.dropForTest(sf)
+    val loaded = VectorIndex.load(spark, sf, family, built.postings)
     assert(loaded === built, "manifest round-trip changed the handle")
     val after = serve()
     assert(sorted(after) === before, "cold-loaded serve changed the answer")
     val plan = after.queryExecution.executedPlan.toString
-    assert(plan.contains(baseName(postingsOf(built))),
+    assert(plan.contains(baseName(built.postings)),
       s"cold-loaded serve does not read the standing postings:\n$plan")
   }
 
   test("exact-k IVF: cold load serves the standing index") {
-    roundTrip(Similarity.ensureIvf(spark, sf),
-      () => Similarity.annIndexed(spark, sf),
-      (i: Similarity.IvfIndex) => i.postings,
-      Similarity.loadIvf(spark, sf, _))
+    roundTrip(Ivf, () => Similarity.annIndexed(spark, sf))
   }
 
   test("sample-trained IVF: cold load serves the standing index") {
-    roundTrip(Similarity.ensureIvfSample(spark, sf),
-      () => Similarity.annIndexedSample(spark, sf),
-      (i: Similarity.IvfIndex) => i.postings,
-      Similarity.loadIvfSample(spark, sf, _))
+    roundTrip(Sample, () => Similarity.annIndexedSample(spark, sf))
   }
 
   test("IVF-SQ8: cold load serves the standing index") {
-    roundTrip(Similarity.ensureIvfSq8(spark, sf),
-      () => Similarity.annIvfSq8(spark, sf),
-      (i: Similarity.IvfSq8Index) => i.postings,
-      Similarity.loadIvfSq8(spark, sf, _))
+    roundTrip(Sq8Sqrt, () => Similarity.annIvfSq8(spark, sf))
   }
 
   test("sample-trained IVF-SQ8: cold load serves the standing index") {
-    roundTrip(Similarity.ensureIvfSq8Sample(spark, sf),
-      () => Similarity.annIvfSq8Sample(spark, sf),
-      (i: Similarity.IvfSq8Index) => i.postings,
-      Similarity.loadIvfSq8Sample(spark, sf, _))
+    roundTrip(Sq8Sample, () => Similarity.annIvfSq8Sample(spark, sf))
   }
 
   test("IVF-PQ: cold load serves the standing index") {
-    roundTrip(Similarity.ensureIvfPq(spark, sf),
-      () => Similarity.annIvfPq(spark, sf),
-      (i: Similarity.IvfPqIndex) => i.postings,
-      Similarity.loadIvfPq(spark, sf, _))
+    roundTrip(PqSqrt, () => Similarity.annIvfPq(spark, sf))
   }
 
   test("sample-trained IVF-PQ: cold load serves the standing index") {
-    roundTrip(Similarity.ensureIvfPqSample(spark, sf),
-      () => Similarity.annIvfPqSample(spark, sf),
-      (i: Similarity.IvfPqIndex) => i.postings,
-      Similarity.loadIvfPqSample(spark, sf, _))
+    roundTrip(PqSample, () => Similarity.annIvfPqSample(spark, sf))
   }
 
   test("streamed SQ8 snapshot: cold load serves without re-streaming") {
-    import graft.streaming.StreamIvfSq8
-    val built = StreamIvfSq8.ensureStreamed(spark, sf)
-    val before = sorted(StreamIvfSq8.streamIvfSq8ServeOnly(spark, sf))
-    StreamIvfSq8.dropStreamedForTest(sf)
-    val loaded = StreamIvfSq8.loadStreamed(spark, sf, built.postings)
-    assert(loaded === built, "manifest round-trip changed the handle")
-    val after = StreamIvfSq8.streamIvfSq8ServeOnly(spark, sf)
-    assert(sorted(after) === before, "cold-loaded serve changed the answer")
-    assert(after.queryExecution.executedPlan.toString
-      .contains(baseName(built.postings)),
-      "cold-loaded serve does not read the streamed postings")
+    roundTrip(Sq8Stream, () => StreamVector.serveOnly(spark, sf, Sq8Stream))
   }
 
   test("streamed PQ snapshot: cold load serves without re-streaming") {
-    import graft.streaming.StreamIvfPq
-    val built = StreamIvfPq.ensureStreamed(spark, sf)
-    val before = sorted(StreamIvfPq.streamIvfPqServeOnly(spark, sf))
-    StreamIvfPq.dropStreamedForTest(sf)
-    val loaded = StreamIvfPq.loadStreamed(spark, sf, built.postings)
-    assert(loaded === built, "manifest round-trip changed the handle")
-    val after = StreamIvfPq.streamIvfPqServeOnly(spark, sf)
-    assert(sorted(after) === before, "cold-loaded serve changed the answer")
-    assert(after.queryExecution.executedPlan.toString
-      .contains(baseName(built.postings)),
-      "cold-loaded serve does not read the streamed postings")
+    roundTrip(PqStream, () => StreamVector.serveOnly(spark, sf, PqStream))
   }
 
   test("FTS: cold load serves the standing postings, no corpus re-tokenize") {
@@ -128,17 +89,7 @@ class ColdLoadSpec extends SparkSpec {
   }
 
   test("streamed exact-IVF snapshot: cold load serves without re-streaming") {
-    import graft.streaming.StreamIvf
-    val built = StreamIvf.ensureStreamed(spark, sf)
-    val before = sorted(StreamIvf.streamIvfServeOnly(spark, sf))
-    StreamIvf.dropStreamedForTest(sf)
-    val loaded = StreamIvf.loadStreamed(spark, sf, built.postings)
-    assert(loaded === built, "manifest round-trip changed the handle")
-    val after = StreamIvf.streamIvfServeOnly(spark, sf)
-    assert(sorted(after) === before, "cold-loaded serve changed the answer")
-    assert(after.queryExecution.executedPlan.toString
-      .contains(baseName(built.postings)),
-      "cold-loaded serve does not read the streamed postings")
+    roundTrip(IvfStream, () => StreamVector.serveOnly(spark, sf, IvfStream))
   }
 
   test("streamed FTS snapshot: cold load serves without re-streaming") {
@@ -186,8 +137,8 @@ class ColdLoadSpec extends SparkSpec {
     val after = serve()
     assert(sorted(after) === before,
       "mid-churn cold-loaded serve changed the answer")
-    // the post-load serve goes through ensureStreamed, which would
-    // silently re-stream a fresh deterministic snapshot if loadStreamed
+    // the post-load serve goes through an ensure, which would
+    // silently re-stream a fresh deterministic snapshot if the loader
     // ever stopped registering the handle — and the answer-equality
     // assert above would pass vacuously; pin the plan to the BUILT
     // postings root, as the plain round-trip tests do (ADVICE r15)
@@ -196,31 +147,21 @@ class ColdLoadSpec extends SparkSpec {
       s"mid-churn cold-loaded serve does not read the built postings:\n$plan")
   }
 
+  private def vectorChurnTrip(family: Family): Unit =
+    churnTrip[VectorIndex](VectorIndex.ensure(spark, sf, family), _.postings,
+      "cell", () => StreamVector.serveOnly(spark, sf, family),
+      () => VectorIndex.dropForTest(sf), VectorIndex.load(spark, sf, family, _))
+
   test("streamed exact-IVF: mid-churn cold load (compaction + redelivery marker)") {
-    import graft.streaming.StreamIvf
-    churnTrip[graft.operators.Similarity.IvfIndex](
-      StreamIvf.ensureStreamed(spark, sf), _.postings, "cell",
-      () => StreamIvf.streamIvfServeOnly(spark, sf),
-      () => StreamIvf.dropStreamedForTest(sf),
-      StreamIvf.loadStreamed(spark, sf, _))
+    vectorChurnTrip(IvfStream)
   }
 
   test("streamed SQ8: mid-churn cold load (compaction + redelivery marker)") {
-    import graft.streaming.StreamIvfSq8
-    churnTrip[graft.operators.Similarity.IvfSq8Index](
-      StreamIvfSq8.ensureStreamed(spark, sf), _.postings, "cell",
-      () => StreamIvfSq8.streamIvfSq8ServeOnly(spark, sf),
-      () => StreamIvfSq8.dropStreamedForTest(sf),
-      StreamIvfSq8.loadStreamed(spark, sf, _))
+    vectorChurnTrip(Sq8Stream)
   }
 
   test("streamed PQ: mid-churn cold load (compaction + redelivery marker)") {
-    import graft.streaming.StreamIvfPq
-    churnTrip[graft.operators.Similarity.IvfPqIndex](
-      StreamIvfPq.ensureStreamed(spark, sf), _.postings, "cell",
-      () => StreamIvfPq.streamIvfPqServeOnly(spark, sf),
-      () => StreamIvfPq.dropStreamedForTest(sf),
-      StreamIvfPq.loadStreamed(spark, sf, _))
+    vectorChurnTrip(PqStream)
   }
 
   test("streamed FTS: mid-churn cold load (compaction + redelivery marker)") {
@@ -233,20 +174,20 @@ class ColdLoadSpec extends SparkSpec {
   }
 
   test("missing manifest fails typed, naming the root") {
-    val root = java.nio.file.Files.createTempDirectory("graft-no-manifest")
+    val root = tempDir("graft-no-manifest")
     val e = intercept[Similarity.IndexManifestError] {
-      Similarity.loadIvf(spark, sf, root.toString)
+      VectorIndex.load(spark, sf, Ivf, root.toString)
     }
     assert(e.root === root.toString)
     assert(e.getMessage.contains(root.toString))
   }
 
   test("torn manifest (missing required key) fails typed, naming root and key") {
-    val root = java.nio.file.Files.createTempDirectory("graft-torn-manifest")
+    val root = tempDir("graft-torn-manifest")
     // a partial write that lost the centroids line
     Similarity.writeIndexManifest(root.toString, "family" -> "ivf")
     val e = intercept[Similarity.IndexManifestError] {
-      Similarity.loadIvf(spark, sf, root.toString)
+      VectorIndex.load(spark, sf, Ivf, root.toString)
     }
     assert(e.root === root.toString)
     assert(e.getMessage.contains("centroids"))
@@ -256,18 +197,18 @@ class ColdLoadSpec extends SparkSpec {
 
   test("loading the wrong family's root fails typed, not mismatched") {
     // a PQ manifest HAS a 'centroids' key — without the family guard,
-    // loadIvf would happily register code-carrying PQ postings as an
-    // exact-k index and the next serve would read garbage
-    val pq = Similarity.ensureIvfPq(spark, sf)
+    // the loader would happily register code-carrying PQ postings as
+    // an exact-k index and the next serve would read garbage
+    val pq = VectorIndex.ensure(spark, sf, PqSqrt)
     val e = intercept[Similarity.IndexManifestError] {
-      Similarity.loadIvf(spark, sf, pq.postings)
+      VectorIndex.load(spark, sf, Ivf, pq.postings)
     }
     assert(e.getMessage.contains("family mismatch"))
     assert(e.getMessage.contains("ivf_pq"))
   }
 
   test("manifest write is atomic: no temp residue, rewrite replaces") {
-    val root = java.nio.file.Files.createTempDirectory("graft-manifest-atomic")
+    val root = tempDir("graft-manifest-atomic")
     Similarity.writeIndexManifest(root.toString, "centroids" -> "/a")
     Similarity.writeIndexManifest(root.toString, "centroids" -> "/b")
     import scala.jdk.CollectionConverters._

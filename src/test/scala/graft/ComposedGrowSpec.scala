@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.VectorIndex
 
 /** Grow lifecycle for the COMPOSED standing indexes (VERDICT r11
   * task 5): the SQ8-sample and PQ-sample indexes get the exact √N
@@ -16,14 +16,15 @@ class ComposedGrowSpec extends SparkSpec {
     val emb = graft.core.Tables(spark, sf).embeddings
       .select(col("vec_id"), col("embedding"))
     val queries = emb.filter(col("vec_id") < 5)
-    var idx = Similarity.ivfSq8GrowInit(spark, emb.filter(col("vec_id") < 50))
+    var idx = VectorIndex.growInit(spark, VectorIndex.Sq8Grow,
+      emb.filter(col("vec_id") < 50))
     val k0 = idx.k
     val cuts = Seq((50L, 100L), (100L, 200L), (200L, 350L), (350L, 500L))
-    var fractions = Seq(Similarity.ivfSq8ProbedFraction(spark, idx, queries))
+    var fractions = Seq(VectorIndex.probedFraction(spark, idx, queries))
     for ((lo, hi) <- cuts) {
-      idx = Similarity.ivfSq8GrowAppend(spark, idx,
+      idx = VectorIndex.growAppend(spark, idx,
         emb.filter(col("vec_id") >= lo && col("vec_id") < hi))
-      fractions :+= Similarity.ivfSq8ProbedFraction(spark, idx, queries)
+      fractions :+= VectorIndex.probedFraction(spark, idx, queries)
     }
     assert(idx.k > k0, s"no re-bucket happened (k stayed $k0)")
     fractions.sliding(2).foreach { case Seq(a, b) =>
@@ -37,8 +38,9 @@ class ComposedGrowSpec extends SparkSpec {
   test("SQ8-sample: within-threshold append pins codebooks and covers the delta") {
     val emb = graft.core.Tables(spark, sf).embeddings
       .select(col("vec_id"), col("embedding"))
-    val idx0 = Similarity.ivfSq8GrowInit(spark, emb.filter(col("vec_id") < 100))
-    val idx1 = Similarity.ivfSq8GrowAppend(spark, idx0,
+    val idx0 = VectorIndex.growInit(spark, VectorIndex.Sq8Grow,
+      emb.filter(col("vec_id") < 100))
+    val idx1 = VectorIndex.growAppend(spark, idx0,
       emb.filter(col("vec_id") >= 100 && col("vec_id") < 200))
     assert(idx1.k == idx0.k && idx1.postings == idx0.postings,
       "within-threshold append must not rebuild")
@@ -48,7 +50,8 @@ class ComposedGrowSpec extends SparkSpec {
     // the PINNED [mn, mx] and compare to its stored codes — an append
     // that re-pinned the range (the drift bug this lifecycle forbids)
     // would produce different integers
-    val r0 = graft.lake.TxTable(spark, idx1.stats).read().head()
+    val VectorIndex.Sq8(stats) = idx1.codec
+    val r0 = graft.lake.TxTable(spark, stats).read().head()
     val mn = r0.getAs[Long]("mn")
     val s = math.max(r0.getAs[Long]("mx") - mn, 1L)
     val got = posts.filter(col("vec_id") === 150L)
@@ -67,13 +70,14 @@ class ComposedGrowSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"), col("label"))
     val queries = emb.select(col("vec_id"), col("embedding"))
       .filter(col("vec_id") < 5)
-    var idx = Similarity.ivfPqGrowInit(spark, emb.filter(col("vec_id") < 50))
+    var idx = VectorIndex.growInit(spark, VectorIndex.PqGrow,
+      emb.filter(col("vec_id") < 50))
     val k0 = idx.k
-    var fractions = Seq(Similarity.ivfPqProbedFraction(spark, idx, queries))
+    var fractions = Seq(VectorIndex.probedFraction(spark, idx, queries))
     for ((lo, hi) <- Seq((50L, 100L), (100L, 200L), (200L, 350L), (350L, 500L))) {
-      idx = Similarity.ivfPqGrowAppend(spark, idx,
+      idx = VectorIndex.growAppend(spark, idx,
         emb.filter(col("vec_id") >= lo && col("vec_id") < hi))
-      fractions :+= Similarity.ivfPqProbedFraction(spark, idx, queries)
+      fractions :+= VectorIndex.probedFraction(spark, idx, queries)
     }
     assert(idx.k > k0, s"no re-bucket happened (k stayed $k0)")
     fractions.sliding(2).foreach { case Seq(a, b) =>

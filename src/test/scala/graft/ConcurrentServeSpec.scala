@@ -5,7 +5,7 @@ import java.util.concurrent.Executors
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
-import graft.operators.{Similarity, TextAnalysis}
+import graft.operators.{Similarity, TextAnalysis, VectorIndex}
 
 /** Correctness under concurrent serving (round-9 task 6): M driver
   * threads hitting the SAME standing indices through the same session
@@ -20,7 +20,7 @@ class ConcurrentServeSpec extends SparkSpec {
   test("8 concurrent index serves all return the serial answer") {
     // warm both standing indices (read-only afterwards)
     TextAnalysis.ensureFts(spark, sf)
-    Similarity.ensureIvfSqrt(spark, sf)
+    VectorIndex.ensure(spark, sf, VectorIndex.Sqrt)
     val serialBm25 = TextAnalysis.bm25Indexed(spark, sf).collect().toSeq
     val serialAnn = Similarity.annIndexedSqrt(spark, sf).collect().toSeq
 
@@ -38,6 +38,25 @@ class ConcurrentServeSpec extends SparkSpec {
         assert(bm == serialBm25, s"thread $i: BM25 serve diverged")
         assert(ann == serialAnn, s"thread $i: ANN serve diverged")
       }
+    } finally pool.shutdown()
+  }
+
+  test("concurrent ensure of a cold √N index builds once: same handle") {
+    // the registry's get-or-build is one computeIfAbsent: two threads
+    // released together on a cold dir must get the same handle, not two
+    // builds that each register a different postings root
+    VectorIndex.dropForTest(sf)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val fs = (0 until 2).map { _ =>
+        Future { start.await(); VectorIndex.ensure(spark, sf, VectorIndex.Sqrt) }
+      }
+      start.countDown()
+      val Seq(a, b) = Await.result(Future.sequence(fs), Duration.Inf)
+      assert(a.postings === b.postings, "two builds registered two roots")
+      assert(VectorIndex.ensure(spark, sf, VectorIndex.Sqrt) === a)
     } finally pool.shutdown()
   }
 

@@ -7,7 +7,7 @@ import graft.operators.Dedup
 /** Planted-duplicate spec: the dedup operators must actually find known
   * exact and near duplicates (the sf tables carry their own incidental
   * near-dups; here the ground truth is constructed). */
-class DedupPlantedSpec extends SparkSpec {
+class DedupPlantedSpec extends SparkSpec with TempDirs {
 
   private lazy val dir: String = {
     import spark.implicits._
@@ -20,7 +20,7 @@ class DedupPlantedSpec extends SparkSpec {
       (2L, nearDup.trim, "en", "src2", nearDup.length.toLong),  // near dup of 0
       (3L, distinct1.trim, "en", "src3", distinct1.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val d = Files.createTempDirectory("graft-dedup").toString
+    val d = suiteTempDir("graft-dedup").toString
     docs.coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
     d
   }
@@ -65,7 +65,7 @@ class DedupPlantedSpec extends SparkSpec {
     val v1 = v0.clone()
     val v2 = v0.map(x => x + 0.01f)
     val v3 = Array.tabulate(64)(i => math.cos(i * 3.1 + 1.0).toFloat)
-    val d = Files.createTempDirectory("graft-srp").toString
+    val d = tempDir("graft-srp").toString
     Seq((0L, 0, v0.toSeq), (1L, 0, v1.toSeq), (2L, 1, v2.toSeq), (3L, 2, v3.toSeq))
       .toDF("vec_id", "label", "embedding")
       .withColumn("embedding", col("embedding").cast("array<float>"))
@@ -105,7 +105,7 @@ class DedupPlantedSpec extends SparkSpec {
       (1L, b, "en", "s1", b.length.toLong),
       (2L, c, "en", "s2", c.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val d = Files.createTempDirectory("graft-cont").toString
+    val d = tempDir("graft-cont").toString
     docs.coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
     val out = Dedup.containment(spark, d).collect()
     assert(out.length === 1)
@@ -191,7 +191,7 @@ class DedupPlantedSpec extends SparkSpec {
     val docs = (base ++ longs ++ planted)
       .map { case (id, s) => (id, s, "en", "s", s.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = Files.createTempDirectory("graft-fz-adv").toString
+    val dir = tempDir("graft-fz-adv").toString
     docs.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Dedup.fuzzyEditPairs(spark, dir)
     val d = docs.select(col("doc_id"), col("text"),

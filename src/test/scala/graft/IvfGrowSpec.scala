@@ -1,11 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.VectorIndex
 
 /** Grow-aware √N index maintenance (round-9 task 5): appends assign
   * against the pinned centroids; the re-bucket trigger
-  * N > (k·growthFactor)² retrains ⌈√N⌉ cells seeded from the pinned
+  * N > (k·GrowthFactor)² retrains ⌈√N⌉ cells seeded from the pinned
   * alphabet. The property under test: the probed corpus fraction is
   * non-increasing across a 10× append sequence — the 1/√N design
   * point survives growth instead of drifting to nprobe/k_fixed. */
@@ -17,15 +17,16 @@ class IvfGrowSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val queries = emb.filter(col("vec_id") < 5)
     // base: 1/10 of the corpus; four appends grow it 10x total
-    var idx = Similarity.ivfGrowInit(spark, emb.filter(col("vec_id") < 50))
+    var idx = VectorIndex.growInit(spark, VectorIndex.IvfGrow,
+      emb.filter(col("vec_id") < 50))
     val k0 = idx.k
     val cuts = Seq((50L, 100L), (100L, 200L), (200L, 350L), (350L, 500L))
     var fractions = Seq(
-      Similarity.ivfProbedFraction(spark, idx, queries))
+      VectorIndex.probedFraction(spark, idx, queries))
     for ((lo, hi) <- cuts) {
-      idx = Similarity.ivfGrowAppend(spark, idx,
+      idx = VectorIndex.growAppend(spark, idx,
         emb.filter(col("vec_id") >= lo && col("vec_id") < hi))
-      fractions :+= Similarity.ivfProbedFraction(spark, idx, queries)
+      fractions :+= VectorIndex.probedFraction(spark, idx, queries)
     }
     // the trigger fired at least once and grew the alphabet
     assert(idx.k > k0, s"no re-bucket happened (k stayed $k0)")
@@ -43,9 +44,10 @@ class IvfGrowSpec extends SparkSpec {
   test("re-bucket trigger: no rebuild while N stays within (k*gf)^2") {
     val emb = graft.core.Tables(spark, sf).embeddings
       .select(col("vec_id"), col("embedding"))
-    val idx0 = Similarity.ivfGrowInit(spark, emb.filter(col("vec_id") < 100))
+    val idx0 = VectorIndex.growInit(spark, VectorIndex.IvfGrow,
+      emb.filter(col("vec_id") < 100))
     // k0 = ceil(sqrt(100)) = 10; threshold (10*2)^2 = 400 >= 200
-    val idx1 = Similarity.ivfGrowAppend(spark, idx0,
+    val idx1 = VectorIndex.growAppend(spark, idx0,
       emb.filter(col("vec_id") >= 100 && col("vec_id") < 200))
     assert(idx1.k == idx0.k && idx1.postings == idx0.postings,
       "within-threshold append must not rebuild")

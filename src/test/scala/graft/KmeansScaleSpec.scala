@@ -13,7 +13,7 @@ import graft.operators.Similarity
   *     the published SemDeDup property. A fixed-k quantizer would give
   *     E[|cell|²] ∝ N², i.e. a 100× jump here; ⌈√N⌉ gives ~10×.
   */
-class KmeansScaleSpec extends SparkSpec {
+class KmeansScaleSpec extends SparkSpec with TempDirs {
   private val sf = "/root/testdata/sf0.01"
 
   /** (N, live cells, mean squared cell size) under the default k. */
@@ -36,7 +36,7 @@ class KmeansScaleSpec extends SparkSpec {
     // 10× replica, scale_up.py's embeddings rule: disjoint vec_id
     // ranges, a per-replica constant added to every coordinate so
     // replicas are NOT near-identical vectors
-    val big = Files.createTempDirectory("graft-kmeans-scale").toString
+    val big = tempDir("graft-kmeans-scale").toString
     (0 until 10).map { i =>
       base.select(
         (col("vec_id") + lit(i * 10000000L)).as("vec_id"),

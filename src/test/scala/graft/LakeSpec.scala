@@ -4,11 +4,11 @@ import java.nio.file.Files
 import graft.lake.Lake
 
 /** Zone/sink round-trip specs (S1-S6). */
-class LakeSpec extends SparkSpec {
+class LakeSpec extends SparkSpec with TempDirs {
 
   test("JSON array sink round-trips through the multiLine reader (S1/S2)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-lake").toString
+    val root = tempDir("graft-lake").toString
     val lake = Lake(spark, root)
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
     val path = s"$root/raw/test_detection/file1.json"
@@ -20,7 +20,7 @@ class LakeSpec extends SparkSpec {
 
   test("wrapped-JSON sink produces the frame_detections layout (S3)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-lake").toString
+    val root = tempDir("graft-lake").toString
     val lake = Lake(spark, root)
     val df = Seq((0L, 2L), (1L, 0L)).toDF("frame_number", "n")
     val path = s"$root/processed/test_detection/preprocessed_file1.json"
@@ -32,7 +32,7 @@ class LakeSpec extends SparkSpec {
 
   test("parquet zone table append + catalog listing (S6/S7)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-lake").toString
+    val root = tempDir("graft-lake").toString
     val lake = Lake(spark, root)
     val df = Seq((1L, 0.5), (2L, 0.9)).toDF("tracker_id", "confidence")
     lake.writeZoneTable(df, "processed", "vehicle", "v1.json")
@@ -42,7 +42,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("schema-given read skips inference and keeps _corrupt_record (S1 §4.2)") {
-    val root = Files.createTempDirectory("graft-lake").toString
+    val root = tempDir("graft-lake").toString
     val lake = Lake(spark, root)
     val dir = s"$root/raw/vehicle_detection"
     Files.createDirectories(java.nio.file.Paths.get(dir))

@@ -9,11 +9,11 @@ import graft.streaming.StreamSource
   * (maxFilesPerTrigger=1 over split files) and assert the final results
   * equal the batch computation — state merge across batches for session
   * windows, complete-mode replacement for the static join shape. */
-class MultiBatchStreamSpec extends SparkSpec {
+class MultiBatchStreamSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def splitEventsDir(): String = {
-    val dir = Files.createTempDirectory("graft-mbatch").toString
+    val dir = tempDir("graft-mbatch").toString
     val ev = graft.core.Tables(spark, "/root/testdata/sf0.001").events
       .select(col("user_id"), col("ts"), col("value"), col("event_type"))
     // two time-ordered halves written as separate files; modification

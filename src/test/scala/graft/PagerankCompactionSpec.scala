@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.lake.Lake
 import graft.operators.Cluster
 
-class PagerankCompactionSpec extends SparkSpec {
+class PagerankCompactionSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   test("pagerank: symmetric pair converges to equal ranks") {
@@ -24,7 +24,7 @@ class PagerankCompactionSpec extends SparkSpec {
   }
 
   test("compaction collapses per-ingest files, preserves rows") {
-    val root = Files.createTempDirectory("graft-lake").toString
+    val root = tempDir("graft-lake").toString
     val lake = Lake(spark, root)
     (1 to 3).foreach { i =>
       lake.writeZoneTable(

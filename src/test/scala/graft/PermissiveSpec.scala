@@ -8,10 +8,10 @@ import graft.lake.Lake
   * fail the read — they surface in `_corrupt_record` while valid rows
   * parse normally, matching the reference's
   * `option("mode", "PERMISSIVE")` reads. */
-class PermissiveSpec extends SparkSpec {
+class PermissiveSpec extends SparkSpec with TempDirs {
 
   test("corrupt JSON rows survive the scan in _corrupt_record") {
-    val dir = Files.createTempDirectory("graft-perm").toString
+    val dir = tempDir("graft-perm").toString
     // one valid document and one torn record in a JSON-lines file
     Files.writeString(java.nio.file.Paths.get(s"$dir/mixed.json"),
       """{"frame_number": 0, "tracker_id": 1, "confidence": 0.9}
@@ -48,7 +48,7 @@ class PermissiveSpec extends SparkSpec {
   }
 
   test("multiLine wrapped document with a missing optional field still parses") {
-    val lake = Lake(spark, Files.createTempDirectory("graft-perm2").toString)
+    val lake = Lake(spark, tempDir("graft-perm2").toString)
     val df = readJsonFixture(
       """{"frame_detections": [
            {"frame_number": 0, "detections": [{"tracker_id": 1}]},

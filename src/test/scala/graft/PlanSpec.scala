@@ -149,18 +149,18 @@ class PlanSpec extends SparkSpec {
       // family; recalls embed the broadcast-queries ground-truth leg)
       "sim_ivfsq8_build_sample", "sim_ann_ivfsq8_sample",
       "sim_ann_ivfsq8_sample_recall",
-      // r13: streamed composed index — the serve IS annIvfSq8From
+      // r13: streamed composed index — the serve IS VectorIndex.serve
       // (same 1-row range cross + proven-bound centroid kernel cross
       // as sim_ann_ivfsq8_sample); the build side additionally runs
       // the argminByDist kernel cross per micro-batch, all bounded
       "stream_ivfsq8_serve",
-      // r13: streamed PQ — the serve IS annIvfPqFrom (same centroid
+      // r13: streamed PQ — the serve IS VectorIndex.serve (same centroid
       // kernel cross + broadcast ADC codebook joins as
       // sim_ann_ivfpq_sample); per-batch assign/encode runs the same
       // bounded kernel crosses as the one-shot PQ build
       "stream_ivfpq_serve",
-      // r14: serve-only twins — identical serving plans (annIvfSq8From
-      // / annIvfPqFrom) over the get-or-streamed standing snapshot;
+      // r14: serve-only twins — identical serving plans
+      // (VectorIndex.serve) over the get-or-streamed standing snapshot;
       // same bounded kernel crosses as their lifecycle rows
       "stream_ivfsq8_serve_only", "stream_ivfpq_serve_only",
       // r11: adaptive filtered serve = annFilteredSqrt at a computed

@@ -9,7 +9,7 @@ import graft.streaming.StreamStateSessionize.{OpenSession, SessionRow}
 /** Property-based tests (SURVEY §5.3): randomized inputs generated with
   * ScalaCheck `Gen` under fixed seeds (deterministic CI), checked
   * against independent reference implementations. */
-class PropertiesSpec extends SparkSpec {
+class PropertiesSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def sample[A](g: Gen[A], seed: Long): A =
@@ -177,7 +177,7 @@ class PropertiesSpec extends SparkSpec {
       val inner = sample(genOp(innerKind, 100L), seed)
       val outer = sample(genOp(outerKind, 300L), seed + 500)
       val t = TxTable(spark,
-        java.nio.file.Files.createTempDirectory("graft-txprop").toString)
+        tempDir("graft-txprop").toString)
       // two seeded files covering disjoint halves so range pruning and
       // file-replacement conflicts are both reachable
       t.append(df(0L until 50L, 0L), statsCols = Seq("id"))

@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.StreamIvfPq
-import graft.operators.Similarity
+import graft.streaming.StreamVector
+import graft.operators.{Similarity, VectorIndex}
 import graft.lake.TxTable
 
 /** Exactly-once contract of the stream-maintained IVF-PQ index — the
@@ -17,9 +17,9 @@ class StreamIvfPqSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("redelivered PQ micro-batch is a no-op; serve unchanged") {
-    val idx = StreamIvfPq.streamTables(spark, sf)
+    val idx = StreamVector.seed(spark, sf, VectorIndex.PqStream)
     val tx = TxTable(spark, idx.postings)
-    def serve() = Similarity.annIvfPqFrom(spark, sf, idx, 5, 100, 3).collect()
+    def serve() = VectorIndex.serve(spark, sf, idx, 5, 3, Some(100)).collect()
     val before = serve()
     assert(before.nonEmpty)
     val rowsBefore = tx.read().count()
@@ -28,13 +28,15 @@ class StreamIvfPqSpec extends SparkSpec {
     // same way the stream's foreachBatch did — the marker, not the
     // content, must dedupe it
     val cents = TxTable(spark, idx.centroids).read()
-    val cb = TxTable(spark, idx.codebook).read()
+    val VectorIndex.Pq(codebook) = idx.codec
+    val cb = TxTable(spark, codebook).read()
     val delta = graft.core.Tables(spark, sf).embeddings
       .filter(pmod(col("vec_id"), lit(10L)) === 9L)
       .select(col("vec_id"), col("embedding"))
     val replay = delta
       .join(Similarity.argminByDist(delta, cents), Seq("vec_id"))
-      .join(Similarity.pqEncodeAgainst(delta, cb), Seq("vec_id"))
+      .join(Similarity.withPqCodes(delta, cb)
+        .select(col("vec_id"), col("codes")), Seq("vec_id"))
       .select(col("cell"), col("vec_id"), col("codes"), col("embedding"))
     tx.appendBatchIdempotent(replay, batchId = 0L, bloomCols = Seq("cell"))
 
@@ -45,8 +47,8 @@ class StreamIvfPqSpec extends SparkSpec {
   }
 
   test("streamed PQ postings equal the one-shot sample-trained build's") {
-    val idx = StreamIvfPq.streamTables(spark, sf)
-    val batch = Similarity.ensureIvfPqSample(spark, sf)
+    val idx = StreamVector.seed(spark, sf, VectorIndex.PqStream)
+    val batch = VectorIndex.ensure(spark, sf, VectorIndex.PqSample)
     val streamed = TxTable(spark, idx.postings).read()
       .select(col("vec_id"), col("cell"), col("codes"))
       .orderBy(col("vec_id")).collect().toSeq

@@ -1,6 +1,8 @@
 package graft
 
-import graft.streaming.StreamIvf
+import graft.lake.TxTable
+import graft.operators.VectorIndex
+import graft.streaming.StreamVector
 
 /** Exactly-once contract of the stream-maintained vector index
   * (VERDICT r11 task 6): a redelivered micro-batch — same rows, same
@@ -13,8 +15,11 @@ class StreamIvfSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("redelivered micro-batch is a no-op; serve unchanged") {
-    val (tx, cents) = StreamIvf.streamIvfTables(spark, sf)
-    val before = StreamIvf.serveFrom(spark, sf, tx, cents, 5, 3).collect()
+    val idx = StreamVector.seed(spark, sf, VectorIndex.IvfStream)
+    val tx = TxTable(spark, idx.postings)
+    val cents = TxTable(spark, idx.centroids).read()
+    def serve() = VectorIndex.serve(spark, sf, idx, 5, 3).collect()
+    val before = serve()
     assert(before.nonEmpty)
     val rowsBefore = tx.read().count()
 
@@ -34,7 +39,7 @@ class StreamIvfSpec extends SparkSpec {
 
     assert(tx.read().count() === rowsBefore,
       "redelivered batch added rows — the idempotence marker failed")
-    val after = StreamIvf.serveFrom(spark, sf, tx, cents, 5, 3).collect()
+    val after = serve()
     assert(after.toSeq === before.toSeq,
       "serve changed after a redelivered batch")
   }

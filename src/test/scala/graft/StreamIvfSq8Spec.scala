@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.StreamIvfSq8
-import graft.operators.Similarity
+import graft.streaming.StreamVector
+import graft.operators.{Similarity, VectorIndex}
 import graft.lake.TxTable
 
 /** Exactly-once contract of the stream-maintained COMPOSED index
@@ -16,9 +16,9 @@ class StreamIvfSq8Spec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("redelivered code-carrying micro-batch is a no-op; serve unchanged") {
-    val idx = StreamIvfSq8.streamTables(spark, sf)
+    val idx = StreamVector.seed(spark, sf, VectorIndex.Sq8Stream)
     val tx = TxTable(spark, idx.postings)
-    def serve() = Similarity.annIvfSq8From(spark, sf, idx, 5, 20, 3).collect()
+    def serve() = VectorIndex.serve(spark, sf, idx, 5, 3, Some(20)).collect()
     val before = serve()
     assert(before.nonEmpty)
     val rowsBefore = tx.read().count()
@@ -27,7 +27,8 @@ class StreamIvfSq8Spec extends SparkSpec {
     // same way the stream's foreachBatch did — the marker, not the
     // content, must dedupe it
     val cents = TxTable(spark, idx.centroids).read()
-    val r0 = TxTable(spark, idx.stats).read().head()
+    val VectorIndex.Sq8(stats) = idx.codec
+    val r0 = TxTable(spark, stats).read().head()
     val mnv = r0.getAs[Long]("mn")
     val sv = math.max(r0.getAs[Long]("mx") - mnv, 1L)
     val delta = graft.core.Tables(spark, sf).embeddings
@@ -48,8 +49,8 @@ class StreamIvfSq8Spec extends SparkSpec {
   }
 
   test("streamed postings equal the one-shot sample-trained build's") {
-    val idx = StreamIvfSq8.streamTables(spark, sf)
-    val batch = Similarity.ensureIvfSq8Sample(spark, sf)
+    val idx = StreamVector.seed(spark, sf, VectorIndex.Sq8Stream)
+    val batch = VectorIndex.ensure(spark, sf, VectorIndex.Sq8Sample)
     val key = Seq("vec_id")
     val streamed = TxTable(spark, idx.postings).read()
       .select(col("vec_id"), col("cell"), col("codes"), col("code_sum"))

@@ -6,12 +6,12 @@ import graft.streaming.StreamIngest
 /** Streaming ingestion into a parquet zone table with checkpointed
   * exactly-once semantics: re-running the drained stream adds nothing;
   * new files are picked up incrementally. */
-class StreamZoneSpec extends SparkSpec {
+class StreamZoneSpec extends SparkSpec with TempDirs {
 
   test("AvailableNow into parquet is exactly-once and incremental") {
-    val src = Files.createTempDirectory("graft-src").toString
-    val out = Files.createTempDirectory("graft-out").toString + "/table"
-    val chk = Files.createTempDirectory("graft-chk").toString
+    val src = tempDir("graft-src").toString
+    val out = tempDir("graft-out").toString + "/table"
+    val chk = tempDir("graft-chk").toString
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "frame_number LONG, event_type STRING, value DOUBLE")
 
@@ -40,10 +40,10 @@ class StreamZoneSpec extends SparkSpec {
 
   test("stream commits through the tx log: exactly-once + batch markers") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft-txsrc").toString
-    val chk = Files.createTempDirectory("graft-txchk").toString
+    val src = tempDir("graft-txsrc").toString
+    val chk = tempDir("graft-txchk").toString
     val table = graft.lake.Lake(spark,
-      Files.createTempDirectory("graft-txlake").toString).txTable("refine", "events")
+      tempDir("graft-txlake").toString).txTable("refine", "events")
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "frame_number LONG, event_type STRING, value DOUBLE")
 
@@ -80,10 +80,10 @@ class StreamZoneSpec extends SparkSpec {
   test("streamed documents maintain the standing inverted index " +
       "incrementally, exactly-once, with live Bloom point reads") {
     import org.apache.spark.sql.functions._
-    val src = Files.createTempDirectory("graft-ftssrc").toString
-    val chk = Files.createTempDirectory("graft-ftschk").toString
+    val src = tempDir("graft-ftssrc").toString
+    val chk = tempDir("graft-ftschk").toString
     val index = graft.lake.TxTable(spark,
-      Files.createTempDirectory("graft-ftsidx").toString + "/postings")
+      tempDir("graft-ftsidx").toString + "/postings")
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id LONG, text STRING")
 

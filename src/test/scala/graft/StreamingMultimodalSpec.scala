@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
 import graft.streaming.StreamIngest
 
-class StreamingMultimodalSpec extends SparkSpec {
+class StreamingMultimodalSpec extends SparkSpec with TempDirs {
 
   test("file-source stream with AvailableNow matches the batch result") {
-    val dir = Files.createTempDirectory("graft-stream").toString
-    val chk = Files.createTempDirectory("graft-chk").toString
+    val dir = tempDir("graft-stream").toString
+    val chk = tempDir("graft-chk").toString
     // two "uploaded files" in the raw zone
     Files.writeString(java.nio.file.Paths.get(s"$dir/f1.json"),
       """[{"frame_number": 0, "event_type": "a", "value": 1.0},

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # One-command entrypoint for the living measurement protocol (VERDICT
-# r15 stretch 8). The per-round r1x_measure.sh scripts stay as history;
-# this dispatcher is what a new round (or the judge) should run.
+# r15 stretch 8). It replaced the per-round r1x_measure.sh scripts, whose
+# results are recorded in BASELINE.md; this is what a new round runs.
 #
 #   tools/measure.sh pin <tag> <sf_dir> <subset_csv> [runs]
 #       One certified chunk: Bench with per-rep legs + end-of-suite
