@@ -68,7 +68,9 @@ object Bench {
     // measurement protocol (BASELINE.md r9): each query runs TWICE and
     // reports the min. A single-JVM 170-query sweep manufactures 2-4x
     // singleton outliers from GC pressure and codegen-cache churn
-    // (adjudicated by isolation re-runs every round, r7/r8 verdicts);
+    // (adjudicated by isolation re-runs every round, r7/r8 verdicts;
+    // the churn is gone since `Sessions.builder` sizes the codegen
+    // cache to 2,000 classes, so each plan compiles once per JVM);
     // min-of-two reflects the PLAN, not transient JVM state, at the
     // cost of one extra pass. The gc + settle between queries keeps one
     // query's garbage from billing the next.

@@ -11,6 +11,14 @@ import org.apache.spark.sql.SparkSession
   *   on a real cluster this is overridden per deployment.
   * - nanosAsLong: the driver-generated `events` table stores
   *   timestamp[ns], which Spark 4 otherwise refuses to read.
+  * - codegen cache of 2,000 generated classes, not Spark's 100. The
+  *   static conf sizes `CodeGenerator`'s LRU, so only the builder can
+  *   set it. A warm upload clip needs about 210 classes (about 130
+  *   vehicle, 78 people) and the lake churn loop about 250: at 100
+  *   every op recompiled what the one before had evicted. At 2,000 a
+  *   warm vehicle upload compiles 9-17 classes instead of 143
+  *   (`CodegenCacheSpec`): the same code under another codegen stage
+  *   id or column order, which AQE and the planner vary per run.
   */
 object Sessions {
 
@@ -66,6 +74,7 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.sql.extensions", "graft.core.GraftExtensions")
       .config("spark.ui.enabled", "false")
     objectStoreConfigs(env).foldLeft(base) {

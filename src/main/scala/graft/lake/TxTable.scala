@@ -27,7 +27,8 @@ import TxTable.{PartFileName, PartStats}
   *                                         published (transient)
   *   root/_staging/<uuid>/                 one stage's write output
   *                                         (transient; removed when
-  *                                         the stage ends, either way)
+  *                                         the stage ends, either way,
+  *                                         and by `vacuum` once stale)
   *   root/data/<uuid>.parquet              immutable data files
   * }}}
   *
@@ -836,16 +837,22 @@ final case class TxTable(spark: SparkSession, root: String) {
     * Superseded MANIFESTS are kept: they are tiny, they carry the
     * streaming batch markers idempotency depends on, and they are what
     * lets the first rule distinguish "replaced" from "in flight".
-    * Temp manifest bodies a crashed commit stranded in `_log` are
-    * removed under the same age rule as unreferenced data files.
+    * Temp manifest bodies a crashed commit stranded in `_log`, and
+    * `_staging/<uuid>` trees, are removed under the same age rule as
+    * unreferenced data files. A stage deletes its own tree when it
+    * ends, but an aborted write's straggler tasks can create
+    * `_temporary` in it again afterwards; a tree counts as old only
+    * when nothing in it changed within `retention`, so a live stage
+    * still writing under it survives.
     * Returns the number of data files reclaimed. */
   def vacuum(retention: java.time.Duration =
       java.time.Duration.ofMinutes(15)): Int = {
+    val cutoff = System.currentTimeMillis() - retention.toMillis
+    sweepStaging(cutoff)
     val snap = latest().getOrElse(return 0)
     val live = snap.files.map(entryName).toSet
     val everCommitted =
       manifestVersions().flatMap(manifestFiles).map(entryName).toSet
-    val cutoff = System.currentTimeMillis() - retention.toMillis
     val s = Files.list(dataDir)
     val all =
       try s.iterator().asScala.toSeq
@@ -865,6 +872,24 @@ final case class TxTable(spark: SparkSession, root: String) {
     }.toSeq.foreach(p => Files.deleteIfExists(p))
     finally l.close()
     dead.size
+  }
+
+  /** Deletes each `_staging/<uuid>` tree whose newest modification is
+    * before `cutoff`. A tree that changes while it is walked (a live
+    * stage moving or deleting its files) counts as young. */
+  private def sweepStaging(cutoff: Long): Unit = {
+    if (!Files.exists(stagingDir)) return
+    val s = Files.list(stagingDir)
+    val trees =
+      try s.iterator().asScala.toSeq
+      finally s.close()
+    def newest(tree: Path): Long = scala.util.Try {
+      val w = Files.walk(tree)
+      try w.iterator().asScala.map(Files.getLastModifiedTime(_).toMillis).max
+      finally w.close()
+    }.getOrElse(Long.MaxValue)
+    trees.filter(newest(_) < cutoff)
+      .foreach(t => FileUtils.deleteQuietly(t.toFile))
   }
 }
 

@@ -101,6 +101,27 @@ class TxTableSpec extends SparkSpec with TempDirs {
     assert(t.latest().get.version == 99L)
   }
 
+  test("vacuum sweeps a stale staging tree and spares a fresh one") {
+    val t = freshTable()
+    t.append(Seq((1L, "a")).toDF("id", "s"))
+    // what an aborted write's straggler task leaves after stage() ended
+    val staging = Paths.get(t.root, "_staging")
+    val stale = staging.resolve("stale")
+    val fresh = staging.resolve("fresh")
+    Files.createDirectories(stale.resolve("_temporary/0/_temporary"))
+    Files.createDirectories(fresh.resolve("_temporary/0/_temporary"))
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 3600_000L)
+    val w = Files.walk(stale)
+    try w.iterator().asScala.foreach(Files.setLastModifiedTime(_, old))
+    finally w.close()
+    assert(t.vacuum() == 0)
+    assert(!Files.exists(stale), "a staging tree older than retention is an orphan")
+    assert(Files.exists(fresh.resolve("_temporary/0/_temporary")),
+      "a young staging tree may be a live stage's")
+    assert(t.read().count() == 1)
+  }
+
   test("a stranded temp manifest is invisible to readers and vacuumed") {
     val t = freshTable()
     t.appendBatchIdempotent(Seq((1L, "a")).toDF("id", "s"), batchId = 1L)
