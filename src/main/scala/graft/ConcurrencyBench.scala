@@ -17,10 +17,10 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   *    thread-safe and jobs from different threads interleave across
   *    the executor cores (FIFO pools; fairness is not the point of a
   *    smoke, utilization is).
-  *  - The standing registries ([[graft.operators.TextAnalysis.ensureFts]],
-  *    [[graft.operators.VectorIndex.ensure]]) are warmed BEFORE
-  *    the clock starts and are read-only afterwards — the measured
-  *    path holds no shared mutable state beyond Spark's own planner.
+  *  - Both standing indexes are warmed through the registry
+  *    ([[graft.operators.StandingIndex.ensure]]) BEFORE the clock
+  *    starts and are read-only afterwards — the measured path holds no
+  *    shared mutable state beyond Spark's own planner.
   *  - Queries are DISTINCT point reads (rotating term triples pulled
   *    from the built index's own term dictionary, rotating nprobe/k)
   *    so the measurement can't degenerate into one plan served from a
@@ -42,9 +42,9 @@ object ConcurrencyBench {
     // ---- warm-up: tables, codegen, and both standing indices -------
     val t = graft.core.Tables(spark, sfDir)
     t.documents.count(); t.embeddings.count()
-    val fts = graft.operators.TextAnalysis.ensureFts(spark, sfDir)
-    graft.operators.VectorIndex.ensure(spark, sfDir,
-      graft.operators.VectorIndex.Sqrt)
+    import graft.operators.{StandingIndex, TextIndex, VectorIndex}
+    val fts = StandingIndex.ensure(spark, sfDir, TextIndex.Fts)
+    StandingIndex.ensure(spark, sfDir, VectorIndex.Sqrt)
 
     // distinct term triples from the index's own term dictionary (the
     // 12 highest-df terms — guaranteed non-empty posting lists), paid

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.operators.{TextAnalysis, VectorIndex}
+import graft.operators.{StandingIndex, TextIndex}
 import graft.operators.VectorIndex._
 
 /** Which standing index each serving query reads — the one map `Bench`
@@ -15,32 +15,33 @@ import graft.operators.VectorIndex._
   * query, so a renamed query cannot silently lose its warm-up. */
 object IndexCatalog {
 
-  private def vector(family: Family): (SparkSession, String) => Any =
-    VectorIndex.ensure(_, _, family)
+  private def index[I <: StandingIndex](family: StandingIndex.Family[I])
+      : (SparkSession, String) => Any =
+    StandingIndex.ensure(_, _, family)
 
   /** Serving query → the get-or-build of the standing index it reads. */
   val byQuery: Map[String, (SparkSession, String) => Any] = Map(
-    "text_bm25_indexed" -> TextAnalysis.ensureFts _,
-    "sim_ann_indexed" -> vector(Ivf),
-    "sim_ann_indexed_sqrt" -> vector(Sqrt),
-    "sim_ann_filtered" -> vector(Sqrt),
-    "sim_ann_filtered_recall" -> vector(Sqrt),
-    "sim_ann_filtered_adaptive" -> vector(Sqrt),
-    "sim_ann_filtered_adaptive_recall" -> vector(Sqrt),
-    "sim_ann_ivfsq8" -> vector(Sq8Sqrt),
-    "sim_ann_ivfsq8_recall" -> vector(Sq8Sqrt),
-    "sim_ann_indexed_sample" -> vector(Sample),
-    "sim_ann_recall_sample" -> vector(Sample),
-    "sim_ann_ivfsq8_sample" -> vector(Sq8Sample),
-    "sim_ann_ivfsq8_sample_recall" -> vector(Sq8Sample),
-    "sim_ann_ivfpq" -> vector(PqSqrt),
-    "sim_ann_ivfpq_recall" -> vector(PqSqrt),
-    "sim_ann_ivfpq_sample" -> vector(PqSample),
-    "sim_ann_ivfpq_sample_recall" -> vector(PqSample),
-    "stream_ivf_serve_only" -> vector(IvfStream),
-    "stream_ivfsq8_serve_only" -> vector(Sq8Stream),
-    "stream_ivfpq_serve_only" -> vector(PqStream),
-    "stream_fts_serve_only" -> graft.streaming.StreamFts.ensureStreamed _)
+    "text_bm25_indexed" -> index(TextIndex.Fts),
+    "sim_ann_indexed" -> index(Ivf),
+    "sim_ann_indexed_sqrt" -> index(Sqrt),
+    "sim_ann_filtered" -> index(Sqrt),
+    "sim_ann_filtered_recall" -> index(Sqrt),
+    "sim_ann_filtered_adaptive" -> index(Sqrt),
+    "sim_ann_filtered_adaptive_recall" -> index(Sqrt),
+    "sim_ann_ivfsq8" -> index(Sq8Sqrt),
+    "sim_ann_ivfsq8_recall" -> index(Sq8Sqrt),
+    "sim_ann_indexed_sample" -> index(Sample),
+    "sim_ann_recall_sample" -> index(Sample),
+    "sim_ann_ivfsq8_sample" -> index(Sq8Sample),
+    "sim_ann_ivfsq8_sample_recall" -> index(Sq8Sample),
+    "sim_ann_ivfpq" -> index(PqSqrt),
+    "sim_ann_ivfpq_recall" -> index(PqSqrt),
+    "sim_ann_ivfpq_sample" -> index(PqSample),
+    "sim_ann_ivfpq_sample_recall" -> index(PqSample),
+    "stream_ivf_serve_only" -> index(IvfStream),
+    "stream_ivfsq8_serve_only" -> index(Sq8Stream),
+    "stream_ivfpq_serve_only" -> index(PqStream),
+    "stream_fts_serve_only" -> index(TextIndex.FtsStream))
 
   /** Get-or-build each index `queries` read (a second query over the
     * same index finds it registered). */

@@ -554,71 +554,6 @@ object Similarity {
       .orderBy(col("qid"), col("rn"))
   }
 
-  /** A standing index's layout IS the durable artifact, not JVM
-    * state: every companion-table root is written to a manifest file
-    * inside the postings root (underscore-prefixed — invisible to
-    * Spark's readers, like the tx log itself), so a session that holds
-    * only the postings path can reconstruct the full handle
-    * ([[VectorIndex.load]], [[TextAnalysis.loadFts]]) instead of
-    * silently rebuilding. */
-  private val IndexManifest = "_graft_index_manifest"
-
-  /** A manifest that cannot be loaded — missing file (not an index
-    * root, or a pre-manifest build) or a torn/partial write missing a
-    * required key. Typed and named so a cold-session loader fails with
-    * the index root in hand instead of a bare NoSuchElementException
-    * (VERDICT r13 task 8). */
-  final class IndexManifestError(val root: String, detail: String)
-    extends RuntimeException(s"index manifest at $root: $detail")
-
-  /** Written atomically (temp + rename in the same directory): a crash
-    * mid-write leaves either the previous manifest or none — never a
-    * half-written file a loader would misread as a torn index. */
-  private[graft] def writeIndexManifest(postingsRoot: String,
-      entries: (String, String)*): Unit = {
-    val root = java.nio.file.Paths.get(postingsRoot)
-    val tmp = root.resolve(IndexManifest + ".tmp")
-    val fin = root.resolve(IndexManifest)
-    val body = entries.map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n")
-    java.nio.file.Files.write(tmp,
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, fin,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private[graft] def readIndexManifest(postingsRoot: String): Map[String, String] = {
-    val p = java.nio.file.Paths.get(postingsRoot, IndexManifest)
-    if (!java.nio.file.Files.exists(p))
-      throw new IndexManifestError(postingsRoot,
-        "manifest file missing — not an index root, or a build that predates manifests")
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(p).asScala
-      .filter(_.contains('='))
-      .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
-      .toMap
-  }
-
-  /** Required-key lookup with the typed torn-manifest failure. */
-  private[graft] def manifestKey(m: Map[String, String], root: String,
-      key: String): String =
-    m.getOrElse(key, throw new IndexManifestError(root,
-      s"required key '$key' missing (torn or partial manifest; " +
-        s"keys present: ${m.keys.toSeq.sorted.mkString(", ")})"))
-
-  /** Family guard for the loaders: loading the WRONG family's postings
-    * root must fail typed, not construct a structurally mismatched
-    * handle — every builder stamps its family into the manifest, and a
-    * loader handed e.g. a PQ root would otherwise find a `centroids`
-    * key and happily register code-carrying postings as exact ones.
-    * Lenient when the key is absent (pre-r14 layouts). */
-  private[graft] def requireFamily(m: Map[String, String], root: String,
-      expected: String): Unit =
-    m.get("family").filter(_ != expected).foreach { got =>
-      throw new IndexManifestError(root,
-        s"family mismatch: manifest says '$got', loader expects '$expected'")
-    }
-
   /** The label-seeded index's BUILD as its own declared query: trains
     * the quantizer, commits postings and centroids, re-registers the
     * standing index, and returns the cell-population audit
@@ -929,7 +864,7 @@ object Similarity {
     * the probed cells' population, not the corpus. */
   def annIndexed(spark: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 3): DataFrame =
-    VectorIndex.serve(spark, dir, VectorIndex.ensure(spark, dir, VectorIndex.Ivf),
+    VectorIndex.serve(spark, dir, StandingIndex.ensure(spark, dir, VectorIndex.Ivf),
       k, nprobe)
 
   /** The √N-index BUILD as its own declared query: trains the ⌈√N⌉
@@ -959,7 +894,7 @@ object Similarity {
     * changes the answer and the two paths share one oracle. */
   def annIndexedSqrt(spark: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 3): DataFrame =
-    VectorIndex.serve(spark, dir, VectorIndex.ensure(spark, dir, VectorIndex.Sqrt),
+    VectorIndex.serve(spark, dir, StandingIndex.ensure(spark, dir, VectorIndex.Sqrt),
       k, nprobe)
 
   /** Predicate-FILTERED ANN from the standing √N index — vector search
@@ -981,7 +916,7 @@ object Similarity {
   def annFilteredSqrt(spark: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 3,
       pred: Column = pmod(col("label"), lit(2)) === 1): DataFrame =
-    VectorIndex.serve(spark, dir, VectorIndex.ensure(spark, dir, VectorIndex.Sqrt),
+    VectorIndex.serve(spark, dir, StandingIndex.ensure(spark, dir, VectorIndex.Sqrt),
       k, nprobe, pred = Some(pred))
 
   /** The nprobe-widening rule for filtered ANN, as a number a spec can
@@ -1013,12 +948,12 @@ object Similarity {
     * public pred: Column contract admits every embeddings column —
     * ADVICE r12 flagged the histogram path for silently narrowing it)
     * keeps the full-row corpus aggregate, as does an unbuilt index or
-    * a cold session without [[VectorIndex.load]]: same exact counts either
+    * a cold session without [[StandingIndex.load]]: same exact counts either
     * way — the cache can never change an answer, only the plan. */
   private[graft] def selectivityFrame(spark: SparkSession, dir: String,
       pred: Column): DataFrame = {
     import graft.lake.TxTable
-    val cached = VectorIndex.registered(dir, VectorIndex.Sqrt)
+    val cached = StandingIndex.registered(dir, VectorIndex.Sqrt)
       .flatMap(_.labelStats).flatMap { stats =>
       // expose ONLY `label` to the predicate (the count column is
       // renamed away): a label-only predicate analyzes and takes the
@@ -1052,7 +987,7 @@ object Similarity {
       pred: Column = col("label") === 1): DataFrame = {
     // ensure first so the selectivity estimate reads the histogram
     // pinned beside the index, not a per-serve corpus aggregate
-    VectorIndex.ensure(spark, dir, VectorIndex.Sqrt)
+    StandingIndex.ensure(spark, dir, VectorIndex.Sqrt)
     annFilteredSqrt(spark, dir, k,
       adaptiveNprobe(spark, dir, baseNprobe, maxProbe, pred), pred)
   }
@@ -1224,7 +1159,7 @@ object Similarity {
   def annIndexedSample(spark: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 3): DataFrame =
     VectorIndex.serve(spark, dir,
-      VectorIndex.ensure(spark, dir, VectorIndex.Sample), k, nprobe)
+      StandingIndex.ensure(spark, dir, VectorIndex.Sample), k, nprobe)
 
   /** Recall@k of the sample-trained serving path vs the brute-force
     * exact top-k — the number that prices what sample training COSTS
@@ -1244,8 +1179,9 @@ object Similarity {
     * quantizer and appended cell-clustered — fragmenting the postings
     * to slices × files), `TxTable.compact` rewrites the fragments into
     * `targetFiles` cell-range-clustered files with fresh Bloom bitmaps
-    * (restoring [[ivfBuildSqrt]]'s layout), and the multi-probe
-    * serve runs one Bloom-pruned point read of the compacted snapshot.
+    * (restoring [[ivfBuildSqrt]]'s layout), and the √N family's
+    * standing serve ([[VectorIndex.serve]]) runs one Bloom-pruned point
+    * read of the compacted snapshot.
     *
     * Deterministic Lloyd + pinned centroids ⇒ every vector lands in
     * the same cell it would at a one-shot build, so neither the
@@ -1258,9 +1194,8 @@ object Similarity {
     import graft.core.Scratch
     val (posts, ct) = ivfChurnTables(spark, dir, slices, targetFiles,
       Scratch.fresh("tx_ivf_churn"), Scratch.fresh("tx_ivf_churn_cents"))
-    val (probes, members) = VectorIndex.probeRead(spark, dir, posts, ct.read(),
-      nprobe, labelCells = false)
-    topkByCell(spark, dir, members, probes, k)
+    VectorIndex.serve(spark, dir,
+      VectorIndex(VectorIndex.Sqrt, posts.root, ct.root, VectorIndex.Flat), k, nprobe)
   }
 
   /** The churn lifecycle's table half, shared with the spec that
@@ -1414,7 +1349,7 @@ object Similarity {
   def annIvfSq8(spark: SparkSession, dir: String, k: Int = 5,
       candK: Int = VectorIndex.Sq8CandK, nprobe: Int = 3): DataFrame =
     VectorIndex.serve(spark, dir,
-      VectorIndex.ensure(spark, dir, VectorIndex.Sq8Sqrt), k, nprobe, Some(candK))
+      StandingIndex.ensure(spark, dir, VectorIndex.Sq8Sqrt), k, nprobe, Some(candK))
 
   /** [[annIvfSq8]] over the SAMPLE-trained composed index — the serve
     * never knows how its centroids were trained; different training
@@ -1422,7 +1357,7 @@ object Similarity {
   def annIvfSq8Sample(spark: SparkSession, dir: String, k: Int = 5,
       candK: Int = VectorIndex.Sq8CandK, nprobe: Int = 3): DataFrame =
     VectorIndex.serve(spark, dir,
-      VectorIndex.ensure(spark, dir, VectorIndex.Sq8Sample), k, nprobe, Some(candK))
+      StandingIndex.ensure(spark, dir, VectorIndex.Sq8Sample), k, nprobe, Some(candK))
 
   /** Recall@k of the sample-trained composed serve ([[annIvfSq8Sample]])
     * vs the brute-force exact top-k — prices all three approximations
@@ -1506,14 +1441,14 @@ object Similarity {
   def annIvfPq(spark: SparkSession, dir: String, k: Int = 5,
       candK: Int = VectorIndex.PqCandK, nprobe: Int = 3): DataFrame =
     VectorIndex.serve(spark, dir,
-      VectorIndex.ensure(spark, dir, VectorIndex.PqSqrt), k, nprobe, Some(candK))
+      StandingIndex.ensure(spark, dir, VectorIndex.PqSqrt), k, nprobe, Some(candK))
 
   /** [[annIvfPq]] over the SAMPLE-trained IVF-PQ index — its own
     * oracle, mirroring the SQ8 sample family. */
   def annIvfPqSample(spark: SparkSession, dir: String, k: Int = 5,
       candK: Int = VectorIndex.PqCandK, nprobe: Int = 3): DataFrame =
     VectorIndex.serve(spark, dir,
-      VectorIndex.ensure(spark, dir, VectorIndex.PqSample), k, nprobe, Some(candK))
+      StandingIndex.ensure(spark, dir, VectorIndex.PqSample), k, nprobe, Some(candK))
 
   /** Recall@k of the IVF-PQ serve vs the brute-force exact top-k —
     * prices the probed-cell candidate loss plus the 8-byte ADC

@@ -311,26 +311,51 @@ object TextAnalysis {
     // spread: the ~130-tokens/doc explode must own its parallelism,
     // not inherit the corpus's split count (documentsSpread — the
     // r9/r10 single-split lesson, same as the dedup explodes)
-    val docs = t.documentsSpread.select(col("doc_id"),
-      split(col("text"), " ").as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
-    val stats = docs.agg(count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("t_toks"))
+    val docs = tokenized(t.documentsSpread)
+    val stats = corpusStats(docs)
     val tf = docs
       .select(col("doc_id"), col("dl"), explode(col("toks")).as("tok"))
       .filter(col("tok").isin(terms: _*))
       .groupBy(col("doc_id"), col("dl"), col("tok"))
       .agg(count(lit(1)).as("tf"))
     val dfc = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    tf.join(broadcast(dfc), Seq("tok"))
-      .crossJoin(broadcast(stats))
-      // (dl/avgdl) in e3; k1·(1−b+b·dl/avgdl) in e4 with k1=1.2, b=0.75
+    bm25TopK(bm25TermScores(tf.join(broadcast(dfc), Seq("tok"))
+      .crossJoin(broadcast(stats))), topK)
+  }
+
+  /** Whitespace tokens and the document length: (doc_id, toks, dl). */
+  private[graft] def tokenized(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .withColumn("dl", size(col("toks")).cast("long"))
+
+  /** The postings (tok, doc_id, dl, tf) of [[tokenized]] documents. */
+  private[graft] def postingsOf(tokenized: DataFrame): DataFrame =
+    tokenized.select(col("doc_id"), col("dl"), explode(col("toks")).as("tok"))
+      .groupBy(col("tok"), col("doc_id"), col("dl"))
+      .agg(count(lit(1)).as("tf"))
+
+  /** The corpus-stats row (n_docs, t_toks) over one row per document. */
+  private[graft] def corpusStats(perDoc: DataFrame): DataFrame =
+    perDoc.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_toks"))
+
+  /** BM25's per-posting factors in exact integer e-units, over rows
+    * carrying (tf, dl, df, n_docs, t_toks): the rational idf
+    * `(10⁴·N) div df`, (dl/avgdl) in e3, k1·(1−b+b·dl/avgdl) in e4 with
+    * k1=1.2, b=0.75, and tf·(k1+1)/(tf + k1·(…)) in e3 — saturating at
+    * 2200. A term's score is `idf_e4 · ratio_e3`. */
+  private[graft] def bm25TermScores(rows: DataFrame): DataFrame =
+    rows
       .withColumn("idf_e4", expr("(10000 * n_docs) div df"))
       .withColumn("dlr_e3", expr("(1000 * dl * n_docs) div t_toks"))
       .withColumn("sat_e4", expr("12 * (250 + (750 * dlr_e3) div 1000)"))
-      // tf·(k1+1)/(tf + k1·(…)) in e3 — saturates at 2200
       .withColumn("ratio_e3",
         expr("(tf * 2200 * 10000) div (tf * 10000 + sat_e4)"))
+
+  /** Sum each document's term scores, then the ranked top `topK`: a
+    * partial top-k (TakeOrderedAndProject, never a global sort) and a
+    * rank window over topK rows. */
+  private[graft] def bm25TopK(termScores: DataFrame, topK: Int): DataFrame =
+    termScores
       .groupBy(col("doc_id"))
       .agg(sum(col("idf_e4") * col("ratio_e3")).as("score_e7"),
         count(lit(1)).as("n_terms"))
@@ -340,114 +365,25 @@ object TextAnalysis {
         Window.orderBy(col("score_e7").desc, col("doc_id"))).cast("long"))
       .select(col("rank"), col("doc_id"), col("score_e7"), col("n_terms"))
       .orderBy(col("rank"))
-  }
 
   /** BM25 served from a STANDING inverted index — the "index" half of
     * the ES story, and the scale path [[bm25Search]]'s scaladoc
     * promises: the corpus is tokenized ONCE into a term-clustered
     * postings table (tok, doc_id, dl, tf) in the tx-table format
     * (range-partitioned by term, Bloom bitmap on term per file), plus
-    * a one-row corpus-stats table. A query then touches only the
-    * files whose Bloom may contain its terms — point reads, no corpus
-    * rescan, no re-tokenization — and scores identically to the scan
-    * path (the oracle for this query IS [[bm25Search]]'s oracle:
-    * an index is an optimization, never a semantic). At 100 TB the
-    * build is one pass, appends are incremental
-    * (`TxTable.append`), and per-query work is proportional to the
-    * query terms' postings, not the corpus. */
-  /** A standing FTS index: tx-table roots plus the corpus stats PINNED
-    * at build time (the ES semantic — index-wide statistics live with
-    * the index and serve from memory; queries never re-aggregate the
-    * corpus). */
-  final case class FtsIndex(postings: String, stats: String,
-      nDocs: Long, tToks: Long)
-
-  /** Standing FTS index registry: corpus dir → index. One build per
-    * corpus per process; `text_fts_build` refreshes it (last build
-    * wins), `bm25Indexed` get-or-builds. */
-  private val ftsStanding =
-    new java.util.concurrent.ConcurrentHashMap[String, FtsIndex]()
-
-  /** One pass over the corpus into the standing postings + stats
-    * tables: (tok, doc_id, dl, tf, df) term-range-partitioned with a
-    * Bloom bitmap on `tok` per file, and the one-row (n_docs, Σdl)
-    * stats table. `df` is the term-dictionary statistic denormalized
-    * onto each posting at build (what Lucene keeps per term) so a
-    * query reads its postings ONCE — no second per-query pass to
-    * re-count document frequency. The window that computes it runs on
-    * the same range partitioning the layout needs anyway (range on
-    * `tok` satisfies the window's clustering), so it costs a sort, not
-    * a shuffle. Returns the registered standing index for `dir`. */
-  private def buildFts(spark: SparkSession, dir: String): FtsIndex = {
-    import graft.lake.TxTable
-    import graft.core.Scratch
-    // spread: the build's corpus tokenize+explode is the whole cost —
-    // split-bound at x100 it ran on 1 core of 32 (documentsSpread)
-    val docs = Tables(spark, dir).documentsSpread.select(col("doc_id"),
-      split(col("text"), " ").as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
-    val pDir = Scratch.fresh("tx_fts")
-    TxTable(spark, pDir).append(
-      docs.select(col("doc_id"), col("dl"), explode(col("toks")).as("tok"))
-        .groupBy(col("tok"), col("doc_id"), col("dl"))
-        .agg(count(lit(1)).as("tf"))
-        .repartitionByRange(8, col("tok"))
-        .withColumn("df", count(lit(1)).over(Window.partitionBy(col("tok"))))
-        ,
-      bloomCols = Seq("tok"))
-    val sDir = Scratch.fresh("tx_fts_stats")
-    val txStats = TxTable(spark, sDir)
-    // r16 (guide §1.2): the stats row derives from the JUST-WRITTEN
-    // postings — a column-pruned read of (doc_id, dl) — instead of a
-    // second full corpus scan + tokenize. Exact: dl is functionally
-    // dependent on doc_id and every doc has >= 1 posting (split of ""
-    // is [""]), so distinct (doc_id, dl) is one row per document.
-    txStats.append(TxTable(spark, pDir).read()
-      .select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_toks")))
-    val st = txStats.read().head() // two scalars, paid once at build
-    // the stats root lives IN the index layout (manifest beside the
-    // postings) so a cold session reloads the handle from disk
-    // ([[loadFts]], VERDICT r13 task 4) instead of rebuilding
-    Similarity.writeIndexManifest(pDir, "family" -> "fts", "stats" -> sDir)
-    val idx = FtsIndex(pDir, sDir,
-      st.getLong(st.fieldIndex("n_docs")), st.getLong(st.fieldIndex("t_toks")))
-    ftsStanding.put(dir, idx)
-    idx
-  }
-
-  /** Cold-session loader: reconstruct (and re-register) the standing
-    * FTS handle from the on-disk layout alone — the manifest names the
-    * stats root, whose one-row table carries the two corpus scalars,
-    * so a fresh JVM serves from the standing postings without ever
-    * re-tokenizing the corpus. */
-  def loadFts(spark: SparkSession, dir: String,
-      postingsRoot: String): FtsIndex = {
-    import graft.lake.TxTable
-    val m = Similarity.readIndexManifest(postingsRoot)
-    Similarity.requireFamily(m, postingsRoot, "fts")
-    val sDir = Similarity.manifestKey(m, postingsRoot, "stats")
-    val st = TxTable(spark, sDir).read().head()
-    val idx = FtsIndex(postingsRoot, sDir,
-      st.getLong(st.fieldIndex("n_docs")), st.getLong(st.fieldIndex("t_toks")))
-    ftsStanding.put(dir, idx)
-    idx
-  }
-
-  /** Test hook: forget the standing FTS registration (simulates the
-    * cold session [[loadFts]] exists for) without touching disk. */
-  private[graft] def dropFtsForTest(dir: String): Unit = {
-    ftsStanding.remove(dir)
-    ()
-  }
-
-  /** Get-or-build the standing index (idempotent; used by Bench's
-    * warm-up so the serving query times point reads, not the build —
-    * what a deployment pays per query). */
-  def ensureFts(spark: SparkSession, dir: String): FtsIndex = {
-    val hit = ftsStanding.get(dir)
-    if (hit != null) hit else buildFts(spark, dir)
-  }
+    * a one-row corpus-stats table ([[TextIndex.Fts]]). A query then
+    * touches only the files whose Bloom may contain its terms — point
+    * reads, no corpus rescan, no re-tokenization — and scores
+    * identically to the scan path (the oracle for this query IS
+    * [[bm25Search]]'s oracle: an index is an optimization, never a
+    * semantic). At 100 TB the build is one pass, appends are
+    * incremental (`TxTable.append`), and per-query work is proportional
+    * to the query terms' postings, not the corpus. */
+  def bm25Indexed(spark: SparkSession, dir: String,
+      terms: Seq[String] = Seq("spark", "join", "vector"),
+      topK: Int = 10): DataFrame =
+    TextIndex.serve(spark, StandingIndex.ensure(spark, dir, TextIndex.Fts),
+      terms, topK)
 
   /** The BUILD half of the indexed-BM25 story as its own declared
     * query — it owns the two tx commits (the one-pass tokenize +
@@ -457,7 +393,7 @@ object TextAnalysis {
     * measurement) and re-registers the standing index. */
   def ftsBuild(spark: SparkSession, dir: String): DataFrame = {
     import graft.lake.TxTable
-    val idx = buildFts(spark, dir)
+    val idx = StandingIndex.rebuild(spark, dir, TextIndex.Fts)
     val posts = TxTable(spark, idx.postings).read()
     posts
       .agg(count(lit(1)).as("n_postings"),
@@ -466,46 +402,6 @@ object TextAnalysis {
       .select(col("n_postings"), col("n_terms"), col("n_docs"),
         col("t_toks"))
   }
-
-  def bm25Indexed(spark: SparkSession, dir: String,
-      terms: Seq[String] = Seq("spark", "join", "vector"),
-      topK: Int = 10): DataFrame = {
-    import graft.lake.TxTable
-    val idx = ensureFts(spark, dir)
-    val tx = TxTable(spark, idx.postings)
-    // query: ONE Bloom-pruned multi-term point read — the posting
-    // lists of all query terms in a single index access. df travels ON
-    // the postings (term-dictionary stat, see [[buildFts]]) and the
-    // corpus stats are the build-time-pinned scalars, so serving is a
-    // single pass: no per-query stats scan, no df re-aggregation.
-    bm25ScoreTail(tx.readWhereIn("tok", terms.map(lit(_))),
-      idx.nDocs, idx.tToks, topK)
-  }
-
-  /** Shared exact-integer BM25 scoring tail over postings that already
-    * carry `df` (denormalized at build, or segment-merged at read by
-    * the incremental path — [[graft.streaming.StreamFts]]): saturation
-    * in e-units, partial top-k, rank window over topK rows. */
-  private[graft] def bm25ScoreTail(posts: DataFrame, nDocs: Long,
-      tToks: Long, topK: Int): DataFrame =
-    posts
-      .withColumn("n_docs", lit(nDocs))
-      .withColumn("t_toks", lit(tToks))
-      .withColumn("idf_e4", expr("(10000 * n_docs) div df"))
-      .withColumn("dlr_e3", expr("(1000 * dl * n_docs) div t_toks"))
-      .withColumn("sat_e4", expr("12 * (250 + (750 * dlr_e3) div 1000)"))
-      .withColumn("ratio_e3",
-        expr("(tf * 2200 * 10000) div (tf * 10000 + sat_e4)"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("idf_e4") * col("ratio_e3")).as("score_e7"),
-        count(lit(1)).as("n_terms"))
-      .orderBy(col("score_e7").desc, col("doc_id"))
-      .limit(topK)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("score_e7").desc, col("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("score_e7"), col("n_terms"))
-      .orderBy(col("rank"))
-
 
   /** The standing-index CHURN lifecycle as one verified query —
     * append → fragment → compact → serve (VERDICT r8 task 3), the
@@ -519,25 +415,20 @@ object TextAnalysis {
     * compacted snapshot with one multi-term point read.
     *
     * Scores are byte-equal to the full-corpus scan — every document
-    * lands in exactly one slice, df merges across segments at read
-    * ([[graft.streaming.StreamFts]]'s semantic), stats are the sum of
-    * the per-commit rows — so this query shares [[bm25Search]]'s
+    * lands in exactly one slice, and the tables have the streamed
+    * family's layout (df merges across segments at read, stats are the
+    * sum of the per-commit rows) — so this query shares [[bm25Search]]'s
     * oracle: neither incremental commits nor compaction may ever
     * change an answer. The file-count bound after compaction is
     * asserted by `TxTableSpec`. */
   def ftsChurn(spark: SparkSession, dir: String,
       terms: Seq[String] = Seq("spark", "join", "vector"),
       topK: Int = 10, slices: Int = 10, targetFiles: Int = 8): DataFrame = {
-    import graft.lake.TxTable
     import graft.core.Scratch
     val (idx, st) = ftsChurnTables(spark, dir, slices, targetFiles,
       Scratch.fresh("tx_fts_churn"), Scratch.fresh("tx_fts_churn_stats"))
-    val stRow = st.read()
-      .agg(sum(col("n_docs")).as("n"), sum(col("t_toks")).as("t")).head()
-    val posts = idx.readWhereIn("tok", terms.map(lit(_)))
-    val dfc = posts.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    bm25ScoreTail(posts.join(broadcast(dfc), Seq("tok")),
-      stRow.getLong(0), stRow.getLong(1), topK)
+    TextIndex.serve(spark,
+      TextIndex.at(spark, TextIndex.FtsStream, idx.root, st.root), terms, topK)
   }
 
   /** The lifecycle's table half, shared with the spec that asserts
@@ -561,9 +452,7 @@ object TextAnalysis {
     // the stats rows are the same count/sum(dl) aggregate as before,
     // now over cache. The commits (and the fragmentation the lifecycle
     // models) are unchanged.
-    val docs = Tables(spark, dir).documentsSpread
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
+    val docs = tokenized(Tables(spark, dir).documentsSpread)
       .withColumn("slice", pmod(col("doc_id"), lit(slices)))
       .repartitionByRange(slices, col("slice"))
       .persist()
@@ -572,14 +461,9 @@ object TextAnalysis {
     try {
       for (i <- 0 until slices) {
         val slice = docs.filter(col("slice") === i)
-        idx.append(slice
-          .select(col("doc_id"), col("dl"), explode(col("toks")).as("tok"))
-          .groupBy(col("tok"), col("doc_id"), col("dl"))
-          .agg(count(lit(1)).as("tf"))
-          .repartitionByRange(4, col("tok")),
+        idx.append(postingsOf(slice).repartitionByRange(4, col("tok")),
           bloomCols = Seq("tok"))
-        st.append(slice.agg(count(lit(1)).as("n_docs"),
-          sum(col("dl")).as("t_toks")))
+        st.append(corpusStats(slice))
       }
     } finally docs.unpersist(blocking = false)
     idx.compact(targetFiles, bloomCols = Seq("tok"),
@@ -609,11 +493,8 @@ object TextAnalysis {
       topK: Int = 10): DataFrame = {
     import spark.implicits._
     val t = Tables(spark, dir)
-    val docs = t.documentsSpread.select(col("doc_id"),
-      split(col("text"), " ").as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
-    val stats = docs.agg(count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("t_toks"))
+    val docs = tokenized(t.documentsSpread)
+    val stats = corpusStats(docs)
     val toks = docs.select(col("doc_id"), col("dl"),
       explode(col("toks")).as("tok"))
     val qterms = terms.toDF("qt")
@@ -625,13 +506,8 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf"))
     val dfc = tf.select(col("doc_id"), col("tok")).distinct()
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val scored = tf.join(dfc, Seq("tok"))
-      .crossJoin(broadcast(stats))
-      .withColumn("idf_e4", expr("(10000 * n_docs) div df"))
-      .withColumn("dlr_e3", expr("(1000 * dl * n_docs) div t_toks"))
-      .withColumn("sat_e4", expr("12 * (250 + (750 * dlr_e3) div 1000)"))
-      .withColumn("ratio_e3",
-        expr("(tf * 2200 * 10000) div (tf * 10000 + sat_e4)"))
+    val scored = bm25TermScores(tf.join(dfc, Seq("tok"))
+        .crossJoin(broadcast(stats)))
       .withColumn("term_score", col("idf_e4") * col("ratio_e3"))
     val best = scored.groupBy(col("doc_id"), col("qt"))
       .agg(min(struct((-col("term_score")).as("neg"), col("tok")))
@@ -701,8 +577,7 @@ object TextAnalysis {
     val docs = t.documentsSpread.select(col("doc_id"), col("lang"),
       col("n_chars"), split(col("text"), " ").as("toks"))
       .withColumn("dl", size(col("toks")).cast("long"))
-    val stats = docs.agg(count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("t_toks"))
+    val stats = corpusStats(docs)
     val tf = docs
       .select(col("doc_id"), col("lang"), col("n_chars"), col("dl"),
         explode(col("toks")).as("tok"))
@@ -711,23 +586,10 @@ object TextAnalysis {
         col("tok"))
       .agg(count(lit(1)).as("tf"))
     val dfc = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    tf.filter(col("lang") === filterLang && col("n_chars") >= minChars)
-      .join(broadcast(dfc), Seq("tok"))
-      .crossJoin(broadcast(stats))
-      .withColumn("idf_e4", expr("(10000 * n_docs) div df"))
-      .withColumn("dlr_e3", expr("(1000 * dl * n_docs) div t_toks"))
-      .withColumn("sat_e4", expr("12 * (250 + (750 * dlr_e3) div 1000)"))
-      .withColumn("ratio_e3",
-        expr("(tf * 2200 * 10000) div (tf * 10000 + sat_e4)"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("idf_e4") * col("ratio_e3")).as("score_e7"),
-        count(lit(1)).as("n_terms"))
-      .orderBy(col("score_e7").desc, col("doc_id"))
-      .limit(topK)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("score_e7").desc, col("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("score_e7"), col("n_terms"))
-      .orderBy(col("rank"))
+    bm25TopK(bm25TermScores(
+      tf.filter(col("lang") === filterLang && col("n_chars") >= minChars)
+        .join(broadcast(dfc), Seq("tok"))
+        .crossJoin(broadcast(stats))), topK)
   }
 
   /** ES/Kibana `significant_terms` aggregation — "what terms are
@@ -885,11 +747,8 @@ object TextAnalysis {
     val q = queries.flatMap { case (qid, ts) => ts.map(tk => (qid, tk)) }
       .toDF("qid", "tok")
     val nq = q.groupBy(col("qid")).agg(count(lit(1)).as("n_q"))
-    val docs = t.documents.select(col("doc_id"),
-        split(col("text"), " ").as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
-    val stats = docs.agg(count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("t_toks"))
+    val docs = tokenized(t.documents)
+    val stats = corpusStats(docs)
     // one shared pass: (qid, doc, tok) term frequencies drive BOTH the
     // BM25 score and the relevance grade
     val tf = docs
@@ -898,13 +757,8 @@ object TextAnalysis {
       .groupBy(col("qid"), col("doc_id"), col("dl"), col("tok"))
       .agg(count(lit(1)).as("tf"))
     val dfc = tf.groupBy(col("qid"), col("tok")).agg(count(lit(1)).as("df"))
-    val scored = tf.join(broadcast(dfc), Seq("qid", "tok"))
-      .crossJoin(broadcast(stats))
-      .withColumn("idf_e4", expr("(10000 * n_docs) div df"))
-      .withColumn("dlr_e3", expr("(1000 * dl * n_docs) div t_toks"))
-      .withColumn("sat_e4", expr("12 * (250 + (750 * dlr_e3) div 1000)"))
-      .withColumn("ratio_e3",
-        expr("(tf * 2200 * 10000) div (tf * 10000 + sat_e4)"))
+    val scored = bm25TermScores(tf.join(broadcast(dfc), Seq("qid", "tok"))
+        .crossJoin(broadcast(stats)))
       .groupBy(col("qid"), col("doc_id"))
       .agg(sum(col("idf_e4") * col("ratio_e3")).as("score_e7"))
     val wq = Window.partitionBy(col("qid"))

@@ -18,29 +18,21 @@ import Similarity._
   * sample-trained quantizers; flat, SQ8 and PQ codecs; batch, streamed
   * and grow lifecycles. `labelStats` is the √N family's pinned
   * per-label selectivity histogram; `k` is the pinned cell count a grow
-  * family re-buckets against (0 elsewhere). Immutable: a rebuild
-  * returns a new handle under fresh roots, so a reader holding the old
-  * one keeps a consistent snapshot. */
+  * family re-buckets against (0 elsewhere). */
 final case class VectorIndex(family: VectorIndex.Family, postings: String,
     centroids: String, codec: VectorIndex.Codec,
-    labelStats: Option[String] = None, k: Int = 0)
+    labelStats: Option[String] = None, k: Int = 0) extends StandingIndex
 
-/** The one lifecycle every IVF family shares:
-  *  - one registry keyed by (corpus dir, family), get-or-build through
-  *    `computeIfAbsent` ([[ensure]]), so concurrent callers on a cold
-  *    dir get the same handle;
-  *  - one loader ([[load]]) that rebuilds a handle from the manifest
-  *    beside its postings — the cold-session path;
+/** What every IVF family shares on top of the [[StandingIndex]]
+  * lifecycle (registry, manifest, loader, streamed driver):
   *  - one commit path ([[commit]], [[pin]]): postings, the pinned
   *    artifact tables, then the manifest;
   *  - one serve ([[serve]]): probe, Bloom-pruned point read, then the
   *    codec's scoring;
   *  - one grow append-and-trigger ([[growAppend]]).
-  * `graft.streaming.StreamVector` is the streamed driver and
-  * `graft.IndexCatalog` maps each serving query to the family it
-  * reads. The registry is process-scoped (README "swap points"): a
-  * deployment pins the tx tables at real paths and it becomes a catalog
-  * lookup; the serving plan is unchanged by that swap. */
+  * `graft.streaming.StreamVector` seeds and tails the streamed families
+  * and `graft.IndexCatalog` maps each serving query to the family it
+  * reads. */
 object VectorIndex {
 
   /** What the postings carry beside the exact vector. */
@@ -86,7 +78,8 @@ object VectorIndex {
     * the streamed driver; `#grow` families grow from a frame and write
     * no manifest. */
   final case class Family(name: String, scratch: String, cells: Cells,
-      codec: CodecKind, cols: Seq[String], labelHistogram: Boolean = false) {
+      codec: CodecKind, cols: Seq[String], labelHistogram: Boolean = false)
+      extends StandingIndex.Family[VectorIndex] {
     def streamed: Boolean = name.endsWith("#stream")
     def grows: Boolean = name.endsWith("#grow")
     /** Corpus columns the postings carry beyond (vec_id, embedding). */
@@ -94,6 +87,29 @@ object VectorIndex {
       if (cols.contains("label")) Seq(col("label")) else Nil
     private[graft] def inputCols: Seq[Column] =
       col("vec_id") +: col("embedding") +: extraCols
+
+    /** One pass into a standing index: train, assign every vector to its
+      * argmin cell, encode, commit. Streamed families hand over to the
+      * streamed driver. Returns the handle unregistered. */
+    private[graft] def build(spark: SparkSession, dir: String): VectorIndex = {
+      require(!grows, s"$name grows from a frame: use growInit")
+      if (streamed) graft.streaming.StreamVector.seed(spark, dir, this)
+      else {
+        val pins = train(spark, dir, this)
+        val rows = memberRows(spark, dir, pins.cents, pins.bounded, extraCols: _*)
+        commit(spark, this, encoder(this, pins)(rows), pins)
+      }
+    }
+
+    private[graft] def fromManifest(spark: SparkSession, root: String,
+        m: Map[String, String]): VectorIndex = {
+      val cents = StandingIndex.manifestKey(m, root, "centroids")
+      val c = codec match {
+        case FlatKind => Flat
+        case kind => kind.at(StandingIndex.manifestKey(m, root, kind.key))
+      }
+      VectorIndex(this, root, cents, c, if (labelHistogram) m.get("stats") else None)
+    }
   }
 
   private val flat = Seq("cell", "vec_id", "embedding")
@@ -134,68 +150,6 @@ object VectorIndex {
 
   /** Grow trigger: re-bucket once N > (k·GrowthFactor)². */
   private val GrowthFactor = 2.0
-
-  // ----------------------------------------------------------------
-  // Registry and loader
-  // ----------------------------------------------------------------
-
-  private val standing =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), VectorIndex]()
-
-  /** Get-or-build `family`'s standing index over corpus `dir`.
-    * `computeIfAbsent` makes the get-then-build atomic: two concurrent
-    * callers on a cold dir run one build and get the same handle. */
-  def ensure(spark: SparkSession, dir: String, family: Family): VectorIndex = {
-    require(!family.grows, s"${family.name} grows from a frame: use growInit")
-    standing.computeIfAbsent((dir, family.name), _ => build(spark, dir, family))
-  }
-
-  /** Builds fresh and registers (last build wins) — the `*Build`
-    * queries and the streamed full lifecycle. */
-  private[graft] def rebuild(spark: SparkSession, dir: String,
-      family: Family): VectorIndex =
-    register(dir, build(spark, dir, family))
-
-  private[graft] def register(dir: String, idx: VectorIndex): VectorIndex = {
-    standing.put((dir, idx.family.name), idx)
-    idx
-  }
-
-  private[graft] def registered(dir: String, family: Family): Option[VectorIndex] =
-    Option(standing.get((dir, family.name)))
-
-  /** Test hook: forget every registration for `dir` (the cold session
-    * [[load]] exists for) without touching disk. */
-  private[graft] def dropForTest(dir: String): Unit = {
-    standing.keySet.removeIf(_._1 == dir)
-    ()
-  }
-
-  /** Reconstruct (and register) a standing handle from the manifest at
-    * `root` alone — the cold-session path: a fresh JVM that knows only
-    * where the postings live gets back the handle the building session
-    * held, companion roots and histogram included, instead of silently
-    * rebuilding. Fails with [[Similarity.IndexManifestError]] on a
-    * missing or torn manifest, or on another family's root (a PQ
-    * manifest also has a `centroids` key; without the family guard its
-    * code-carrying postings would load as exact ones).
-    *
-    * Lifetime caveat: in-repo builds write under [[Scratch]] roots,
-    * which a clean JVM exit deletes, so the specs simulate the cold
-    * session with [[dropForTest]]; a deployment pins its roots at
-    * durable paths and the loader survives any restart. */
-  def load(spark: SparkSession, dir: String, family: Family,
-      root: String): VectorIndex = {
-    val m = readIndexManifest(root)
-    requireFamily(m, root, family.name)
-    val cents = manifestKey(m, root, "centroids")
-    val codec = family.codec match {
-      case FlatKind => Flat
-      case kind => kind.at(manifestKey(m, root, kind.key))
-    }
-    register(dir, VectorIndex(family, root, cents, codec,
-      if (family.labelHistogram) m.get("stats") else None))
-  }
 
   // ----------------------------------------------------------------
   // Build and commit
@@ -267,19 +221,6 @@ object VectorIndex {
     rows => withCodes(rows).select(family.cols.map(col): _*)
   }
 
-  /** One pass of a batch family into a standing index: train, assign
-    * every vector to its argmin cell, encode, commit. Streamed families
-    * hand over to the streamed driver. Returns the handle unregistered. */
-  private[graft] def build(spark: SparkSession, dir: String,
-      family: Family): VectorIndex =
-    if (family.streamed) graft.streaming.StreamVector.seed(spark, dir, family)
-    else {
-      val pins = train(spark, dir, family)
-      val rows = memberRows(spark, dir, pins.cents, pins.bounded,
-        family.extraCols: _*)
-      commit(spark, family, encoder(family, pins)(rows), pins)
-    }
-
   /** Cell-clustered postings commit: range-partitioned on `cell` so a
     * probe's point read touches a contiguous file subset, Bloom bitmap
     * on `cell` per file. */
@@ -298,8 +239,9 @@ object VectorIndex {
 
   /** Write the pinned tables beside committed postings — centroids, the
     * codec table, the histogram — then the manifest naming them, so a
-    * session that holds only the postings root can [[load]] the full
-    * handle. The streamed driver calls this after its last batch. */
+    * session that holds only the postings root can load the full
+    * handle (`StandingIndex.load`). The streamed driver calls this after
+    * its last batch. */
   private[graft] def pin(spark: SparkSession, family: Family, postings: String,
       pins: Pins, k: Int = 0): VectorIndex = {
     def table(suffix: String, df: DataFrame): String = {
@@ -311,7 +253,7 @@ object VectorIndex {
     val codecRoot = pins.codecTable.map(table(family.codec.suffix, _))
     val histRoot = pins.hist.map(table("_stats", _))
     if (!family.grows)
-      writeIndexManifest(postings,
+      StandingIndex.writeIndexManifest(postings,
         Seq("family" -> family.name, "centroids" -> cents) ++
           codecRoot.map(family.codec.key -> _) ++ histRoot.map("stats" -> _): _*)
     VectorIndex(family, postings, cents, family.codec.at(codecRoot.getOrElse("")),
@@ -326,7 +268,7 @@ object VectorIndex {
     * capped at ≈ 8·⌈√N⌉ vectors). */
   private[graft] def buildAudit(spark: SparkSession, dir: String,
       family: Family): DataFrame = {
-    val idx = rebuild(spark, dir, family)
+    val idx = StandingIndex.rebuild(spark, dir, family)
     val codecCols = idx.codec match {
       case Flat => Nil
       case Sq8(stats) => Seq(TxTable(spark, stats).read())

@@ -2,12 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 import graft.core.{Scratch, Tables}
 import graft.lake.TxTable
-import graft.operators.{Similarity, TextAnalysis}
+import graft.operators.{StandingIndex, TextIndex}
+import graft.operators.TextAnalysis.{corpusStats, postingsOf, tokenized}
 
 /** End-to-end streamed-index pipeline — the composition of the two
   * verified halves (`StreamZoneSpec`'s idempotent micro-batch index
@@ -41,37 +40,10 @@ import graft.operators.{Similarity, TextAnalysis}
   */
 object StreamFts {
 
-  /** A standing stream-maintained FTS snapshot: the postings + stats
-    * tx roots plus the merged corpus scalars, PINNED when the handle
-    * is made (summing the per-commit stats rows is commit-count work,
-    * paid once per handle, never per query — the batch `FtsIndex`
-    * semantic applied to the streamed layout). */
-  final case class FtsStreamIndex(postings: String, stats: String,
-      nDocs: Long, tToks: Long)
-
-  /** Standing streamed-index registry, the batch families' pattern:
-    * one seed+stream per corpus per process; `stream_fts_serve`
-    * always re-drives the full lifecycle, [[streamFtsServeOnly]]
-    * get-or-streams so ITS timed row is the serve alone. */
-  private val standing =
-    new java.util.concurrent.ConcurrentHashMap[String, FtsStreamIndex]()
-
-  /** Sum the per-commit stats rows into the two corpus scalars and
-    * pin them on the handle. */
-  private def handleFor(spark: SparkSession, pDir: String,
-      sDir: String): FtsStreamIndex = {
-    val r = TxTable(spark, sDir).read()
-      .agg(sum(col("n_docs")).as("n"), sum(col("t_toks")).as("t")).head()
-    FtsStreamIndex(pDir, sDir, r.getLong(0), r.getLong(1))
-  }
-
-  /** Seed + stream the postings index; returns the standing-snapshot
-    * handle. Registration is the CALLER's job: [[ensureStreamed]]
-    * installs via computeIfAbsent (whose mapping function must not
-    * touch the map), the full-lifecycle serve and [[loadStreamed]]
-    * put explicitly. */
-  private[graft] def streamTables(spark: SparkSession,
-      dir: String): FtsStreamIndex = {
+  /** Seed + stream the postings index; returns the `fts#stream` handle
+    * unregistered (`StandingIndex.ensure` installs it via
+    * computeIfAbsent, whose mapping function must not touch the map). */
+  private[graft] def seed(spark: SparkSession, dir: String): TextIndex = {
     // base seed = 90% of the corpus through a tokenize+explode —
     // spread so the build stage owns its parallelism (the x100
     // single-split lesson); the late 10% streams through micro-batch
@@ -83,114 +55,26 @@ object StreamFts {
       .select(col("doc_id"), col("text"))
       .filter(pmod(col("doc_id"), lit(10)) === 0)
 
-    def tokenized(d: DataFrame): DataFrame =
-      d.select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .withColumn("dl", size(col("toks")).cast("long"))
-    def postings(d: DataFrame): DataFrame =
-      tokenized(d)
-        .select(col("doc_id"), col("dl"), explode(col("toks")).as("tok"))
-        .groupBy(col("tok"), col("doc_id"), col("dl"))
-        .agg(count(lit(1)).as("tf"))
-    def statsDelta(d: DataFrame): DataFrame =
-      tokenized(d).agg(count(lit(1)).as("n_docs"),
-        sum(col("dl")).as("t_toks"))
-
     // seed commit: the base corpus, term-range-clustered with Bloom
-    // bitmaps — identical layout to TextAnalysis.buildFts
-    val pDir = Scratch.fresh("tx_fts_stream")
-    val sDir = Scratch.fresh("tx_fts_stream_stats")
-    val idx = TxTable(spark, pDir)
-    val st = TxTable(spark, sDir)
+    // bitmaps — identical layout to the batch `TextIndex.Fts` build
+    val idx = TxTable(spark, Scratch.fresh("tx_fts_stream"))
+    val st = TxTable(spark, Scratch.fresh("tx_fts_stream_stats"))
     // r16 (guide §1.2): one tokenize pass — the seed stats row derives
     // from the JUST-WRITTEN seed postings (a column-pruned (doc_id,
     // dl) read; dl is functionally dependent on doc_id and every doc
     // has >= 1 posting) instead of a second scan+tokenize of the base
-    idx.append(postings(base).repartitionByRange(8, col("tok")),
+    idx.append(postingsOf(tokenized(base)).repartitionByRange(8, col("tok")),
       bloomCols = Seq("tok"))
-    st.append(idx.read().select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_toks")))
+    st.append(corpusStats(idx.read().select(col("doc_id"), col("dl")).distinct()))
 
-    // the late documents land as files (the reference's per-file
-    // upload transport); the stream tails the directory one file per
-    // micro-batch and each batch commits postings + stats deltas
-    // under its batch marker
-    val srcDir = Scratch.fresh("fts_late_src")
-    late.repartition(2).write.mode("overwrite").json(srcDir)
-    val chk = Scratch.fresh("fts_late_chk")
-    val q = spark.readStream
-      .schema(StructType.fromDDL("doc_id LONG, text STRING"))
-      .option("maxFilesPerTrigger", 1)
-      .json(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idx.appendBatchIdempotent(postings(batch), id,
-          bloomCols = Seq("tok"))
-        st.appendBatchIdempotent(statsDelta(batch), id)
-        ()
-      }
-      .option("checkpointLocation", chk)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    // manifest beside the postings so a cold session reloads the
-    // handle from disk ([[loadStreamed]]) instead of re-streaming
-    Similarity.writeIndexManifest(pDir, "family" -> "fts#stream",
-      "stats" -> sDir)
-    handleFor(spark, pDir, sDir)
-  }
-
-  /** Get-or-build the stream-maintained snapshot (Bench warms it so
-    * `stream_fts_serve_only` times the serving path alone).
-    * computeIfAbsent makes the get-then-build atomic — two concurrent
-    * callers cannot both run the full seed+stream. */
-  def ensureStreamed(spark: SparkSession, dir: String): FtsStreamIndex =
-    standing.computeIfAbsent(dir, _ => streamTables(spark, dir))
-
-  /** Cold-session loader for the STREAMED snapshot — same contract as
-    * the batch family's `TextAnalysis.loadFts`: the manifest beside
-    * the streamed postings names the stats root; the handle's corpus
-    * scalars are re-summed from the per-commit stats rows (commit-
-    * count work), so a fresh JVM serves the stream-maintained layout
-    * without re-tokenizing or re-streaming anything. */
-  def loadStreamed(spark: SparkSession, dir: String,
-      postingsRoot: String): FtsStreamIndex = {
-    val m = Similarity.readIndexManifest(postingsRoot)
-    Similarity.requireFamily(m, postingsRoot, "fts#stream")
-    val idx = handleFor(spark, postingsRoot,
-      Similarity.manifestKey(m, postingsRoot, "stats"))
-    standing.put(dir, idx)
-    idx
-  }
-
-  /** Test hook: forget the standing streamed registration (simulates
-    * the cold session [[loadStreamed]] exists for). */
-  private[graft] def dropStreamedForTest(dir: String): Unit = {
-    standing.remove(dir)
-    ()
-  }
-
-  /** Serve from the merged snapshot: one multi-term Bloom point read,
-    * per-segment df merged by a count over the point-read postings
-    * (never the corpus), corpus stats from the handle's pinned
-    * scalars. The serve never knows how its postings arrived.
-    *
-    * Skew note (VERDICT r15 stretch 7): the df-merge is over the
-    * POINT-READ rows, so a hot term appearing in every micro-batch
-    * widens the read by one segment per commit — the per-commit
-    * overhead is segment count, not corpus size, and
-    * `TxTable.compact` (clusterBy tok) is the bound: it folds all
-    * segments back to `targetFiles` while the batch markers survive in
-    * kept superseded manifests, so redelivery stays a no-op
-    * (`StreamSkewSpec` drives a hot term through many commits and
-    * pins both properties). */
-  private[graft] def serveFrom(spark: SparkSession, h: FtsStreamIndex,
-      terms: Seq[String], topK: Int): DataFrame = {
-    val posts = TxTable(spark, h.postings)
-      .readWhereIn("tok", terms.map(lit(_)))
-    val dfc = posts.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    TextAnalysis.bm25ScoreTail(posts.join(broadcast(dfc), Seq("tok")),
-      h.nDocs, h.tToks, topK)
+    // the late documents land as JSON files; each micro-batch commits
+    // postings + stats deltas under its batch marker
+    StandingIndex.tail(spark, "fts", late, "json", 2,
+        "doc_id LONG, text STRING") { (batch, id) =>
+      idx.appendBatchIdempotent(postingsOf(tokenized(batch)), id, bloomCols = Seq("tok"))
+      st.appendBatchIdempotent(corpusStats(tokenized(batch)), id)
+    }
+    TextIndex.pin(spark, TextIndex.FtsStream, idx.root, st.root)
   }
 
   /** The full lifecycle as one timed query: seed commit + late
@@ -202,19 +86,19 @@ object StreamFts {
     // seed+stream timed into the audit registry so Bench can report
     // the row's seed_sec/serve_sec split (VERDICT r15 task 5)
     val idx = graft.core.BuildAudit.timed("stream_fts_serve")(
-      streamTables(spark, dir))
-    standing.put(dir, idx)
-    serveFrom(spark, idx, terms, topK)
+      StandingIndex.rebuild(spark, dir, TextIndex.FtsStream))
+    TextIndex.serve(spark, idx, terms, topK)
   }
 
   /** The SERVE half on its own (VERDICT r14 task 3): the same answer
-    * over a pre-seeded streamed snapshot, so the streamed transport's
-    * serving cost is its own decade-flat row — `stream_fts_serve`
-    * keeps owning the full seed+stream+serve lifecycle; this is the
-    * FTS analogue of the r14 SQ8/PQ serve-only split, directly
-    * comparable to the batch-built `text_bm25_indexed`. */
+    * over the get-or-streamed standing snapshot, so the streamed
+    * transport's serving cost is its own decade-flat row —
+    * `stream_fts_serve` keeps owning the full seed+stream+serve
+    * lifecycle; this is the FTS analogue of the r14 SQ8/PQ serve-only
+    * split, directly comparable to the batch-built `text_bm25_indexed`. */
   def streamFtsServeOnly(spark: SparkSession, dir: String,
       terms: Seq[String] = Seq("spark", "join", "vector"),
       topK: Int = 10): DataFrame =
-    serveFrom(spark, ensureStreamed(spark, dir), terms, topK)
+    TextIndex.serve(spark, StandingIndex.ensure(spark, dir, TextIndex.FtsStream),
+      terms, topK)
 }

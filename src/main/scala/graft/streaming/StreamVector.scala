@@ -2,17 +2,16 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 import graft.core.{BuildAudit, Scratch, Tables}
 import graft.lake.TxTable
-import graft.operators.{Similarity, VectorIndex}
+import graft.operators.{Similarity, StandingIndex, VectorIndex}
 import graft.operators.VectorIndex.{Family, IvfStream, PqStream, Sq8Stream}
 
 /** Streamed maintenance + serve for the standing vector indexes — the
-  * IVF twin of [[StreamFts]], one driver for the exact, SQ8 and PQ
-  * postings (`VectorIndex.{IvfStream, Sq8Stream, PqStream}`).
+  * IVF twin of [[StreamFts]] on the same driver (`StandingIndex.tail`),
+  * for the exact, SQ8 and PQ postings
+  * (`VectorIndex.{IvfStream, Sq8Stream, PqStream}`).
   *
   * Lifecycle: the build-time artifacts are pinned ONCE and never
   * retrained ([[VectorIndex.train]]: label-seeded centroids from the
@@ -44,11 +43,11 @@ object StreamVector {
 
   /** Seed + stream `family`, then pin its artifacts beside the postings
     * under a manifest. Returns the handle WITHOUT registering it:
-    * `VectorIndex.ensure` installs it via computeIfAbsent (whose mapping
-    * function must not touch the map); [[serve]] registers explicitly. */
+    * `StandingIndex.ensure` installs it via computeIfAbsent (whose
+    * mapping function must not touch the map); [[serve]] registers
+    * explicitly. */
   private[graft] def seed(spark: SparkSession, dir: String,
       family: Family): VectorIndex = {
-    val tag = tags(family)
     val isDelta = pmod(col("vec_id"), lit(10L)) === 9L
     val pins = VectorIndex.train(spark, dir, family, base = Some(!isDelta))
     val encode = VectorIndex.encoder(family, pins)
@@ -61,21 +60,10 @@ object StreamVector {
     val tx = TxTable(spark, Scratch.fresh(family.scratch))
     VectorIndex.appendPostings(tx, assigned(emb.filter(!isDelta)))
 
-    val srcDir = Scratch.fresh(s"${tag}_late_src")
-    emb.filter(isDelta).repartition(3).write.mode("overwrite").parquet(srcDir)
-    spark.readStream
-      .schema(StructType.fromDDL("vec_id LONG, embedding ARRAY<FLOAT>"))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        tx.appendBatchIdempotent(assigned(batch), id, bloomCols = Seq("cell"))
-        ()
-      }
-      .option("checkpointLocation", Scratch.fresh(s"${tag}_late_chk"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+    StandingIndex.tail(spark, tags(family), emb.filter(isDelta), "parquet", 3,
+        "vec_id LONG, embedding ARRAY<FLOAT>") { (batch, id) =>
+      tx.appendBatchIdempotent(assigned(batch), id, bloomCols = Seq("cell"))
+    }
     VectorIndex.pin(spark, family, tx.root, pins)
   }
 
@@ -85,7 +73,7 @@ object StreamVector {
     * serve from the merged snapshot with the family's defaults. */
   def serve(spark: SparkSession, dir: String, family: Family): DataFrame = {
     val idx = BuildAudit.timed(s"stream_${tags(family)}_serve")(
-      VectorIndex.rebuild(spark, dir, family))
+      StandingIndex.rebuild(spark, dir, family))
     VectorIndex.serve(spark, dir, idx)
   }
 
@@ -93,5 +81,5 @@ object StreamVector {
     * get-or-streamed snapshot — the streamed transport's serving cost
     * as its own row. */
   def serveOnly(spark: SparkSession, dir: String, family: Family): DataFrame =
-    VectorIndex.serve(spark, dir, VectorIndex.ensure(spark, dir, family))
+    VectorIndex.serve(spark, dir, StandingIndex.ensure(spark, dir, family))
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Similarity, VectorIndex}
+import graft.operators.{Similarity, StandingIndex, VectorIndex}
 
 /** The cached-selectivity contract behind the adaptive filtered serve
   * (VERDICT r11 task 7): once the standing √N index has pinned its
@@ -13,7 +13,7 @@ class AdaptiveStatsSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("selectivity estimate reads the pinned histogram, not the corpus") {
-    VectorIndex.ensure(spark, sf, VectorIndex.Sqrt) // pins the stats beside the index
+    StandingIndex.ensure(spark, sf, VectorIndex.Sqrt) // pins the stats beside the index
     val plan = Similarity.selectivityFrame(spark, sf, col("label") === 1)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("embeddings.parquet"),
@@ -25,18 +25,18 @@ class AdaptiveStatsSpec extends SparkSpec {
   test("a cold session reloads the histogram from the index manifest") {
     // build, then forget the JVM registration — the situation a fresh
     // session is in when the index already exists on disk (VERDICT
-    // r12 gap 3). VectorIndex.load must reconstruct the FULL handle from
+    // r12 gap 3). StandingIndex.load must reconstruct the FULL handle from
     // the layout manifest alone, histogram included, so the filtered
     // serve's estimate is still a histogram point read, not a silent
     // corpus-aggregate recomputation.
-    val built = VectorIndex.ensure(spark, sf, VectorIndex.Sqrt)
-    VectorIndex.dropForTest(sf)
+    val built = StandingIndex.ensure(spark, sf, VectorIndex.Sqrt)
+    StandingIndex.dropForTest(sf)
     val cold = Similarity.selectivityFrame(spark, sf, col("label") === 1)
       .queryExecution.executedPlan.toString
     assert(cold.contains("embeddings.parquet"),
       "precondition: with no registration the estimate must fall back " +
         s"to the corpus aggregate, got:\n$cold")
-    val loaded = VectorIndex.load(spark, sf, VectorIndex.Sqrt,
+    val loaded = StandingIndex.load(spark, sf, VectorIndex.Sqrt,
       built.postings)
     assert(loaded === built, "manifest round-trip changed the handle")
     val plan = Similarity.selectivityFrame(spark, sf, col("label") === 1)
@@ -51,7 +51,7 @@ class AdaptiveStatsSpec extends SparkSpec {
     // the public contract admits predicates over ANY embeddings column
     // (ADVICE r12): the histogram covers label-only predicates; others
     // must compute against the corpus — correctly, not throw
-    VectorIndex.ensure(spark, sf, VectorIndex.Sqrt)
+    StandingIndex.ensure(spark, sf, VectorIndex.Sqrt)
     val r = Similarity.selectivityFrame(spark, sf, col("vec_id") < 100)
       .head
     val expected = graft.core.Tables(spark, sf).embeddings
@@ -62,7 +62,7 @@ class AdaptiveStatsSpec extends SparkSpec {
   }
 
   test("cached estimate computes the same probe width as the corpus aggregate") {
-    VectorIndex.ensure(spark, sf, VectorIndex.Sqrt)
+    StandingIndex.ensure(spark, sf, VectorIndex.Sqrt)
     // corpus-truth recomputation of the widening rule, bypassing the cache
     val t = graft.core.Tables(spark, sf).embeddings
     val r = t.agg(count(lit(1)).as("n"),

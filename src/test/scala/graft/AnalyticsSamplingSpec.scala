@@ -365,7 +365,7 @@ class AnalyticsSamplingSpec extends SparkSpec {
     val direct = Similarity.annIvfMultiprobe(spark, sf).collect().toSeq
     assert(served === direct, "an index must never change the answer")
     // a cell probe must touch a strict subset of the postings files
-    val idx = graft.operators.VectorIndex.ensure(spark, sf,
+    val idx = graft.operators.StandingIndex.ensure(spark, sf,
       graft.operators.VectorIndex.Ivf)
     val tx = graft.lake.TxTable(spark, idx.postings)
     val snap = tx.latest().get
@@ -407,7 +407,7 @@ class AnalyticsSamplingSpec extends SparkSpec {
     assert(audit.getAs[Long]("max_cell_pop") * 3 < nVecs,
       "3 probes of the fattest cell must still strictly prune")
     // a cell point read must Bloom-prune to a strict file subset
-    val idx = graft.operators.VectorIndex.ensure(spark, sf,
+    val idx = graft.operators.StandingIndex.ensure(spark, sf,
       graft.operators.VectorIndex.Sqrt)
     val tx = graft.lake.TxTable(spark, idx.postings)
     val snap = tx.latest().get

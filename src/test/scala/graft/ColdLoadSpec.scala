@@ -1,16 +1,16 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.operators.{Similarity, TextAnalysis, VectorIndex}
+import graft.operators.{Similarity, StandingIndex, TextAnalysis, TextIndex}
 import graft.operators.VectorIndex._
-import graft.streaming.StreamVector
+import graft.streaming.{StreamFts, StreamVector}
 
 /** Cold-session lifecycle for EVERY standing index family (VERDICT r13
   * task 4): build, forget the JVM registration, reload the handle from
   * the on-disk manifest alone, serve — same answer, and the serve
   * reads the standing layout (the loaded postings root appears in the
-  * executed plan) instead of silently rebuilding. Every vector family
-  * goes through the one loader, `VectorIndex.load`; FTS has its own.
+  * executed plan) instead of silently rebuilding. Every family, text
+  * and vector, goes through the one loader, `StandingIndex.load`.
   *
   * Plus the torn-manifest contract (task 8): manifests are written
   * atomically (temp + rename), and a missing file or missing required
@@ -27,18 +27,22 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
 
   /** Shared drive: build via `ensure`, serve, drop every registration,
     * reload from the postings root, assert handle + answer identity
-    * and that the served plan reads the loaded postings. */
-  private def roundTrip(family: Family, serve: () => DataFrame): Unit = {
-    val built = VectorIndex.ensure(spark, sf, family)
+    * and that the served plan reads the loaded postings, not the
+    * document corpus. */
+  private def roundTrip[I <: StandingIndex](family: StandingIndex.Family[I],
+      serve: () => DataFrame): Unit = {
+    val built = StandingIndex.ensure(spark, sf, family)
     val before = sorted(serve())
-    VectorIndex.dropForTest(sf)
-    val loaded = VectorIndex.load(spark, sf, family, built.postings)
+    StandingIndex.dropForTest(sf)
+    val loaded = StandingIndex.load(spark, sf, family, built.postings)
     assert(loaded === built, "manifest round-trip changed the handle")
     val after = serve()
     assert(sorted(after) === before, "cold-loaded serve changed the answer")
     val plan = after.queryExecution.executedPlan.toString
     assert(plan.contains(baseName(built.postings)),
       s"cold-loaded serve does not read the standing postings:\n$plan")
+    assert(!plan.contains("documents.parquet"),
+      s"cold-loaded serve re-scans the document corpus:\n$plan")
   }
 
   test("exact-k IVF: cold load serves the standing index") {
@@ -74,18 +78,7 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
   }
 
   test("FTS: cold load serves the standing postings, no corpus re-tokenize") {
-    val built = TextAnalysis.ensureFts(spark, sf)
-    val before = sorted(TextAnalysis.bm25Indexed(spark, sf))
-    TextAnalysis.dropFtsForTest(sf)
-    val loaded = TextAnalysis.loadFts(spark, sf, built.postings)
-    assert(loaded === built, "manifest round-trip changed the FTS handle")
-    val after = TextAnalysis.bm25Indexed(spark, sf)
-    assert(sorted(after) === before, "cold-loaded BM25 changed the answer")
-    val plan = after.queryExecution.executedPlan.toString
-    assert(plan.contains(baseName(built.postings)),
-      s"cold-loaded BM25 does not read the standing postings:\n$plan")
-    assert(!plan.contains("documents.parquet"),
-      s"cold-loaded BM25 re-scans the document corpus:\n$plan")
+    roundTrip(TextIndex.Fts, () => TextAnalysis.bm25Indexed(spark, sf))
   }
 
   test("streamed exact-IVF snapshot: cold load serves without re-streaming") {
@@ -93,19 +86,7 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
   }
 
   test("streamed FTS snapshot: cold load serves without re-streaming") {
-    import graft.streaming.StreamFts
-    val built = StreamFts.ensureStreamed(spark, sf)
-    val before = sorted(StreamFts.streamFtsServeOnly(spark, sf))
-    StreamFts.dropStreamedForTest(sf)
-    val loaded = StreamFts.loadStreamed(spark, sf, built.postings)
-    assert(loaded === built, "manifest round-trip changed the handle")
-    val after = StreamFts.streamFtsServeOnly(spark, sf)
-    assert(sorted(after) === before, "cold-loaded serve changed the answer")
-    val plan = after.queryExecution.executedPlan.toString
-    assert(plan.contains(baseName(built.postings)),
-      "cold-loaded serve does not read the streamed postings")
-    assert(!plan.contains("documents.parquet"),
-      s"cold-loaded streamed BM25 re-scans the document corpus:\n$plan")
+    roundTrip(TextIndex.FtsStream, () => StreamFts.streamFtsServeOnly(spark, sf))
   }
 
   /** Mid-churn cold load (VERDICT r14 stretch task 7): the plain
@@ -117,11 +98,11 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
     * markers live in kept superseded manifests, so compaction must not
     * lose them — and (b) serve the identical answer the in-process
     * handle gives over the churned layout. */
-  private def churnTrip[I](built: I, postingsOf: I => String,
-      clusterCol: String, serve: () => DataFrame, drop: () => Unit,
-      load: String => I): Unit = {
+  private def churnTrip[I <: StandingIndex](family: StandingIndex.Family[I],
+      clusterCol: String, serve: () => DataFrame): Unit = {
     import graft.lake.TxTable
-    val tx = TxTable(spark, postingsOf(built))
+    val built = StandingIndex.ensure(spark, sf, family)
+    val tx = TxTable(spark, built.postings)
     tx.compact(targetFiles = 2, bloomCols = Seq(clusterCol),
       clusterBy = Seq(clusterCol))
     // batch 0 committed during the original stream; its redelivery
@@ -131,8 +112,8 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
     assert(redelivered.isEmpty,
       "redelivered batch marker was lost across compaction")
     val before = sorted(serve())
-    drop()
-    val loaded = load(postingsOf(built))
+    StandingIndex.dropForTest(sf)
+    val loaded = StandingIndex.load(spark, sf, family, built.postings)
     assert(loaded === built, "mid-churn reload changed the handle")
     val after = serve()
     assert(sorted(after) === before,
@@ -143,14 +124,12 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
     // assert above would pass vacuously; pin the plan to the BUILT
     // postings root, as the plain round-trip tests do (ADVICE r15)
     val plan = after.queryExecution.executedPlan.toString
-    assert(plan.contains(baseName(postingsOf(built))),
+    assert(plan.contains(baseName(built.postings)),
       s"mid-churn cold-loaded serve does not read the built postings:\n$plan")
   }
 
   private def vectorChurnTrip(family: Family): Unit =
-    churnTrip[VectorIndex](VectorIndex.ensure(spark, sf, family), _.postings,
-      "cell", () => StreamVector.serveOnly(spark, sf, family),
-      () => VectorIndex.dropForTest(sf), VectorIndex.load(spark, sf, family, _))
+    churnTrip(family, "cell", () => StreamVector.serveOnly(spark, sf, family))
 
   test("streamed exact-IVF: mid-churn cold load (compaction + redelivery marker)") {
     vectorChurnTrip(IvfStream)
@@ -165,18 +144,13 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
   }
 
   test("streamed FTS: mid-churn cold load (compaction + redelivery marker)") {
-    import graft.streaming.StreamFts
-    churnTrip[StreamFts.FtsStreamIndex](
-      StreamFts.ensureStreamed(spark, sf), _.postings, "tok",
-      () => StreamFts.streamFtsServeOnly(spark, sf),
-      () => StreamFts.dropStreamedForTest(sf),
-      StreamFts.loadStreamed(spark, sf, _))
+    churnTrip(TextIndex.FtsStream, "tok", () => StreamFts.streamFtsServeOnly(spark, sf))
   }
 
   test("missing manifest fails typed, naming the root") {
     val root = tempDir("graft-no-manifest")
-    val e = intercept[Similarity.IndexManifestError] {
-      VectorIndex.load(spark, sf, Ivf, root.toString)
+    val e = intercept[StandingIndex.IndexManifestError] {
+      StandingIndex.load(spark, sf, Ivf, root.toString)
     }
     assert(e.root === root.toString)
     assert(e.getMessage.contains(root.toString))
@@ -185,9 +159,9 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
   test("torn manifest (missing required key) fails typed, naming root and key") {
     val root = tempDir("graft-torn-manifest")
     // a partial write that lost the centroids line
-    Similarity.writeIndexManifest(root.toString, "family" -> "ivf")
-    val e = intercept[Similarity.IndexManifestError] {
-      VectorIndex.load(spark, sf, Ivf, root.toString)
+    StandingIndex.writeIndexManifest(root.toString, "family" -> "ivf")
+    val e = intercept[StandingIndex.IndexManifestError] {
+      StandingIndex.load(spark, sf, Ivf, root.toString)
     }
     assert(e.root === root.toString)
     assert(e.getMessage.contains("centroids"))
@@ -199,24 +173,35 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
     // a PQ manifest HAS a 'centroids' key — without the family guard,
     // the loader would happily register code-carrying PQ postings as
     // an exact-k index and the next serve would read garbage
-    val pq = VectorIndex.ensure(spark, sf, PqSqrt)
-    val e = intercept[Similarity.IndexManifestError] {
-      VectorIndex.load(spark, sf, Ivf, pq.postings)
+    val pq = StandingIndex.ensure(spark, sf, PqSqrt)
+    val e = intercept[StandingIndex.IndexManifestError] {
+      StandingIndex.load(spark, sf, Ivf, pq.postings)
     }
     assert(e.getMessage.contains("family mismatch"))
     assert(e.getMessage.contains("ivf_pq"))
+    // text and vector roots share the one loader, and so its guard
+    val fts = StandingIndex.ensure(spark, sf, TextIndex.Fts)
+    val textAsVector = intercept[StandingIndex.IndexManifestError] {
+      StandingIndex.load(spark, sf, Sqrt, fts.postings)
+    }
+    assert(textAsVector.getMessage.contains("family mismatch"))
+    assert(textAsVector.getMessage.contains("'fts'"))
+    val vectorAsText = intercept[StandingIndex.IndexManifestError] {
+      StandingIndex.load(spark, sf, TextIndex.FtsStream, pq.postings)
+    }
+    assert(vectorAsText.getMessage.contains("family mismatch"))
   }
 
   test("manifest write is atomic: no temp residue, rewrite replaces") {
     val root = tempDir("graft-manifest-atomic")
-    Similarity.writeIndexManifest(root.toString, "centroids" -> "/a")
-    Similarity.writeIndexManifest(root.toString, "centroids" -> "/b")
+    StandingIndex.writeIndexManifest(root.toString, "centroids" -> "/a")
+    StandingIndex.writeIndexManifest(root.toString, "centroids" -> "/b")
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.list(root).iterator().asScala
       .map(_.getFileName.toString).toSeq
     assert(files === Seq("_graft_index_manifest"),
       s"unexpected residue in manifest dir: $files")
-    val m = Similarity.readIndexManifest(root.toString)
+    val m = StandingIndex.readIndexManifest(root.toString)
     assert(m("centroids") === "/b")
   }
 }

@@ -5,7 +5,7 @@ import java.util.concurrent.Executors
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
-import graft.operators.{Similarity, TextAnalysis, VectorIndex}
+import graft.operators.{Similarity, StandingIndex, TextAnalysis, TextIndex, VectorIndex}
 
 /** Correctness under concurrent serving (round-9 task 6): M driver
   * threads hitting the SAME standing indices through the same session
@@ -19,8 +19,8 @@ class ConcurrentServeSpec extends SparkSpec {
 
   test("8 concurrent index serves all return the serial answer") {
     // warm both standing indices (read-only afterwards)
-    TextAnalysis.ensureFts(spark, sf)
-    VectorIndex.ensure(spark, sf, VectorIndex.Sqrt)
+    StandingIndex.ensure(spark, sf, TextIndex.Fts)
+    StandingIndex.ensure(spark, sf, VectorIndex.Sqrt)
     val serialBm25 = TextAnalysis.bm25Indexed(spark, sf).collect().toSeq
     val serialAnn = Similarity.annIndexedSqrt(spark, sf).collect().toSeq
 
@@ -41,33 +41,47 @@ class ConcurrentServeSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
-  test("concurrent ensure of a cold √N index builds once: same handle") {
-    // the registry's get-or-build is one computeIfAbsent: two threads
-    // released together on a cold dir must get the same handle, not two
-    // builds that each register a different postings root
-    VectorIndex.dropForTest(sf)
+  /** The registry's get-or-build is one computeIfAbsent: two threads
+    * released together on a cold dir must get the same handle, not two
+    * builds that each register a different postings root. */
+  private def coldEnsureOnce[I <: StandingIndex](
+      family: StandingIndex.Family[I]): Unit = {
+    StandingIndex.dropForTest(sf)
     val start = new java.util.concurrent.CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val fs = (0 until 2).map { _ =>
-        Future { start.await(); VectorIndex.ensure(spark, sf, VectorIndex.Sqrt) }
+        Future { start.await(); StandingIndex.ensure(spark, sf, family) }
       }
       start.countDown()
       val Seq(a, b) = Await.result(Future.sequence(fs), Duration.Inf)
       assert(a.postings === b.postings, "two builds registered two roots")
-      assert(VectorIndex.ensure(spark, sf, VectorIndex.Sqrt) === a)
+      assert(StandingIndex.ensure(spark, sf, family) === a)
     } finally pool.shutdown()
   }
 
+  test("concurrent ensure of a cold √N index builds once: same handle") {
+    coldEnsureOnce(VectorIndex.Sqrt)
+  }
+
+  test("concurrent ensure of a cold FTS index builds once: same handle") {
+    coldEnsureOnce(TextIndex.Fts)
+  }
+
+  test("concurrent ensure of a cold streamed FTS index builds once: same handle") {
+    coldEnsureOnce(TextIndex.FtsStream)
+  }
+
   test("concurrent ensure calls race to one usable index") {
-    // ensureFts is get-or-build; two racing builders must both end up
-    // serving correct answers (idempotent builds, last-put wins)
+    // start cold, so the four callers race a real build; get-or-build
+    // must leave one index that serves the scan answer
+    StandingIndex.dropForTest(sf)
     val pool = Executors.newFixedThreadPool(4)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val fs = (0 until 4).map { _ =>
-        Future { TextAnalysis.ensureFts(spark, sf) }
+        Future { StandingIndex.ensure(spark, sf, TextIndex.Fts) }
       }
       Await.result(Future.sequence(fs), Duration.Inf)
       val served = TextAnalysis.bm25Indexed(spark, sf).collect().toSeq

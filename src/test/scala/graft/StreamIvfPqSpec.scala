@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamVector
-import graft.operators.{Similarity, VectorIndex}
+import graft.operators.{Similarity, StandingIndex, VectorIndex}
 import graft.lake.TxTable
 
 /** Exactly-once contract of the stream-maintained IVF-PQ index — the
@@ -48,7 +48,7 @@ class StreamIvfPqSpec extends SparkSpec {
 
   test("streamed PQ postings equal the one-shot sample-trained build's") {
     val idx = StreamVector.seed(spark, sf, VectorIndex.PqStream)
-    val batch = VectorIndex.ensure(spark, sf, VectorIndex.PqSample)
+    val batch = StandingIndex.ensure(spark, sf, VectorIndex.PqSample)
     val streamed = TxTable(spark, idx.postings).read()
       .select(col("vec_id"), col("cell"), col("codes"))
       .orderBy(col("vec_id")).collect().toSeq

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamVector
-import graft.operators.{Similarity, VectorIndex}
+import graft.operators.{Similarity, StandingIndex, VectorIndex}
 import graft.lake.TxTable
 
 /** Exactly-once contract of the stream-maintained COMPOSED index
@@ -50,7 +50,7 @@ class StreamIvfSq8Spec extends SparkSpec {
 
   test("streamed postings equal the one-shot sample-trained build's") {
     val idx = StreamVector.seed(spark, sf, VectorIndex.Sq8Stream)
-    val batch = VectorIndex.ensure(spark, sf, VectorIndex.Sq8Sample)
+    val batch = StandingIndex.ensure(spark, sf, VectorIndex.Sq8Sample)
     val key = Seq("vec_id")
     val streamed = TxTable(spark, idx.postings).read()
       .select(col("vec_id"), col("cell"), col("codes"), col("code_sum"))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.lake.TxTable
+import graft.operators.TextIndex
 import graft.streaming.StreamFts
 
 /** Skew resilience of the streamed postings path (VERDICT r15 stretch
@@ -24,7 +25,7 @@ class StreamSkewSpec extends SparkSpec {
     // an ISOLATED streamed index (fresh Scratch roots) — the standing
     // registry is never touched, so the synthetic hot-term postings
     // cannot leak into other suites' answers in this JVM
-    val h = StreamFts.streamTables(spark, sf)
+    val h = StreamFts.seed(spark, sf)
     val tx = TxTable(spark, h.postings)
     val filesSeeded = tx.latest().get.files.size
 
@@ -48,7 +49,7 @@ class StreamSkewSpec extends SparkSpec {
     // postings point read, never a corpus scan
     assert(tx.readWhereIn("tok", Seq(lit("hotterm"))).count() ===
       50L * hotBatches.size)
-    val before = StreamFts.serveFrom(spark, h, Seq("hotterm"), 10)
+    val before = TextIndex.serve(spark, h, Seq("hotterm"), 10)
     val beforeRows = before.collect().map(_.toString).toSeq.sorted
     val planBefore = before.queryExecution.executedPlan.toString
     assert(planBefore.contains(
@@ -64,7 +65,7 @@ class StreamSkewSpec extends SparkSpec {
     assert(tx.latest().get.files.size <= 2,
       "compaction did not bound the segment count")
 
-    val after = StreamFts.serveFrom(spark, h, Seq("hotterm"), 10)
+    val after = TextIndex.serve(spark, h, Seq("hotterm"), 10)
     assert(after.collect().map(_.toString).toSeq.sorted === beforeRows,
       "compaction changed the merged-df answer")
     val planAfter = after.queryExecution.executedPlan.toString
