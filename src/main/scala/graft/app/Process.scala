@@ -1,6 +1,6 @@
 package graft.app
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import graft.core.Sessions
 import graft.enrich.{Enrich, Sessionization}
 import graft.lake.Lake
@@ -45,8 +45,26 @@ object Process {
     * every sink that derives from it (released in `finally`, also when
     * a sink throws), and the refined frame is materialized with
     * `localCheckpoint`, which keeps its coalesced partitioning, so its
-    * JSON sink and its zone table read one result. The report lines
-    * print the row counts the JSON sinks wrote instead of re-counting. */
+    * JSON sink and its zone table read one result.
+    *
+    * Every plan is built on the calling thread, so an analysis error
+    * (a mistyped document on an inferred-schema domain) throws before
+    * any sink starts. The sinks that share nothing but the parse then
+    * run at once: the processed parity JSON, the processed zone table,
+    * and the refine branch (enrich → checkpoint, then its JSON, its
+    * zone table and parking's config summary, again at once). The
+    * parse itself runs first, in one job, so the sinks all start on a
+    * loaded cache. Each upload's jobs are mostly single-task, so this
+    * fills cores that a one-sink-at-a-time upload leaves idle, with
+    * the same jobs and tasks.
+    *
+    * A failing sink does not stop the others: the upload waits for all
+    * of them, then throws the first failure in the order above. So a
+    * failed upload may leave any branch's finished outputs, not only
+    * those of sinks before the failing one; the zone tables need a
+    * transactional commit (ROADMAP Direction 1) to make an upload all
+    * or nothing. The report lines print the row counts the JSON sinks
+    * wrote instead of re-counting, in a fixed order, after the sinks. */
   def run(spark: org.apache.spark.sql.SparkSession, domain: String,
       rawFile: String, root: String): Unit = {
     import org.apache.spark.sql.functions.col
@@ -81,22 +99,54 @@ object Process {
             cfg.frameCols.contains(c) || c == "_empty_frame").toSeq
           Normalize.regroupByFrame(cfg, detectionFields)(flat)
         }
-      val framesWritten = lake.writeWrappedJson(grouped, "frame_detections",
-        s"${lake.zonePath("processed", domain)}/preprocessed_$fileName")
-      lake.writeZoneTable(flat.drop("_empty_frame"), "processed", domain, fileName)
-
+      val processedRows = flat.drop("_empty_frame")
       // refine zone: per-entity records
-      enrichFor(domain, flat, frames).foreach { enriched =>
-        val refined = enriched.localCheckpoint()
-        val entities = lake.writeJsonArray(refined,
-          s"${lake.zonePath("refine", domain)}/refine_$fileName")
-        lake.writeZoneTable(refined, "refine", domain, fileName)
-        if (domain == "parking")
-          lake.writeJsonArray(Sessionization.configSummary(flat),
-            s"${lake.zonePath("refine", domain)}/parking_config_$fileName")
-        println(s"[graft] $domain: $entities refined entities")
-      }
+      val enriched = enrichFor(domain, flat, frames)
+      val configSummary =
+        if (domain == "parking") Some(Sessionization.configSummary(flat)) else None
+      val refineDir = lake.zonePath("refine", domain)
+
+      // parse now, in one job: under AQE every sink whose plan finds
+      // the cache not yet loaded starts a job of its own to load it
+      raw.foreachPartition((_: Iterator[Row]) => ())
+      var framesWritten = 0
+      var entities = Option.empty[Int]
+      concurrently("graft-process-sink")(
+        () => framesWritten = lake.writeWrappedJson(grouped, "frame_detections",
+          s"${lake.zonePath("processed", domain)}/preprocessed_$fileName"),
+        () => lake.writeZoneTable(processedRows, "processed", domain, fileName),
+        () => enriched.foreach { e =>
+          val refined = e.localCheckpoint()
+          val sinks = Seq(
+            () => entities = Some(lake.writeJsonArray(refined, s"$refineDir/refine_$fileName")),
+            () => lake.writeZoneTable(refined, "refine", domain, fileName)) ++
+            configSummary.map(s => () =>
+              lake.writeJsonArray(s, s"$refineDir/parking_config_$fileName"))
+          concurrently("graft-process-refine")(sinks: _*)
+        })
+      entities.foreach(n => println(s"[graft] $domain: $n refined entities"))
       println(s"[graft] $domain: $framesWritten frames processed")
     } finally raw.unpersist()
+  }
+
+  /** Runs `branches` at once, one daemon thread each (`<name>-<i>`), and
+    * returns once every one has finished, also when some fail. The
+    * threads are made here, so they inherit the caller's Spark local
+    * properties and `Console.out`; they are joined, so none outlives
+    * the call. The first failure in branch order is rethrown as it is,
+    * the later ones attached to it as suppressed. */
+  private def concurrently(name: String)(branches: (() => Any)*): Unit = {
+    val failures = new Array[Throwable](branches.size)
+    val threads = branches.zipWithIndex.map { case (branch, i) =>
+      val t = new Thread(() =>
+        try branch() catch { case e: Throwable => failures(i) = e }, s"$name-$i")
+      t.setDaemon(true)
+      t
+    }
+    try threads.foreach(_.start()) finally threads.foreach(_.join())
+    failures.filter(_ != null) match {
+      case Array(first, later @ _*) => later.foreach(first.addSuppressed); throw first
+      case _ =>
+    }
   }
 }

@@ -68,11 +68,17 @@ object StreamFts {
     st.append(corpusStats(idx.read().select(col("doc_id"), col("dl")).distinct()))
 
     // the late documents land as JSON files; each micro-batch commits
-    // postings + stats deltas under its batch marker
+    // postings + stats deltas under its batch marker, both from one
+    // read and tokenize of the batch. The stats count the tokenized
+    // rows, not the postings' documents: an empty late text has no
+    // posting but still counts in n_docs
     StandingIndex.tail(spark, "fts", late, "json", 2,
         "doc_id LONG, text STRING") { (batch, id) =>
-      idx.appendBatchIdempotent(postingsOf(tokenized(batch)), id, bloomCols = Seq("tok"))
-      st.appendBatchIdempotent(corpusStats(tokenized(batch)), id)
+      val toks = tokenized(batch).persist()
+      try {
+        idx.appendBatchIdempotent(postingsOf(toks), id, bloomCols = Seq("tok"))
+        st.appendBatchIdempotent(corpusStats(toks), id)
+      } finally toks.unpersist()
     }
     TextIndex.pin(spark, TextIndex.FtsStream, idx.root, st.root)
   }

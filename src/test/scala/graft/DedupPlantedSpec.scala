@@ -219,7 +219,10 @@ class DedupPlantedSpec extends SparkSpec with TempDirs {
     val got = graft.operators.Dedup.fuzzyEditPairs(spark, sf)
     val d = graft.core.Tables(spark, sf).documents
       .select(col("doc_id"), col("text"), length(col("text")).as("len"))
-    val truth = d.as("a").join(d.as("b"),
+    // the nested-loop join runs one task per probe-side partition:
+    // spread the probe side so the exhaustive comparison uses every core
+    val probe = d.repartition(4 * spark.sparkContext.defaultParallelism)
+    val truth = probe.as("a").join(d.as("b"),
         col("a.doc_id") < col("b.doc_id") &&
           abs(col("a.len") - col("b.len")) <= 4)
       .withColumn("edit_dist",

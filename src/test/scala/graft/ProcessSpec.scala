@@ -122,6 +122,51 @@ class ProcessSpec extends SparkSpec {
     }
   }
 
+  test("a sink that fails mid-branch throws its own error after the other sinks finish") {
+    spark.catalog.clearCache()
+    withDirs { (dir, root) =>
+      val f = dir.resolve("v1.json")
+      Files.writeString(f, vehicleDoc)
+      // a regular file where the refine zone's directory must go: the
+      // refine JSON sink and the refine zone table both fail on it
+      Files.createDirectories(Paths.get(s"$root/refine"))
+      Files.writeString(Paths.get(s"$root/refine/vehicle_detection"), "not a directory")
+      val e = intercept[java.nio.file.FileAlreadyExistsException] {
+        Process.run(spark, "vehicle", f.toString, root)
+      }
+      assert(e.getSuppressed.nonEmpty, "the refine zone table's failure was not attached")
+      // the processed branches ran to the end beside the failing one
+      val json = spark.read.option("multiLine", true)
+        .json(s"$root/processed/vehicle_detection/preprocessed_v1.json")
+      assert(json.selectExpr("size(frame_detections)").head().getInt(0) == 2)
+      assert(Files.exists(Paths.get(s"$root/processed/vehicle_detection/_SUCCESS")))
+      assert(spark.read.parquet(s"$root/processed/vehicle_detection").count() == 2)
+      assert(spark.sharedState.cacheManager.isEmpty, "the parsed document stayed cached")
+      val alive = Thread.getAllStackTraces.keySet.asScala.map(_.getName)
+        .filter(_.startsWith("graft-process"))
+      assert(alive.isEmpty, s"sink threads outlived the upload: ${alive.mkString(", ")}")
+    }
+  }
+
+  test("two uploads of one document write byte-identical JSON objects") {
+    withDirs { (dir, root) =>
+      val f = dir.resolve("v1.json")
+      Files.writeString(f, vehicleDoc)
+      val roots = Seq(s"$root/a", s"$root/b")
+      roots.foreach(upload("vehicle", f.toString, _))
+      def jsonObjects(r: String): Map[String, Seq[Byte]] = {
+        val s = Files.walk(Paths.get(r))
+        try s.iterator().asScala.filter(p => Files.isRegularFile(p) && p.toString.endsWith(".json"))
+          .map(p => Paths.get(r).relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+        finally s.close()
+      }
+      val Seq(a, b) = roots.map(jsonObjects)
+      assert(a.keySet == Set("processed/vehicle_detection/preprocessed_v1.json",
+        "refine/vehicle_detection/refine_v1.json"))
+      assert(a == b)
+    }
+  }
+
   test("retail upload (inferred schema) refines product rollups") {
     withDirs { (dir, root) =>
       val f = dir.resolve("r1.json")
