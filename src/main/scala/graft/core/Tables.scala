@@ -1,16 +1,24 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided synthetic tables (TESTDATA.md).
   *
   * One parquet file per table under `dir`. All reads are plain columnar
   * scans — Catalyst pushes filters/projections into the parquet reader,
-  * so callers should NOT cache or materialize these eagerly.
+  * so callers should NOT cache or materialize these eagerly. Each
+  * table's parquet schema is inferred once per session and file set
+  * ([[Tables.schemaOf]]), not once per read.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    Tables.schemaOf(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
 
   def region: DataFrame = table("region")
   def nation: DataFrame = table("nation")
@@ -75,4 +83,34 @@ final case class Tables(spark: SparkSession, dir: String) {
 object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Inferred schemas by session, then by (table path, listing
+    * signature). Inference reads parquet footers in a Spark job of its
+    * own; a plain `spark.read.parquet` pays it on every read. The key
+    * carries the driver-side listing of the table's files (name, size,
+    * mtime), so a table rewritten in place re-infers on its next read.
+    * Weak in the session: a stopped session's entries go with it. */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, Long, Long)]), StructType]]()
+
+  /** The schema `spark.read.parquet(path)` infers, memoized per session
+    * and file listing; None when `path` does not exist (the read then
+    * fails as it always did). */
+  private[core] def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val files = fs.listFiles(p, true)
+      val listing = Seq.newBuilder[(String, Long, Long)]
+      while (files.hasNext) {
+        val f = files.next()
+        listing += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      val bySession = schemas.synchronized(
+        schemas.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap()))
+      Some(bySession.computeIfAbsent((path, listing.result()),
+        _ => spark.read.parquet(path).schema))
+    }
+  }
 }

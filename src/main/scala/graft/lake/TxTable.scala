@@ -487,22 +487,13 @@ final case class TxTable(spark: SparkSession, root: String) {
     * rendering, so integer-width mismatches are safe; a probe of a
     * DIFFERENT kind (lit(7) against a double column rendering "7.0")
     * still skips — render the probe as the column renders. */
-  def readWhereEq(column: String, value: Column): DataFrame = {
-    val snap = latest().getOrElse(
-      throw new IllegalStateException(s"empty tx table at $root"))
-    val pin = pinnedSchemaOf(snap.version)
-    val hit = bloomLiveEntries(snap, column, value)
-    val base =
-      if (hit.nonEmpty) readEntries(hit, pin)
-      else emptyLike(snap)
-    base.filter(col(column) === value)
-  }
+  def readWhereEq(column: String, value: Column): DataFrame =
+    readWhereIn(column, Seq(value))
 
-  /** Multi-value Bloom point read — one log snapshot, ONE probe job
-    * covering every (value, bitmap-size) pair, one scan over the union
-    * of maybe-containing files: a q-term search costs one index
-    * access, not q (q × [[readWhereEq]] would launch q probe jobs and
-    * union q scan plans). Equals `read().filter(column IN values)` by
+  /** Multi-value Bloom point read — one log snapshot, one probe
+    * evaluation covering every (value, bitmap-size) pair, one scan over
+    * the union of maybe-containing files: a q-term search costs one
+    * index access, not q. Equals `read().filter(column IN values)` by
     * construction; a file is read iff its bitmap may contain ANY of
     * the values (or it carries no bitmap — skipping is an
     * optimization, never a correctness filter). */
@@ -510,31 +501,9 @@ final case class TxTable(spark: SparkSession, root: String) {
     val snap = latest().getOrElse(
       throw new IllegalStateException(s"empty tx table at $root"))
     if (values.isEmpty) return emptyLike(snap)
-    val pin = pinnedSchemaOf(snap.version)
-    val lengths = snap.files
-      .flatMap(e => entryBlooms(e).get(column).map(_.length)).distinct
-    val k = bloomSeeds.length
-    val pairs = for { w <- lengths; vi <- values.indices } yield (w, vi)
-    val pos: Map[(Int, Int), Seq[Long]] =
-      if (pairs.isEmpty) Map.empty
-      else {
-        val row = spark.range(1).select(pairs.flatMap { case (w, vi) =>
-          bloomSeeds.map(s => bloomPos(values(vi), s, w * 64))
-        }: _*).head() // k·|values|·|sizes| tiny hashes — metadata
-        pairs.zipWithIndex.map { case ((w, vi), i) =>
-          (w, vi) -> (0 until k).map(j => row.getLong(i * k + j))
-        }.toMap
-      }
-    val hit = snap.files.filter { e =>
-      entryBlooms(e).get(column) match {
-        case Some(w) => values.indices.exists(vi =>
-          pos((w.length, vi)).forall(p =>
-            ((w(p.toInt / 64) >>> (p.toInt % 64)) & 1L) == 1L))
-        case None => true
-      }
-    }
+    val hit = bloomHits(snap, column, values)
     val base =
-      if (hit.nonEmpty) readEntries(hit, pin)
+      if (hit.nonEmpty) readEntries(hit, pinnedSchemaOf(snap.version))
       else emptyLike(snap)
     base.filter(values.map(col(column) === _).reduce(_ || _))
   }
@@ -542,21 +511,37 @@ final case class TxTable(spark: SparkSession, root: String) {
   /** Entries whose Bloom bitmap may contain `value` in `column` (or
     * that carry no bitmap for it). Public for pruning assertions. */
   def bloomLiveEntries(snap: Snapshot, column: String,
-      value: Column): Seq[String] = {
-    // probe positions per bitmap size present in the manifest (a
-    // table whose bloomBits changed across commits stays correct)
+      value: Column): Seq[String] =
+    bloomHits(snap, column, Seq(value))
+
+  /** Entries of `snap` whose `column` bitmap may hold ANY of `values`,
+    * plus every entry without one. Positions are taken per bitmap size
+    * present in the manifest (a table whose bloomBits changed across
+    * commits stays correct), all k·|values|·|sizes| of them in one
+    * projection over a one-row local relation: the optimizer folds it
+    * to a local scan, so probing starts no Spark job. */
+  private def bloomHits(snap: Snapshot, column: String,
+      values: Seq[Column]): Seq[String] = {
     val lengths = snap.files
       .flatMap(e => entryBlooms(e).get(column).map(_.length)).distinct
-    val posByLen: Map[Int, Seq[Long]] = lengths.map { words =>
-      val row = spark.range(1)
-        .select(bloomSeeds.map(s => bloomPos(value, s, words * 64)): _*)
-        .head() // k tiny hashes — metadata, not data
-      words -> bloomSeeds.indices.map(row.getLong(_))
-    }.toMap
+    val k = bloomSeeds.length
+    val pairs = for { w <- lengths; vi <- values.indices } yield (w, vi)
+    val pos: Map[(Int, Int), Seq[Long]] =
+      if (pairs.isEmpty) Map.empty
+      else {
+        val row = spark.createDataFrame(java.util.List.of(Row()), new StructType())
+          .select(pairs.flatMap { case (w, vi) =>
+            bloomSeeds.map(s => bloomPos(values(vi), s, w * 64))
+          }: _*).collect().head
+        pairs.zipWithIndex.map { case ((w, vi), i) =>
+          (w, vi) -> (0 until k).map(j => row.getLong(i * k + j))
+        }.toMap
+      }
     snap.files.filter { e =>
       entryBlooms(e).get(column) match {
-        case Some(w) => posByLen(w.length).forall(p =>
-          ((w(p.toInt / 64) >>> (p.toInt % 64)) & 1L) == 1L)
+        case Some(w) => values.indices.exists(vi =>
+          pos((w.length, vi)).forall(p =>
+            ((w(p.toInt / 64) >>> (p.toInt % 64)) & 1L) == 1L))
         case None => true // no bitmap: must read
       }
     }

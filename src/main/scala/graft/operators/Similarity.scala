@@ -248,12 +248,14 @@ object Similarity {
   private[graft] def quantized(spark: SparkSession, dir: String): DataFrame =
     quantizedOf(Tables(spark, dir).embeddingsSpread)
 
-  /** [[quantized]] over any (vec_id, embedding) frame — the grow-aware
-    * index maintenance path feeds deltas and merged snapshots here. */
-  private[graft] def quantizedOf(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("vec_id"), col("dim").cast("long").as("dim"),
-        expr("CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)").as("q"))
+  /** [[quantized]] over any frame carrying `embedding`, keyed by `keys`
+    * — the grow-aware index maintenance path feeds deltas and merged
+    * snapshots here, the PQ serve its probe rows. */
+  private[graft] def quantizedOf(emb: DataFrame,
+      keys: Seq[String] = Seq("vec_id")): DataFrame =
+    emb.select(keys.map(col) :+ posexplode(col("embedding")).as(Seq("dim", "x")): _*)
+      .select(keys.map(col) ++ Seq(col("dim").cast("long").as("dim"),
+        expr("CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)").as("q")): _*)
 
   /** Nearest-centroid assignment of every vector in `qe` against
     * `cents` (cell, dim, c): exact integer squared distance, argmin
@@ -593,8 +595,8 @@ object Similarity {
     // serve from the merged snapshot, probes ranked on the same pinned
     // centroid table
     val (probes, members) = VectorIndex.probeRead(spark, dir, tx, cents,
-      nprobe, labelCells = true)
-    topkByCell(spark, dir, members, probes, k)
+      nprobe, bounded = true)
+    topkByCell(members, probes, k)
   }
 
   /** Ranked nearest-centroid assignment — [[assignTo]] without the
@@ -663,7 +665,8 @@ object Similarity {
     * cross the broadcast per-cell centroid vectors, the native
     * [[graft.functions.Dist2Q]] computes each exact integer squared
     * distance in a whole-stage-codegen loop, and the (dist2, cell)
-    * window ranks per vector. This is the bounded-k fast path — the
+    * window ranks per vector. Every column of `emb` rides along beside
+    * (cell, dist2, crn). This is the bounded-k fast path — the
     * relational dim-join ([[rankedTo]]) materializes N·d·k rows
     * through a hash aggregate for the same answer (measured 55.7 s vs
     * ~4 s on the 10× replica's 142-cell training) but carries no
@@ -672,9 +675,9 @@ object Similarity {
     val scored = emb.crossJoin(broadcast(centRows(cents)))
       .withColumn("dist2",
         graft.functions.Dist2Q.dist2Q(col("embedding"), col("cvec")))
+      .drop("cvec")
     val w = Window.partitionBy(col("vec_id")).orderBy(col("dist2"), col("cell"))
-    scored.select(col("vec_id"), col("cell"), col("dist2"))
-      .withColumn("crn", row_number().over(w))
+    scored.withColumn("crn", row_number().over(w))
   }
 
   /** MEMBERSHIP (vec_id, cell) under the proven-bound hint policy —
@@ -769,7 +772,7 @@ object Similarity {
         max(size(col("embedding"))).cast("long").as("d"))
       .head
     val kk = math.ceil(math.sqrt(nd.getLong(0).toDouble)).toInt
-    val bounded = kk.toLong * nd.getLong(1) * 24L <= (32L << 20)
+    val bounded = centsBounded(kk.toLong * nd.getLong(1))
     // persist (NOT localCheckpoint) the training input: Lloyd re-reads
     // it iters+1 times, but the block must be FREEABLE — a
     // localCheckpoint block can neither be evicted safely (lineage is
@@ -798,20 +801,40 @@ object Similarity {
     (cents, bounded)
   }
 
+  /** Whether a centroid table of `rows` = k·d rows is under the 32 MB
+    * broadcast bound (24 B a row) — the bound every trained quantizer
+    * proves at build and a standing index carries in its handle. */
+  private[graft] def centsBounded(rows: Long): Boolean = rows * 24L <= (32L << 20)
+
+  /** The probe list (qid, q_cell, q_emb): each of the |Q| query
+    * vectors' `nprobe` nearest cells of `cents`, with its query vector —
+    * |Q|·nprobe rows, metadata-sized by definition. Ranked from one read
+    * of the query vectors: the codegen [[rankedByDist]] scorer, which
+    * carries the vector through the rank, while `cents` is under the
+    * broadcast bound (label alphabets always are); the hint-free
+    * dim-join past it. Same exact integers and (dist2, cell) tie-break
+    * either way. */
+  private[operators] def probeList(spark: SparkSession, dir: String,
+      cents: DataFrame, nprobe: Int, bounded: Boolean): DataFrame = {
+    val q = Tables(spark, dir).embeddings.filter(col("vec_id") < 5)
+      .select(col("vec_id"), col("embedding"))
+    val probes =
+      if (bounded) rankedByDist(q, cents).filter(col("crn") <= nprobe)
+      else rankedTo(quantizedOf(q), cents).filter(col("crn") <= nprobe)
+        .join(q, Seq("vec_id"))
+    probes.select(col("vec_id").as("qid"), col("cell").as("q_cell"),
+      col("embedding").as("q_emb"))
+  }
+
   /** Exact-cosine top-k of each probe list's member cells — the shared
     * back half of every cell-partitioned ANN path: join the probe list
-    * (qid, q_cell — |Q|·nprobe rows, metadata-sized by definition, the
-    * broadcast side together with the |Q| query vectors) against the
-    * member rows (cell, vec_id, embedding), score with the codegen'd
-    * [[graft.functions.CosineSimQ]], rank within query. */
-  private[operators] def topkByCell(spark: SparkSession, dir: String,
-      members: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    val queries = probes.join(
-      Tables(spark, dir).embeddings.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("q_emb")),
-      Seq("qid"))
+    * ([[probeList]]: qid, q_cell, q_emb — the broadcast side) against
+    * the member rows (cell, vec_id, embedding), score with the
+    * codegen'd [[graft.functions.CosineSimQ]], rank within query. */
+  private[operators] def topkByCell(members: DataFrame, probes: DataFrame,
+      k: Int): DataFrame = {
     val scored = members
-      .join(broadcast(queries), col("cell") === col("q_cell"))
+      .join(broadcast(probes), col("cell") === col("q_cell"))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("cos_e6",
         graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("embedding")))
@@ -841,15 +864,8 @@ object Similarity {
     // RANKING (crn ≤ nprobe) only ever touches the |Q|=5 query
     // vectors, so the corpus-sized window sort of the former shared
     // ranked table is gone (r10)
-    val members = memberRows(spark, dir, cents, bounded)
-    val probes = (if (bounded)
-        rankedByDist(Tables(spark, dir).embeddings
-          .filter(col("vec_id") < 5)
-          .select(col("vec_id"), col("embedding")), cents)
-      else rankedTo(quantized(spark, dir).filter(col("vec_id") < 5), cents))
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cell").as("q_cell"))
-    topkByCell(spark, dir, members, probes, k)
+    topkByCell(memberRows(spark, dir, cents, bounded),
+      probeList(spark, dir, cents, nprobe, bounded), k)
   }
 
   /** Multi-probe ANN served FROM THE STANDING INDEX — semantically
@@ -1116,7 +1132,7 @@ object Similarity {
       .repartition(e.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
     // past the proven bound the fast kernel's argmin would be an
     // unbounded static broadcast: fall back to the shuffled-join Lloyd
-    val bounded = kk.toLong * nd.getLong(1) * 24L <= (32L << 20)
+    val bounded = centsBounded(kk.toLong * nd.getLong(1))
     // persist (NOT localCheckpoint) for the same freeable-block reason
     // as [[sqrtQuantizer]] — though here the pinned input is the
     // 8·⌈√N⌉-row sample, not the corpus: the sample bound is the point
@@ -1192,10 +1208,10 @@ object Similarity {
   def ivfChurn(spark: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 3, slices: Int = 10, targetFiles: Int = 8): DataFrame = {
     import graft.core.Scratch
-    val (posts, ct) = ivfChurnTables(spark, dir, slices, targetFiles,
+    val (posts, ct, bounded) = ivfChurnTables(spark, dir, slices, targetFiles,
       Scratch.fresh("tx_ivf_churn"), Scratch.fresh("tx_ivf_churn_cents"))
-    VectorIndex.serve(spark, dir,
-      VectorIndex(VectorIndex.Sqrt, posts.root, ct.root, VectorIndex.Flat), k, nprobe)
+    VectorIndex.serve(spark, dir, VectorIndex(VectorIndex.Sqrt, posts.root,
+      ct.root, VectorIndex.Flat, bounded), k, nprobe)
   }
 
   /** The churn lifecycle's table half, shared with the spec that
@@ -1204,10 +1220,11 @@ object Similarity {
     * (the assignment is persisted across the loop — each slice is the
     * SAME pinned-quantizer assignment a per-arrival delta would get,
     * without re-running the kernel per slice), then compact both the
-    * fragmented postings and the centroid table back to build layout. */
+    * fragmented postings and the centroid table back to build layout.
+    * Returns the two tables and the quantizer's broadcast bound. */
   private[graft] def ivfChurnTables(spark: SparkSession, dir: String,
       slices: Int, targetFiles: Int, postingsRoot: String,
-      centroidsRoot: String): (graft.lake.TxTable, graft.lake.TxTable) = {
+      centroidsRoot: String): (graft.lake.TxTable, graft.lake.TxTable, Boolean) = {
     import graft.lake.TxTable
     val (cents, bounded) = sqrtQuantizer(spark, dir)
     val rows = memberRows(spark, dir, cents, bounded, col("label"))
@@ -1223,7 +1240,7 @@ object Similarity {
     } finally rows.unpersist(blocking = false)
     posts.compact(targetFiles, bloomCols = Seq("cell"),
       clusterBy = Seq("cell"))
-    (posts, ct)
+    (posts, ct, bounded)
   }
 
   /** SQ8 scalar-quantized candidate generation + exact rerank — the
@@ -1297,21 +1314,6 @@ object Similarity {
   // IVF-SQ8: the composed standing index — √N Lloyd cells carrying
   // SQ8 compact codes IN the postings, exact rerank on survivors only.
   // ----------------------------------------------------------------
-
-  /** (vec_id, codes, code_sum): every vector's dim-ordered SQ8 code
-    * array against the broadcast one-row [mn,mx] range — exact integer
-    * `((q - mn) * 255) div greatest(mx - mn, 1)` per element, so the
-    * arrays (and every candidate set scored from them) are
-    * bit-identical cross-engine. The serve encodes its |Q| query
-    * vectors here; builds encode on the row ([[sq8EncodeExpr]]). */
-  private[operators] def sq8Codes(qe: DataFrame, range: DataFrame): DataFrame =
-    qe.crossJoin(broadcast(range))
-      .select(col("vec_id"), col("dim"),
-        expr("((q - mn) * 255) div greatest(mx - mn, 1)").as("code"))
-      .groupBy(col("vec_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, code))), s -> s.code)")
-        .as("codes"),
-        sum(col("code")).as("code_sum"))
 
   /** The IVF-SQ8 BUILD as its own declared query: trains the ⌈√N⌉
     * quantizer (deterministic Lloyd — the same cell alphabet as the √N

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 import graft.core.{Scratch, Tables}
 import graft.lake.TxTable
 import Similarity._
@@ -16,11 +18,13 @@ import Similarity._
   *
   * Every family is this one handle — label-seeded, √N and
   * sample-trained quantizers; flat, SQ8 and PQ codecs; batch, streamed
-  * and grow lifecycles. `labelStats` is the √N family's pinned
-  * per-label selectivity histogram; `k` is the pinned cell count a grow
-  * family re-buckets against (0 elsewhere). */
+  * and grow lifecycles. `bounded` says whether the pinned k·d centroid
+  * table is under the 32 MB broadcast bound, decided once at build;
+  * `labelStats` is the √N family's pinned per-label selectivity
+  * histogram; `k` is the pinned cell count a grow family re-buckets
+  * against (0 elsewhere). */
 final case class VectorIndex(family: VectorIndex.Family, postings: String,
-    centroids: String, codec: VectorIndex.Codec,
+    centroids: String, codec: VectorIndex.Codec, bounded: Boolean,
     labelStats: Option[String] = None, k: Int = 0) extends StandingIndex
 
 /** What every IVF family shares on top of the [[StandingIndex]]
@@ -101,6 +105,8 @@ object VectorIndex {
       }
     }
 
+    /** A manifest written before the bound was pinned beside it gets
+      * it counted here, once per load. */
     private[graft] def fromManifest(spark: SparkSession, root: String,
         m: Map[String, String]): VectorIndex = {
       val cents = StandingIndex.manifestKey(m, root, "centroids")
@@ -108,7 +114,10 @@ object VectorIndex {
         case FlatKind => Flat
         case kind => kind.at(StandingIndex.manifestKey(m, root, kind.key))
       }
-      VectorIndex(this, root, cents, c, if (labelHistogram) m.get("stats") else None)
+      val bounded = m.get("bounded").fold(
+        centsBounded(TxTable(spark, cents).read().count()))(_.toBoolean)
+      VectorIndex(this, root, cents, c, bounded,
+        if (labelHistogram) m.get("stats") else None)
     }
   }
 
@@ -254,10 +263,11 @@ object VectorIndex {
     val histRoot = pins.hist.map(table("_stats", _))
     if (!family.grows)
       StandingIndex.writeIndexManifest(postings,
-        Seq("family" -> family.name, "centroids" -> cents) ++
+        Seq("family" -> family.name, "centroids" -> cents,
+          "bounded" -> pins.bounded.toString) ++
           codecRoot.map(family.codec.key -> _) ++ histRoot.map("stats" -> _): _*)
     VectorIndex(family, postings, cents, family.codec.at(codecRoot.getOrElse("")),
-      histRoot, k)
+      pins.bounded, histRoot, k)
   }
 
   /** A `*Build` query: build `family` fresh, register it, and return
@@ -289,27 +299,21 @@ object VectorIndex {
   // Serve
   // ----------------------------------------------------------------
 
-  /** Probe, then point read: the probe list (qid, q_cell) — the |Q|
-    * query vectors' `nprobe` nearest cells of `cents`, metadata-sized by
-    * definition — and the Bloom-pruned read of just those cells'
-    * postings. A label-seeded alphabet ranks relationally; a trained one
-    * first proves its k·d table under the broadcast bound (a point
-    * count of the pinned table) and falls back to the hint-free
-    * dim-join past it. */
+  /** Probe, then point read. The probe rows ([[Similarity.probeList]]:
+    * qid, q_cell, q_emb — |Q|·nprobe rows, metadata-sized by definition)
+    * are ranked and collected ONCE and handed to the scoring plan as a
+    * local relation, so the final action never re-runs the ranking; the
+    * same rows' cell ids drive the Bloom-pruned read of just those
+    * cells' postings. `bounded` is the index's pinned broadcast bound. */
   private[graft] def probeRead(spark: SparkSession, dir: String,
       postings: TxTable, cents: DataFrame, nprobe: Int,
-      labelCells: Boolean): (DataFrame, DataFrame) = {
-    val ranked =
-      if (labelCells) rankedAgainst(qe4(spark, dir).filter(col("vec_id") < 5), cents)
-      else if (cents.count() * 24L <= (32L << 20))
-        rankedByDist(Tables(spark, dir).embeddings.filter(col("vec_id") < 5)
-          .select(col("vec_id"), col("embedding")), cents)
-      else rankedTo(quantized(spark, dir).filter(col("vec_id") < 5), cents)
-    val probes = ranked.filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cell").as("q_cell"))
-    val cellIds = probes.select(col("q_cell")).distinct()
-      .collect().map(r => lit(r.get(0))).toSeq
-    (probes, postings.readWhereIn("cell", cellIds))
+      bounded: Boolean): (DataFrame, DataFrame) = {
+    val ranked = probeList(spark, dir, cents, nprobe, bounded)
+    val rows = ranked.collect()
+    val cells = rows.map(_.get(1)).distinct
+      .sortBy(_.asInstanceOf[Number].longValue).map(lit).toSeq
+    (spark.createDataFrame(rows.toSeq.asJava, ranked.schema),
+      postings.readWhereIn("cell", cells))
   }
 
   /** Multi-probe top-k from a standing index: [[probeRead]], then the
@@ -318,20 +322,20 @@ object VectorIndex {
     * postings row, so the predicate prunes before the distance kernel
     * and nothing joins back to the corpus), or a code scan cut to
     * `candK` candidates and exact-reranked (SQ8, PQ; `candK` defaults
-    * per codec). An index never changes the answer: each serve shares
-    * its unindexed twin's oracle. */
+    * per codec). Every codec scores against the same probe rows and
+    * projects only the columns it needs. An index never changes the
+    * answer: each serve shares its unindexed twin's oracle. */
   def serve(spark: SparkSession, dir: String, idx: VectorIndex, k: Int = 5,
       nprobe: Int = 3, candK: Option[Int] = None,
       pred: Option[Column] = None): DataFrame = {
     val (probes, postings) = probeRead(spark, dir, TxTable(spark, idx.postings),
-      TxTable(spark, idx.centroids).read(), nprobe, idx.family.cells == LabelCells)
+      TxTable(spark, idx.centroids).read(), nprobe, idx.bounded)
     idx.codec match {
-      case Flat =>
-        topkByCell(spark, dir, pred.fold(postings)(p => postings.filter(p)), probes, k)
-      case Sq8(stats) => sq8Topk(spark, dir, probes, postings,
-        TxTable(spark, stats).read(), k, candK.getOrElse(Sq8CandK))
-      case Pq(cb) => adcTopk(spark, dir, probes, postings,
-        TxTable(spark, cb).read(), k, candK.getOrElse(PqCandK))
+      case Flat => topkByCell(pred.fold(postings)(p => postings.filter(p)), probes, k)
+      case Sq8(stats) => sq8Topk(probes, postings, TxTable(spark, stats).read(), k,
+        candK.getOrElse(Sq8CandK))
+      case Pq(cb) => adcTopk(probes, postings, TxTable(spark, cb).read(), k,
+        candK.getOrElse(PqCandK))
     }
   }
 
@@ -349,18 +353,18 @@ object VectorIndex {
     * — exact integers end to end (|score| ≤ ~1e15 ≪ 2⁶³), so candidate
     * sets are bit-identical cross-engine (measured recall@5 0.52 at
     * sf0.1, equal to the uncompressed probe path's). */
-  private def sq8Topk(spark: SparkSession, dir: String, probes: DataFrame,
-      postings: DataFrame, range: DataFrame, k: Int, candK: Int): DataFrame = {
-    // query codes against the PINNED range — |Q| rows, broadcast;
-    // Σqcode precomputed once per query, not per candidate row
-    val qCodes = sq8Codes(quantized(spark, dir).filter(col("vec_id") < 5), range)
-      .select(col("vec_id").as("qid"), col("codes").as("qcodes"),
-        col("code_sum").as("qcode_sum"))
-    val queries = probes.join(qCodes, Seq("qid"))
+  private def sq8Topk(probes: DataFrame, postings: DataFrame, range: DataFrame,
+      k: Int, candK: Int): DataFrame = {
     val r0 = range.head()
     val mnv = r0.getAs[Long]("mn")
     val sv = math.max(r0.getAs[Long]("mx") - mnv, 1L)
     val tv = 255L * mnv
+    // query codes: the build's encode over the probe rows' vectors
+    // against the PINNED range; Σqcode once per probe row, not per
+    // candidate row
+    val queries = probes.select(col("qid"), col("q_cell"), col("q_emb").as("embedding"))
+      .select(col("qid"), col("q_cell"), sq8EncodeExpr(mnv, sv).as("qcodes"))
+      .withColumn("qcode_sum", expr("aggregate(qcodes, 0L, (a, x) -> a + x)"))
     // pure codegen arithmetic: the DotQ kernel plus the build-time Σcode
     // and broadcast-side Σqcode columns
     val cand = postings
@@ -374,53 +378,52 @@ object VectorIndex {
           + size(col("codes")).cast("long") * lit(tv) * lit(tv))
     val wc = Window.partitionBy(col("qid"))
       .orderBy(col("sq8_dot").desc, col("vec_id"))
-    rerank(spark, dir, postings, cand.withColumn("crn", row_number().over(wc))
+    rerank(postings, probes, cand.withColumn("crn", row_number().over(wc))
       .filter(col("crn") <= candK)
-      .select(col("qid"), col("vec_id").as("nid"), col("sq8_dot")), "sq8_dot", k)
+      .select(col("qid"), col("q_cell"), col("vec_id").as("nid"), col("sq8_dot")),
+      "sq8_dot", k)
   }
 
-  /** PQ candidates by ADC: the query's exact distance to every
-    * (sub, code) centroid is a constant-size table (|Q|·8·|codes| rows,
-    * broadcast); a candidate's approximate distance is the sum of 8
-    * lookups over its codes (posexplode + broadcast equi-join +
+  /** PQ candidates by ADC: each probe row's exact distance to every
+    * (sub, code) centroid is a constant-size table (|Q|·nprobe·8·|codes|
+    * rows, broadcast, keyed by the probed cell); a candidate's
+    * approximate distance is the sum of 8 lookups over its codes
+    * (posexplode + broadcast equi-join on (cell, sub, code) +
     * map-side-combined sum). Keep `candK` per query, exact-rerank. */
-  private def adcTopk(spark: SparkSession, dir: String, probes: DataFrame,
-      postings: DataFrame, cb: DataFrame, k: Int, candK: Int): DataFrame = {
-    val qd = qe4(spark, dir).filter(col("vec_id") < 5)
+  private def adcTopk(probes: DataFrame, postings: DataFrame, cb: DataFrame,
+      k: Int, candK: Int): DataFrame = {
+    val qd = quantizedOf(probes.select(col("qid"), col("q_cell").as("cell"),
+        col("q_emb").as("embedding")), Seq("qid", "cell"))
       .withColumn("sub", expr(s"dim div $PqDimsPerSub"))
       .join(broadcast(cb), Seq("sub", "dim"))
-      .groupBy(col("vec_id"), col("sub"), col("code"))
+      .groupBy(col("qid"), col("cell"), col("sub"), col("code"))
       .agg(sum((col("q") - col("c")) * (col("q") - col("c"))).as("d2"))
-      .select(col("vec_id").as("qid"), col("sub"), col("code"), col("d2"))
     val cand = postings
       .select(col("cell"), col("vec_id"),
         posexplode(col("codes")).as(Seq("sub", "code")))
       .withColumn("sub", col("sub").cast("long"))
-      .join(broadcast(probes), col("cell") === col("q_cell"))
+      .join(broadcast(qd), Seq("cell", "sub", "code"))
       .filter(col("vec_id") =!= col("qid"))
-      .join(broadcast(qd), Seq("qid", "sub", "code"))
-      .groupBy(col("qid"), col("vec_id"))
+      .groupBy(col("qid"), col("cell").as("q_cell"), col("vec_id"))
       .agg(sum(col("d2")).as("adc_dist2"))
     val wc = Window.partitionBy(col("qid"))
       .orderBy(col("adc_dist2"), col("vec_id"))
-    rerank(spark, dir, postings, cand.withColumn("crn", row_number().over(wc))
+    rerank(postings, probes, cand.withColumn("crn", row_number().over(wc))
       .filter(col("crn") <= candK)
-      .select(col("qid"), col("vec_id").as("nid"), col("adc_dist2")), "adc_dist2", k)
+      .select(col("qid"), col("q_cell"), col("vec_id").as("nid"), col("adc_dist2")),
+      "adc_dist2", k)
   }
 
-  /** Exact-cosine rerank of the code-scan survivors `top` (qid, nid,
-    * `score`): their vectors come from the SAME probed-cell read
-    * (column-pruned to the exact column, |Q|·candK rows), never a
-    * corpus join. */
-  private def rerank(spark: SparkSession, dir: String, postings: DataFrame,
-      top: DataFrame, score: String, k: Int): DataFrame = {
+  /** Exact-cosine rerank of the code-scan survivors `top` (qid, q_cell,
+    * nid, `score`): their vectors come from the SAME probed-cell read
+    * (column-pruned to the exact column, |Q|·candK rows), the query
+    * vector from the probe row (qid, q_cell) — never a corpus read. */
+  private def rerank(postings: DataFrame, probes: DataFrame, top: DataFrame,
+      score: String, k: Int): DataFrame = {
     val rer = top
       .join(postings.select(col("vec_id").as("nid"),
         col("embedding").as("n_emb")), Seq("nid"))
-      .join(broadcast(Tables(spark, dir).embeddings
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))),
-        Seq("qid"))
+      .join(broadcast(probes), Seq("qid", "q_cell"))
       .withColumn("cos_e6",
         graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("n_emb")))
     val w = Window.partitionBy(col("qid"))
@@ -445,8 +448,8 @@ object VectorIndex {
     val e = emb.select(family.inputCols: _*)
     family.cells match {
       case SampleCells =>
-        val (cents, k, _) = sampleQuantizer(e)
-        growCommit(spark, family, e, cents, k)
+        val (cents, k, bounded) = sampleQuantizer(e)
+        growCommit(spark, family, e, cents, k, bounded)
       case _ =>
         e.persist()
         try {
@@ -456,9 +459,11 @@ object VectorIndex {
     }
   }
 
+  /** `bounded` defaults to the Lloyd kernels' own assumption: they
+    * broadcast the centroids, so a table they trained is under the bound. */
   private def growCommit(spark: SparkSession, family: Family, emb: DataFrame,
-      cents: DataFrame, k: Int): VectorIndex = {
-    val pins = Pins(cents, bounded = true, codecTable(family.codec,
+      cents: DataFrame, k: Int, bounded: Boolean = true): VectorIndex = {
+    val pins = Pins(cents, bounded, codecTable(family.codec,
       quantizedOf(emb),
       quantizedOf(emb).join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))))
     commit(spark, family, encoder(family, pins)(withArgminCell(emb, cents)), pins, k)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Scratch, Tables}
@@ -76,11 +76,33 @@ object StreamFts {
         "doc_id LONG, text STRING") { (batch, id) =>
       val toks = tokenized(batch).persist()
       try {
+        val stats = statsRow(toks)
         idx.appendBatchIdempotent(postingsOf(toks), id, bloomCols = Seq("tok"))
-        st.appendBatchIdempotent(corpusStats(toks), id)
+        st.appendBatchIdempotent(stats, id)
       } finally toks.unpersist()
     }
     TextIndex.pin(spark, TextIndex.FtsStream, idx.root, st.root)
+  }
+
+  /** [[corpusStats]] of a persisted tokenized batch as a one-row local
+    * frame, folded per partition in the job that loads the batch: a plan
+    * with no exchange over the cached scan builds the cache as it goes,
+    * where the aggregate's exchange would make AQE load it in a job of
+    * its own first. Same row: n_docs counts rows, t_toks sums the
+    * non-null `dl` and is null when there is none. */
+  private def statsRow(toks: DataFrame): DataFrame = {
+    val parts = toks.select(col("dl")).rdd.mapPartitions { rows =>
+      var n, t = 0L
+      var any = false
+      rows.foreach { r =>
+        n += 1
+        if (!r.isNullAt(0)) { t += r.getLong(0); any = true }
+      }
+      Iterator((n, t, any))
+    }.collect()
+    val t = if (parts.exists(_._3)) java.lang.Long.valueOf(parts.map(_._2).sum) else null
+    toks.sparkSession.createDataFrame(
+      java.util.List.of(Row(parts.map(_._1).sum, t)), corpusStats(toks).schema)
   }
 
   /** The full lifecycle as one timed query: seed commit + late

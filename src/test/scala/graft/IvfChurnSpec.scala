@@ -11,7 +11,7 @@ class IvfChurnSpec extends SparkSpec {
 
   test("compaction bounds the postings file count and restores the " +
       "cell-clustered Bloom layout") {
-    val (posts, ct) = Similarity.ivfChurnTables(spark, sf,
+    val (posts, ct, _) = Similarity.ivfChurnTables(spark, sf,
       slices = 10, targetFiles = 8,
       graft.core.Scratch.fresh("tx_ivf_churn_spec"),
       graft.core.Scratch.fresh("tx_ivf_churn_spec_cents"))
