@@ -84,18 +84,19 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred schemas by session, then by (table path, listing
-    * signature). Inference reads parquet footers in a Spark job of its
-    * own; a plain `spark.read.parquet` pays it on every read. The key
-    * carries the driver-side listing of the table's files (name, size,
-    * mtime), so a table rewritten in place re-infers on its next read.
-    * Weak in the session: a stopped session's entries go with it. */
+  /** Inferred schemas by session, then by table path, each with the
+    * listing it was inferred from. Inference reads parquet footers in a
+    * Spark job of its own; a plain `spark.read.parquet` pays it on every
+    * read. The listing is the driver-side (name, size, mtime) of the
+    * table's files: a table rewritten in place re-infers on its next read
+    * and replaces its entry. Weak in the session: a stopped session's
+    * entries go with it. */
   private val schemas = new java.util.WeakHashMap[SparkSession,
-    java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, Long, Long)]), StructType]]()
+    java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], StructType)]]()
 
   /** The schema `spark.read.parquet(path)` infers, memoized per session
-    * and file listing; None when `path` does not exist (the read then
-    * fails as it always did). */
+    * and path while the path's file listing stays the same; None when
+    * `path` does not exist (the read then fails as it always did). */
   private[core] def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -107,10 +108,12 @@ object Tables {
         val f = files.next()
         listing += ((f.getPath.toString, f.getLen, f.getModificationTime))
       }
+      val now = listing.result()
       val bySession = schemas.synchronized(
         schemas.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap()))
-      Some(bySession.computeIfAbsent((path, listing.result()),
-        _ => spark.read.parquet(path).schema))
+      Some(bySession.compute(path, (_, seen) =>
+        if (seen != null && seen._1 == now) seen
+        else (now, spark.read.parquet(path).schema))._2)
     }
   }
 }

@@ -336,7 +336,12 @@ object TextAnalysis {
 
   /** The corpus-stats row (n_docs, t_toks) over one row per document. */
   private[graft] def corpusStats(perDoc: DataFrame): DataFrame =
-    perDoc.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_toks"))
+    perDoc.agg(corpusStatsCols.head, corpusStatsCols.tail: _*)
+
+  /** [[corpusStats]]'s aggregates, for a caller that observes them on a
+    * frame another action reads. t_toks is null when no row has a `dl`. */
+  private[graft] def corpusStatsCols: Seq[Column] =
+    Seq(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_toks"))
 
   /** BM25's per-posting factors in exact integer e-units, over rows
     * carrying (tf, dl, df, n_docs, t_toks): the rational idf

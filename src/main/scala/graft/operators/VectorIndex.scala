@@ -105,8 +105,6 @@ object VectorIndex {
       }
     }
 
-    /** A manifest written before the bound was pinned beside it gets
-      * it counted here, once per load. */
     private[graft] def fromManifest(spark: SparkSession, root: String,
         m: Map[String, String]): VectorIndex = {
       val cents = StandingIndex.manifestKey(m, root, "centroids")
@@ -114,8 +112,7 @@ object VectorIndex {
         case FlatKind => Flat
         case kind => kind.at(StandingIndex.manifestKey(m, root, kind.key))
       }
-      val bounded = m.get("bounded").fold(
-        centsBounded(TxTable(spark, cents).read().count()))(_.toBoolean)
+      val bounded = StandingIndex.manifestKey(m, root, "bounded").toBoolean
       VectorIndex(this, root, cents, c, bounded,
         if (labelHistogram) m.get("stats") else None)
     }

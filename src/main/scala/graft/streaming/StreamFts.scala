@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Scratch, Tables}
 import graft.lake.TxTable
 import graft.operators.{StandingIndex, TextIndex}
-import graft.operators.TextAnalysis.{corpusStats, postingsOf, tokenized}
+import graft.operators.TextAnalysis.{corpusStats, corpusStatsCols, postingsOf, tokenized}
 
 /** End-to-end streamed-index pipeline — the composition of the two
   * verified halves (`StreamZoneSpec`'s idempotent micro-batch index
@@ -68,41 +68,34 @@ object StreamFts {
     st.append(corpusStats(idx.read().select(col("doc_id"), col("dl")).distinct()))
 
     // the late documents land as JSON files; each micro-batch commits
-    // postings + stats deltas under its batch marker, both from one
-    // read and tokenize of the batch. The stats count the tokenized
-    // rows, not the postings' documents: an empty late text has no
-    // posting but still counts in n_docs
+    // postings + stats deltas under its batch marker
     StandingIndex.tail(spark, "fts", late, "json", 2,
-        "doc_id LONG, text STRING") { (batch, id) =>
-      val toks = tokenized(batch).persist()
-      try {
-        val stats = statsRow(toks)
-        idx.appendBatchIdempotent(postingsOf(toks), id, bloomCols = Seq("tok"))
-        st.appendBatchIdempotent(stats, id)
-      } finally toks.unpersist()
-    }
+      "doc_id LONG, text STRING")(commitLate(idx, st))
     TextIndex.pin(spark, TextIndex.FtsStream, idx.root, st.root)
   }
 
-  /** [[corpusStats]] of a persisted tokenized batch as a one-row local
-    * frame, folded per partition in the job that loads the batch: a plan
-    * with no exchange over the cached scan builds the cache as it goes,
-    * where the aggregate's exchange would make AQE load it in a job of
-    * its own first. Same row: n_docs counts rows, t_toks sums the
-    * non-null `dl` and is null when there is none. */
-  private def statsRow(toks: DataFrame): DataFrame = {
-    val parts = toks.select(col("dl")).rdd.mapPartitions { rows =>
-      var n, t = 0L
-      var any = false
-      rows.foreach { r =>
-        n += 1
-        if (!r.isNullAt(0)) { t += r.getLong(0); any = true }
-      }
-      Iterator((n, t, any))
-    }.collect()
-    val t = if (parts.exists(_._3)) java.lang.Long.valueOf(parts.map(_._2).sum) else null
-    toks.sparkSession.createDataFrame(
-      java.util.List.of(Row(parts.map(_._1).sum, t)), corpusStats(toks).schema)
+  /** One late micro-batch's postings and stats deltas, both from one
+    * read and tokenize of the batch: the stats are observed on the
+    * tokenized rows the postings write reads, then committed from a
+    * local row. They count the tokenized rows, not the postings'
+    * documents: an empty late text has no posting but still counts in
+    * n_docs. */
+  private[graft] def commitLate(idx: TxTable, st: TxTable)(batch: DataFrame, id: Long): Unit = {
+    val obs = Observation()
+    var wrote = false
+    idx.appendBatchIdempotent(
+      postingsOf(tokenized(batch).observe(obs, corpusStatsCols.head, corpusStatsCols.tail: _*)),
+      id, beforeCommit = () => wrote = true, bloomCols = Seq("tok"))
+    // a redelivered batch whose postings already committed wrote
+    // nothing, and a batch the optimizer proved empty reports no
+    // metrics: their stats, if still missing, read the batch
+    val fresh = corpusStats(tokenized(batch))
+    val m = if (wrote) obs.get else Map.empty[String, Any]
+    val stats =
+      if (!fresh.columns.forall(m.contains)) fresh
+      else batch.sparkSession.createDataFrame(
+        java.util.List.of(Row.fromSeq(fresh.columns.toSeq.map(m))), fresh.schema)
+    st.appendBatchIdempotent(stats, id)
   }
 
   /** The full lifecycle as one timed query: seed commit + late

@@ -84,25 +84,56 @@ class ServeJobsSpec extends SparkSpec with TempDirs {
     val built = StandingIndex.ensure(spark, sf, VectorIndex.Sqrt)
     assert(built.bounded)
     StandingIndex.dropForTest(sf)
-    assert(jobsOf(StandingIndex.load(spark, sf, VectorIndex.Sqrt, built.postings)) == 0,
-      "a manifest that records the bound is not counted at load")
-    // a manifest written before the bound was pinned: counted once, at
-    // load, to the same handle
+    var loaded: VectorIndex = null
+    assert(jobsOf { loaded = StandingIndex.load(spark, sf, VectorIndex.Sqrt, built.postings) } == 0,
+      "the bound is read from the manifest, not counted at load")
+    assert(loaded === built)
+    // a manifest without the bound is torn: the loader fails typed
     val m = StandingIndex.readIndexManifest(built.postings)
     StandingIndex.writeIndexManifest(built.postings, m.toSeq.filter(_._1 != "bounded"): _*)
     try {
       StandingIndex.dropForTest(sf)
-      var loaded: VectorIndex = null
-      assert(jobsOf { loaded = StandingIndex.load(spark, sf, VectorIndex.Sqrt, built.postings) } > 0)
-      assert(loaded === built)
+      val e = intercept[StandingIndex.IndexManifestError](
+        StandingIndex.load(spark, sf, VectorIndex.Sqrt, built.postings))
+      assert(e.getMessage.contains("'bounded'"))
     } finally StandingIndex.writeIndexManifest(built.postings, m.toSeq: _*)
   }
 
-  test("the streamed FTS lifecycle loads each late batch in one job") {
+  test("the streamed FTS lifecycle reads each late batch once") {
     graft.streaming.StreamFts.streamFtsServe(spark, sf).collect()
     val n = jobsOf(graft.streaming.StreamFts.streamFtsServe(spark, sf).collect())
     info(s"streamFtsServe: $n jobs")
-    assert(n <= 22)
+    assert(n <= 20)
+  }
+
+  test("a late batch commits the stats corpusStats computes, also empty or " +
+      "redelivered after its postings") {
+    def tables() = {
+      val root = tempDir("graft-serve-late").toString
+      (TxTable(spark, s"$root/postings"), TxTable(spark, s"$root/stats"))
+    }
+    val docs = Seq((1L, "a b a"), (2L, ""), (3L, "c")).toDF("doc_id", "text")
+    val empty = docs.filter(col("doc_id") < 0)
+    def want(batch: DataFrame): Seq[Row] =
+      TextAnalysis.corpusStats(TextAnalysis.tokenized(batch)).collect().toSeq
+    def stats(st: TxTable): Seq[Row] =
+      st.read().select("n_docs", "t_toks").collect().toSeq
+    for (batch <- Seq(docs, empty)) {
+      val (idx, st) = tables()
+      val n = jobsOf(graft.streaming.StreamFts.commitLate(idx, st)(batch, 0L))
+      info(s"commitLate: $n jobs")
+      assert(n <= 3)
+      assert(stats(st) === want(batch))
+    }
+    // the postings committed before a crash: the redelivery commits the
+    // stats alone, from a read of the batch
+    val (idx, st) = tables()
+    idx.appendBatchIdempotent(TextAnalysis.postingsOf(TextAnalysis.tokenized(docs)), 0L,
+      bloomCols = Seq("tok"))
+    val files = idx.latest().get.files
+    graft.streaming.StreamFts.commitLate(idx, st)(docs, 0L)
+    assert(idx.latest().get.files === files)
+    assert(stats(st) === want(docs))
   }
 
   /** 300 keys over three commits: bitmaps of 1,024 bits on the first
