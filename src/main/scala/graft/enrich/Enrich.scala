@@ -10,15 +10,36 @@ import org.apache.spark.sql.functions._
   * The reference collects every entity's arrays to the driver and loops
   * in Python (`advanced_preprocessing.py:111-148`, D1-D9). Here each
   * metric is a window function or native aggregate over
-  * `partitionBy(entity).orderBy(frame_number)` — one shuffle on the
-  * entity key, everything else pipelined; scales with executors, not
-  * driver memory.
+  * `partitionBy(entity).orderBy(frame_number)`; scales with executors,
+  * not driver memory.
+  *
+  * The exchanges a record plans: the window columns and the per-entity
+  * aggregate share one hash exchange on the entity key (the aggregate
+  * reads the window's partitioning). Each [[mode]], vehicle's time per
+  * direction and school's alert-level distribution are two aggregates,
+  * a hash exchange on (entity, value) and then one on the entity; AQE
+  * may turn their left joins back to the entity rows into broadcast
+  * joins. The closing `orderBy` adds a range exchange, whose bounds
+  * cost a sampling job.
+  *
+  * Window columns are added one projection per dependency layer
+  * ([[layer]]), not one `withColumn` each: every `withColumn` re-analyzes
+  * the plan under it and adds a `Window` operator per window column, so
+  * the chained vehicle record analyzed to 282 nodes with 37 `Window`s,
+  * and building and optimizing it took the driver about 160 ms per
+  * upload on a 4-vCPU VM (about 70 ms as layers).
   */
 object Enrich {
 
   /** P4: valid-tracker filter. */
   def validEntities(key: String)(df: DataFrame): DataFrame =
     df.filter(col(key).isNotNull && col(key) =!= -1)
+
+  /** `df` plus `cols` (name → expression), appended in order in one
+    * projection. The columns of one call may not read each other: a
+    * column that reads another goes in the next call. */
+  private def layer(df: DataFrame, cols: (String, Column)*): DataFrame =
+    df.select(col("*") +: cols.map { case (n, c) => c.as(n) }: _*)
 
   private def w(key: String) =
     Window.partitionBy(col(key)).orderBy(col("frame_number"))
@@ -42,14 +63,13 @@ object Enrich {
       (if (exclude.nonEmpty) !col(valueCol).isin(exclude: _*) else lit(true)))
     val counts = filtered.groupBy(col(key), col(valueCol))
       .agg(count(lit(1)).as("cnt"), min(col("frame_number")).as("first_seen"))
-    // count desc, first-seen asc, value asc: the final value tie-break
-    // pins ties where two values first appear in the same row (equal
-    // count AND first_seen) — otherwise rank order is nondeterministic
-    val rankW = Window.partitionBy(col(key))
-      .orderBy(col("cnt").desc, col("first_seen"), col(valueCol))
-    counts.withColumn("rn", row_number().over(rankW))
-      .filter(col("rn") === 1)
-      .select(col(key), col(valueCol).as(s"mode_$valueCol"))
+    // count desc, first-seen asc (nulls first), value asc: the least
+    // such struct per key; the value tie-break pins ties where two values
+    // first appear in the same row (equal count AND first_seen)
+    counts.groupBy(col(key))
+      .agg(min(struct(-col("cnt").as("neg_cnt"), col("first_seen"),
+        col(valueCol).as("value"))).as("best"))
+      .select(col(key), col("best.value").as(s"mode_$valueCol"))
   }
 
   /** Frame-order-pinned first non-null attribute per entity: unlike a
@@ -72,36 +92,31 @@ object Enrich {
   def vehicle(flat: DataFrame): DataFrame = {
     val key = "tracker_id"
     val df = validEntities(key)(flat)
-    val t = tsSec(df)
-    val stepped = df
-      .withColumn("_ts", t)
-      .withColumn("_next_ts", lead(col("_ts"), 1).over(w(key)))
-      .withColumn("_held", col("_next_ts") - col("_ts"))
-      .withColumn("_prev_cx", lag(col("center_x"), 1).over(w(key)))
-      .withColumn("_prev_cy", lag(col("center_y"), 1).over(w(key)))
-      .withColumn("_dx", col("center_x") - col("_prev_cx"))
-      .withColumn("_dy", col("center_y") - col("_prev_cy"))
-      .withColumn("_step_dist", sqrt(col("_dx") * col("_dx") + col("_dy") * col("_dy")))
-      .withColumn("_angle", when(col("_prev_cx").isNotNull,
-        degrees(atan2(col("_dy"), col("_dx")))))
-      .withColumn("_lane_changes", changes(key, "lane"))
-      .withColumn("_dir_changes", changes(key, "direction"))
-      .withColumn("_first_type", first(col("class_name"), ignoreNulls = true).over(wFull(key)))
-      .withColumn("_first_color", first(col("vehicle_color"), ignoreNulls = true).over(wFull(key)))
-      .withColumn("_initial_lane", first(col("lane"), ignoreNulls = true).over(wFull(key)))
-      .withColumn("_final_lane", last(col("lane"), ignoreNulls = true).over(wFull(key)))
-      .withColumn("_final_dir", last(col("direction"), ignoreNulls = true).over(wFull(key)))
+    val windowed = layer(df,
+      "_ts" -> tsSec(df),
+      "_prev_cx" -> lag(col("center_x"), 1).over(w(key)),
+      "_prev_cy" -> lag(col("center_y"), 1).over(w(key)),
+      "_lane_changes" -> changes(key, "lane"),
+      "_dir_changes" -> changes(key, "direction"),
+      "_first_type" -> first(col("class_name"), ignoreNulls = true).over(wFull(key)),
+      "_first_color" -> first(col("vehicle_color"), ignoreNulls = true).over(wFull(key)),
+      "_initial_lane" -> first(col("lane"), ignoreNulls = true).over(wFull(key)),
+      "_final_lane" -> last(col("lane"), ignoreNulls = true).over(wFull(key)),
+      "_final_dir" -> last(col("direction"), ignoreNulls = true).over(wFull(key)))
+    val deltas = layer(windowed,
+      "_next_ts" -> lead(col("_ts"), 1).over(w(key)),
+      "_dx" -> (col("center_x") - col("_prev_cx")),
+      "_dy" -> (col("center_y") - col("_prev_cy")))
+    val stepped = layer(deltas,
+      "_held" -> (col("_next_ts") - col("_ts")),
+      "_step_dist" -> sqrt(col("_dx") * col("_dx") + col("_dy") * col("_dy")),
+      "_angle" -> when(col("_prev_cx").isNotNull, degrees(atan2(col("_dy"), col("_dx")))))
     val perDir = stepped.filter(col("_held").isNotNull)
       .groupBy(col(key), col("direction"))
       .agg(sum(col("_held")).as("dir_secs"))
       .groupBy(col(key))
       .agg(map_from_entries(sort_array(collect_list(
         struct(col("direction"), col("dir_secs"))))).as("time_spent_per_direction"))
-    val angles = stepped.filter(col("_angle").isNotNull)
-      .groupBy(col(key))
-      .agg(expr("transform(sort_array(collect_list(struct(frame_number, _angle))), p -> p._angle)")
-        .as("movement_angles"),
-        avg(col("_angle")).as("avg_movement_angle"))
     val base = stepped.groupBy(col(key)).agg(
       first(col("_first_type"), ignoreNulls = true).as("vehicle_type"),
       first(col("_first_color"), ignoreNulls = true).as("vehicle_color"),
@@ -124,12 +139,21 @@ object Enrich {
       first(col("_final_dir"), ignoreNulls = true).as("direction"),
       max(col("_dir_changes")).as("direction_changes"),
       sum(when(col("red_light_violation"), 1).otherwise(0)).as("red_light_violation_count"),
-      sum(coalesce(col("_step_dist"), lit(0.0))).as("total_distance"))
+      sum(coalesce(col("_step_dist"), lit(0.0))).as("total_distance"),
+      // null, not [], for an entity without angle rows: what a left join
+      // to an aggregate of the angle rows gives
+      when(count(col("_angle")) > 0, expr(
+        "transform(sort_array(collect_list(CASE WHEN _angle IS NOT NULL " +
+          "THEN struct(frame_number, _angle) END)), p -> p._angle)"))
+        .as("movement_angles"),
+      avg(col("_angle")).as("avg_movement_angle"))
+    val angleCols = Seq("movement_angles", "avg_movement_angle")
     base
       .join(mode(df, key, "lane"), Seq(key), "left")
-      .withColumnRenamed("mode_lane", "most_common_lane")
       .join(perDir, Seq(key), "left")
-      .join(angles, Seq(key), "left")
+      .select(base.columns.filterNot(angleCols.contains).map(col) ++
+        Seq(col("mode_lane").as("most_common_lane"), col("time_spent_per_direction")) ++
+        angleCols.map(col): _*)
       .orderBy(col(key))
   }
 
@@ -137,7 +161,7 @@ object Enrich {
     * `advanced_preprocessing_people.py:16-33,113-148`). */
   def people(flat: DataFrame): DataFrame = {
     val key = "tracker_id"
-    val df = validEntities(key)(flat).withColumn("_ts", tsSec(flat))
+    val df = layer(validEntities(key)(flat), "_ts" -> tsSec(flat))
     val base = df.groupBy(col(key)).agg(
       avg(col("confidence")).as("confidence_avg"),
       min(col("_ts")).as("first_detection"),
@@ -157,10 +181,9 @@ object Enrich {
       .join(mode(df.filter(col("age") =!= 0), key, "age"), Seq(key), "left")
       .join(mode(df, key, "gender", Seq("", "Unknown")), Seq(key), "left")
       .join(mode(df, key, "carrying", Seq("", "Unknown")), Seq(key), "left")
-      .withColumn("age", coalesce(col("mode_age"), lit(0L)))
-      .withColumn("gender", coalesce(col("mode_gender"), lit("Unknown")))
-      .withColumn("carrying", coalesce(col("mode_carrying"), lit("Unknown")))
-      .select(col(key), col("age"), col("gender"), col("carrying"),
+      .select(col(key), coalesce(col("mode_age"), lit(0L)).as("age"),
+        coalesce(col("mode_gender"), lit("Unknown")).as("gender"),
+        coalesce(col("mode_carrying"), lit("Unknown")).as("carrying"),
         col("confidence_avg"), col("entered_restricted_area"),
         col("restricted_area_entry_time"), col("first_detection"),
         col("last_detection"), col("duration_seconds"), col("frame_count"))
@@ -171,8 +194,10 @@ object Enrich {
     * `advanced_preprocessing_safety.py:40-97`). */
   def safety(flat: DataFrame): DataFrame = {
     val key = "tracker_id"
-    val df = validEntities(key)(flat)
-      .withColumn("_first_status", first(col("safety_status"), ignoreNulls = true).over(wFull(key)))
+    val df = layer(validEntities(key)(flat),
+      "_first_status" -> first(col("safety_status"), ignoreNulls = true).over(wFull(key)),
+      "_pcx" -> lag(col("center_x"), 1).over(w(key)),
+      "_pcy" -> lag(col("center_y"), 1).over(w(key)))
     val base = df.groupBy(col(key)).agg(
       first(col("_first_status"), ignoreNulls = true).as("initial_safety_status"),
       // "Safe" if ever safe, else "Unsafe" (D8)
@@ -187,20 +212,16 @@ object Enrich {
       sum(when(!col("mask"), 1).otherwise(0)).as("mask_violations"),
       sum(when(!col("safety_vest"), 1).otherwise(0)).as("safety_vest_violations"),
       sum(when(col("safety_status") === "Unsafe", 1).otherwise(0)).as("total_unsafe_frames"),
-      count(col("bbox")).as("bbox_count"))
-    val movement = df
-      .withColumn("_pcx", lag(col("center_x"), 1).over(w(key)))
-      .withColumn("_pcy", lag(col("center_y"), 1).over(w(key)))
-      .withColumn("_step", sqrt(pow(col("center_x") - col("_pcx"), 2)
-        + pow(col("center_y") - col("_pcy"), 2)))
-      .groupBy(col(key))
-      .agg(sum(coalesce(col("_step"), lit(0.0))).as("bbox_movement_estimate"))
+      count(col("bbox")).as("bbox_count"),
+      sum(coalesce(sqrt(pow(col("center_x") - col("_pcx"), 2)
+        + pow(col("center_y") - col("_pcy"), 2)), lit(0.0))).as("bbox_movement_estimate"))
     val missing = df.select(col(key), col("frame_number"),
       explode(col("missing_items")).as("missing_item"))
     base
       .join(mode(missing, key, "missing_item"), Seq(key), "left")
-      .withColumnRenamed("mode_missing_item", "most_common_missing_item")
-      .join(movement, Seq(key), "left")
+      .select(base.columns.filter(_ != "bbox_movement_estimate").map(col) :+
+        col("mode_missing_item").as("most_common_missing_item") :+
+        col("bbox_movement_estimate"): _*)
       .orderBy(col(key))
   }
 
@@ -209,8 +230,8 @@ object Enrich {
     * intent; the reference's dotted-name/missing-return bugs are fixed,
     * SURVEY §7.4 item 3). */
   def genericEntity(key: String)(flat: DataFrame): DataFrame = {
-    val df = flat.filter(col(key).isNotNull).withColumn("_ts", tsSec(flat))
-      .withColumn("_class_name", pinnedFirst(key, "class_name"))
+    val df = layer(flat.filter(col(key).isNotNull),
+      "_ts" -> tsSec(flat), "_class_name" -> pinnedFirst(key, "class_name"))
     df.groupBy(col(key)).agg(
       first(col("_class_name"), ignoreNulls = true).as("class_name"),
       avg(col("confidence")).as("confidence_avg"),
@@ -228,14 +249,14 @@ object Enrich {
     * `school/advanced_preprocessing_school.py:41-88`). */
   def school(flat: DataFrame): DataFrame = {
     val key = "event_id"
-    val df = flat.filter(col(key).isNotNull)
+    val df = layer(flat.filter(col(key).isNotNull)
       // per-detection event duration; renamed so it can't collide with
       // the output's entity-level duration_seconds
-      .withColumnRenamed("duration_seconds", "duration_seconds_det")
-      .withColumn("_ts", tsSec(flat))
-      .withColumn("_event_type", pinnedFirst(key, "event_type"))
-      .withColumn("_location", pinnedFirst(key, "location"))
-      .withColumn("_notes", pinnedFirst(key, "notes"))
+      .withColumnRenamed("duration_seconds", "duration_seconds_det"),
+      "_ts" -> tsSec(flat),
+      "_event_type" -> pinnedFirst(key, "event_type"),
+      "_location" -> pinnedFirst(key, "location"),
+      "_notes" -> pinnedFirst(key, "notes"))
     val base = df.groupBy(col(key)).agg(
       first(col("_event_type"), ignoreNulls = true).as("event_type"),
       first(col("_location"), ignoreNulls = true).as("location"),
@@ -289,10 +310,10 @@ object Enrich {
     * `retail/advanced_preprocessing_retail.py:34-58`). */
   def retail(flat: DataFrame): DataFrame = {
     val key = "product_id"
-    flat.filter(col(key).isNotNull)
-      .withColumn("_product_name", pinnedFirst(key, "product_name"))
-      .withColumn("_category", pinnedFirst(key, "category"))
-      .withColumn("_location", pinnedFirst(key, "location"))
+    layer(flat.filter(col(key).isNotNull),
+      "_product_name" -> pinnedFirst(key, "product_name"),
+      "_category" -> pinnedFirst(key, "category"),
+      "_location" -> pinnedFirst(key, "location"))
       .groupBy(col(key)).agg(
         first(col("_product_name"), ignoreNulls = true).as("product_name"),
         first(col("_category"), ignoreNulls = true).as("category"),

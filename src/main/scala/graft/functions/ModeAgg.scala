@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions.udaf
   * key among count ties; a plain `mode()` is tie-arbitrary. This typed
   * `Aggregator` carries (count, min first-seen order) per value and
   * resolves ties by earliest first-seen — a single-pass, partial-
-  * aggregating alternative to the count+window formulation in
+  * aggregating alternative to the two-aggregate formulation in
   * [[graft.enrich.Enrich.mode]] (use this one when the extra shuffle of
-  * the window approach matters; both give identical answers).
+  * that approach matters; both give identical answers).
   *
   * Input: (value, orderKey) where orderKey is the frame number /
   * sequence position of the observation.

@@ -12,10 +12,14 @@ import graft.schema.DomainConfig
   * One generic, config-driven pipeline of composable stages replaces the
   * reference's ten near-identical per-domain processors
   * (`Preprocess_Json_Data/preprocessing/basic_preprocessing_*.py`). Every
-  * stage is a narrow transformation (no shuffle) except the final frame
-  * regroup, which shuffles once on the frame key — the whole pipeline is
-  * a single Catalyst plan, codegen'd end to end, with no collect() on the
-  * data path (reference boundary #3 eliminated).
+  * stage is a narrow transformation (no shuffle) and one projection, so
+  * the flattened plan stays a short chain however many columns a domain
+  * renames, fills or parses. The final frame regroup adds two
+  * exchanges: a hash exchange on the frame key for the aggregate, then
+  * the range exchange of its `orderBy`, whose partition bounds cost a
+  * sampling job of their own. The whole pipeline is a single Catalyst
+  * plan, codegen'd end to end, with no collect() on the data path
+  * (reference boundary #3 eliminated).
   */
 object Normalize {
 
@@ -54,10 +58,23 @@ object Normalize {
     }
   }
 
-  /** P3 rename normalization (only renames columns actually present). */
+  /** `df` with `cols` set in one projection: a name `df` already has is
+    * replaced where it stands, a new one is appended in `cols`' order —
+    * what a chain of `withColumn` calls gives, in one plan node. */
+  private def withOrdered(df: DataFrame, cols: Seq[(String, Column)]): DataFrame =
+    if (cols.isEmpty) df
+    else {
+      val byName = cols.toMap
+      val present = df.columns.toSet
+      df.select(df.columns.map(c => byName.get(c).fold(col(c))(_.as(c))) ++
+        cols.collect { case (n, c) if !present(n) => c.as(n) }: _*)
+    }
+
+  /** P3 rename normalization (only renames columns actually present),
+    * in place, in one projection. */
   def rename(cfg: DomainConfig)(df: DataFrame): DataFrame =
-    cfg.renames.filter { case (from, _) => df.columns.contains(from) }
-      .foldLeft(df) { case (d, (from, to)) => d.withColumnRenamed(from, to) }
+    if (!df.columns.exists(cfg.renames.contains)) df
+    else df.select(df.columns.map(c => cfg.renames.get(c).fold(col(c))(col(c).as(_))): _*)
 
   /** P8 null-safe trim over every string column. */
   def trimStrings(df: DataFrame): DataFrame = {
@@ -72,27 +89,23 @@ object Normalize {
     * column as a typed literal when missing entirely (the reference's
     * validate_schema, `preprocessing/common.py:6-35`). */
   def fillDefaults(cfg: DomainConfig)(df: DataFrame): DataFrame =
-    cfg.defaults.foldLeft(df) { case (d, (c, (v, tpe))) =>
-      if (d.columns.contains(c))
-        d.withColumn(c, coalesce(col(c), lit(v).cast(tpe)))
-      else d.withColumn(c, lit(v).cast(tpe))
-    }
+    withOrdered(df, cfg.defaults.toSeq.map { case (c, (v, tpe)) =>
+      c -> (if (df.columns.contains(c)) coalesce(col(c), lit(v).cast(tpe))
+        else lit(v).cast(tpe))
+    })
 
   /** F1-F3: strip "+05:30" / " UTC" suffixes then parse
     * "yyyy-MM-dd HH:mm:ss" strings to timestamps. Non-string timestamp
     * columns pass through. */
   def parseTimestamps(cfg: DomainConfig)(df: DataFrame): DataFrame =
-    cfg.timestampCols.filter(df.columns.contains).foldLeft(df) { (d, c) =>
-      d.schema(c).dataType match {
-        case StringType =>
-          val stripped = regexp_replace(
-            regexp_replace(col(c), "\\+05:30$", ""), " UTC$", "")
-          // try_to_timestamp: malformed strings become null (reference
-          // LEGACY-parser behavior) instead of an ANSI error
-          d.withColumn(c, try_to_timestamp(stripped, lit("yyyy-MM-dd HH:mm:ss")))
-        case _ => d
-      }
-    }
+    withOrdered(df, cfg.timestampCols
+      .filter(c => df.columns.contains(c) && df.schema(c).dataType == StringType).map { c =>
+        val stripped = regexp_replace(
+          regexp_replace(col(c), "\\+05:30$", ""), " UTC$", "")
+        // try_to_timestamp: malformed strings become null (reference
+        // LEGACY-parser behavior) instead of an ANSI error
+        c -> try_to_timestamp(stripped, lit("yyyy-MM-dd HH:mm:ss"))
+      })
 
   /** F4/F5: bbox [x1,y1,x2,y2] → typed scalar columns + center point.
     * (The reference's dotted `bbox.center_x` column name is a bug we fix:
@@ -105,13 +118,14 @@ object Normalize {
       // truncated bbox (PERMISSIVE reads admit them) would otherwise
       // abort the whole job instead of yielding nulls like the reference
       def el(i: Int) = try_element_at(b, lit(i))
-      df.withColumn("bbox", b)
-        .withColumn("bbox_x1", el(1))
-        .withColumn("bbox_y1", el(2))
-        .withColumn("bbox_x2", el(3))
-        .withColumn("bbox_y2", el(4))
-        .withColumn("center_x", (el(1) + el(3)) / 2)
-        .withColumn("center_y", (el(2) + el(4)) / 2)
+      withOrdered(df, Seq(
+        "bbox" -> b,
+        "bbox_x1" -> el(1),
+        "bbox_y1" -> el(2),
+        "bbox_x2" -> el(3),
+        "bbox_y2" -> el(4),
+        "center_x" -> (el(1) + el(3)) / 2,
+        "center_y" -> (el(2) + el(4)) / 2))
     }
   }
 

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -44,26 +45,19 @@ object VectorIndex {
   /** The vector alone. */
   case object Flat extends Codec
   /** 1-byte-per-dim scalar codes against the pinned one-row [mn, mx]
-    * range at `statsRoot`. */
-  final case class Sq8(statsRoot: String) extends Codec
+    * range at `statsRoot`. The handle carries the range itself, so a
+    * serve reads no table (and runs no job) for it. */
+  final case class Sq8(statsRoot: String, mn: Long, mx: Long) extends Codec
   /** 8-subspace product codes against the pinned per-(sub, code)
     * codebook at `codebookRoot`. */
   final case class Pq(codebookRoot: String) extends Codec
 
   /** The codec a family builds: its manifest key and the suffix of its
     * artifact table's root. */
-  sealed abstract class CodecKind(val key: String, val suffix: String) {
-    def at(root: String): Codec
-  }
-  case object FlatKind extends CodecKind("", "") {
-    def at(root: String): Codec = Flat
-  }
-  case object Sq8Kind extends CodecKind("stats", "_stats") {
-    def at(root: String): Codec = Sq8(root)
-  }
-  case object PqKind extends CodecKind("codebook", "_cb") {
-    def at(root: String): Codec = Pq(root)
-  }
+  sealed abstract class CodecKind(val key: String, val suffix: String)
+  case object FlatKind extends CodecKind("", "")
+  case object Sq8Kind extends CodecKind("stats", "_stats")
+  case object PqKind extends CodecKind("codebook", "_cb")
 
   /** How a family trains its coarse quantizer. */
   sealed trait Cells
@@ -107,13 +101,13 @@ object VectorIndex {
 
     private[graft] def fromManifest(spark: SparkSession, root: String,
         m: Map[String, String]): VectorIndex = {
-      val cents = StandingIndex.manifestKey(m, root, "centroids")
+      def key(k: String) = StandingIndex.manifestKey(m, root, k)
       val c = codec match {
         case FlatKind => Flat
-        case kind => kind.at(StandingIndex.manifestKey(m, root, kind.key))
+        case Sq8Kind => Sq8(key(Sq8Kind.key), key("mn").toLong, key("mx").toLong)
+        case PqKind => Pq(key(PqKind.key))
       }
-      val bounded = StandingIndex.manifestKey(m, root, "bounded").toBoolean
-      VectorIndex(this, root, cents, c, bounded,
+      VectorIndex(this, root, key("centroids"), c, key("bounded").toBoolean,
         if (labelHistogram) m.get("stats") else None)
     }
   }
@@ -165,17 +159,32 @@ object VectorIndex {
     * k·d rows are under the 32 MB broadcast bound, the codec table (SQ8
     * range or PQ codebook) and the √N family's label histogram. */
   private[graft] final case class Pins(cents: DataFrame, bounded: Boolean,
-      codecTable: Option[DataFrame], hist: Option[DataFrame] = None)
+      codecTable: Option[DataFrame], hist: Option[DataFrame] = None) {
+    /** The SQ8 range: its codec table is a one-row local relation
+      * ([[rangeTable]]), so this runs no Spark job. */
+    def sq8Range: (Long, Long) = {
+      val r = codecTable.get.head()
+      (r.getAs[Long]("mn"), r.getAs[Long]("mx"))
+    }
+  }
+
+  /** The SQ8 range (mn, mx) as a one-row local relation. */
+  private def rangeTable(spark: SparkSession, mn: Long, mx: Long): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(mn, mx)),
+      StructType(Seq(StructField("mn", LongType), StructField("mx", LongType))))
 
   /** The codec table over quantized coordinates: the one-row [mn, mx]
     * range (over `q`) or the per-(sub, label) codebook (over `labelled`,
-    * which carries `label`). Both are pinned by a checkpoint: build and
-    * serve must agree. */
+    * which carries `label`). Both are pinned so that build and serve
+    * agree: the range is collected into a local relation, the codebook
+    * checkpointed. */
   private def codecTable(kind: CodecKind, q: => DataFrame,
       labelled: => DataFrame): Option[DataFrame] = kind match {
     case FlatKind => None
     case Sq8Kind =>
-      Some(q.agg(min(col("q")).as("mn"), max(col("q")).as("mx")).localCheckpoint())
+      val qs = q
+      val r = qs.agg(min(col("q")).as("mn"), max(col("q")).as("mx")).head()
+      Some(rangeTable(qs.sparkSession, r.getAs[Long]("mn"), r.getAs[Long]("mx")))
     case PqKind => Some(pqCodebook(labelled).localCheckpoint())
   }
 
@@ -207,16 +216,15 @@ object VectorIndex {
 
   /** Adds `family`'s codes to assigned rows (`cell` plus the input
     * columns) and projects its postings row. Codes are computed on the
-    * row against the pinned tables — the SQ8 range is read once, here,
-    * as two driver scalars; PQ runs the [[graft.functions.PqEncodeQ]]
+    * row against the pinned tables — the SQ8 range as two driver
+    * scalars; PQ runs the [[graft.functions.PqEncodeQ]]
     * kernel — so seeds, micro-batches and grow deltas encode alike. */
   private[graft] def encoder(family: Family, pins: Pins): DataFrame => DataFrame = {
     val withCodes: DataFrame => DataFrame = family.codec match {
       case FlatKind => identity
       case Sq8Kind =>
-        val r0 = pins.codecTable.get.head()
-        val mn = r0.getAs[Long]("mn")
-        val enc = sq8EncodeExpr(mn, math.max(r0.getAs[Long]("mx") - mn, 1L))
+        val (mn, mx) = pins.sq8Range
+        val enc = sq8EncodeExpr(mn, math.max(mx - mn, 1L))
         // Σcode rides along from build time: the decoded-dot correction
         // needs it per posting, and computing it in the serving scan
         // would run the interpreted aggregate() per candidate row
@@ -258,13 +266,20 @@ object VectorIndex {
     val cents = table("_cents", pins.cents)
     val codecRoot = pins.codecTable.map(table(family.codec.suffix, _))
     val histRoot = pins.hist.map(table("_stats", _))
+    // the SQ8 range travels in the handle and the manifest
+    val (codec, range) = family.codec match {
+      case FlatKind => (Flat, Nil)
+      case Sq8Kind =>
+        val (mn, mx) = pins.sq8Range
+        (Sq8(codecRoot.get, mn, mx), Seq("mn" -> mn.toString, "mx" -> mx.toString))
+      case PqKind => (Pq(codecRoot.get), Nil)
+    }
     if (!family.grows)
       StandingIndex.writeIndexManifest(postings,
         Seq("family" -> family.name, "centroids" -> cents,
-          "bounded" -> pins.bounded.toString) ++
+          "bounded" -> pins.bounded.toString) ++ range ++
           codecRoot.map(family.codec.key -> _) ++ histRoot.map("stats" -> _): _*)
-    VectorIndex(family, postings, cents, family.codec.at(codecRoot.getOrElse("")),
-      pins.bounded, histRoot, k)
+    VectorIndex(family, postings, cents, codec, pins.bounded, histRoot, k)
   }
 
   /** A `*Build` query: build `family` fresh, register it, and return
@@ -278,7 +293,7 @@ object VectorIndex {
     val idx = StandingIndex.rebuild(spark, dir, family)
     val codecCols = idx.codec match {
       case Flat => Nil
-      case Sq8(stats) => Seq(TxTable(spark, stats).read())
+      case Sq8(stats, _, _) => Seq(TxTable(spark, stats).read())
       case Pq(cb) => Seq(TxTable(spark, cb).read().agg(count(lit(1)).as("cb_rows")))
     }
     val sampleCols =
@@ -329,7 +344,7 @@ object VectorIndex {
       TxTable(spark, idx.centroids).read(), nprobe, idx.bounded)
     idx.codec match {
       case Flat => topkByCell(pred.fold(postings)(p => postings.filter(p)), probes, k)
-      case Sq8(stats) => sq8Topk(probes, postings, TxTable(spark, stats).read(), k,
+      case Sq8(_, mn, mx) => sq8Topk(probes, postings, mn, mx, k,
         candK.getOrElse(Sq8CandK))
       case Pq(cb) => adcTopk(probes, postings, TxTable(spark, cb).read(), k,
         candK.getOrElse(PqCandK))
@@ -350,11 +365,9 @@ object VectorIndex {
     * — exact integers end to end (|score| ≤ ~1e15 ≪ 2⁶³), so candidate
     * sets are bit-identical cross-engine (measured recall@5 0.52 at
     * sf0.1, equal to the uncompressed probe path's). */
-  private def sq8Topk(probes: DataFrame, postings: DataFrame, range: DataFrame,
+  private def sq8Topk(probes: DataFrame, postings: DataFrame, mnv: Long, mxv: Long,
       k: Int, candK: Int): DataFrame = {
-    val r0 = range.head()
-    val mnv = r0.getAs[Long]("mn")
-    val sv = math.max(r0.getAs[Long]("mx") - mnv, 1L)
+    val sv = math.max(mxv - mnv, 1L)
     val tv = 255L * mnv
     // query codes: the build's encode over the probe rows' vectors
     // against the PINNED range; Σqcode once per probe row, not per
@@ -487,7 +500,7 @@ object VectorIndex {
     val cents = TxTable(spark, idx.centroids).read()
     val table = idx.codec match {
       case Flat => None
-      case Sq8(root) => Some(TxTable(spark, root).read())
+      case Sq8(_, mn, mx) => Some(rangeTable(spark, mn, mx))
       case Pq(root) => Some(TxTable(spark, root).read())
     }
     val rows = encoder(family, Pins(cents, bounded = true, table))(

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.operators.{Similarity, StandingIndex, TextAnalysis, TextIndex}
+import graft.operators.{Similarity, StandingIndex, TextAnalysis, TextIndex, VectorIndex}
 import graft.operators.VectorIndex._
 import graft.streaming.{StreamFts, StreamVector}
 
@@ -36,6 +36,17 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
     StandingIndex.dropForTest(sf)
     val loaded = StandingIndex.load(spark, sf, family, built.postings)
     assert(loaded === built, "manifest round-trip changed the handle")
+    // the SQ8 range the handle carries is the one its pinned table holds
+    loaded match {
+      case v: VectorIndex => v.codec match {
+        case Sq8(stats, mn, mx) =>
+          val r = graft.lake.TxTable(spark, stats).read().head()
+          assert((mn, mx) === ((r.getAs[Long]("mn"), r.getAs[Long]("mx"))),
+            "the handle's SQ8 range is not its pinned table's")
+        case _ =>
+      }
+      case _ =>
+    }
     val after = serve()
     assert(sorted(after) === before, "cold-loaded serve changed the answer")
     val plan = after.queryExecution.executedPlan.toString

@@ -50,7 +50,7 @@ class ComposedGrowSpec extends SparkSpec {
     // the PINNED [mn, mx] and compare to its stored codes — an append
     // that re-pinned the range (the drift bug this lifecycle forbids)
     // would produce different integers
-    val VectorIndex.Sq8(stats) = idx1.codec
+    val VectorIndex.Sq8(stats, _, _) = idx1.codec
     val r0 = graft.lake.TxTable(spark, stats).read().head()
     val mn = r0.getAs[Long]("mn")
     val s = math.max(r0.getAs[Long]("mx") - mn, 1L)

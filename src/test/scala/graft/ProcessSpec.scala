@@ -21,8 +21,9 @@ class ProcessSpec extends SparkSpec {
   /** Jobs one vehicle upload of [[vehicleDoc]] runs on `local[4]`: two
     * JSON sinks, two zone writes, the refined frame's checkpoint, and
     * AQE's per-stage jobs under them. Re-parsing the document per sink
-    * and counting rows with extra jobs ran 36. */
-  private val VehicleUploadJobs = 19
+    * and counting rows with extra jobs ran 36; ranking each mode with a
+    * window and joining the movement angles back ran 19. */
+  private val VehicleUploadJobs = 17
 
   private val vehicleDoc =
     """[{"frame_number": 0, "detections": [

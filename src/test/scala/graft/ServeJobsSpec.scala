@@ -66,7 +66,7 @@ class ServeJobsSpec extends SparkSpec with TempDirs {
   }
 
   test("the SQ8 and PQ serves probe once; a lossless cut equals annIvfSqrtK") {
-    assert(warmJobs("annIvfSq8")(Similarity.annIvfSq8(spark, sf)) <= 12)
+    assert(warmJobs("annIvfSq8")(Similarity.annIvfSq8(spark, sf)) <= 11)
     assert(warmJobs("annIvfPq")(Similarity.annIvfPq(spark, sf)) <= 14)
     // candK ≥ every probed population: the rerank ranks all probed
     // members by exact cosine, with the query vector from the probe rows
@@ -96,6 +96,24 @@ class ServeJobsSpec extends SparkSpec with TempDirs {
       val e = intercept[StandingIndex.IndexManifestError](
         StandingIndex.load(spark, sf, VectorIndex.Sqrt, built.postings))
       assert(e.getMessage.contains("'bounded'"))
+    } finally StandingIndex.writeIndexManifest(built.postings, m.toSeq: _*)
+  }
+
+  test("a cold-loaded SQ8 handle carries the range the build pinned") {
+    val built = StandingIndex.ensure(spark, sf, VectorIndex.Sq8Sqrt)
+    StandingIndex.dropForTest(sf)
+    var loaded: VectorIndex = null
+    assert(jobsOf { loaded = StandingIndex.load(spark, sf, VectorIndex.Sq8Sqrt, built.postings) } == 0,
+      "the range is read from the manifest, not from its table")
+    assert(loaded === built)
+    // a manifest without either end of the range is torn: the loader fails typed
+    val m = StandingIndex.readIndexManifest(built.postings)
+    try for (end <- Seq("mn", "mx")) {
+      StandingIndex.writeIndexManifest(built.postings, m.toSeq.filter(_._1 != end): _*)
+      StandingIndex.dropForTest(sf)
+      val e = intercept[StandingIndex.IndexManifestError](
+        StandingIndex.load(spark, sf, VectorIndex.Sq8Sqrt, built.postings))
+      assert(e.getMessage.contains(s"'$end'"))
     } finally StandingIndex.writeIndexManifest(built.postings, m.toSeq: _*)
   }
 

@@ -27,7 +27,7 @@ class StreamIvfSq8Spec extends SparkSpec {
     // same way the stream's foreachBatch did — the marker, not the
     // content, must dedupe it
     val cents = TxTable(spark, idx.centroids).read()
-    val VectorIndex.Sq8(stats) = idx.codec
+    val VectorIndex.Sq8(stats, _, _) = idx.codec
     val r0 = TxTable(spark, stats).read().head()
     val mnv = r0.getAs[Long]("mn")
     val sv = math.max(r0.getAs[Long]("mx") - mnv, 1L)

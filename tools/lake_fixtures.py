@@ -15,7 +15,16 @@ writes:
 - people: the wrapped layout, schema inferred, with empty frames;
 - parking: the wrapped slot-map layout with occupancy flips;
 - retail, animal: frame arrays, schema inferred;
+- safety: a `people` detection array with `missing_items` lists, an
+  untracked person now and then and empty frames;
+- school: events with role lists and alert levels, two per frame;
+- common: a flat detection array keyed by `object_id`, some of it
+  untracked (null id);
 - pose: nested keypoints, no refine stage (pass-through).
+
+Values come from small alphabets, so the per-entity modes meet count
+ties; safety's tracker 2 and school's event 103 tie on count and on
+first frame too. A change to the mode tie-break shows as a difference.
 """
 import json
 import os
@@ -106,6 +115,51 @@ def animal(rnd):
     return out
 
 
+def safety(rnd):
+    items = ["mask", "hardhat", "safety_vest"]
+    frames = []
+    for f in range(FRAMES):
+        people = [] if f % 11 == 10 else [
+            {"tracker_id": t if f % 9 or t % 2 else -1,
+             "hardhat": rnd.random() < 0.7, "mask": rnd.random() < 0.6,
+             "safety_vest": rnd.random() < 0.8,
+             "safety_status": rnd.choice(["Safe", "Unsafe", "Unknown"]),
+             # tracker 2 always misses the same two items: a tie on count
+             # and on first frame, settled by the value
+             "missing_items": ["mask", "hardhat"] if t == 2
+             else rnd.sample(items, rnd.randint(0, 2)),
+             "bbox": [t * 40.0 + f, 100.0 + f % 7, t * 40.0 + f + 50, 300.0]}
+            for t in range(1 + f // 40, 4 + f // 40)]
+        frames.append({"frame_number": f, "people": people})
+    return frames
+
+
+def school(rnd):
+    frames = []
+    for f in range(FRAMES):
+        dets = [{"event_id": 100 + e, "event_type": ["fight", "fall", "crowd"][e % 3],
+                 "timestamp": ts(f), "location": ["yard", "hall"][e % 2],
+                 "confidence": round(rnd.uniform(0.3, 1.0), 3),
+                 "involved_person_id": "p%d" % rnd.randint(1, 4),
+                 "duration_seconds": rnd.randint(5, 30), "notes": rnd.choice(["", "note"]),
+                 "alert_level": rnd.choice(["low", "medium", "high"]),
+                 "response_required": rnd.random() < 0.3,
+                 "multiple_persons_involved": rnd.random() < 0.5,
+                 "person_roles": ["teacher", "student"] if e == 3
+                 else rnd.sample(["student", "teacher", "staff"], 2)}
+                for e in (f // 20, f // 20 + 3)]
+        frames.append({"frame_number": f, "timestamp": ts(f), "detections": dets})
+    return frames
+
+
+def common(rnd):
+    return [{"frame_number": f, "object_id": o if (f + o) % 13 else None,
+             "class_id": o % 3, "class_name": ["person", "car", "dog"][o % 3],
+             "confidence": round(rnd.uniform(0.3, 1.0), 3),
+             "bbox": [o * 30.0 + f, 40.0, o * 30.0 + f + 25, 90.0]}
+            for f in range(FRAMES) for o in range(1 + f // 30, 4 + f // 30)]
+
+
 def pose(rnd):
     return [{"frame_number": f, "pose_data": [
         {"action": rnd.choice(["Up", "Down"]), "confidence": round(rnd.random(), 3),
@@ -118,7 +172,8 @@ def pose(rnd):
 def write_fixtures(raw_dir):
     """Writes every document; returns [(domain, glob)] to upload."""
     docs = {"vehicle": vehicle, "people": people, "parking": parking,
-            "retail": retail, "animal": animal, "pose": pose}
+            "retail": retail, "animal": animal, "pose": pose,
+            "safety": safety, "school": school, "common": common}
     uploads = []
     for i, (domain, make) in enumerate(docs.items()):
         d = os.path.join(raw_dir, domain)
