@@ -47,6 +47,14 @@ object Process {
     * `localCheckpoint`, which keeps its coalesced partitioning, so its
     * JSON sink and its zone table read one result.
     *
+    * The regrouped frames and the refined records are row sets, each
+    * one hash exchange on its key (the frame regroup's, the enrich
+    * record's; see `Normalize` and `Enrich`). Only the parity JSON
+    * objects are ordered, by the frame keys and the domain's entity
+    * key, and the sinks sort there, in the one task that feeds their
+    * collect ([[graft.lake.Lake.writeJsonArray]]); the zone tables get
+    * the rows unsorted.
+    *
     * Every plan is built on the calling thread, so an analysis error
     * (a mistyped document on an inferred-schema domain) throws before
     * any sink starts. The sinks that share nothing but the parse then
@@ -91,13 +99,14 @@ object Process {
         if (domain == "parking") Sessionization.explodeSlots(frames)
         else Normalize.flatten(cfg)(raw)
 
-      // processed zone: parity JSON + scale-path parquet
-      val grouped =
-        if (domain == "parking") frames
+      // processed zone: parity JSON + scale-path parquet; parking's
+      // frames are written as read, the regrouped ones in frame order
+      val (grouped, frameOrder) =
+        if (domain == "parking") (frames, Nil)
         else {
           val detectionFields = flat.columns.filterNot(c =>
             cfg.frameCols.contains(c) || c == "_empty_frame").toSeq
-          Normalize.regroupByFrame(cfg, detectionFields)(flat)
+          (Normalize.regroupByFrame(cfg, detectionFields)(flat), Normalize.frameKeys(cfg, flat))
         }
       val processedRows = flat.drop("_empty_frame")
       // refine zone: per-entity records
@@ -113,12 +122,13 @@ object Process {
       var entities = Option.empty[Int]
       concurrently("graft-process-sink")(
         () => framesWritten = lake.writeWrappedJson(grouped, "frame_detections",
-          s"${lake.zonePath("processed", domain)}/preprocessed_$fileName"),
+          s"${lake.zonePath("processed", domain)}/preprocessed_$fileName", frameOrder: _*),
         () => lake.writeZoneTable(processedRows, "processed", domain, fileName),
         () => enriched.foreach { e =>
           val refined = e.localCheckpoint()
           val sinks = Seq(
-            () => entities = Some(lake.writeJsonArray(refined, s"$refineDir/refine_$fileName")),
+            () => entities = Some(lake.writeJsonArray(refined,
+              s"$refineDir/refine_$fileName", cfg.entityKey.toSeq: _*)),
             () => lake.writeZoneTable(refined, "refine", domain, fileName)) ++
             configSummary.map(s => () =>
               lake.writeJsonArray(s, s"$refineDir/parking_config_$fileName"))

@@ -13,14 +13,30 @@ import org.apache.spark.sql.functions._
   * `partitionBy(entity).orderBy(frame_number)`; scales with executors,
   * not driver memory.
   *
-  * The exchanges a record plans: the window columns and the per-entity
-  * aggregate share one hash exchange on the entity key (the aggregate
-  * reads the window's partitioning). Each [[mode]], vehicle's time per
-  * direction and school's alert-level distribution are two aggregates,
-  * a hash exchange on (entity, value) and then one on the entity; AQE
-  * may turn their left joins back to the entity rows into broadcast
-  * joins. The closing `orderBy` adds a range exchange, whose bounds
-  * cost a sampling job.
+  * Each record is one entity aggregate with no join, so it plans one
+  * hash exchange on the entity key: the window columns' exchange, which
+  * the aggregate reads without another (vehicle, safety, school, and
+  * people's and the legacy vehicle view's one key window), or the
+  * aggregate's own (the generic and retail records). A mode
+  * ([[modeOf]]), vehicle's time per direction and school's alert-level
+  * distribution are expressions over arrays the aggregate collects, so
+  * that exchange ships the entity's rows (people: every row, where two
+  * aggregates each used to ship partial (entity, value) counts). A
+  * record is a row set: no `orderBy`, so no range exchange and no
+  * sampling job. The JSON sinks, which collect to the driver anyway,
+  * put the rows in key order ([[graft.lake.Lake.writeJsonArray]]).
+  *
+  * Collecting makes the aggregate an `ObjectHashAggregate`, which falls
+  * back to sort-based aggregation above 128 keys per task
+  * (`spark.sql.objectHashAggregate.sortBased.fallbackThreshold`) and
+  * then adds a key's later rows before its earlier ones. Collected
+  * arrays do not mind (every use sorts or counts them), but a double
+  * `sum`/`avg` would round differently. Vehicle and school aggregated
+  * their doubles beside a `collect_list` before, with the same input
+  * order, so they keep them in the aggregate. People's average and
+  * safety's movement sum, which a plain hash aggregate added in row
+  * order, are window aggregates over the entity instead: the window
+  * adds the rows in the order the hash aggregate did.
   *
   * Window columns are added one projection per dependency layer
   * ([[layer]]), not one `withColumn` each: every `withColumn` re-analyzes
@@ -54,23 +70,60 @@ object Enrich {
       col("timestamp").cast("double")
     else col("frame_number").cast("double")
 
-  /** D1: Counter-compatible mode — count desc, first-seen asc tie-break
-    * (Python's `Counter.most_common(1)` returns the first-inserted key
-    * among ties). Returns (key, mode_<valueCol>). */
-  def mode(df: DataFrame, key: String, valueCol: String,
-      exclude: Seq[String] = Seq.empty): DataFrame = {
-    val filtered = df.filter(col(valueCol).isNotNull &&
-      (if (exclude.nonEmpty) !col(valueCol).isin(exclude: _*) else lit(true)))
-    val counts = filtered.groupBy(col(key), col(valueCol))
-      .agg(count(lit(1)).as("cnt"), min(col("frame_number")).as("first_seen"))
-    // count desc, first-seen asc (nulls first), value asc: the least
-    // such struct per key; the value tie-break pins ties where two values
-    // first appear in the same row (equal count AND first_seen)
-    counts.groupBy(col(key))
-      .agg(min(struct(-col("cnt").as("neg_cnt"), col("first_seen"),
-        col(valueCol).as("value"))).as("best"))
-      .select(col(key), col("best.value").as(s"mode_$valueCol"))
+  /** The aggregate's (value, frame_number) pairs, `v` and `f`, of the
+    * rows where `keep` holds: what [[modeOf]] reads. */
+  private def pairs(value: Column, keep: Column = lit(true)): Column =
+    collect_list(when(keep, struct(value.as("v"), col("frame_number").as("f"))))
+
+  /** [[pairs]] of an array column: one per element, with its row's
+    * frame, as `explode` would give them. */
+  private def elementPairs(values: Column): Column =
+    flatten(collect_list(
+      transform(values, v => struct(v.as("v"), col("frame_number").as("f")))))
+
+  /** D1: Counter-compatible mode of collected [[pairs]], null values
+    * left out — count desc, first frame seen asc (nulls first), value
+    * asc (Python's `Counter.most_common(1)` returns the first-inserted
+    * key among ties; the value pins ties where two values first appear
+    * in the same frame). Null when no value is set.
+    *
+    * One scan of the pairs sorted by (value, frame): each value's pairs
+    * are then one run, whose first set frame is its least, and a
+    * finished run replaces the best one only when it beats it, so of two
+    * equal runs the lesser value stays. For n pairs that is the sort's
+    * O(n log n) plus one pass, whatever the number of values. */
+  def modeOf(ps: Column): Column = {
+    val sorted = sort_array(filter(ps, _.getField("v").isNotNull))
+    // the scan's state: the best finished run (b*) and the current run
+    // (c*), each a value, its count and its least frame
+    def state(bv: Column, bn: Column, bf: Column, cv: Column, cn: Column, cf: Column) =
+      struct(bv.as("bv"), bn.as("bn"), bf.as("bf"), cv.as("cv"), cn.as("cn"), cf.as("cf"))
+    def curWins(s: Column): Column = {
+      val (bn, bf, cn, cf) = (s.getField("bn"), s.getField("bf"), s.getField("cn"), s.getField("cf"))
+      cn > bn || (cn === bn && ((cf.isNull && bf.isNotNull) || coalesce(cf < bf, lit(false))))
+    }
+    def pick(s: Column, field: String): Column =
+      when(curWins(s), s.getField("c" + field)).otherwise(s.getField("b" + field))
+    // no pair yet: null value and frame, typed like the pairs'
+    val none = when(lit(false), try_element_at(ps, lit(1)))
+    val (nv, nf) = (none.getField("v"), none.getField("f"))
+    aggregate(sorted, state(nv, lit(0L), nf, nv, lit(0L), nf), (s, p) =>
+      when(s.getField("cv") === p.getField("v"),
+        state(s.getField("bv"), s.getField("bn"), s.getField("bf"), s.getField("cv"),
+          s.getField("cn") + 1, coalesce(s.getField("cf"), p.getField("f"))))
+        .otherwise(state(pick(s, "v"), pick(s, "n"), pick(s, "f"),
+          p.getField("v"), lit(1L), p.getField("f"))),
+      s => pick(s, "v"))
   }
+
+  /** `total` of each value's entries, as a map in value order: the
+    * entries' field `v` is the value (a null one too, as `groupBy`
+    * keeps it). O(n·d) for n entries of d values: each value filters
+    * the entries once. */
+  private def perValue(entries: Column)(total: Column => Column): Column =
+    map_from_entries(transform(
+      sort_array(array_distinct(transform(entries, _.getField("v")))),
+      k => struct(k, total(filter(entries, _.getField("v") <=> k)))))
 
   /** Frame-order-pinned first non-null attribute per entity: unlike a
     * bare `first(_, ignoreNulls)` over an unordered groupBy (whatever
@@ -111,13 +164,12 @@ object Enrich {
       "_held" -> (col("_next_ts") - col("_ts")),
       "_step_dist" -> sqrt(col("_dx") * col("_dx") + col("_dy") * col("_dy")),
       "_angle" -> when(col("_prev_cx").isNotNull, degrees(atan2(col("_dy"), col("_dx")))))
-    val perDir = stepped.filter(col("_held").isNotNull)
-      .groupBy(col(key), col("direction"))
-      .agg(sum(col("_held")).as("dir_secs"))
-      .groupBy(col(key))
-      .agg(map_from_entries(sort_array(collect_list(
-        struct(col("direction"), col("dir_secs"))))).as("time_spent_per_direction"))
-    val base = stepped.groupBy(col(key)).agg(
+    // the held intervals; `direction` is bound to `stepped`: by name,
+    // inside a higher-order function's argument, it would resolve to
+    // the output alias of that name
+    val held = collect_list(when(col("_held").isNotNull, struct(
+      col("frame_number").as("f"), stepped("direction").as("v"), col("_held").as("x"))))
+    stepped.groupBy(col(key)).agg(
       first(col("_first_type"), ignoreNulls = true).as("vehicle_type"),
       first(col("_first_color"), ignoreNulls = true).as("vehicle_color"),
       avg(col("confidence")).as("confidence_avg"),
@@ -140,54 +192,48 @@ object Enrich {
       max(col("_dir_changes")).as("direction_changes"),
       sum(when(col("red_light_violation"), 1).otherwise(0)).as("red_light_violation_count"),
       sum(coalesce(col("_step_dist"), lit(0.0))).as("total_distance"),
-      // null, not [], for an entity without angle rows: what a left join
-      // to an aggregate of the angle rows gives
+      modeOf(pairs(col("lane"))).as("most_common_lane"),
+      // each direction's intervals added in frame order, the order in
+      // which a sum per (entity, direction) over the windowed rows adds
+      // them; null, not {}, for an entity without a held interval
+      when(size(held) > 0, perValue(held)(es =>
+        aggregate(sort_array(es), lit(0.0), (acc, e) => acc + e.getField("x"))))
+        .as("time_spent_per_direction"),
+      // null, not [], for an entity without angle rows
       when(count(col("_angle")) > 0, expr(
         "transform(sort_array(collect_list(CASE WHEN _angle IS NOT NULL " +
           "THEN struct(frame_number, _angle) END)), p -> p._angle)"))
         .as("movement_angles"),
       avg(col("_angle")).as("avg_movement_angle"))
-    val angleCols = Seq("movement_angles", "avg_movement_angle")
-    base
-      .join(mode(df, key, "lane"), Seq(key), "left")
-      .join(perDir, Seq(key), "left")
-      .select(base.columns.filterNot(angleCols.contains).map(col) ++
-        Seq(col("mode_lane").as("most_common_lane"), col("time_spent_per_direction")) ++
-        angleCols.map(col): _*)
-      .orderBy(col(key))
   }
 
   /** People per-entity record (SURVEY §2.8 People,
     * `advanced_preprocessing_people.py:16-33,113-148`). */
   def people(flat: DataFrame): DataFrame = {
     val key = "tracker_id"
-    val df = layer(validEntities(key)(flat), "_ts" -> tsSec(flat))
-    val base = df.groupBy(col(key)).agg(
-      avg(col("confidence")).as("confidence_avg"),
-      min(col("_ts")).as("first_detection"),
-      max(col("_ts")).as("last_detection"),
-      (max(col("_ts")) - min(col("_ts"))).as("duration_seconds"),
-      count(lit(1)).as("frame_count"),
+    // a window average, not one in the object aggregate: see the object doc
+    val df = layer(validEntities(key)(flat), "_ts" -> tsSec(flat),
+      "_confidence_avg" -> avg(col("confidence")).over(Window.partitionBy(col(key))))
+    // D1 modes excluding ""/"Unknown" (reference filters before Counter);
+    // when everything is filtered out the reference's get_most_frequent
+    // returns "Unknown" (0 for the numeric age) — coalesce to match
+    df.groupBy(col(key)).agg(
+      coalesce(modeOf(pairs(col("age"), col("age") =!= 0)), lit(0L)).as("age"),
+      coalesce(modeOf(pairs(col("gender"), !col("gender").isin("", "Unknown"))),
+        lit("Unknown")).as("gender"),
+      coalesce(modeOf(pairs(col("carrying"), !col("carrying").isin("", "Unknown"))),
+        lit("Unknown")).as("carrying"),
+      first(col("_confidence_avg")).as("confidence_avg"),
       // P11 boolean coalesce chain + D8 any-true
       (max(when(coalesce(col("in_restricted_area"),
         col("entered_restricted"), lit(false)), 1).otherwise(0)) === 1)
         .as("entered_restricted_area"),
       // D6 first matching timestamp
-      min(when(col("in_restricted_area"), col("_ts"))).as("restricted_area_entry_time"))
-    // D1 modes excluding ""/"Unknown" (reference filters before Counter);
-    // when everything is filtered out the reference's get_most_frequent
-    // returns "Unknown" (0 for the numeric age) — coalesce to match
-    base
-      .join(mode(df.filter(col("age") =!= 0), key, "age"), Seq(key), "left")
-      .join(mode(df, key, "gender", Seq("", "Unknown")), Seq(key), "left")
-      .join(mode(df, key, "carrying", Seq("", "Unknown")), Seq(key), "left")
-      .select(col(key), coalesce(col("mode_age"), lit(0L)).as("age"),
-        coalesce(col("mode_gender"), lit("Unknown")).as("gender"),
-        coalesce(col("mode_carrying"), lit("Unknown")).as("carrying"),
-        col("confidence_avg"), col("entered_restricted_area"),
-        col("restricted_area_entry_time"), col("first_detection"),
-        col("last_detection"), col("duration_seconds"), col("frame_count"))
-      .orderBy(col(key))
+      min(when(col("in_restricted_area"), col("_ts"))).as("restricted_area_entry_time"),
+      min(col("_ts")).as("first_detection"),
+      max(col("_ts")).as("last_detection"),
+      (max(col("_ts")) - min(col("_ts"))).as("duration_seconds"),
+      count(lit(1)).as("frame_count"))
   }
 
   /** Safety per-entity record (SURVEY §2.8 Safety, D8 resolution,
@@ -198,7 +244,11 @@ object Enrich {
       "_first_status" -> first(col("safety_status"), ignoreNulls = true).over(wFull(key)),
       "_pcx" -> lag(col("center_x"), 1).over(w(key)),
       "_pcy" -> lag(col("center_y"), 1).over(w(key)))
-    val base = df.groupBy(col(key)).agg(
+    // a window sum, not one in the object aggregate: see the object doc
+    val moved = layer(df, "_movement" -> sum(coalesce(sqrt(
+      pow(col("center_x") - col("_pcx"), 2) + pow(col("center_y") - col("_pcy"), 2)),
+      lit(0.0))).over(wFull(key)))
+    moved.groupBy(col(key)).agg(
       first(col("_first_status"), ignoreNulls = true).as("initial_safety_status"),
       // "Safe" if ever safe, else "Unsafe" (D8)
       when(max(when(col("safety_status") === "Safe", 1).otherwise(0)) === 1, "Safe")
@@ -213,16 +263,8 @@ object Enrich {
       sum(when(!col("safety_vest"), 1).otherwise(0)).as("safety_vest_violations"),
       sum(when(col("safety_status") === "Unsafe", 1).otherwise(0)).as("total_unsafe_frames"),
       count(col("bbox")).as("bbox_count"),
-      sum(coalesce(sqrt(pow(col("center_x") - col("_pcx"), 2)
-        + pow(col("center_y") - col("_pcy"), 2)), lit(0.0))).as("bbox_movement_estimate"))
-    val missing = df.select(col(key), col("frame_number"),
-      explode(col("missing_items")).as("missing_item"))
-    base
-      .join(mode(missing, key, "missing_item"), Seq(key), "left")
-      .select(base.columns.filter(_ != "bbox_movement_estimate").map(col) :+
-        col("mode_missing_item").as("most_common_missing_item") :+
-        col("bbox_movement_estimate"): _*)
-      .orderBy(col(key))
+      modeOf(elementPairs(col("missing_items"))).as("most_common_missing_item"),
+      first(col("_movement")).as("bbox_movement_estimate"))
   }
 
   /** Animal/common per-entity record (SURVEY §2.8 Animal/Common,
@@ -242,7 +284,6 @@ object Enrich {
       expr("transform(sort_array(collect_list(struct(frame_number, bbox))), p -> p.bbox)")
         .as("bbox_list"),
       sort_array(collect_list(col("frame_number"))).as("frame_numbers"))
-      .orderBy(col(key))
   }
 
   /** School per-event record (SURVEY §2.8 School event,
@@ -257,7 +298,8 @@ object Enrich {
       "_event_type" -> pinnedFirst(key, "event_type"),
       "_location" -> pinnedFirst(key, "location"),
       "_notes" -> pinnedFirst(key, "notes"))
-    val base = df.groupBy(col(key)).agg(
+    val levels = pairs(col("alert_level"))
+    df.groupBy(col(key)).agg(
       first(col("_event_type"), ignoreNulls = true).as("event_type"),
       first(col("_location"), ignoreNulls = true).as("location"),
       first(col("_notes"), ignoreNulls = true).as("notes"),
@@ -272,21 +314,10 @@ object Enrich {
       sort_array(array_distinct(collect_list(col("involved_person_id")))).as("involved_persons"),
       sort_array(array_distinct(flatten(collect_list(col("person_roles"))))).as("unique_roles"),
       (max(when(col("multiple_persons_involved"), 1).otherwise(0)) === 1)
-        .as("multiple_persons_involved"))
-    val alertDist = df.groupBy(col(key), col("alert_level"))
-      .agg(count(lit(1)).as("n"))
-      .groupBy(col(key))
-      .agg(map_from_entries(sort_array(collect_list(
-        struct(col("alert_level"), col("n"))))).as("alert_level_distribution"))
-    val roles = df.select(col(key), col("frame_number"),
-      explode(col("person_roles")).as("role"))
-    base
-      .join(mode(df, key, "alert_level"), Seq(key), "left")
-      .withColumnRenamed("mode_alert_level", "most_common_alert_level")
-      .join(mode(roles, key, "role"), Seq(key), "left")
-      .withColumnRenamed("mode_role", "most_common_role")
-      .join(alertDist, Seq(key), "left")
-      .orderBy(col(key))
+        .as("multiple_persons_involved"),
+      modeOf(levels).as("most_common_alert_level"),
+      modeOf(elementPairs(col("person_roles"))).as("most_common_role"),
+      perValue(levels)(size(_).cast("long")).as("alert_level_distribution"))
   }
 
   /** D10 entity-map document assembly: the refined single-document
@@ -323,6 +354,5 @@ object Enrich {
         (max(when(col("picked_by_customer"), 1).otherwise(0)) === 1).as("picked_by_customer"),
         sort_array(array_distinct(collect_list(col("expiry_date")))).as("unique_expiry_dates"),
         count(col("frame_number")).as("frame_appearances"))
-      .orderBy(col(key))
   }
 }

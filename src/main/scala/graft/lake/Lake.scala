@@ -45,27 +45,35 @@ final case class Lake(spark: SparkSession, root: String) {
 
   /** S2: write a DataFrame as a single pretty JSON array object —
     * parity with `minio_connector.py:45-80` (small per-video documents
-    * only; the reference collects these too). Returns the number of
-    * rows written, so callers need no separate `count()` job. */
-  def writeJsonArray(df: DataFrame, path: String): Int = {
-    val rows = df.toJSON.collect()
-    val body = rows.mkString("[\n", ",\n", "\n]")
-    val p = Paths.get(path)
-    Files.createDirectories(p.getParent)
-    Files.write(p, body.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    rows.length
-  }
+    * only; the reference collects these too), its rows in `orderBy`
+    * order ([[sorted]]). Returns the number of rows written, so callers
+    * need no separate `count()` job. */
+  def writeJsonArray(df: DataFrame, path: String, orderBy: String*): Int =
+    writeObject(sorted(df, orderBy).toJSON.collect(), "[\n", "\n]", path)
 
   /** S3: wrapped-JSON sink — rows under a top-level key
-    * (`minio_connector.py:82-112`). Returns the number of rows
-    * written. */
-  def writeWrappedJson(df: DataFrame, key: String, path: String): Int = {
-    val rows = df.toJSON.collect()
-    val body = rows.mkString(s"""{"$key": [""" + "\n", ",\n", "\n]}")
+    * (`minio_connector.py:82-112`), in `orderBy` order ([[sorted]]).
+    * Returns the number of rows written. */
+  def writeWrappedJson(df: DataFrame, key: String, path: String, orderBy: String*): Int =
+    writeObject(sorted(df, orderBy).toJSON.collect(),
+      s"""{"$key": [""" + "\n", "\n]}", path)
+
+  /** `df` sorted by `orderBy` (ascending, nulls first, as `orderBy`
+    * sorts) when it names columns. A JSON sink collects its rows to the
+    * driver anyway, so they are sorted in one task
+    * (`coalesce(1).sortWithinPartitions`): `orderBy`'s order with no
+    * exchange, where a global `orderBy` adds a range exchange and a
+    * sampling job for its bounds. The documents these sinks write are
+    * per-video and small by design (class doc). */
+  private def sorted(df: DataFrame, orderBy: Seq[String]): DataFrame =
+    if (orderBy.isEmpty) df
+    else df.coalesce(1).sortWithinPartitions(orderBy.map(df.col): _*)
+
+  private def writeObject(rows: Array[String], open: String, close: String,
+      path: String): Int = {
     val p = Paths.get(path)
     Files.createDirectories(p.getParent)
-    Files.write(p, body.getBytes("UTF-8"),
+    Files.write(p, rows.mkString(open, ",\n", close).getBytes("UTF-8"),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     rows.length
   }

@@ -14,10 +14,12 @@ import graft.schema.DomainConfig
   * (`Preprocess_Json_Data/preprocessing/basic_preprocessing_*.py`). Every
   * stage is a narrow transformation (no shuffle) and one projection, so
   * the flattened plan stays a short chain however many columns a domain
-  * renames, fills or parses. The final frame regroup adds two
-  * exchanges: a hash exchange on the frame key for the aggregate, then
-  * the range exchange of its `orderBy`, whose partition bounds cost a
-  * sampling job of their own. The whole pipeline is a single Catalyst
+  * renames, fills or parses. The final frame regroup adds one hash
+  * exchange on the frame key, for its aggregate. Its frames are a row
+  * set: the processed JSON sink puts them in [[frameKeys]] order
+  * ([[graft.lake.Lake.writeWrappedJson]]), which costs no exchange
+  * there, where an `orderBy` here cost a range exchange and the
+  * sampling job of its bounds. The whole pipeline is a single Catalyst
   * plan, codegen'd end to end, with no collect() on the data path
   * (reference boundary #3 eliminated).
   */
@@ -156,13 +158,18 @@ object Normalize {
     stages.foldLeft(df)((d, f) => f(d))
   }
 
+  /** The frame-level columns of `cfg` that `df` has: the key a frame
+    * regroup groups by, and the order of its frames. */
+  def frameKeys(cfg: DomainConfig, df: DataFrame): Seq[String] =
+    cfg.frameCols.filter(df.columns.contains)
+
   /** A1/A2 deterministic frame regroup: rebuild the detection struct
     * (F7) and collect per frame, ordered by a sequence key inside
     * sort_array — the reference's bare collect_list order is an accident
     * of single-partition locality (SURVEY §2.5 A1). Empty frames get
-    * `[]` back (J1 semantics without the extra join). */
+    * `[]` back (J1 semantics without the extra join). The frames come
+    * in no order; order them by [[frameKeys]]. */
   def regroupByFrame(cfg: DomainConfig, detectionFields: Seq[String])(df: DataFrame): DataFrame = {
-    val frameKeys = cfg.frameCols.filter(df.columns.contains)
     val present = detectionFields.filter(df.columns.contains)
     val withFlag = if (df.columns.contains("_empty_frame")) df
       else df.withColumn("_empty_frame", lit(false))
@@ -171,12 +178,7 @@ object Normalize {
     // deterministic under any partitioning (collect_list alone is not);
     // the when() maps empty frames to null, which collect_list drops,
     // restoring `[]` without the reference's extra all-frames join.
-    withFlag.groupBy(frameKeys.map(col): _*)
+    withFlag.groupBy(frameKeys(cfg, df).map(col): _*)
       .agg(sort_array(collect_list(when(!col("_empty_frame"), det))).as("detections"))
-      .orderBy(frameKeys.map(col): _*)
   }
-
-  /** End-to-end basic preprocessing for one domain. */
-  def apply(cfg: DomainConfig, detectionFields: Seq[String])(raw: DataFrame): DataFrame =
-    regroupByFrame(cfg, detectionFields)(flatten(cfg)(raw))
 }

@@ -390,28 +390,26 @@ object Views {
     * tie-break, plus zero-defaulted average confidence/speed;
     * detections without a tracker_id are skipped (lines 44-46).
     *
-    * Plan shape: each attribute's mode is a map-side-combined count on
-    * (tracker, value) + one rank window — the shuffled volume is the
-    * DISTINCT pairs, not the detections — and the join chain stays on
-    * the tracker_id partitioning established by the first aggregate. */
+    * Plan shape: one hash exchange on tracker_id, which ships the
+    * detections. A window over the tracker takes the two averages
+    * (adding the rows in the order a hash aggregate would), then one
+    * aggregate collects each tracker's attributes once and takes the
+    * five modes from that array ([[graft.enrich.Enrich.modeOf]]). */
   def vehicleLegacyRecords(detections: DataFrame): DataFrame = {
     import graft.enrich.Enrich
-    val valid = detections.filter(col("tracker_id").isNotNull)
     val attrs = Seq("class_id", "vehicle_type", "vehicle_color",
       "vehicle_direction", "vehicle_lane")
-    val avgs = valid.groupBy(col("tracker_id")).agg(
-      coalesce(avg(col("confidence")), lit(0.0)).as("average_confidence"),
-      coalesce(avg(col("vehicle_speed")), lit(0.0)).as("average_speed"))
-    val withModes = attrs.foldLeft(avgs) { (acc, a) =>
-      acc.join(
-        Enrich.mode(
-          valid.select(col("tracker_id"), col("frame_number"), col(a)),
-          "tracker_id", a),
-        Seq("tracker_id"), "left")
-    }
-    withModes.select(
-      col("tracker_id") +:
-        attrs.map(a => col(s"mode_$a").as(a)) :+
-        col("average_confidence") :+ col("average_speed"): _*)
+    val tracker = Window.partitionBy(col("tracker_id"))
+    val valid = detections.filter(col("tracker_id").isNotNull).select(col("*"),
+      avg(col("confidence")).over(tracker).as("_confidence_avg"),
+      avg(col("vehicle_speed")).over(tracker).as("_speed_avg"))
+    // bound to `valid`: by name, inside a higher-order function's
+    // argument, an attribute would resolve to the output alias of its mode
+    val seen = collect_list(struct(valid("frame_number").as("f") +: attrs.map(valid(_)): _*))
+    val modes = attrs.map(a => Enrich.modeOf(
+      transform(seen, r => struct(r.getField(a).as("v"), r.getField("f").as("f")))).as(a))
+    valid.groupBy(col("tracker_id")).agg(modes.head, modes.tail ++ Seq(
+      coalesce(first(col("_confidence_avg")), lit(0.0)).as("average_confidence"),
+      coalesce(first(col("_speed_avg")), lit(0.0)).as("average_speed")): _*)
   }
 }

@@ -1,35 +1,26 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{CosineSimQ, ModeAgg}
+import graft.functions.CosineSimQ
 
 class FunctionsSpec extends SparkSpec {
 
-  test("ModeAgg matches Counter semantics: count desc, first-seen tie-break") {
+  test("Enrich.modeOf: count desc, then first frame, then value by UTF-8 bytes") {
     import spark.implicits._
-    // b and c tie at 2; c first seen at ord 0 → c wins
-    val df = Seq(("c", 0L), ("b", 1L), ("b", 3L), ("c", 4L), ("a", 2L))
-      .toDF("v", "ord")
-    val got = df.agg(ModeAgg.column(col("v"), col("ord")).as("mode"))
-      .collect().head.getString(0)
-    assert(got == "c")
-    // clear winner
-    val df2 = Seq(("x", 9L), ("y", 1L), ("y", 2L)).toDF("v", "ord")
-    assert(df2.agg(ModeAgg.column(col("v"), col("ord"))).collect().head.getString(0) == "y")
-    // nulls ignored; all-null → null
-    val df3 = Seq((null.asInstanceOf[String], 1L)).toDF("v", "ord")
-    assert(df3.agg(ModeAgg.column(col("v"), col("ord"))).collect().head.isNullAt(0))
-  }
-
-  test("ModeAgg agrees with the window-based mode on real data") {
-    val events = graft.core.Tables(spark, "/root/testdata/sf0.001").events
-    val viaAgg = events.groupBy(col("user_id"))
-      .agg(ModeAgg.column(col("event_type"), col("event_id")).as("m"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val viaWindow = graft.enrich.Enrich.mode(
-      events.withColumn("frame_number", col("event_id")), "user_id", "event_type")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(viaAgg == viaWindow)
+    def mode(rows: Seq[(String, Long)]): String =
+      rows.toDF("v", "frame_number")
+        .agg(graft.enrich.Enrich.modeOf(collect_list(
+          struct(col("v").as("v"), col("frame_number").as("f")))))
+        .collect().head.getString(0)
+    // b and c tie at 2; c first seen at frame 0 → c wins
+    assert(mode(Seq(("c", 0L), ("b", 1L), ("b", 3L), ("c", 4L), ("a", 2L))) == "c")
+    assert(mode(Seq(("x", 9L), ("y", 1L), ("y", 2L))) == "y")
+    // nulls are not counted; none left → null
+    assert(mode(Seq((null, 0L), (null, 1L), ("z", 5L))) == "z")
+    assert(mode(Seq((null, 1L))) == null)
+    // a tie on count and frame: U+FFFF sorts after U+1F600 in UTF-16
+    // code units but before it in UTF-8 bytes, which engines compare
+    assert(mode(Seq(("\uffff", 5L), ("\ud83d\ude00", 5L))) == "\uffff")
   }
 
   test("CosineSimQ equals the interpreted quantized fold on random vectors") {

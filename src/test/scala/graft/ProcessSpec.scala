@@ -22,8 +22,15 @@ class ProcessSpec extends SparkSpec {
     * JSON sinks, two zone writes, the refined frame's checkpoint, and
     * AQE's per-stage jobs under them. Re-parsing the document per sink
     * and counting rows with extra jobs ran 36; ranking each mode with a
-    * window and joining the movement angles back ran 19. */
-  private val VehicleUploadJobs = 17
+    * window and joining the movement angles back ran 19; joining the
+    * lane mode and the time per direction back, and an `orderBy` before
+    * each JSON sink, ran 17. */
+  private val VehicleUploadJobs = 8
+
+  /** Jobs one upload of the people test's wrapped document runs on
+    * `local[4]`. Joining each of the three modes back, and an `orderBy`
+    * before each JSON sink, ran 19. */
+  private val PeopleUploadJobs = 9
 
   private val vehicleDoc =
     """[{"frame_number": 0, "detections": [
@@ -207,7 +214,8 @@ class ProcessSpec extends SparkSpec {
                  "bbox": [15.0, 25.0, 115.0, 225.0], "in_restricted_area": true}]},
              {"frame_number": 2, "timestamp": "2025-05-06 06:41:10", "detections": []}
            ]}""")
-      val (lines, _) = upload("people", f.toString, root)
+      val (lines, jobs) = upload("people", f.toString, root)
+      assert(jobs <= PeopleUploadJobs, s"$jobs jobs for one upload")
       val refined = rowsByKey[Long](
         spark.read.parquet(s"$root/refine/people_detection"), "tracker_id")
       assert(refined.keySet == Set(2L, 3L))

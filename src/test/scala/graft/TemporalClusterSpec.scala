@@ -76,13 +76,6 @@ class TemporalClusterSpec extends SparkSpec {
     assert(star(59L) === 0L && star(104L) === 100L && star(201L) === 200L)
   }
 
-  test("ModeAgg value tie-break orders by UTF-8 bytes, not UTF-16") {
-    // U+FFFF sorts AFTER U+1F600 in UTF-16 code units but BEFORE it in
-    // UTF-8 bytes; engines compare binary UTF-8
-    val buf = Map("￿" -> (2L, 5L), "😀" -> (2L, 5L))
-    assert(graft.functions.ModeAgg.finish(buf) === "￿")
-  }
-
   test("connectedComponents converges past the edge direction") {
     // min id sits at the END of the chain: propagation must flow "up"
     val edges = Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L)).toDF("src", "dst")

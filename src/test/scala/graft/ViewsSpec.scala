@@ -36,6 +36,30 @@ class ViewsSpec extends SparkSpec {
     assert(splits("VehicleInfo").count() == 2)
   }
 
+  test("people splits project the four aspects of the enriched record (D11)") {
+    def det(t: Int, g: String) =
+      s"""{"tracker_id": $t, "confidence": 0.5, "gender": "$g", "age": 30,
+         "bbox": [0.0, 0.0, 10.0, 10.0], "in_restricted_area": ${t == 2}}"""
+    val doc = s"""{"video_metadata": {"filename": "a.mp4"}, "frame_detections": [
+      {"frame_number": 0, "timestamp": "2025-05-06 06:41:00",
+       "detections": [${det(1, "Man")}, ${det(2, "Woman")}]},
+      {"frame_number": 1, "timestamp": "2025-05-06 06:41:05",
+       "detections": [${det(2, "Woman")}, ${det(3, "Unknown")}]}]}"""
+    val refined = Enrich.people(Normalize.flatten(DomainConfig.people)(readJsonFixture(doc)))
+    val splits = Views.peopleSplits(refined)
+    assert(splits.map { case (k, v) => k -> v.columns.toSeq } == Map(
+      "PersonalInfo" -> Seq("tracker_id", "age", "gender", "carrying"),
+      "Activity" -> Seq("tracker_id", "first_detection", "last_detection",
+        "duration_seconds", "frame_count"),
+      "Security" -> Seq("tracker_id", "entered_restricted_area",
+        "restricted_area_entry_time"),
+      "Confidence" -> Seq("tracker_id", "confidence_avg")))
+    assert(splits.values.map(_.count()).toSet == Set(3L))
+    val security = rowsByKey[Long](splits("Security"), "tracker_id")
+    assert(security(2L).getAs[Boolean]("entered_restricted_area"))
+    assert(!security(1L).getAs[Boolean]("entered_restricted_area"))
+  }
+
   test("distribution + numeric summary (D11 statistics)") {
     val dist = Views.distribution(refined, "vehicle_type").collect()
     assert(dist.map(r => r.getString(0) -> r.getLong(1)).toMap

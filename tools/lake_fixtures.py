@@ -20,7 +20,11 @@ writes:
 - school: events with role lists and alert levels, two per frame;
 - common: a flat detection array keyed by `object_id`, some of it
   untracked (null id);
-- pose: nested keypoints, no refine stage (pass-through).
+- pose: nested keypoints, no refine stage (pass-through);
+- vehicle `crowd.json` and people `crowd.json`: 40 frames of 320
+  trackers each, more keys than an object hash aggregate holds before
+  it falls back to sorting (128 per task), with inexact confidences and
+  speeds, so a change in the order an aggregate adds doubles shows.
 
 Values come from small alphabets, so the per-entity modes meet count
 ties; safety's tracker 2 and school's event 103 tie on count and on
@@ -169,22 +173,58 @@ def pose(rnd):
         for f in range(FRAMES)]
 
 
+CROWD, CROWD_FRAMES = 320, 40
+
+
+def vehicle_crowd(rnd):
+    return [{"frame_number": f, "detections": [
+        {"tracker_id": t, "confidence": round(rnd.uniform(0.3, 1.0), 3),
+         "bbox": [f * 2.0 + t, t * 3.0, f * 2.0 + t + 40, t * 3.0 + 30],
+         "vehicle_type": ["car", "truck", "bus"][t % 3],
+         "vehicle_color": ["red", "blue"][t % 2],
+         "vehicle_speed": round(rnd.uniform(0, 90), 1),
+         "vehicle_direction": rnd.choice(["Up", "Down"]),
+         "vehicle_lane": rnd.choice(["Left Lane", "Middle Lane", "Right Lane"]),
+         "stopped": rnd.random() < 0.2,
+         "red_light_violation": rnd.random() < 0.05,
+         "line_crossing": rnd.random() < 0.1}
+        for t in range(1, CROWD + 1) if (f + t) % 7]}
+        for f in range(CROWD_FRAMES)]
+
+
+def people_crowd(rnd):
+    frames = [{"frame_number": f, "timestamp": ts(f), "detections": [
+        {"tracker_id": t, "confidence": round(rnd.uniform(0.3, 1.0), 3),
+         "gender": rnd.choice(["Man", "Woman", "Unknown"]), "age": 20 + rnd.randint(0, 3),
+         "bbox": [t * 2.0, 20.0, t * 2.0 + 100, 220.0],
+         "in_restricted_area": rnd.random() < 0.1}
+        for t in range(1, CROWD + 1) if (f + t) % 7]}
+        for f in range(CROWD_FRAMES)]
+    return {"video_metadata": {"filename": "crowd.mp4", "duration_seconds": CROWD_FRAMES / 2.0},
+            "frame_detections": frames}
+
+
 def write_fixtures(raw_dir):
     """Writes every document; returns [(domain, glob)] to upload."""
-    docs = {"vehicle": vehicle, "people": people, "parking": parking,
-            "retail": retail, "animal": animal, "pose": pose,
-            "safety": safety, "school": school, "common": common}
+    docs = [("vehicle", "clip.json", vehicle), ("people", "clip.json", people),
+            ("parking", "clip.json", parking), ("retail", "clip.json", retail),
+            ("animal", "clip.json", animal), ("pose", "clip.json", pose),
+            ("safety", "clip.json", safety), ("school", "clip.json", school),
+            ("common", "clip.json", common),
+            ("vehicle", "crowd.json", vehicle_crowd), ("people", "crowd.json", people_crowd)]
     uploads = []
-    for i, (domain, make) in enumerate(docs.items()):
+    for i, (domain, name, make) in enumerate(docs):
         d = os.path.join(raw_dir, domain)
         os.makedirs(d, exist_ok=True)
         body = json.dumps(make(random.Random(1000 + i)), indent=1)
-        with open(os.path.join(d, "clip.json"), "w") as f:
+        with open(os.path.join(d, name), "w") as f:
             f.write(body)
-        if domain == "vehicle":
+        path = os.path.join(d, name)
+        if (domain, name) == ("vehicle", "clip.json"):
             with open(os.path.join(d, "clip_resent.json"), "w") as f:
                 f.write(body[:300])
-        uploads.append((domain, os.path.join(d, "*.json" if domain == "vehicle" else "clip.json")))
+            path = os.path.join(d, "clip*.json")
+        uploads.append((domain, path))
     return uploads
 
 

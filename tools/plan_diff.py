@@ -8,8 +8,8 @@ PlanDump writes <query>_<suffix>.txt; files pair up by query name (the
 part before the last "_<suffix>"). Before diffing, each plan drops what
 differs between two runs of the same code: expression, plan and RDD ids,
 the source line an RDD was made at, scratch and checkout paths
-(`file:/.../target/tmp/p<pid>/tx_x_3/...`), file UUIDs and per-process
-scratch counters. Prints one unified diff per
+(`file:/.../target/tmp/p<pid>/tx_x_3/...`), file UUIDs, per-process
+scratch counters and the numbers of lambda variables (`x_62`). Prints one unified diff per
 query whose normalised plans differ, then a summary line; exits 1 if any
 differ or a query is missing on one side.
 """
@@ -26,6 +26,8 @@ RULES = [
     (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"),
      "<uuid>"),
     (re.compile(r"(<scratch>/[A-Za-z0-9_]+?)_\d+\b"), r"\1_N"),
+    # lambda variables of the DataFrame API take a JVM-wide counter
+    (re.compile(r"\b([xyz])_\d+#N"), r"\1_N#N"),
 ]
 
 
