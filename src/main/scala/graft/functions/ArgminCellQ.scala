@@ -19,12 +19,11 @@ import org.apache.spark.sql.types._
   * is kept strictly (`<`), the first minimum wins — identical to the
   * relational argmin's (dist2, cell) ordering.
   *
-  * This collapses the assignment pipeline guide-§2.4-style: where
-  * [[graft.operators.Similarity]]'s `argminByDist` materializes N·k
-  * scored rows through a crossJoin + min_by exchange and then joins the
-  * (vec_id, cell) result BACK to the embedding row (a second exchange),
-  * this computes the cell ON the embedding row — no exchange at all.
-  * Same integers, same tie-break, so assignments can never differ.
+  * It computes the cell ON the embedding row — no exchange at all —
+  * where [[graft.operators.Similarity]]'s dim-join ranker `rankedTo`
+  * materializes N·d·k rows through an aggregate and a rank window.
+  * Same integers, same tie-break, so assignments can never differ
+  * (`KernelEquivalenceSpec`).
   */
 case class ArgminCellQ(first: Expression, second: Expression,
     third: Expression) extends TernaryExpression {

@@ -63,64 +63,6 @@ object Cluster {
     labels
   }
 
-  /** Alternating large-star / small-star CC (the MapReduce-and-beyond
-    * star-contraction algorithm): converges in O(log² n) rounds on ANY
-    * graph, vs hash-min's O(diameter) — the scale choice when
-    * components can be path-shaped (temporal chains, link threads),
-    * where label propagation would need thousands of shuffle rounds.
-    *
-    * Each round: for every vertex u with neighborhood Γ(u) and
-    * m = min(Γ(u) ∪ {u}), large-star rewires the LARGER neighbors
-    * (v > u) to m; small-star rewires the smaller-or-equal ones and u
-    * itself. The edge set shrinks toward stars rooted at component
-    * minima; fixpoint = edge set unchanged (checked exactly with a
-    * symmetric except, not a checksum). Returns (id, label) with
-    * label = min id of the component — same contract as
-    * [[connectedComponents]]. */
-  def connectedComponentsStar(edges: DataFrame, maxRounds: Int = 60): DataFrame = {
-    def canon(df: DataFrame): DataFrame = df
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
-    def bothDirs(c: DataFrame): DataFrame =
-      c.select(col("a").as("u"), col("b").as("v"))
-        .union(c.select(col("b").as("u"), col("a").as("v")))
-    def minsOf(adj: DataFrame): DataFrame =
-      adj.groupBy(col("u")).agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("m"))
-    def star(c: DataFrame, large: Boolean): DataFrame = {
-      val adj = bothDirs(c)
-      val withM = adj.join(minsOf(adj), Seq("u"))
-      val rewired =
-        if (large) withM.filter(col("v") > col("u"))
-          .select(col("v").as("a"), col("m").as("b"))
-        else withM.filter(col("v") < col("u"))
-          .select(col("v").as("a"), col("m").as("b"))
-          .union(minsOf(adj).select(col("u").as("a"), col("m").as("b")))
-      canon(rewired)
-    }
-    val verts = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct().localCheckpoint()
-    var cur = canon(edges.select(col("src").as("a"), col("dst").as("b")))
-      .localCheckpoint()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      val next = star(star(cur, large = true), large = false).localCheckpoint()
-      converged = next.exceptAll(cur).isEmpty && cur.exceptAll(next).isEmpty
-      cur = next
-      round += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"star contraction did not converge in $maxRounds rounds")
-    // fixpoint edges are stars (a = component min < b)
-    verts
-      .join(cur.select(col("b").as("id"), col("a").as("label")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-  }
-
   /** Fixed-iteration PageRank with integer-quantized ranks (1e-6
     * units) so every engine computes bit-identical values — no float
     * accumulation order to disagree on. Per iteration:

@@ -132,31 +132,6 @@ object Dedup {
       .orderBy(col("a"), col("b"))
   }
 
-  /** spark.ml MinHashLSH variant (SURVEY §7.1.9): token-set hashing via
-    * HashingTF → MinHashLSH.approxSimilarityJoin. Seeded, but its hash
-    * family is JVM-internal — not oracle-expressible, so the custom
-    * [[minhashLsh]] is the verified path; this one demonstrates the
-    * library route and cross-checks it on planted data. */
-  def minhashLshMl(spark: SparkSession, dir: String,
-      jaccardDistanceThreshold: Double = 0.5): DataFrame = {
-    import org.apache.spark.ml.feature.{HashingTF, MinHashLSH, Tokenizer}
-    val t = Tables(spark, dir)
-    val docs = t.documents.select(col("doc_id"), col("text"))
-    val tokens = new Tokenizer().setInputCol("text").setOutputCol("tokens")
-      .transform(docs)
-    val tf = new HashingTF().setInputCol("tokens").setOutputCol("features")
-      .setBinary(true).setNumFeatures(1 << 18)
-      .transform(tokens)
-    val model = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(4).setSeed(42L)
-      .fit(tf)
-    model.approxSimilarityJoin(tf, tf, jaccardDistanceThreshold, "dist")
-      .select(col("datasetA.doc_id").as("a"), col("datasetB.doc_id").as("b"),
-        col("dist"))
-      .filter(col("a") < col("b"))
-      .orderBy(col("a"), col("b"))
-  }
-
   /** Embedding-cosine near-dup over an arbitrary corpus of
     * (label, vec_id, embedding): pairs within the same coarse bucket
     * (label — the IVF blocking that survives 100 TB) whose quantized

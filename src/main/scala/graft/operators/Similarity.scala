@@ -10,8 +10,7 @@ import graft.core.Tables
   *
   * - Brute-force cosine top-k is the exact baseline: broadcast the
   *   (small) query set against the full table — one scan, no shuffle of
-  *   the big side, per-partition local top-k then global top-k via the
-  *   rank window.
+  *   the big side, then the per-query rank window.
   * - The IVF variant prunes to the query's coarse partition (here the
   *   `label` column stands in for the nearest-centroid assignment): at
   *   scale the bucket equi-join touches 1/k of the data — the path that
@@ -23,61 +22,88 @@ import graft.core.Tables
   *   `graft.IndexCatalog` maps each serving query to the index it
   *   reads, for the warm-ups in `Bench` and `PlanDump`.
   *
+  * Every cell-probe query, indexed or not, is built from one of each:
+  * - one ranker: [[probeList]] ranks each query's nearest cells (the
+  *   codegen [[rankedByDist]] under the broadcast bound, the dim-join
+  *   [[rankedTo]] past it), and [[assign]] / [[withArgminCell]] give
+  *   every vector its argmin cell;
+  * - one trainer: [[lloyd]], deterministic Lloyd k-means (the kernel
+  *   form under [[centsBounded]], the relational form past it);
+  * - one scorer: [[topkByCell]] ranks probed members by exact cosine,
+  *   and `VectorIndex.sq8Topk` / `adcTopk` cut code scans before the
+  *   exact rerank; every per-query cut is the one [[perQuery]] window.
+  * The unindexed queries call these on the corpus, so each shares its
+  * answer (and oracle) with the standing index that serves it.
+  *
   * Numerics: embeddings are quantized to exact integers
-  * (floor(x·10⁴ + 0.5)), so dot products and norms are
+  * (floor(x·10⁴ + 0.5), [[E4]]), so dot products and norms are
   * order-independent integer sums (all < 2⁵³); the final cosine is one
   * deterministic double expression. This keeps results bit-identical
   * across engines/partitionings — a float fold would not be.
   */
 object Similarity {
 
+  /** The e4 quantization of a float `x`, as SQL: floor(x·10⁴ + 0.5). */
+  private[graft] val E4 = "CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)"
+
+  /** The half-up integer mean floor(s/n + 0.5) of integer columns `s`
+    * and `n`: exact-integer IEEE division, identical on every engine. */
+  private def halfUpMean(s: String, n: String): Column =
+    expr(s"CAST(floor(CAST($s AS DOUBLE) / CAST($n AS DOUBLE) + 0.5) AS BIGINT)")
+
+  /** Each query's first `n` rows of `df` by `order`, numbered from 1 in
+    * column `rn`: the one per-`qid` top-k window of every ranking. */
+  private[operators] def perQuery(df: DataFrame, n: Int, rn: String = "rn")(
+      order: Column*): DataFrame =
+    df.withColumn(rn, row_number().over(Window.partitionBy(col("qid")).orderBy(order: _*)))
+      .filter(col(rn) <= n)
+
+  /** Exact-cosine top-k of candidate pairs (qid, q_emb, vec_id,
+    * embedding): (qid, nid, cos_e6, rn), cosine desc then vec_id, the
+    * query itself excluded. Scored by the codegen
+    * [[graft.functions.CosineSimQ]]. */
+  private def rankByCosine(pairs: DataFrame, k: Int): DataFrame =
+    perQuery(pairs.filter(col("vec_id") =!= col("qid"))
+      .withColumn("cos_e6",
+        graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("embedding"))), k)(
+      col("cos_e6").desc, col("vec_id"))
+      .select(col("qid"), col("vec_id").as("nid"), col("cos_e6"),
+        col("rn").cast("long").as("rn"))
+      .orderBy(col("qid"), col("rn"))
+
+  /** Exact cosine top-k of the 5 query vectors over the corpus, or over
+    * the corpus rows matching `cand` (the ground truth of a filtered
+    * serve); `sameLabelOnly` blocks by label. */
   private[operators] def topk(spark: SparkSession, dir: String, k: Int,
-      sameLabelOnly: Boolean): DataFrame = {
+      sameLabelOnly: Boolean, cand: Option[Column] = None): DataFrame = {
     val base = Tables(spark, dir).embeddings
     val queries = base.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
         col("label").as("q_label"))
-    val joined =
+    val corpus = cand.fold(base)(c => base.filter(c))
+    rankByCosine(
       if (sameLabelOnly)
-        base.join(broadcast(queries), col("label") === col("q_label"))
-      else
-        base.crossJoin(broadcast(queries))
-    val scored = joined
-      .filter(col("vec_id") =!= col("qid"))
-      // native codegen'd expression (graft.functions.CosineSimQ) — the
-      // interpreted aggregate(zip_with(...)) fold costs ~10× more
-      .withColumn("cos_e6",
-        graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("embedding")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_e6").desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("vec_id").as("nid"), col("cos_e6"), col("rn").cast("long").as("rn"))
-      .orderBy(col("qid"), col("rn"))
+        corpus.join(broadcast(queries), col("label") === col("q_label"))
+      else corpus.crossJoin(broadcast(queries)), k)
   }
 
   /** Exact brute-force cosine top-10 for 5 query vectors. */
   def cosineTopk(spark: SparkSession, dir: String): DataFrame =
     topk(spark, dir, 10, sameLabelOnly = false)
 
-  /** IVF-pruned ANN: top-5 within the query's coarse bucket (label). */
   /** Per-label embedding centroids: quantize each component to e4
     * integers (the proven float-parity path), posexplode to
     * (label, dim) pairs, integer-sum in ONE shuffle, divide once at the
     * end (exact-integer IEEE division — bit-equal on every engine).
     * This is the IVF training step: the centroids are the coarse
     * quantizer [[annIvf]] probes. */
-  def centroids(spark: SparkSession, dir: String): DataFrame = {
-    val t = graft.core.Tables(spark, dir)
-    t.embeddings
-      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("label"), col("dim").cast("long").as("dim"),
-        expr("CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)").as("q"))
+  def centroids(spark: SparkSession, dir: String): DataFrame =
+    quantizedOf(Tables(spark, dir).embeddings, Seq("label"))
       .groupBy(col("label"), col("dim"))
       .agg(count(lit(1)).as("n"), sum(col("q")).as("sum_q"))
       .withColumn("centroid_e4",
         col("sum_q").cast("double") / col("n").cast("double"))
       .orderBy(col("label"), col("dim"))
-  }
 
   /** kNN majority-vote classification over the verified top-k neighbor
     * lists: predicted label = most voted among the 10 nearest (count
@@ -92,11 +118,7 @@ object Similarity {
         Seq("nid"))
       .groupBy(col("qid"), col("nlabel"))
       .agg(count(lit(1)).as("votes"), min(col("rn")).as("best_rn"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("votes").desc, col("best_rn"), col("nlabel"))
-    votes
-      .withColumn("vr", row_number().over(w))
-      .filter(col("vr") === 1)
+    perQuery(votes, 1, "vr")(col("votes").desc, col("best_rn"), col("nlabel"))
       .join(lab.select(col("vec_id").as("qid"), col("label").as("true_label")),
         Seq("qid"))
       .select(col("qid"), col("nlabel").as("predicted_label"),
@@ -105,88 +127,46 @@ object Similarity {
       .orderBy(col("qid"))
   }
 
+  /** IVF-pruned ANN: top-5 within the query's coarse bucket (label). */
   def annIvf(spark: SparkSession, dir: String): DataFrame =
     topk(spark, dir, 5, sameLabelOnly = true)
 
   /** TRUE IVF cell assignment: every vector goes to its nearest
-    * centroid by exact integer squared distance (argmin; cell-asc
-    * tie-break). The centroid is the half-up-rounded e4 integer mean —
-    * `floor(s/n + 0.5)` over exact integers is bit-identical IEEE on
-    * every engine — so distances are small exact longs at ANY corpus
-    * size and the argmin can never flip on a ulp.
-    *
-    * Plan: the k×64 centroid table is constant-size → broadcast; the
-    * (vector-dim × centroid) expansion aggregates map-side into one
-    * (vec_id, cell) shuffle — the canonical N·d·k IVF assignment cost,
-    * sharded by vector. */
-  /** Full centroid ranking per vector (vec_id, cell, dist2, crn) —
-    * crn=1 is the argmin home cell; crn ≤ nprobe are the multi-probe
-    * candidate cells. Shared by [[ivfAssign]] and
-    * [[annIvfMultiprobe]]. */
-  def ivfAssignRanked(spark: SparkSession, dir: String): DataFrame = {
-    val qe = qe4(spark, dir)
-    rankedAgainst(qe, labelCentroids(qe))
-  }
+    * label-seeded centroid ([[assign]]: exact integer squared distance,
+    * (dist2, cell) tie-break). The centroid is the half-up-rounded e4
+    * integer mean, so distances are small exact longs at ANY corpus
+    * size and the argmin can never flip on a ulp. `cell` casts back to
+    * the label alphabet's int32. */
+  def ivfAssign(spark: SparkSession, dir: String): DataFrame =
+    assign(Tables(spark, dir).embeddingsSpread,
+        labelCentroids(qe4(spark, dir)), bounded = true)
+      .withColumn("cell", col("cell").cast("int"))
+      .orderBy(col("vec_id"))
 
   /** (vec_id, label, dim, q): embeddings e4-quantized, one row per
     * coordinate — the shared front of the label-seeded IVF family. */
-  private[graft] def qe4(spark: SparkSession, dir: String): DataFrame = {
-    val q4 = "CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)"
-    Tables(spark, dir).embeddingsSpread
-      .select(col("vec_id"), col("label"),
-        posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("vec_id"), col("label"), col("dim").cast("long").as("dim"),
-        expr(q4).as("q"))
-  }
+  private[graft] def qe4(spark: SparkSession, dir: String): DataFrame =
+    quantizedOf(Tables(spark, dir).embeddingsSpread, Seq("vec_id", "label"))
 
   /** Label-seeded centroid table (cell, dim, c) — the half-up integer
     * mean per (label, dim). k·d rows, bounded by the label alphabet. */
   private[graft] def labelCentroids(qe: DataFrame): DataFrame =
     qe.groupBy(col("label").as("cell"), col("dim"))
       .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-      .select(col("cell"), col("dim"),
-        expr("CAST(floor(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) + 0.5) AS BIGINT)")
-          .as("c"))
-
-  /** Rank every vector in `qe` against every centroid in `cents`
-    * (vec_id, cell, dist2, crn): exact-integer squared distance,
-    * (dist2, cell) tie-break. `cents` is k·d — bounded by
-    * construction — hence the static broadcast. */
-  private[graft] def rankedAgainst(qe: DataFrame, cents: DataFrame): DataFrame = {
-    val dists = qe.select(col("vec_id"), col("dim"), col("q"))
-      .join(broadcast(cents), Seq("dim"))
-      .groupBy(col("vec_id"), col("cell"))
-      .agg(sum((col("q") - col("c")) * (col("q") - col("c"))).as("dist2"))
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("dist2"), col("cell"))
-    dists.withColumn("crn", row_number().over(w))
-  }
-
-  /** r16: argmin on the row via the kernel (same (dist2, cell)
-    * tie-break as the crn = 1 rank — `KernelEquivalenceSpec`); the
-    * N·d·k dim-join, its aggregate exchange, and the per-vector
-    * window sort are gone. `cell` casts back to the label alphabet's
-    * int32 so the declared schema is unchanged. */
-  def ivfAssign(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).embeddingsSpread
-      .select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(centPack(labelCentroids(qe4(spark, dir)))))
-      .select(col("vec_id"), graft.functions.ArgminCellQ
-        .argminCellQ(col("embedding"), col("cells"), col("cvecs")).as("m"))
-      .select(col("vec_id"), col("m.cell").cast("int").as("cell"),
-        col("m.dist2").as("dist2"))
-      .orderBy(col("vec_id"))
+      .select(col("cell"), col("dim"), halfUpMean("s", "n").as("c"))
 
   /** Product-quantization ANN (ADC — asymmetric distance computation,
     * Jégou et al., the standard 100 TB memory-compression path): the
     * 64-dim space splits into 8 subspaces of 8 dims; each subspace gets
-    * its own codebook (here: per-label subspace centroids — half-up e4
-    * integer means, the deterministic stand-in for a per-subspace
-    * kmeans); every vector is ENCODED as its 8 nearest sub-centroids
-    * (argmin of exact integer squared distance, code-asc tie-break).
-    * A query never touches raw corpus vectors again: its exact distance
-    * to every (subspace, code) centroid forms a constant-size lookup
-    * table, and the approximate distance to a corpus vector is the sum
-    * of 8 table lookups over that vector's codes.
+    * its own codebook ([[pqCodebook]]: per-label subspace centroids —
+    * half-up e4 integer means, the deterministic stand-in for a
+    * per-subspace kmeans); every vector is ENCODED on its row as its 8
+    * nearest sub-centroids ([[withPqCodes]]: exact integer squared
+    * distance, code-asc tie-break). A query never touches raw corpus
+    * vectors again: its exact distance to every (subspace, code)
+    * centroid forms a constant-size lookup table, and the approximate
+    * distance to a corpus vector is the sum of 8 table lookups over
+    * that vector's codes.
     *
     * Plan shape at scale: the codebook (8×k×8 values) and the query
     * distance tables (|Q|×8×k rows) are constant-size → broadcast; the
@@ -196,37 +176,14 @@ object Similarity {
     * map-side-combined sum per (query, vector). No shuffle ever carries
     * an embedding. */
   def pqAdc(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val t = Tables(spark, dir)
-    val q4 = "CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)"
-    // embeddingsSpread (ADVICE r11 #1): the N·d·8 subDist expansion
-    // below runs in-stage over this scan — on the raw single-split
-    // table one task would own the whole blowup
-    val qe = t.embeddingsSpread
-      .select(col("vec_id"), col("label"),
-        posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("vec_id"), col("label"), col("dim").cast("long").as("dim"),
-        expr(q4).as("q"))
-      .withColumn("sub", expr("dim div 8"))
-    val cb = qe
-      .groupBy(col("sub"), col("label").as("code"), col("dim"))
-      .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-      .select(col("sub"), col("code"), col("dim"),
-        expr("CAST(floor(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) + 0.5) AS BIGINT)")
-          .as("c"))
-    // r16: the corpus-side encode runs ON the row via the PqEncodeQ
-    // kernel (same integers, same code-asc tie-break as the old
-    // per-(vec, sub) window argmin — `KernelEquivalenceSpec`), so the
-    // N·d·|codes| subDist expansion now runs ONLY for the |Q|=5 query
-    // vectors' lookup tables. posexplode's position IS the subspace
-    // (codes are dim-ordered).
-    val codes = t.embeddingsSpread
-      .select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(cbPack(cb)))
-      .select(col("vec_id"), graft.functions.PqEncodeQ.pqEncodeQ(
-        col("embedding"), col("cb_codes"), col("cb_cvecs"), 8).as("carr"))
-      .select(col("vec_id"), posexplode(col("carr")).as(Seq("sub", "code")))
+    val qe = qe4(spark, dir)
+    val cb = pqCodebook(qe)
+    val codes = withPqCodes(Tables(spark, dir).embeddingsSpread
+        .select(col("vec_id"), col("embedding")), cb)
+      .select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
       .select(col("vec_id"), col("sub").cast("long").as("sub"), col("code"))
     val qdist = qe.filter(col("vec_id") < 5)
+      .withColumn("sub", expr(s"dim div $PqDimsPerSub"))
       .join(broadcast(cb), Seq("sub", "dim"))
       .groupBy(col("vec_id"), col("sub"), col("code"))
       .agg(sum((col("q") - col("c")) * (col("q") - col("c"))).as("d2"))
@@ -235,16 +192,14 @@ object Similarity {
       .filter(col("vec_id") =!= col("qid"))
       .groupBy(col("qid"), col("vec_id"))
       .agg(sum(col("d2")).as("adc_dist2"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_dist2"), col("vec_id"))
-    adc.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    perQuery(adc, k)(col("adc_dist2"), col("vec_id"))
       .select(col("qid"), col("vec_id").as("nid"), col("adc_dist2"),
         col("rn").cast("long").as("rn"))
       .orderBy(col("qid"), col("rn"))
   }
 
   /** (vec_id, dim, q): every embedding exploded to its e4-quantized
-    * integer coordinates — the input shape of the Lloyd iterations. */
+    * integer coordinates. */
   private[graft] def quantized(spark: SparkSession, dir: String): DataFrame =
     quantizedOf(Tables(spark, dir).embeddingsSpread)
 
@@ -255,141 +210,30 @@ object Similarity {
       keys: Seq[String] = Seq("vec_id")): DataFrame =
     emb.select(keys.map(col) :+ posexplode(col("embedding")).as(Seq("dim", "x")): _*)
       .select(keys.map(col) ++ Seq(col("dim").cast("long").as("dim"),
-        expr("CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)").as("q")): _*)
+        expr(E4).as("q")): _*)
 
-  /** Nearest-centroid assignment of every vector in `qe` against
-    * `cents` (cell, dim, c): exact integer squared distance, argmin
-    * with cell-asc tie-break. The centroid side is k·d rows, and the
-    * hint policy follows where k came from: a CALLER-FIXED small k
-    * (sim_ivf_kmeans k=8, view_kmeans_det k=4) bounds the side by
-    * construction — it broadcasts, like the SRP hyperplane table.
-    * [[kmeansAssign]]'s DEFAULT k=⌈√N⌉ GROWS with the corpus
-    * (N=10¹⁰, d=768 → ~80M rows), so that path carries NO static hint:
-    * AQE broadcasts from measured size while it fits and falls back to
-    * a shuffle join when it doesn't — the same no-data-dependent-hints
-    * rule PlanSpec enforces on the dedup pipelines. (Post-
-    * localCheckpoint the static planner sees UNKNOWN stats and plans a
-    * sort-merge join until runtime — measured 4× on the fixed-k bench
-    * queries — which is why the bounded case states its bound.)
-    * The expansion aggregates map-side into one (vec_id, cell) shuffle
-    * (the canonical N·d·k IVF assignment cost, sharded by vector). */
-  private def assignTo(qe: DataFrame, cents: DataFrame,
-      boundedK: Boolean = false): DataFrame = {
-    val centSide = if (boundedK) broadcast(cents) else cents
-    val dists = qe.join(centSide, Seq("dim"))
-      .groupBy(col("vec_id"), col("cell"))
-      .agg(sum((col("q") - col("c")) * (col("q") - col("c"))).as("dist2"))
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("dist2"), col("cell"))
-    dists.withColumn("arn", row_number().over(w)).filter(col("arn") === 1)
-      .select(col("vec_id"), col("cell"), col("dist2"))
+  /** (n, d) of an embedding frame: its row count and vector length, in
+    * one job. */
+  private[operators] def shape(emb: DataFrame): (Long, Long) = {
+    val r = emb.agg(count(lit(1)), max(size(col("embedding"))).cast("long")).head
+    (r.getLong(0), r.getLong(1))
   }
 
-  /** Deterministic fixed-iteration Lloyd k-means over e4-quantized
-    * integer coordinates — the TRAINED coarse quantizer whose k is a
-    * PARAMETER, independent of any label column (VERDICT r5 #3: the
-    * SemDeDup scale argument needs k ∝ √N, which a label-count
-    * quantizer cannot deliver).
-    *
-    * Every step is oracle-expressible and bit-identical cross-engine:
-    *  - init: the k vectors ranking first by (portable salted hash of
-    *    vec_id, vec_id) seed the centroids — hash-seeded, data-
-    *    independent of the label column, and a distributed top-k
-    *    (TakeOrdered), never a full sort;
-    *  - assign: exact integer squared distances (all < 2⁵³), argmin
-    *    with cell-asc tie-break — can never flip on a ulp;
-    *  - update: centroid = floor(Σq/n + 0.5), the half-up integer mean
-    *    (exact-integer IEEE division, identical everywhere). A cell
-    *    that loses all members vanishes in both engines.
-    *
-    * Returns the trained centroids (cell, dim, c). Each round's
-    * centroid table is k·d rows — localCheckpoint truncates the
-    * iteration's lineage at metadata size, so the final plan does not
-    * re-derive round i-1 inside round i. */
-  private def lloydCentroids(qe: DataFrame, k: Int, iters: Int,
-      boundedK: Boolean = false): DataFrame = {
-    val hashOrder = Seq(
-      graft.functions.PortableHash.phash(col("vec_id").cast("string"), 11).asc,
-      col("vec_id").asc)
-    val seedIds = qe.select(col("vec_id")).distinct()
-      .orderBy(hashOrder: _*).limit(k)
-    val wSeed = Window.orderBy(hashOrder: _*) // over k rows only
-    val seeds0 = seedIds
-      .withColumn("cell", (row_number().over(wSeed) - 1).cast("long"))
-    // default k=⌈√N⌉ seeds are corpus-proportional → no static hint;
-    // a caller-fixed k is bounded by construction → broadcast
-    val seeds = if (boundedK) broadcast(seeds0) else seeds0
-    var cents = qe.join(seeds, Seq("vec_id"))
-      .select(col("cell"), col("dim"), col("q").as("c"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val asg = assignTo(qe, cents, boundedK).select(col("vec_id"), col("cell"))
-      cents = qe.join(asg, Seq("vec_id"))
-        .groupBy(col("cell"), col("dim"))
-        .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-        .select(col("cell"), col("dim"),
-          expr("CAST(floor(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) + 0.5) AS BIGINT)")
-            .as("c"))
-        .localCheckpoint()
-    }
-    cents
-  }
+  /** The √N rule: k = ⌈√N⌉ cells keeps E[|cell|²] linear in N. */
+  private[operators] def sqrtK(n: Long): Int = math.ceil(math.sqrt(n.toDouble)).toInt
 
   /** Final (vec_id, cell, dist2) assignment under the Lloyd-trained
-    * quantizer. `k <= 0` picks k = ⌈√N⌉ — the SemDeDup rule that keeps
-    * E[|cell|²] linear in N, now the IMPLEMENTED behavior (the count
-    * is one scalar, metadata not data).
-    *
-    * Broadcast decision for the default path: k and d are DRIVER-KNOWN
-    * scalars here (the ⌈√N⌉ rule already paid the count; d is one
-    * limit-1 read), so the exact centroid-table volume k·d·24B is
-    * computable at plan time — the centroid side broadcasts only under
-    * a fixed 32 MB bound, a size-PROVEN broadcast rather than a blind
-    * data-dependent hint (N=10¹⁰, d=768 → k·d ≈ 7.7e7 rows ≈ 1.8 GB →
-    * over the bound → shuffle join, as it must). */
+    * quantizer ([[lloyd]], then [[assign]]). `k <= 0` picks
+    * k = ⌈√N⌉ — the SemDeDup rule that keeps E[|cell|²] linear in N
+    * (the count is one scalar, metadata not data). k is a public
+    * parameter, so a caller-supplied k proves the same k·d·24 B ≤ 32 MB
+    * bound as the default: a large k falls back to the shuffle join. */
   def kmeansAssign(spark: SparkSession, dir: String, k: Int = 0,
       iters: Int = 2): DataFrame = {
-    // one job for both scalars: N decides k, (k, d) decide the proven
-    // broadcast bound
-    val nd = Tables(spark, dir).embeddings
-      .agg(count(lit(1)).as("n"),
-        max(size(col("embedding"))).cast("long").as("d"))
-      .head
-    val kk =
-      if (k > 0) k
-      else math.ceil(math.sqrt(nd.getLong(0).toDouble)).toInt
-    // the proven k·d·24B ≤ 32MB bound applies to BOTH paths: k is a
-    // public parameter, so a caller-supplied k is NOT bounded by
-    // construction — a large k must fall back to the shuffle join just
-    // like a large ⌈√N⌉ (the d read costs one limit-1-style aggregate
-    // that the default path already pays).
-    val bounded = kk.toLong * nd.getLong(1) * 24L <= (32L << 20)
-    if (bounded) {
-      // r16: fast-kernel training + on-row final assignment (the
-      // kernel returns (cell, dist2) — [[assignTo]]'s exact argmin
-      // columns, `KernelEquivalenceSpec`). The N·d quantized
-      // checkpoint the relational path pins is never materialized;
-      // Lloyd re-reads the persisted NARROW frame instead.
-      val embT = Tables(spark, dir).embeddingsSpread
-        .select(col("vec_id"), col("embedding")).persist()
-      val cents = lloydCentroidsFast(embT, kk, iters).localCheckpoint()
-      embT.unpersist(blocking = false)
-      Tables(spark, dir).embeddingsSpread
-        .select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(centPack(cents)))
-        .select(col("vec_id"), graft.functions.ArgminCellQ
-          .argminCellQ(col("embedding"), col("cells"), col("cvecs")).as("m"))
-        .select(col("vec_id"), col("m.cell").as("cell"),
-          col("m.dist2").as("dist2"))
-        .orderBy(col("vec_id"))
-    } else {
-      // materialize the quantized input ONCE — Lloyd re-reads it every
-      // round (seed join, per-iteration assign + update, final
-      // assign); spark.ml's KMeans caches its input for the same
-      // reason. 8 B × N·d, transient, a fraction of the corpus itself.
-      val qe = quantized(spark, dir).localCheckpoint()
-      assignTo(qe, lloydCentroids(qe, kk, iters, bounded), bounded)
-        .orderBy(col("vec_id"))
-    }
+    val (n, d) = shape(Tables(spark, dir).embeddings)
+    val emb = Tables(spark, dir).embeddingsSpread
+    val (cents, bounded) = lloyd(emb, if (k > 0) k else sqrtK(n), iters, d)
+    assign(emb, cents, bounded).orderBy(col("vec_id"))
   }
 
   /** Oracle-able twin of the spark.ml `view_kmeans` (D11's optional
@@ -397,14 +241,16 @@ object Similarity {
     * points (embedding[0], embedding[1]), k=4 — per-cluster size and
     * exact-integer-division mean coordinates (e4 units). The spark.ml
     * variant stays as the library cross-check; this one hash-verifies
-    * against DuckDB. */
+    * against DuckDB. At d = 2 the relational Lloyd and [[assign]] are
+    * cheaper than the kernel form, whose fixed per-round cost (the
+    * centroid pack, the array fold) does not pay off over 2-D points. */
   def viewKmeansDet(spark: SparkSession, dir: String, k: Int = 4,
       iters: Int = 2): DataFrame = {
-    val qe2 = quantized(spark, dir).filter(col("dim") < 2)
-    val asg = assignTo(qe2, lloydCentroids(qe2, k, iters, boundedK = true),
-        boundedK = true)
-      .select(col("vec_id"), col("cell"))
-    qe2.join(asg, Seq("vec_id"))
+    val emb2 = Tables(spark, dir).embeddingsSpread
+      .select(col("vec_id"), slice(col("embedding"), 1, 2).as("embedding"))
+    val qe2 = quantizedOf(emb2)
+    qe2.join(assign(emb2, lloydRelational(qe2, k, iters), bounded = false)
+        .select(col("vec_id"), col("cell")), Seq("vec_id"))
       .groupBy(col("cell"), col("dim"))
       .agg(count(lit(1)).as("n"), sum(col("q")).as("s"))
       .groupBy(col("cell"))
@@ -422,36 +268,16 @@ object Similarity {
     * nprobe× candidate work for recall. Measured here (sf0.01,
     * near-uniform synthetic embeddings, recall@5 vs brute force):
     * nprobe=1 → 0.16, nprobe=3 → 0.52 — the knob is the point.
-    * Members still live only in their argmin cell, so the corpus side
-    * is unchanged; only the query's probe list (|Q|·nprobe rows,
-    * broadcast with the query vectors) grows. */
+    * Members live only in their argmin cell of the label-seeded
+    * quantizer. This is the indexed serve ([[annIndexed]]) over the
+    * corpus instead of the postings table: the same [[probeList]] and
+    * [[topkByCell]], so the two answers are equal. */
   def annIvfMultiprobe(spark: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 3): DataFrame = {
-    val t = Tables(spark, dir)
     val cents = labelCentroids(qe4(spark, dir)).localCheckpoint()
-    // r16: membership on the scan row via the kernel — the corpus-wide
-    // rank + join-back is gone; the probe RANKING below only ever
-    // touches the |Q|=5 query vectors
-    val base = withArgminCell(
-      t.embeddingsSpread.select(col("vec_id"), col("embedding")), cents)
-    val ranked = rankedAgainst(qe4(spark, dir).filter(col("vec_id") < 5), cents)
-    val queries = ranked
-      .filter(col("vec_id") < 5 && col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cell").as("q_cell"))
-      .join(t.embeddings.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("q_emb")),
-        Seq("qid"))
-    val scored = base.join(broadcast(queries), col("cell") === col("q_cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_e6",
-        graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("embedding")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_e6").desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("vec_id").as("nid"), col("cos_e6"),
-        col("rn").cast("long").as("rn"))
-      .orderBy(col("qid"), col("rn"))
+    topkByCell(withArgminCell(Tables(spark, dir).embeddingsSpread
+        .select(col("vec_id"), col("embedding")), cents),
+      probeList(spark, dir, cents, nprobe, bounded = true), k)
   }
 
   /** Recall@k of the IVF ANN path against the brute-force ground
@@ -472,40 +298,6 @@ object Similarity {
   def annRecallMultiprobe(spark: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 3): DataFrame =
     recallOf(spark, dir, annIvfMultiprobe(spark, dir, k, nprobe), k)
-
-  /** Auto-tuned nprobe — the recall/cost dial resolved from a TARGET
-    * instead of a hard-coded probe count: calibrate mean recall@k of
-    * the multi-probe path on the query sample against exact search
-    * (the standard IVF tuning loop — calibration touches the query
-    * sample's candidates, never the corpus), walking nprobe up until
-    * the target is met. Per-query monotonicity (more probes never lose
-    * a hit — `AnalyticsSamplingSpec`) makes the first nprobe meeting
-    * the target THE answer; no backtracking.
-    *
-    * Measured curve (recall@5): sf0.01, structureless embeddings —
-    * the honest worst case — nprobe=1 → 0.16, nprobe=3 → 0.52; the
-    * 10× replica with real cluster structure: nprobe=1 → 0.52,
-    * nprobe=3 → 0.84 (BASELINE.md). With the default 0.5 target the
-    * dial lands nprobe≈3 on structureless data and nprobe=1 once
-    * cells align with real structure — it adapts instead of paying
-    * 3× candidates unconditionally.
-    *
-    * Returns (chosen nprobe, the measured (nprobe, mean recall_e6)
-    * curve walked to get there). */
-  def autoNprobe(spark: SparkSession, dir: String, k: Int = 5,
-      targetE6: Long = 500000L, maxProbe: Int = 8): (Int, Seq[(Int, Long)]) = {
-    val curve = Seq.newBuilder[(Int, Long)]
-    var p = 1
-    while (p <= maxProbe) {
-      val meanE6 = annRecallMultiprobe(spark, dir, k, p)
-        .agg(expr("sum(recall_e6) div count(1)").as("m"))
-        .head().getLong(0)
-      curve += ((p, meanE6))
-      if (meanE6 >= targetE6) return (p, curve.result())
-      p += 1
-    }
-    (maxProbe, curve.result())
-  }
 
   private[graft] def recallOf(spark: SparkSession, dir: String,
       approxDf: DataFrame, k: Int): DataFrame =
@@ -532,29 +324,13 @@ object Similarity {
       .orderBy(col("qid"))
   }
 
-  /** ANN over the TRUE IVF cells: the query probes the cell its vector
-    * is assigned to and ranks the cell's members by exact cosine —
-    * [[annIvf]]'s shape with the label stand-in replaced by the real
-    * trained quantizer ([[ivfAssign]]). */
-  def annIvfTrue(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val assign = ivfAssign(spark, dir).select(col("vec_id"), col("cell"))
-    val base = Tables(spark, dir).embeddings
-      .select(col("vec_id"), col("embedding")).join(assign, Seq("vec_id"))
-    val queries = base.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
-        col("cell").as("q_cell"))
-    val scored = base.join(broadcast(queries), col("cell") === col("q_cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_e6",
-        graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("embedding")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_e6").desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("vec_id").as("nid"), col("cos_e6"),
-        col("rn").cast("long").as("rn"))
-      .orderBy(col("qid"), col("rn"))
-  }
+  /** ANN over the TRUE IVF cells: the query probes the one cell its
+    * vector is assigned to ([[ivfAssign]]'s argmin, which is the
+    * query's first-ranked probe) and ranks the cell's members by exact
+    * cosine — [[annIvf]]'s shape with the label stand-in replaced by
+    * the real quantizer. */
+  def annIvfTrue(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
+    annIvfMultiprobe(spark, dir, k, nprobe = 1)
 
   /** The label-seeded index's BUILD as its own declared query: trains
     * the quantizer, commits postings and centroids, re-registers the
@@ -599,32 +375,27 @@ object Similarity {
     topkByCell(members, probes, k)
   }
 
-  /** Ranked nearest-centroid assignment — [[assignTo]] without the
-    * argmin filter: every (vec_id, cell) pair with its exact integer
-    * squared distance and per-vector rank `crn`. The multiprobe
-    * front-end of the trained-quantizer family (crn = 1 is membership,
-    * crn ≤ nprobe is the probe list). Hint policy follows the caller's
-    * k-provenance, exactly as in [[assignTo]]. */
-  private[operators] def rankedTo(qe: DataFrame, cents: DataFrame,
-      boundedK: Boolean = false): DataFrame = {
-    val centSide = if (boundedK) broadcast(cents) else cents
+  // ----------------------------------------------------------------
+  // Ranking: every vector against a centroid table (cell, dim, c).
+  // ----------------------------------------------------------------
+
+  /** The dim-join ranker: every (vec_id, cell) pair of quantized
+    * coordinates `qe` (vec_id, dim, q) against `cents`, with its exact
+    * integer squared distance and per-vector rank `crn` ((dist2, cell)
+    * tie-break; crn = 1 is membership, crn ≤ nprobe the probe list).
+    * It materializes N·d·k rows through one aggregate and carries no
+    * broadcast hint, so it is the over-bound path: AQE broadcasts the
+    * centroid side from measured size while it fits and shuffles when
+    * it does not. */
+  private[graft] def rankedTo(qe: DataFrame, cents: DataFrame): DataFrame = {
     val dists = qe.select(col("vec_id"), col("dim"), col("q"))
-      .join(centSide, Seq("dim"))
+      .join(cents, Seq("dim"))
       .groupBy(col("vec_id"), col("cell"))
       .agg(sum((col("q") - col("c")) * (col("q") - col("c"))).as("dist2"))
     val w = Window.partitionBy(col("vec_id")).orderBy(col("dist2"), col("cell"))
     dists.withColumn("crn", row_number().over(w))
   }
 
-  /** The √N-rule coarse quantizer as one shared front: quantized
-    * coordinates (checkpointed once — Lloyd re-reads them every
-    * round), the Lloyd-trained k=⌈√N⌉ centroid table, and the proven
-    * broadcast bound for that k (k·d·24 B ≤ 32 MB; at N=10¹⁰, d=768
-    * the bound fails and every join below falls back to shuffle, as
-    * it must). This is the scale path BASELINE.md's round-8 vector
-    * measurements call for: with k ∝ √N the probed corpus fraction is
-    * nprobe/√N — it SHRINKS as the corpus grows — where any fixed k
-    * leaves serving Θ(nprobe/k · N) forever. */
   /** Centroid table (cell, dim, c) → one row per cell with the
     * dim-ordered quantized vector — the broadcast side of the codegen
     * assignment kernel. k rows; the HOF transform is interpreted but
@@ -648,12 +419,12 @@ object Similarity {
       .select(expr("transform(p, s -> s.cell)").as("cells"),
         expr("transform(p, s -> s.cvec)").as("cvecs"))
 
-  /** Adds the argmin `cell` column ON the embedding row (guide §2.4:
-    * the crossJoin against the one-row [[centPack]] is a broadcast of
-    * k·d longs, the kernel runs inside the row's codegen stage, and
-    * the former min_by exchange + (vec_id → cell) join-back both
-    * disappear). Exact integers, (dist2, cell) tie-break — proven
-    * bit-identical to the relational argmin (`KernelEquivalenceSpec`). */
+  /** Adds the argmin `cell` column ON the embedding row: the crossJoin
+    * against the one-row [[centPack]] is a broadcast of k·d longs, and
+    * the kernel runs inside the row's codegen stage — no exchange and
+    * no join back. Exact integers, (dist2, cell) tie-break — the
+    * dim-join ranker's crn = 1 (`KernelEquivalenceSpec`). Every column
+    * of `rows` rides along. */
   private[graft] def withArgminCell(rows: DataFrame, cents: DataFrame): DataFrame =
     rows.crossJoin(broadcast(centPack(cents)))
       .withColumn("cell", graft.functions.ArgminCellQ
@@ -661,17 +432,30 @@ object Similarity {
         .getField("cell"))
       .drop("cells", "cvecs")
 
+  /** Every vector of `emb` (vec_id, embedding) with its argmin cell:
+    * (vec_id, cell, dist2). Under the broadcast bound the
+    * [[graft.functions.ArgminCellQ]] kernel computes both on the row;
+    * past it the dim-join ranker's crn = 1. Same integers and
+    * tie-break either way. */
+  private[graft] def assign(emb: DataFrame, cents: DataFrame,
+      bounded: Boolean): DataFrame =
+    if (bounded) emb.select(col("vec_id"), col("embedding"))
+      .crossJoin(broadcast(centPack(cents)))
+      .select(col("vec_id"), graft.functions.ArgminCellQ
+        .argminCellQ(col("embedding"), col("cells"), col("cvecs")).as("m"))
+      .select(col("vec_id"), col("m.cell").as("cell"), col("m.dist2").as("dist2"))
+    else rankedTo(quantizedOf(emb), cents).filter(col("crn") === 1)
+      .select(col("vec_id"), col("cell"), col("dist2"))
+
   /** Ranked nearest-centroid assignment as N·k SCORED ROWS: embeddings
     * cross the broadcast per-cell centroid vectors, the native
     * [[graft.functions.Dist2Q]] computes each exact integer squared
     * distance in a whole-stage-codegen loop, and the (dist2, cell)
     * window ranks per vector. Every column of `emb` rides along beside
-    * (cell, dist2, crn). This is the bounded-k fast path — the
-    * relational dim-join ([[rankedTo]]) materializes N·d·k rows
-    * through a hash aggregate for the same answer (measured 55.7 s vs
-    * ~4 s on the 10× replica's 142-cell training) but carries no
-    * broadcast, so it remains the over-bound fallback. */
-  private[operators] def rankedByDist(emb: DataFrame, cents: DataFrame): DataFrame = {
+    * (cell, dist2, crn). The bounded twin of [[rankedTo]]: the same
+    * (cell, dist2, crn) without the N·d·k expansion
+    * (`KernelEquivalenceSpec`). */
+  private[graft] def rankedByDist(emb: DataFrame, cents: DataFrame): DataFrame = {
     val scored = emb.crossJoin(broadcast(centRows(cents)))
       .withColumn("dist2",
         graft.functions.Dist2Q.dist2Q(col("embedding"), col("cvec")))
@@ -680,74 +464,96 @@ object Similarity {
     scored.withColumn("crn", row_number().over(w))
   }
 
-  /** MEMBERSHIP (vec_id, cell) under the proven-bound hint policy —
-    * for build-side callers, which only ever need the argmin, never
-    * the full rank (probe ranking always runs over the |Q| query
-    * vectors alone): the bounded path runs the map-side-combining
-    * [[argminByDist]] kernel (no N·k window sort), the over-bound
-    * path the hint-free dim-join. Same integers, same tie-break. */
-  private def memberCells(spark: SparkSession, dir: String, cents: DataFrame,
-      bounded: Boolean): DataFrame =
-    if (bounded)
-      argminByDist(Tables(spark, dir).embeddingsSpread
-        .select(col("vec_id"), col("embedding")), cents)
-    else rankedTo(quantized(spark, dir), cents)
-      .filter(col("crn") === 1).select(col("vec_id"), col("cell"))
-
   /** The corpus rows WITH their argmin `cell` attached — the builders'
-    * postings input. Bounded-k computes the cell ON the scan row via
-    * [[withArgminCell]] (r16, guide §2.4: the former corpus-sized
-    * (vec_id → cell) join-back exchange is gone — one spread exchange,
-    * the kernel, then the range partition); the over-bound path keeps
-    * the relational assignment + join. `extra` columns (e.g. `label`)
-    * ride along on the scan row. */
+    * postings input. Under the bound the cell is computed on the scan
+    * row ([[withArgminCell]]); past it [[assign]]'s relational form is
+    * joined back. `extra` columns (e.g. `label`) ride along on the
+    * scan row. */
   private[operators] def memberRows(spark: SparkSession, dir: String, cents: DataFrame,
       bounded: Boolean, extra: Column*): DataFrame = {
     val base = Tables(spark, dir).embeddingsSpread
       .select((col("vec_id") +: col("embedding") +: extra): _*)
     if (bounded) withArgminCell(base, cents)
-    else base.join(memberCells(spark, dir, cents, bounded = false),
-      Seq("vec_id"))
+    else base.join(assign(base, cents, bounded = false)
+      .select(col("vec_id"), col("cell")), Seq("vec_id"))
   }
 
-  /** Deterministic Lloyd training with the codegen kernels — identical
-    * integers to [[lloydCentroids]] (same hash-seeded init, same argmin
-    * tie-break, same half-up integer means), only the physical shape
-    * changes. Bounded-k callers only (seeds and centroids broadcast).
-    * Reads ONLY the narrow (vec_id, embedding) frame — the N·d-row
-    * quantized explode the relational form shuffles every round is
-    * never materialized (r16, guide §2.3/§2.4). */
-  private[operators] def lloydCentroidsFast(emb: DataFrame, k: Int,
-      iters: Int): DataFrame = {
-    val hashOrder = Seq(
-      graft.functions.PortableHash.phash(col("vec_id").cast("string"), 11).asc,
-      col("vec_id").asc)
-    val seedIds = emb.select(col("vec_id")).distinct()
-      .orderBy(hashOrder: _*).limit(k)
-    val wSeed = Window.orderBy(hashOrder: _*) // over k rows only
-    val seeds0 = seedIds
-      .withColumn("cell", (row_number().over(wSeed) - 1).cast("long"))
-    val cents0 = emb.join(broadcast(seeds0), Seq("vec_id"))
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("cell"), col("dim").cast("long").as("dim"),
-        expr("CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)").as("c"))
-    lloydFrom(emb, cents0, iters)
+  // ----------------------------------------------------------------
+  // Training: deterministic Lloyd k-means.
+  // ----------------------------------------------------------------
+
+  /** Deterministic fixed-iteration Lloyd k-means over e4-quantized
+    * integer coordinates — the TRAINED coarse quantizer whose k is a
+    * parameter, independent of any label column (k ∝ √N is what keeps
+    * the probed fraction shrinking as the corpus grows).
+    *
+    * Every step is oracle-expressible and bit-identical cross-engine:
+    *  - init ([[seeds]]): the k vectors ranking first by (portable
+    *    salted hash of vec_id, vec_id);
+    *  - assign: exact integer squared distances (all < 2⁵³), argmin
+    *    with (dist2, cell) tie-break — can never flip on a ulp;
+    *  - update: centroid = floor(Σq/n + 0.5), the half-up integer mean.
+    *    A cell that loses all members vanishes in both engines.
+    *
+    * `emb` is (vec_id, embedding) of length `d`. The kernel form runs
+    * while the k·d centroid table is under [[centsBounded]] (seeds and
+    * centroids broadcast), the relational form past it. The training
+    * input is persisted, NOT localCheckpointed: Lloyd re-reads it every
+    * round, but the block must be freeable — a localCheckpoint block
+    * can neither be evicted safely nor unpersisted through the
+    * DataFrame API, so repeated trainings in one JVM would pin
+    * block-manager memory until exit. Both forms localCheckpoint each
+    * round's k·d-row centroid table, which materializes the training
+    * against the hot cache and cuts its lineage, so the input frees
+    * right after. Returns the trained
+    * centroids (cell, dim, c) and whether they are under the bound. */
+  private[graft] def lloyd(emb: DataFrame, k: Int, iters: Int,
+      d: Long): (DataFrame, Boolean) = {
+    val bounded = centsBounded(k.toLong * d)
+    val input = (if (bounded) emb.select(col("vec_id"), col("embedding"))
+      else quantizedOf(emb)).persist()
+    val cents = if (bounded) lloydKernel(input, k, iters)
+      else lloydRelational(input, k, iters)
+    input.unpersist(blocking = false)
+    (cents, bounded)
   }
+
+  /** The hash order Lloyd seeds by: portable salted hash of vec_id,
+    * then vec_id. */
+  private[operators] val seedOrder: Seq[Column] = Seq(
+    graft.functions.PortableHash.phash(col("vec_id").cast("string"), 11).asc,
+    col("vec_id").asc)
+
+  /** The k vectors of `rows` ranking first by [[seedOrder]], as
+    * (vec_id, cell = 0..k-1) — a distributed top-k (TakeOrdered),
+    * never a full sort; the numbering window runs over k rows only. */
+  private def seeds(rows: DataFrame, k: Int): DataFrame =
+    rows.select(col("vec_id")).distinct().orderBy(seedOrder: _*).limit(k)
+      .withColumn("cell", (row_number().over(Window.orderBy(seedOrder: _*)) - 1)
+        .cast("long"))
+
+  /** Centroid rows (cell, dim, c) of the vectors in `rows` (cell,
+    * embedding): each vector's own quantized coordinates. */
+  private[operators] def centsOf(rows: DataFrame): DataFrame =
+    quantizedOf(rows, Seq("cell")).withColumnRenamed("q", "c")
+
+  /** Lloyd's kernel form over (vec_id, embedding): broadcast seeds, then
+    * [[lloydFrom]]. */
+  private[graft] def lloydKernel(emb: DataFrame, k: Int, iters: Int): DataFrame =
+    lloydFrom(emb, centsOf(emb.join(broadcast(seeds(emb, k)), Seq("vec_id"))),
+      iters)
 
   /** Lloyd iterations from GIVEN initial centroids (cell, dim, c) —
     * the shared tail of hash-seeded training and the grow-aware
-    * rebuild (which seeds from the outgrown index's pinned centroids
-    * so cluster structure carries over instead of restarting cold).
+    * rebuild (which seeds from the outgrown index's member vectors so
+    * cluster structure carries over instead of restarting cold).
     *
-    * r16 shape (guide §2.3 "aggregate before you shuffle"): per round,
-    * the [[graft.functions.ArgminCellQ]] kernel computes each vector's
-    * cell ON the row (no assignment exchange, no join back to the
-    * quantized explode) and [[graft.functions.SumVecQ]] folds each
-    * partition's members into k partial (sums, cnts) array rows before
-    * the exchange — the round's ONE shuffle carries k·partitions array
-    * rows instead of the N·d scalar rows the relational form moved
-    * through two exchanges. Same integers (`KernelEquivalenceSpec`):
-    * exact Long sums per dimension, half-up integer mean. */
+    * Per round, the [[graft.functions.ArgminCellQ]] kernel computes each
+    * vector's cell ON the row and [[graft.functions.SumVecQ]] folds
+    * each partition's members into k partial (sums, cnts) array rows
+    * before the exchange — the round's ONE shuffle carries
+    * k·partitions array rows. Exact Long sums per dimension, half-up
+    * integer mean (`KernelEquivalenceSpec`). */
   private[operators] def lloydFrom(emb: DataFrame, cents0: DataFrame,
       iters: Int): DataFrame = {
     var cents = cents0.localCheckpoint()
@@ -758,53 +564,54 @@ object Similarity {
         .select(col("cell"), posexplode(col("sv.sums")).as(Seq("dim", "s")),
           col("sv.cnts").as("cnts"))
         .select(col("cell"), col("dim").cast("long").as("dim"),
-          expr("CAST(floor(CAST(s AS DOUBLE) / CAST(cnts[dim] AS DOUBLE) + 0.5) AS BIGINT)")
-            .as("c"))
+          halfUpMean("s", "cnts[dim]").as("c"))
         .localCheckpoint()
     }
     cents
   }
 
+  /** Lloyd's relational form over quantized coordinates `qe` (vec_id,
+    * dim, q): the dim-join ranker assigns, a (cell, dim) aggregate
+    * updates. No broadcast hints: it runs past the bound, where k grows
+    * with the corpus, and on [[viewKmeansDet]]'s 2-D points, where AQE
+    * broadcasts from measured size. Each round's centroid table is
+    * localCheckpointed, so round i never re-derives round i-1. */
+  private[graft] def lloydRelational(qe: DataFrame, k: Int, iters: Int): DataFrame = {
+    var cents = qe.join(seeds(qe, k), Seq("vec_id"))
+      .select(col("cell"), col("dim"), col("q").as("c"))
+      .localCheckpoint()
+    for (_ <- 1 to iters) {
+      val asg = rankedTo(qe, cents).filter(col("crn") === 1)
+        .select(col("vec_id"), col("cell"))
+      cents = qe.join(asg, Seq("vec_id"))
+        .groupBy(col("cell"), col("dim"))
+        .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
+        .select(col("cell"), col("dim"), halfUpMean("s", "n").as("c"))
+        .localCheckpoint()
+    }
+    cents
+  }
+
+  /** The √N-rule coarse quantizer: [[lloyd]] with k = ⌈√N⌉ over the
+    * whole corpus, and the proven broadcast bound for that k
+    * (k·d·24 B ≤ 32 MB; at N=10¹⁰, d=768 the bound fails and every
+    * join falls back to shuffle, as it must). With k ∝ √N the probed
+    * corpus fraction is nprobe/√N — it SHRINKS as the corpus grows —
+    * where any fixed k leaves serving Θ(nprobe/k · N) forever. */
   private[graft] def sqrtQuantizer(spark: SparkSession, dir: String)
       : (DataFrame, Boolean) = {
-    val nd = Tables(spark, dir).embeddings
-      .agg(count(lit(1)).as("n"),
-        max(size(col("embedding"))).cast("long").as("d"))
-      .head
-    val kk = math.ceil(math.sqrt(nd.getLong(0).toDouble)).toInt
-    val bounded = centsBounded(kk.toLong * nd.getLong(1))
-    // persist (NOT localCheckpoint) the training input: Lloyd re-reads
-    // it iters+1 times, but the block must be FREEABLE — a
-    // localCheckpoint block can neither be evicted safely (lineage is
-    // truncated) nor unpersisted through the DataFrame API, so
-    // repeated √N trainings in one JVM would pin block-manager memory
-    // until exit (measured: a 10× bench run with the leaked blocks ran
-    // unrelated queries 10-20× slower from heap pressure). r16: the
-    // fast path pins the NARROW (vec_id, embedding) frame — N rows of
-    // one float array, roughly a sixth of the N·d quantized explode
-    // the relational fallback needs.
-    val input =
-      (if (bounded) Tables(spark, dir).embeddingsSpread
-         .select(col("vec_id"), col("embedding"))
-       else quantized(spark, dir))
-        .persist()
-    // eager: the k·d-row centroid checkpoint materializes the whole
-    // training against the hot cache and cuts its lineage...
-    val cents =
-      (if (bounded) lloydCentroidsFast(input, kk, 2)
-       else lloydCentroids(input, kk, 2, boundedK = false))
-        .localCheckpoint()
-    // ...so the training input frees immediately; callers' final
-    // assignment runs the codegen kernel over a fresh narrow scan
-    // instead of holding the training blocks hostage
-    input.unpersist(blocking = false)
-    (cents, bounded)
+    val (n, d) = shape(Tables(spark, dir).embeddings)
+    lloyd(Tables(spark, dir).embeddingsSpread, sqrtK(n), 2, d)
   }
 
   /** Whether a centroid table of `rows` = k·d rows is under the 32 MB
     * broadcast bound (24 B a row) — the bound every trained quantizer
     * proves at build and a standing index carries in its handle. */
   private[graft] def centsBounded(rows: Long): Boolean = rows * 24L <= (32L << 20)
+
+  // ----------------------------------------------------------------
+  // Scoring: probe, then exact cosine over the probed members.
+  // ----------------------------------------------------------------
 
   /** The probe list (qid, q_cell, q_emb): each of the |Q| query
     * vectors' `nprobe` nearest cells of `cents`, with its query vector —
@@ -832,23 +639,11 @@ object Similarity {
     * the member rows (cell, vec_id, embedding), score with the
     * codegen'd [[graft.functions.CosineSimQ]], rank within query. */
   private[operators] def topkByCell(members: DataFrame, probes: DataFrame,
-      k: Int): DataFrame = {
-    val scored = members
-      .join(broadcast(probes), col("cell") === col("q_cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_e6",
-        graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("embedding")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_e6").desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("vec_id").as("nid"), col("cos_e6"),
-        col("rn").cast("long").as("rn"))
-      .orderBy(col("qid"), col("rn"))
-  }
+      k: Int): DataFrame =
+    rankByCosine(members.join(broadcast(probes), col("cell") === col("q_cell")), k)
 
   /** Multi-probe ANN under the √N-cell TRAINED quantizer — the scale
-    * path the fixed-k measurements point at (BASELINE.md r8): members
+    * path the fixed-k measurements point at (BASELINE.md): members
     * live in their argmin cell among k=⌈√N⌉ Lloyd cells, the query
     * probes its nprobe nearest, so the candidate set is
     * nprobe/⌈√N⌉ of the corpus — a fraction that SHRINKS as the
@@ -860,10 +655,8 @@ object Similarity {
   def annIvfSqrtK(spark: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 3): DataFrame = {
     val (cents, bounded) = sqrtQuantizer(spark, dir)
-    // membership computed ON the scan row (r16 kernel); the probe
-    // RANKING (crn ≤ nprobe) only ever touches the |Q|=5 query
-    // vectors, so the corpus-sized window sort of the former shared
-    // ranked table is gone (r10)
+    // membership on the scan row; the probe ranking only ever touches
+    // the |Q|=5 query vectors
     topkByCell(memberRows(spark, dir, cents, bounded),
       probeList(spark, dir, cents, nprobe, bounded), k)
   }
@@ -960,10 +753,8 @@ object Similarity {
     * ([[ivfBuildSqrt]]) AND the predicate references only the
     * `label` column — the one key the histogram groups by — the
     * estimate is a weighted sum over that |labels|-row tx table, NO
-    * corpus scan at serve time (r11 task 7). Any OTHER predicate (the
-    * public pred: Column contract admits every embeddings column —
-    * ADVICE r12 flagged the histogram path for silently narrowing it)
-    * keeps the full-row corpus aggregate, as does an unbuilt index or
+    * corpus scan at serve time. Any OTHER predicate (the public
+    * pred: Column contract admits every embeddings column) keeps the full-row corpus aggregate, as does an unbuilt index or
     * a cold session without [[StandingIndex.load]]: same exact counts either
     * way — the cache can never change an answer, only the plan. */
   private[graft] def selectivityFrame(spark: SparkSession, dir: String,
@@ -991,8 +782,7 @@ object Similarity {
   }
 
   /** Predicate-filtered ANN with the ADAPTIVE probe width — the coded
-    * form of the fix `FilteredAnnSpec` demonstrated as prose (VERDICT
-    * r10 task 6): the serve estimates the predicate's selectivity and
+    * form of the fix `FilteredAnnSpec` demonstrates: the serve estimates the predicate's selectivity and
     * widens nprobe by [[adaptiveNprobe]]'s rule, so a ~10%-selective
     * filter probes maxProbe cells (recall equal to fixed nprobe=8 by
     * construction) while a permissive filter stays at baseNprobe and
@@ -1015,30 +805,15 @@ object Similarity {
     * baseNprobe). */
   def annFilteredAdaptiveRecall(spark: SparkSession, dir: String,
       k: Int = 5, baseNprobe: Int = 3, maxProbe: Int = 8,
-      pred: Column = col("label") === 1): DataFrame = {
-    val base = Tables(spark, dir).embeddings
-    val queries = base.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-    val scored = base.filter(pred)
-      .crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_e6",
-        graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("embedding")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_e6").desc, col("vec_id"))
-    val exact = scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("vec_id").as("nid"))
+      pred: Column = col("label") === 1): DataFrame =
     recallVs(annFilteredAdaptive(spark, dir, k, baseNprobe, maxProbe, pred),
-      exact, k)
-  }
+      topk(spark, dir, k, sameLabelOnly = false, Some(pred)), k)
 
   /** Recall@k of the FILTERED serve ([[annFilteredSqrt]]) against the
     * brute-force exact top-k AMONG THE PREDICATE'S SURVIVORS — the
-    * missing quality number VERDICT r9 named (task 7): filtered ANN's
-    * classic failure is probe starvation, where a selective predicate
-    * empties the probed cells' candidate lists while matching members
-    * sit in unprobed cells, and no unfiltered recall query can see it
+    * missing quality number: filtered ANN's classic failure is probe
+    * starvation, where a selective predicate empties the probed cells'
+    * candidate lists while matching members sit in unprobed cells, and no unfiltered recall query can see it
     * (the probe geometry is identical; only the SURVIVING candidate
     * count changes). Measured sweep at sf0.1 (nprobe=3, k=5,
     * `FilteredAnnSpec`): selectivity 1/2 → recall ≈ the unfiltered
@@ -1047,22 +822,9 @@ object Similarity {
     * filters), here demonstrated by the spec rather than asserted. */
   def annFilteredRecall(spark: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 3,
-      pred: Column = pmod(col("label"), lit(2)) === 1): DataFrame = {
-    val base = Tables(spark, dir).embeddings
-    val queries = base.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-    val scored = base.filter(pred)
-      .crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_e6",
-        graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("embedding")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_e6").desc, col("vec_id"))
-    val exact = scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("vec_id").as("nid"))
-    recallVs(annFilteredSqrt(spark, dir, k, nprobe, pred), exact, k)
-  }
+      pred: Column = pmod(col("label"), lit(2)) === 1): DataFrame =
+    recallVs(annFilteredSqrt(spark, dir, k, nprobe, pred),
+      topk(spark, dir, k, sameLabelOnly = false, Some(pred)), k)
 
   // ----------------------------------------------------------------
   // Sample-trained √N quantizer: cap the N^1.5 training term.
@@ -1081,19 +843,13 @@ object Similarity {
     * integer arithmetic over the cross-engine
     * [[graft.functions.PortableHash]], so the sample — and every
     * centroid trained from it — is bit-identical in the DuckDB
-    * oracle. mod = 1 (small N) degenerates to full training. */
-  /** The deterministic training-sample gate shared by every
-    * sample-trained build AND its `n_sample` audit witness (ADVICE
-    * r12): one definition of (k = ⌈√N⌉, mod = ⌊N/(8k)⌋, salted-hash
-    * predicate) so the quantizer, the grow rebuilds, and the three
-    * build audits can never silently diverge — before this helper the
-    * gate was re-derived in five places, and an edit to any one would
-    * have made the audit report a different gate than the one actually
-    * used. Exact integer arithmetic over the cross-engine
-    * [[graft.functions.PortableHash]] (seed 7), so the sample is
-    * bit-identical in the DuckDB oracle. */
+    * oracle. mod = 1 (small N) degenerates to full training.
+    *
+    * This one gate serves every sample-trained build AND its
+    * `n_sample` audit witness, so the quantizer, the grow rebuilds and
+    * the three build audits can never diverge. */
   private[graft] def sampleGate(n: Long): (Int, Long, Column) = {
-    val kk = math.ceil(math.sqrt(n.toDouble)).toInt
+    val kk = sqrtK(n)
     val mod = math.max(1L, n / (8L * kk))
     val pred = graft.functions.PortableHash
       .phash(col("vec_id").cast("string"), 7) % mod === 0
@@ -1121,42 +877,17 @@ object Similarity {
     * training has no such term). */
   private[graft] def sampleQuantizer(emb: DataFrame): (DataFrame, Int, Boolean) = {
     val e = emb.select(col("vec_id"), col("embedding"))
-    val nd = e.agg(count(lit(1)).as("n"),
-      max(size(col("embedding"))).cast("long").as("d")).head
-    val (kk, _, gate) = sampleGate(nd.getLong(0))
+    val (n, d) = shape(e)
+    val (kk, _, gate) = sampleGate(n)
     // the gated sample inherits the raw scan's single input split, and
     // every training argmin crosses it k ways in-stage — spread the
     // 8·⌈√N⌉ survivors once (metadata-sized exchange) so the Lloyd
     // iterations parallelize like the full-corpus paths do
     val sample = e.filter(gate)
       .repartition(e.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
-    // past the proven bound the fast kernel's argmin would be an
-    // unbounded static broadcast: fall back to the shuffled-join Lloyd
-    val bounded = centsBounded(kk.toLong * nd.getLong(1))
-    // persist (NOT localCheckpoint) for the same freeable-block reason
-    // as [[sqrtQuantizer]] — though here the pinned input is the
-    // 8·⌈√N⌉-row sample, not the corpus: the sample bound is the point
-    val sampleT = sample.persist()
-    val cents =
-      (if (bounded) lloydCentroidsFast(sampleT, kk, 2)
-       else lloydCentroids(quantizedOf(sampleT), kk, 2, boundedK = false))
-        .localCheckpoint()
-    sampleT.unpersist(blocking = false)
+    val (cents, bounded) = lloyd(sample, kk, 2, d)
     (cents, kk, bounded)
   }
-
-  /** Argmin cell of every vector, computed ON the embedding row by the
-    * [[graft.functions.ArgminCellQ]] codegen kernel (r16, guide §2.4):
-    * where the r10 form materialized N·k scored rows through a
-    * crossJoin and folded them back with a min_by exchange, the kernel
-    * loops the broadcast [[centPack]] per row inside the scan's
-    * whole-stage-codegen — zero Exchange. Same exact integers, same
-    * (dist2, cell) tie-break (`KernelEquivalenceSpec`). Build-side
-    * kernel only: serving probes keep the window form (they need
-    * crn ≤ nprobe over a tiny |Q|). */
-  private[graft] def argminByDist(emb: DataFrame, cents: DataFrame): DataFrame =
-    withArgminCell(emb.select(col("vec_id"), col("embedding")), cents)
-      .select(col("vec_id"), col("cell"))
 
   /** The sample-trained build as its own declared query: the
     * [[ivfBuildSqrt]] layout over the sample-trained cell alphabet
@@ -1189,8 +920,8 @@ object Similarity {
     recallOf(spark, dir, annIndexedSample(spark, dir, k, nprobe), k)
 
   /** The standing VECTOR index's churn lifecycle as one verified
-    * query — the IVF twin of [[graft.operators.TextAnalysis.ftsChurn]]
-    * (VERDICT r8 task 3, vector side): the corpus arrives as `slices`
+    * query — the IVF twin of [[graft.operators.TextAnalysis.ftsChurn]]:
+    * the corpus arrives as `slices`
     * separate commits (each assigned against the BUILD-PINNED √N
     * quantizer and appended cell-clustered — fragmenting the postings
     * to slices × files), `TxTable.compact` rewrites the fragments into
@@ -1256,58 +987,22 @@ object Similarity {
     * sets — are bit-identical on every engine; no float ulp can flip a
     * candidate in or out.
     *
-    * Plan: the [mn,mx] range is ONE aggregate row (broadcast by the
-    * 1-row cross join), the 5×d query-code table broadcasts (bounded
-    * by construction), the corpus side aggregates map-side into one
-    * (qid, vec_id) shuffle, and the exact rerank touches only
-    * 5·candK rows. */
+    * This is the IVF-SQ8 serve's scoring ([[VectorIndex.sq8Topk]],
+    * then its exact rerank) with the whole corpus as one cell: every
+    * vector in cell 0, every query probing cell 0. The range is the
+    * same min/max aggregate the SQ8 build pins, collected once; the
+    * encode runs on the row, the 5 query-code rows broadcast, and the
+    * exact rerank touches only 5·candK rows. */
   def sq8Rerank(spark: SparkSession, dir: String, k: Int = 5,
       candK: Int = 20): DataFrame = {
-    val qe = quantized(spark, dir)
-    val range = qe.agg(min(col("q")).as("mn"), max(col("q")).as("mx"))
-    val codes = qe.crossJoin(broadcast(range))
-      .select(col("vec_id"), col("dim"),
-        expr("((q - mn) * 255) div greatest(mx - mn, 1)").as("code"),
-        col("mn"), col("mx"))
-    val qCodes = codes.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("dim").as("qdim"),
-        col("code").as("qcode"))
-    // rank by the DECODED dot (affine shift undone — see [[annIvfSq8]]
-    // for the degeneracy of the raw code dot): with s = mx - mn,
-    //   s²·Σc·qc + 255·mn·s·(Σc + Σqc) + d·(255·mn)²
-    val cand = codes
-      .join(broadcast(qCodes),
-        col("dim") === col("qdim") && col("vec_id") =!= col("qid"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(expr(
-        """CAST(greatest(max(mx) - max(mn), 1) * greatest(max(mx) - max(mn), 1)
-                 * sum(code * qcode)
-             + 255 * max(mn) * greatest(max(mx) - max(mn), 1)
-                 * (sum(code) + sum(qcode))
-             + count(*) * (255 * max(mn)) * (255 * max(mn)) AS BIGINT)""")
-        .as("sq8_dot"))
-    val wc = Window.partitionBy(col("qid"))
-      .orderBy(col("sq8_dot").desc, col("vec_id"))
-    val top = cand.withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= candK)
-      .select(col("qid"), col("vec_id").as("nid"), col("sq8_dot"))
-    val emb = Tables(spark, dir).embeddings
-      .select(col("vec_id"), col("embedding"))
-    val rer = top
-      .join(emb.select(col("vec_id").as("nid"), col("embedding").as("n_emb")),
-        Seq("nid"))
-      .join(broadcast(emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))),
-        Seq("qid"))
-      .withColumn("cos_e6",
-        graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("n_emb")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_e6").desc, col("nid"))
-    rer.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("sq8_dot"), col("cos_e6"),
-        col("rn").cast("long").as("rn"))
-      .orderBy(col("qid"), col("rn"))
+    val (mn, mx) = VectorIndex.rangeOf(quantized(spark, dir))
+    val corpus = Tables(spark, dir).embeddingsSpread
+      .select(lit(0L).as("cell"), col("vec_id"), col("embedding"))
+    val probes = Tables(spark, dir).embeddings.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), lit(0L).as("q_cell"),
+        col("embedding").as("q_emb"))
+    VectorIndex.sq8Topk(probes, VectorIndex.withSq8Codes(corpus, mn, mx),
+      mn, mx, k, candK)
   }
 
   // ----------------------------------------------------------------
@@ -1406,9 +1101,7 @@ object Similarity {
     qe.withColumn("sub", expr(s"dim div $PqDimsPerSub"))
       .groupBy(col("sub"), col("label").as("code"), col("dim"))
       .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-      .select(col("sub"), col("code"), col("dim"),
-        expr("CAST(floor(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) + 0.5) AS BIGINT)")
-          .as("c"))
+      .select(col("sub"), col("code"), col("dim"), halfUpMean("s", "n").as("c"))
 
   /** The IVF-PQ BUILD as its own declared query: trains the ⌈√N⌉
     * quantizer (the same cell alphabet as the √N/SQ8 indices), pins the
@@ -1503,9 +1196,7 @@ object Similarity {
     * consistently (the affine decode is linear — no saturation point
     * exists to corrupt). */
   private[graft] def sq8EncodeExpr(mnv: Long, sv: Long): Column = expr(
-    s"""transform(embedding, x ->
-          ((CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT) - ${mnv}L)
-            * 255) div ${sv}L)""")
+    s"transform(embedding, x -> (($E4 - ${mnv}L) * 255) div ${sv}L)")
 
   /** One-row flattened codebook pack (codes sorted asc; per-code
     * FULL-LENGTH dim-ordered quantized centroid vectors) — the
@@ -1522,13 +1213,10 @@ object Similarity {
       .select(expr("transform(p, s -> s.code)").as("cb_codes"),
         expr("transform(p, s -> s.cvec)").as("cb_cvecs"))
 
-  /** Adds the PQ `codes` column ON the embedding row (r16, guide
-    * §2.3/§2.4): where the relational encode materialized N·d·|codes|
-    * subDist rows through two aggregate exchanges, a collect_list
-    * pack, and a join-back, the [[graft.functions.PqEncodeQ]] kernel
-    * loops the broadcast [[cbPack]] per row inside the scan's codegen
-    * stage — zero Exchange. Same integers, same code-asc tie-break
-    * (`KernelEquivalenceSpec`). */
+  /** Adds the PQ `codes` column ON the embedding row: the
+    * [[graft.functions.PqEncodeQ]] kernel loops the broadcast
+    * [[cbPack]] per row inside the scan's codegen stage — no exchange.
+    * Exact integers, code-asc tie-break (`KernelEquivalenceSpec`). */
   private[graft] def withPqCodes(rows: DataFrame, cb: DataFrame): DataFrame =
     rows.crossJoin(broadcast(cbPack(cb)))
       .withColumn("codes", graft.functions.PqEncodeQ.pqEncodeQ(

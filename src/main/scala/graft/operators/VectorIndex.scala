@@ -173,6 +173,13 @@ object VectorIndex {
     spark.createDataFrame(java.util.List.of(Row(mn, mx)),
       StructType(Seq(StructField("mn", LongType), StructField("mx", LongType))))
 
+  /** The SQ8 range (mn, mx) of quantized coordinates `q`, collected
+    * by one aggregate. */
+  private[operators] def rangeOf(q: DataFrame): (Long, Long) = {
+    val r = q.agg(min(col("q")), max(col("q"))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
   /** The codec table over quantized coordinates: the one-row [mn, mx]
     * range (over `q`) or the per-(sub, label) codebook (over `labelled`,
     * which carries `label`). Both are pinned so that build and serve
@@ -183,8 +190,8 @@ object VectorIndex {
     case FlatKind => None
     case Sq8Kind =>
       val qs = q
-      val r = qs.agg(min(col("q")).as("mn"), max(col("q")).as("mx")).head()
-      Some(rangeTable(qs.sparkSession, r.getAs[Long]("mn"), r.getAs[Long]("mx")))
+      val (mn, mx) = rangeOf(qs)
+      Some(rangeTable(qs.sparkSession, mn, mx))
     case PqKind => Some(pqCodebook(labelled).localCheckpoint())
   }
 
@@ -224,16 +231,19 @@ object VectorIndex {
       case FlatKind => identity
       case Sq8Kind =>
         val (mn, mx) = pins.sq8Range
-        val enc = sq8EncodeExpr(mn, math.max(mx - mn, 1L))
-        // Σcode rides along from build time: the decoded-dot correction
-        // needs it per posting, and computing it in the serving scan
-        // would run the interpreted aggregate() per candidate row
-        _.withColumn("codes", enc)
-          .withColumn("code_sum", expr("aggregate(codes, 0L, (a, x) -> a + x)"))
+        withSq8Codes(_, mn, mx)
       case PqKind => withPqCodes(_, pins.codecTable.get)
     }
     rows => withCodes(rows).select(family.cols.map(col): _*)
   }
+
+  /** Adds SQ8 `codes` against the range (mn, mx) to rows carrying
+    * `embedding`, and their `code_sum`: the decoded-dot correction needs
+    * Σcode per posting, and computing it in the serving scan would run
+    * the interpreted aggregate() per candidate row. */
+  private[operators] def withSq8Codes(rows: DataFrame, mn: Long, mx: Long): DataFrame =
+    rows.withColumn("codes", sq8EncodeExpr(mn, math.max(mx - mn, 1L)))
+      .withColumn("code_sum", expr("aggregate(codes, 0L, (a, x) -> a + x)"))
 
   /** Cell-clustered postings commit: range-partitioned on `cell` so a
     * probe's point read touches a contiguous file subset, Bloom bitmap
@@ -365,7 +375,7 @@ object VectorIndex {
     * — exact integers end to end (|score| ≤ ~1e15 ≪ 2⁶³), so candidate
     * sets are bit-identical cross-engine (measured recall@5 0.52 at
     * sf0.1, equal to the uncompressed probe path's). */
-  private def sq8Topk(probes: DataFrame, postings: DataFrame, mnv: Long, mxv: Long,
+  private[operators] def sq8Topk(probes: DataFrame, postings: DataFrame, mnv: Long, mxv: Long,
       k: Int, candK: Int): DataFrame = {
     val sv = math.max(mxv - mnv, 1L)
     val tv = 255L * mnv
@@ -386,11 +396,9 @@ object VectorIndex {
           graft.functions.DotQ.dotQ(col("codes"), col("qcodes"))
           + lit(tv) * lit(sv) * (col("code_sum") + col("qcode_sum"))
           + size(col("codes")).cast("long") * lit(tv) * lit(tv))
-    val wc = Window.partitionBy(col("qid"))
-      .orderBy(col("sq8_dot").desc, col("vec_id"))
-    rerank(postings, probes, cand.withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= candK)
-      .select(col("qid"), col("q_cell"), col("vec_id").as("nid"), col("sq8_dot")),
+    rerank(postings, probes,
+      perQuery(cand, candK, "crn")(col("sq8_dot").desc, col("vec_id"))
+        .select(col("qid"), col("q_cell"), col("vec_id").as("nid"), col("sq8_dot")),
       "sq8_dot", k)
   }
 
@@ -416,11 +424,9 @@ object VectorIndex {
       .filter(col("vec_id") =!= col("qid"))
       .groupBy(col("qid"), col("cell").as("q_cell"), col("vec_id"))
       .agg(sum(col("d2")).as("adc_dist2"))
-    val wc = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_dist2"), col("vec_id"))
-    rerank(postings, probes, cand.withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= candK)
-      .select(col("qid"), col("q_cell"), col("vec_id").as("nid"), col("adc_dist2")),
+    rerank(postings, probes,
+      perQuery(cand, candK, "crn")(col("adc_dist2"), col("vec_id"))
+        .select(col("qid"), col("q_cell"), col("vec_id").as("nid"), col("adc_dist2")),
       "adc_dist2", k)
   }
 
@@ -436,10 +442,7 @@ object VectorIndex {
       .join(broadcast(probes), Seq("qid", "q_cell"))
       .withColumn("cos_e6",
         graft.functions.CosineSimQ.cosineSimE6(col("q_emb"), col("n_emb")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_e6").desc, col("nid"))
-    rer.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    perQuery(rer, k)(col("cos_e6").desc, col("nid"))
       .select(col("qid"), col("nid"), col(score), col("cos_e6"),
         col("rn").cast("long").as("rn"))
       .orderBy(col("qid"), col("rn"))
@@ -461,11 +464,10 @@ object VectorIndex {
         val (cents, k, bounded) = sampleQuantizer(e)
         growCommit(spark, family, e, cents, k, bounded)
       case _ =>
-        e.persist()
-        try {
-          val k = math.ceil(math.sqrt(e.count().toDouble)).toInt
-          growCommit(spark, family, e, lloydCentroidsFast(e, k, 2).localCheckpoint(), k)
-        } finally e.unpersist(blocking = false)
+        val (n, d) = shape(e)
+        val k = sqrtK(n)
+        val (cents, bounded) = lloyd(e, k, 2, d)
+        growCommit(spark, family, e, cents, k, bounded)
     }
   }
 
@@ -538,23 +540,16 @@ object VectorIndex {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq // k rows
     import spark.implicits._
     val seatDf = broadcast(allocSeats(pops, kNew).toSeq.toDF("cell", "seats"))
-    val hashOrder = Seq(
-      graft.functions.PortableHash.phash(col("vec_id").cast("string"), 11).asc,
-      col("vec_id").asc)
     val picked = memberNow
-      .withColumn("r", row_number().over(Window.partitionBy(col("cell")).orderBy(hashOrder: _*)))
+      .withColumn("r", row_number().over(Window.partitionBy(col("cell")).orderBy(seedOrder: _*)))
       .join(seatDf, Seq("cell"))
       .filter(col("r") <= col("seats"))
     val wAll = Window.orderBy(col("cell"), col("r")) // over k' rows only
     val seeds = picked
       .withColumn("newcell", (row_number().over(wAll) - 1).cast("long"))
-      .select(col("vec_id"), col("newcell"))
-    val cents0 = emb.join(broadcast(seeds), Seq("vec_id"))
-      .select(col("newcell").as("cell"),
-        posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("cell"), col("dim").cast("long").as("dim"),
-        expr("CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)").as("c"))
-    growCommit(spark, IvfGrow, emb, lloydFrom(emb, cents0, 2).localCheckpoint(), kNew)
+      .select(col("vec_id"), col("newcell").as("cell"))
+    val cents0 = centsOf(emb.join(broadcast(seeds), Seq("vec_id")))
+    growCommit(spark, IvfGrow, emb, lloydFrom(emb, cents0, 2), kNew)
   }
 
   /** Mean probed corpus fraction for `queries` (vec_id, embedding) at

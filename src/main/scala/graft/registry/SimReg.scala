@@ -94,8 +94,7 @@ object SimReg {
 
   /** Shared IVF-assignment CTEs (mirror `Similarity.ivfAssign`):
     * quantized dims → half-up integer centroids → exact squared
-    * distances → argmin cell. */
-  /** IVF assignment CTEs; `centsWhere` restricts the centroid
+    * distances → argmin cell. `centsWhere` restricts the centroid
     * TRAINING subset (e.g. the pinned-quantizer append lifecycle) —
     * assignment always covers every vector. */
   private[graft] def ivfAssignCtesWhere(centsWhere: String): String =
@@ -119,7 +118,7 @@ object SimReg {
     s"""WITH $ivfAssignCtes
         SELECT vec_id, cell, dist2 FROM asg WHERE arn = 1 ORDER BY vec_id"""
 
-  /** Mirror of `Similarity.lloydCentroids` + final `assignTo`: the
+  /** Mirror of `Similarity.lloyd` + the final `Similarity.assign`: the
     * hash-seeded fixed-iteration (2 rounds) Lloyd k-means, unrolled as
     * per-iteration CTEs (aggregates are not allowed in recursive
     * terms). `kSql` is the cell-count expression (a literal, or a
@@ -130,8 +129,9 @@ object SimReg {
       sampleGate: String = ""): String = {
     // `trainSrc` is the coordinate table the ITERATIONS read: the full
     // qe normally, the hash-gated sample `tq` when a gate is given —
-    // mirroring Similarity.sampleQuantizer, where only the final
-    // assignment (kd3/asgk) touches the whole corpus
+    // mirroring Similarity.sampleQuantizer, which runs `lloyd` on the
+    // gated sample, so only the final `assign` (kd3/asgk) touches the
+    // whole corpus
     val trainSrc = if (sampleGate.isEmpty) "qe" else "tq"
     def dist(src: String, cents: String, out: String) =
       s"""$out AS (SELECT $src.vec_id, $cents.cell,
@@ -169,7 +169,7 @@ object SimReg {
                 FROM kd3)"""
   }
 
-  /** The oracle's twin of `Similarity.sampleQuantizer`'s gate: keep
+  /** The oracle's twin of `Similarity.sampleGate`: keep
     * the vectors whose portable salted hash of vec_id is ≡ 0 modulo
     * max(1, ⌊N/(8·⌈√N⌉)⌋) — an expected 8·⌈√N⌉ training vectors. */
   private[graft] val sampleGateSql: String =

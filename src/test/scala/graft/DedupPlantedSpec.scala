@@ -49,14 +49,6 @@ class DedupPlantedSpec extends SparkSpec with TempDirs {
     assert(!pairs.keySet.exists { case (a, b) => a == 3L || b == 3L })
   }
 
-  test("spark.ml MinHashLSH route agrees on the planted pairs") {
-    val pairs = Dedup.minhashLshMl(spark, dir).collect()
-      .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"))).toSet
-    assert(pairs.contains((0L, 1L)))
-    assert(pairs.contains((0L, 2L)) || pairs.contains((1L, 2L)))
-    assert(!pairs.exists { case (a, b) => a == 3L || b == 3L })
-  }
-
   test("SRP banding finds planted embedding near-dups, skips the rest") {
     import spark.implicits._
     // base vector, an exact copy, a tiny perturbation (near-dup), and

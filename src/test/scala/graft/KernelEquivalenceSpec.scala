@@ -3,12 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{ArgminCellQ, PqEncodeQ, SumVecQ}
+import graft.operators.Similarity
 
-/** The r16 assignment/encode kernels must compute EXACTLY the integers
-  * their relational predecessors computed — same quantization, same
-  * argmin tie-breaks — or every oracle downstream of an index build
-  * would shift. Each test races a kernel against the original
-  * relational formulation on random data.
+/** The codegen assignment/encode/training kernels must compute EXACTLY
+  * the integers of their relational formulations — same quantization,
+  * same argmin tie-breaks — or every oracle downstream of an index
+  * build would shift, and the over-bound paths would answer
+  * differently from the bounded ones. Each test races a kernel against
+  * the relational formulation on random data.
   */
 class KernelEquivalenceSpec extends SparkSpec {
 
@@ -132,6 +134,33 @@ class KernelEquivalenceSpec extends SparkSpec {
           .getField("cell").as("cell"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got.size == 120 && got == expect)
+  }
+
+  test("Dist2Q ranker equals the dim-join ranker in (cell, dist2, crn)") {
+    val emb = randomEmb(200, 64, seed = 5)
+    val cents = someCents(emb, 17)
+    // a duplicate of cell 4 under a higher id: every vector ties on
+    // dist2 between cells 4 and 98, so the (dist2, cell) order decides
+    // their crn
+    val centsT = cents.union(
+      cents.filter(col("cell") === 4).withColumn("cell", lit(98L)))
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("vec_id"), col("cell"), col("dist2"), col("crn").cast("long"))
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3))))
+        .toMap
+    val got = ranks(Similarity.rankedByDist(emb, centsT))
+    val expect = ranks(Similarity.rankedTo(Similarity.quantizedOf(emb), centsT))
+    assert(got.size == 200 * 18 && got == expect)
+  }
+
+  test("kernel Lloyd equals relational Lloyd in (cell, dim, c)") {
+    val emb = randomEmb(300, 64, seed = 17)
+    def cents(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("cell"), col("dim"), col("c")).collect()
+        .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
+    val kernel = cents(Similarity.lloydKernel(emb, 17, 2))
+    val relational = cents(Similarity.lloydRelational(Similarity.quantizedOf(emb), 17, 2))
+    assert(kernel.nonEmpty && kernel.size % 64 == 0 && kernel == relational)
   }
 
   test("SumVecQ equals the relational per-(cell, dim) sum/count") {

@@ -125,8 +125,9 @@ class PlanSpec extends SparkSpec {
       // literal-bounded query-term list crossed over the vocabulary
       // for edit-distance expansion + the 1-row bm25 stats cross
       "text_fuzzy_search",
-      // 1-row global [mn,mx] quantization-range aggregate crossed into
-      // the code table; the candidate dot itself is a dim equi-join
+      // VectorIndex.sq8Topk with the corpus as one cell: the cell = 0
+      // equi-join folds to a nested-loop join against the broadcast
+      // |Q| = 5 query-code rows
       "sim_sq8_rerank",
       // composed IVF-SQ8: the same 1-row [mn,mx] range cross (build
       // encodes the corpus, serve encodes the |Q| query vectors) plus
@@ -152,7 +153,7 @@ class PlanSpec extends SparkSpec {
       // r13: streamed composed index — the serve IS VectorIndex.serve
       // (same 1-row range cross + proven-bound centroid kernel cross
       // as sim_ann_ivfsq8_sample); the build side additionally runs
-      // the argminByDist kernel cross per micro-batch, all bounded
+      // the withArgminCell kernel cross per micro-batch, all bounded
       "stream_ivfsq8_serve",
       // r13: streamed PQ — the serve IS VectorIndex.serve (same centroid
       // kernel cross + broadcast ADC codebook joins as
@@ -174,13 +175,14 @@ class PlanSpec extends SparkSpec {
       // 1-row n_sample and cb_rows aggregates; all bounded)
       "sim_ivfpq_build_sample", "sim_ann_ivfpq_sample",
       "sim_ann_ivfpq_sample_recall",
-      // r16: the ArgminCellQ/PqEncodeQ kernels cross a ONE-ROW
-      // broadcast pack (cells/cvecs or codebook, k·d / |codes|·d longs
-      // — bounded by construction) into the embedding scan; the former
-      // N·k expansion + argmin exchange + join-back are gone
+      // Similarity.assign / withArgminCell / withPqCodes cross a
+      // ONE-ROW broadcast pack (cells/cvecs or codebook, k·d /
+      // |codes|·d longs — bounded by construction) into the embedding
+      // scan; the multiprobe rows add the Dist2Q probe ranking's cross
+      // over the |Q| query vectors
       "sim_ivf_assign", "sim_ivf_kmeans", "sim_ann_multiprobe",
       "sim_pq_adc",
-      // embeds ivfAssign's kernel cross for the true-cell membership
+      // sim_ann_multiprobe at nprobe = 1
       "sim_ann_ivf_true")
     val allowCartesian = Set("dedup_srp_bands", "dedup_embedding_srp")
     // streaming queries execute on build; roundtrips write scratch files;

@@ -34,7 +34,8 @@ class StreamIvfPqSpec extends SparkSpec {
       .filter(pmod(col("vec_id"), lit(10L)) === 9L)
       .select(col("vec_id"), col("embedding"))
     val replay = delta
-      .join(Similarity.argminByDist(delta, cents), Seq("vec_id"))
+      .join(Similarity.assign(delta, cents, bounded = true)
+        .select(col("vec_id"), col("cell")), Seq("vec_id"))
       .join(Similarity.withPqCodes(delta, cb)
         .select(col("vec_id"), col("codes")), Seq("vec_id"))
       .select(col("cell"), col("vec_id"), col("codes"), col("embedding"))

@@ -31,8 +31,7 @@ class StreamIvfSpec extends SparkSpec {
       .filter(pmod(col("vec_id"), lit(10L)) === 9L)
       .select(col("vec_id"), col("embedding"))
     val member = graft.operators.Similarity
-      .rankedAgainst(graft.operators.Similarity.quantizedOf(delta), cents)
-      .filter(col("crn") === 1).select(col("vec_id"), col("cell"))
+      .assign(delta, cents, bounded = true).select(col("vec_id"), col("cell"))
     val replay = delta.join(member, Seq("vec_id"))
       .select(col("cell"), col("vec_id"), col("embedding"))
     tx.appendBatchIdempotent(replay, batchId = 0L, bloomCols = Seq("cell"))

@@ -35,7 +35,8 @@ class StreamIvfSq8Spec extends SparkSpec {
       .filter(pmod(col("vec_id"), lit(10L)) === 9L)
       .select(col("vec_id"), col("embedding"))
     val replay = delta
-      .join(Similarity.argminByDist(delta, cents), Seq("vec_id"))
+      .join(Similarity.assign(delta, cents, bounded = true)
+        .select(col("vec_id"), col("cell")), Seq("vec_id"))
       .withColumn("codes", Similarity.sq8EncodeExpr(mnv, sv))
       .withColumn("code_sum", expr("aggregate(codes, 0L, (a, x) -> a + x)"))
       .select(col("cell"), col("vec_id"), col("codes"), col("code_sum"),

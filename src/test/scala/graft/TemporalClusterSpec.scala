@@ -53,29 +53,6 @@ class TemporalClusterSpec extends SparkSpec {
     assert(Cluster.connectedComponents(edges).count() === 0L)
   }
 
-  test("star-contraction CC agrees with hash-min on paths, cliques, isolates") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // a 60-node path (diameter 59 — hash-min's worst case, star's best
-    // case), a 5-clique, a 2-node island; labels must agree exactly
-    val path = (0L until 59L).map(i => (i, i + 1))
-    val clique = (for (i <- 100L to 104L; j <- (i + 1) to 104L) yield (i, j))
-    val island = Seq((200L, 201L))
-    val edges = (path ++ clique ++ island).toDF("src", "dst")
-      // shuffle edge order + direction so neither algorithm sees a
-      // convenient layout
-      .select(when(col("src") % 3 === 0, col("dst")).otherwise(col("src")).as("src2"),
-        when(col("src") % 3 === 0, col("src")).otherwise(col("dst")).as("dst2"))
-      .select(col("src2").as("src"), col("dst2").as("dst"))
-      .repartition(7)
-    val hashMin = Cluster.connectedComponents(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = Cluster.connectedComponentsStar(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star === hashMin)
-    assert(star(59L) === 0L && star(104L) === 100L && star(201L) === 200L)
-  }
-
   test("connectedComponents converges past the edge direction") {
     // min id sits at the END of the chain: propagation must flow "up"
     val edges = Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L)).toDF("src", "dst")
