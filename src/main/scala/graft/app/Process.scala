@@ -13,7 +13,7 @@ import graft.schema.DomainConfig
   *   runMain graft.app.Process <domain> <rawJsonFile> <lakeRoot>
   *
   * raw JSON → normalize → processed zone (wrapped JSON parity copy +
-  * parquet zone table) → enrich → refine zone (JSON + parquet).
+  * zone table) → enrich → refine zone (JSON + zone table).
   */
 object Process {
 
@@ -67,12 +67,15 @@ object Process {
     * the same jobs and tasks.
     *
     * A failing sink does not stop the others: the upload waits for all
-    * of them, then throws the first failure in the order above. So a
-    * failed upload may leave any branch's finished outputs, not only
-    * those of sinks before the failing one; the zone tables need a
-    * transactional commit (ROADMAP Direction 1) to make an upload all
-    * or nothing. The report lines print the row counts the JSON sinks
-    * wrote instead of re-counting, in a fixed order, after the sinks. */
+    * of them, then throws the first failure in the order above. Each
+    * zone table write is one atomic commit to the zone's
+    * [[graft.lake.TxTable]], so a zone write that fails leaves no
+    * visible rows in its table. The upload as a whole is still not all
+    * or nothing across its sinks: a failed upload may leave any other
+    * branch's finished outputs (its JSON objects, the other zone's
+    * commit), not only those of sinks before the failing one. The
+    * report lines print the row counts the JSON sinks wrote instead of
+    * re-counting, in a fixed order, after the sinks. */
   def run(spark: org.apache.spark.sql.SparkSession, domain: String,
       rawFile: String, root: String): Unit = {
     import org.apache.spark.sql.functions.col
@@ -99,7 +102,7 @@ object Process {
         if (domain == "parking") Sessionization.explodeSlots(frames)
         else Normalize.flatten(cfg)(raw)
 
-      // processed zone: parity JSON + scale-path parquet; parking's
+      // processed zone: parity JSON + scale-path zone table; parking's
       // frames are written as read, the regrouped ones in frame order
       val (grouped, frameOrder) =
         if (domain == "parking") (frames, Nil)

@@ -1,7 +1,7 @@
 package graft.lake
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructType}
 import scala.jdk.CollectionConverters._
 
@@ -15,9 +15,13 @@ import scala.jdk.CollectionConverters._
   *   array/wrapped layouts, for drop-in compatibility. These collect to
   *   the driver by design — the reference's outputs are one small JSON
   *   document per video; they are NOT the scale path.
-  * - **Parquet zone tables**: partitioned columnar tables
-  *   (`zone/domain/`, partitioned by source file), the path every
-  *   100 TB-scale read/write takes (BASELINE.json north star).
+  * - **Zone tables**: one [[TxTable]] per `zone/domain`, the path
+  *   every 100 TB-scale read/write takes (BASELINE.json north star).
+  *   Each write is one atomic append to the table's log, with the
+  *   upload's source file as the ordinary column `_source_file`;
+  *   reads see the latest committed snapshot, and compaction is the
+  *   table's own (`txTable(zone, domain).compact(n)`), which keeps
+  *   rows appended while it runs.
   */
 final case class Lake(spark: SparkSession, root: String) {
 
@@ -78,54 +82,22 @@ final case class Lake(spark: SparkSession, root: String) {
     rows.length
   }
 
-  /** Scale path: append to the partitioned parquet zone table. */
+  /** Scale path: one atomic append of `df`, tagged with its source
+    * file, to the zone's table. A column whose type clashes with the
+    * table's pinned one throws before anything commits. */
   def writeZoneTable(df: DataFrame, zone: String, domain: String,
       sourceFile: String): Unit =
-    df.withColumn("_source_file", org.apache.spark.sql.functions.lit(sourceFile))
-      .write.mode(SaveMode.Append)
-      .partitionBy("_source_file")
-      .parquet(zonePath(zone, domain))
+    txTable(zone, domain).append(
+      df.withColumn("_source_file", org.apache.spark.sql.functions.lit(sourceFile)))
 
+  /** The zone table's latest committed snapshot. */
   def readZoneTable(zone: String, domain: String): DataFrame =
-    spark.read.parquet(zonePath(zone, domain))
+    txTable(zone, domain).read()
 
-  /** Compaction: rewrite a zone table's accumulated small per-ingest
-    * files into `targetFiles` read-optimized files. Per-file ingest
-    * (one upload per video, reference lifecycle §3.1) produces exactly
-    * the small-file pathology that kills scan throughput at scale;
-    * periodic compaction is the standard cure. The rewrite lands in a
-    * staging directory first and swaps in atomically-enough for a
-    * single-writer lake; multi-writer zones use [[txTable]], whose
-    * manifest log makes compaction transactional against concurrent
-    * ingest. Collapses the per-source partition layout; `_source_file`
-    * lineage survives as a column. */
-  def compact(zone: String, domain: String, targetFiles: Int): Unit = {
-    val path = zonePath(zone, domain)
-    val staging = path + "__compacting"
-    val retired = path + "__retired"
-    def rmTree(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally s.close()
-    }
-    // recover from a prior crash: a stranded __retired means the swap
-    // died between moves — restore it; stale staging is simply discarded
-    if (!Files.exists(Paths.get(path)) && Files.exists(Paths.get(retired)))
-      Files.move(Paths.get(retired), Paths.get(path))
-    rmTree(Paths.get(staging))
-    rmTree(Paths.get(retired))
-    spark.read.parquet(path)
-      .repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(staging)
-    Files.move(Paths.get(path), Paths.get(retired))
-    Files.move(Paths.get(staging), Paths.get(path))
-    rmTree(Paths.get(retired))
-  }
-
-  /** Transactional zone table (versioned-manifest log): the
-    * multi-writer form of a zone — atomic append, snapshot reads, and
-    * compaction that cannot lose concurrent ingest. See [[TxTable]] for
-    * the protocol and the documented relationship to Delta/Iceberg. */
+  /** The zone's table (versioned-manifest log): atomic append,
+    * snapshot reads, and compaction that cannot lose concurrent
+    * ingest. See [[TxTable]] for the protocol and the documented
+    * relationship to Delta/Iceberg. */
   def txTable(zone: String, domain: String): TxTable =
     TxTable(spark, zonePath(zone, domain))
 

@@ -61,8 +61,11 @@ final case class TxTable(spark: SparkSession, root: String) {
     * followed by TAB and per-file column stats (`col=min..max;…`) —
     * the data-skipping index, carried through every commit because
     * entries travel verbatim from one manifest to the next. Bare names
-    * (pre-stats manifests) parse as stats-less entries. */
-  final case class Snapshot(version: Long, files: Seq[String])
+    * (pre-stats manifests) parse as stats-less entries. `schema` is
+    * the pin of the manifest's `#schema=` annotation (every commit
+    * re-publishes it), None for manifests written before pinning. */
+  final case class Snapshot(version: Long, files: Seq[String],
+      schema: Option[StructType])
 
   /** Relative data-file name of a manifest entry. */
   def entryName(e: String): String = e.takeWhile(_ != '\t')
@@ -118,11 +121,18 @@ final case class TxTable(spark: SparkSession, root: String) {
     * `manifestVersions` skips it, `vacuum` reclaims stranded ones. */
   private val TempManifestPrefix = ".pending-"
 
-  // manifest lines starting with '#' are annotations (e.g. the
-  // streaming batch marker), not data files
-  private def manifestFiles(v: Long): Seq[String] =
-    Files.readAllLines(manifestPath(v)).asScala.toSeq
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
+  private val SchemaTag = "#schema="
+
+  /** The manifest of version `v`, read once. Lines starting with '#'
+    * are annotations (the schema pin, the streaming batch marker), not
+    * data files. */
+  private def snapshotAt(v: Long): Snapshot = {
+    val lines = Files.readAllLines(manifestPath(v)).asScala.toSeq
+    Snapshot(v, lines.filter(l => l.nonEmpty && !l.startsWith("#")),
+      lines.collectFirst { case l if l.startsWith(SchemaTag) =>
+        DataType.fromJson(l.stripPrefix(SchemaTag)).asInstanceOf[StructType]
+      })
+  }
 
   private def manifestVersions(): Seq[Long] = {
     if (!Files.exists(logDir)) return Seq.empty
@@ -137,20 +147,18 @@ final case class TxTable(spark: SparkSession, root: String) {
   }
 
   /** Latest committed snapshot, or None for an empty/new table. */
-  def latest(): Option[Snapshot] =
-    manifestVersions().maxOption.map(v => Snapshot(v, manifestFiles(v)))
+  def latest(): Option[Snapshot] = manifestVersions().maxOption.map(snapshotAt)
 
-  /** The authoritative schema pinned in the `#schema=` annotation of
-    * `version`'s manifest (every commit re-publishes it), or None for
-    * manifests written before schema pinning existed. */
-  def pinnedSchemaOf(version: Long): Option[StructType] =
-    Files.readAllLines(manifestPath(version)).asScala
-      .find(_.startsWith("#schema="))
-      .map(l => DataType.fromJson(l.stripPrefix("#schema=")).asInstanceOf[StructType])
+  /** The latest snapshot; throws naming `what` for an empty table. */
+  private def latestOr(what: String): Snapshot =
+    latest().getOrElse(throw new IllegalStateException(s"$what at $root"))
+
+  /** The authoritative schema pinned in `version`'s manifest, or None
+    * for manifests written before schema pinning existed. */
+  def pinnedSchemaOf(version: Long): Option[StructType] = snapshotAt(version).schema
 
   /** Pinned schema of the latest snapshot, if any. */
-  def pinnedSchema(): Option[StructType] =
-    latest().flatMap(s => pinnedSchemaOf(s.version))
+  def pinnedSchema(): Option[StructType] = latest().flatMap(_.schema)
 
   /** Additive schema evolution with a type gate: columns new to the
     * table append (nullable — older files null-fill them); columns the
@@ -197,7 +205,7 @@ final case class TxTable(spark: SparkSession, root: String) {
   /** Empty DataFrame carrying the snapshot's schema — what a read of a
     * legitimately empty table (e.g. after a delete-everything) yields. */
   private def emptyLike(snap: Snapshot): DataFrame =
-    pinnedSchemaOf(snap.version) match {
+    snap.schema match {
       case Some(s) =>
         spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
       case None if snap.files.nonEmpty =>
@@ -210,14 +218,16 @@ final case class TxTable(spark: SparkSession, root: String) {
     * An empty snapshot (every row deleted) reads as an empty DataFrame
     * with the pinned schema — the table stays readable. */
   def read(version: Option[Long] = None): DataFrame = {
-    val snap = version match {
-      case Some(v) => Snapshot(v, manifestFiles(v))
-      case None => latest().getOrElse(
-        throw new IllegalStateException(s"empty tx table at $root"))
-    }
-    if (snap.files.isEmpty) emptyLike(snap)
-    else readEntries(snap.files, pinnedSchemaOf(snap.version))
+    val snap = version.fold(latestOr("empty tx table"))(snapshotAt)
+    readPruned(snap, snap.files)
   }
+
+  /** The rows of `hit`, entries of `snap` left after pruning, read
+    * under its pinned schema; with no entry hit, an empty frame of that
+    * schema (Catalyst folds a filter over it to an empty LocalRelation,
+    * so no scan runs). */
+  private def readPruned(snap: Snapshot, hit: Seq[String]): DataFrame =
+    if (hit.nonEmpty) readEntries(hit, snap.schema) else emptyLike(snap)
 
   /** Schema evolution on read: with a pinned schema (any manifest
     * written by current code) the read is schema-GIVEN — zero parquet
@@ -351,8 +361,8 @@ final case class TxTable(spark: SparkSession, root: String) {
         case Some(f) => f
         case None => return None
       }
-      val pin = evolveSchema(cur.flatMap(c => pinnedSchemaOf(c.version)))
-      val schemaLine = pin.map(s => s"#schema=${s.json}").toSeq
+      val pin = evolveSchema(cur.flatMap(_.schema))
+      val schemaLine = pin.map(s => s"$SchemaTag${s.json}").toSeq
       val body = (schemaLine ++ annotations ++ files).mkString("\n").getBytes("UTF-8")
       val tmp = logDir.resolve(s"$TempManifestPrefix${UUID.randomUUID()}")
       Files.write(tmp, body, StandardOpenOption.CREATE_NEW)
@@ -498,14 +508,10 @@ final case class TxTable(spark: SparkSession, root: String) {
     * the values (or it carries no bitmap — skipping is an
     * optimization, never a correctness filter). */
   def readWhereIn(column: String, values: Seq[Column]): DataFrame = {
-    val snap = latest().getOrElse(
-      throw new IllegalStateException(s"empty tx table at $root"))
+    val snap = latestOr("empty tx table")
     if (values.isEmpty) return emptyLike(snap)
-    val hit = bloomHits(snap, column, values)
-    val base =
-      if (hit.nonEmpty) readEntries(hit, pinnedSchemaOf(snap.version))
-      else emptyLike(snap)
-    base.filter(values.map(col(column) === _).reduce(_ || _))
+    readPruned(snap, bloomHits(snap, column, values))
+      .filter(values.map(col(column) === _).reduce(_ || _))
   }
 
   /** Entries whose Bloom bitmap may contain `value` in `column` (or
@@ -553,12 +559,13 @@ final case class TxTable(spark: SparkSession, root: String) {
     * an optimization, never a correctness filter). */
   def liveEntriesFor(snap: Snapshot, column: String,
       lo: Long, hi: Long): Seq[String] =
-    snap.files.filter { e =>
-      entryStats(e).get(column) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
+    snap.files.filter(mayHold(_, column, lo, hi))
+
+  /** May entry `e` hold rows with `column` ∈ [lo, hi]? Its recorded
+    * [min,max] intersects, or it records none (unknown ⇒ cannot be
+    * ruled out). */
+  private def mayHold(e: String, column: String, lo: Long, hi: Long): Boolean =
+    entryStats(e).get(column).forall { case (mn, mx) => mx >= lo && mn <= hi }
 
   /** Data-skipping range read: scans ONLY the files whose recorded
     * [min,max] for `column` intersects [lo, hi] (Delta/Iceberg file
@@ -567,15 +574,9 @@ final case class TxTable(spark: SparkSession, root: String) {
     * files before the query even starts. Equals
     * `read().filter(column BETWEEN lo AND hi)` by construction. */
   def readWhere(column: String, lo: Long, hi: Long): DataFrame = {
-    val snap = latest().getOrElse(
-      throw new IllegalStateException(s"empty tx table at $root"))
-    val hit = liveEntriesFor(snap, column, lo, hi)
-    val base =
-      if (hit.nonEmpty) readEntries(hit, pinnedSchemaOf(snap.version))
-      // no file can match: keep the schema, produce zero rows (Catalyst
-      // folds filter(false) to an empty LocalRelation — no scan runs)
-      else emptyLike(snap)
-    base.filter(col(column).try_cast("long").between(lo, hi))
+    val snap = latestOr("empty tx table")
+    readPruned(snap, liveEntriesFor(snap, column, lo, hi))
+      .filter(col(column).try_cast("long").between(lo, hi))
   }
 
   /** Copy-on-write MERGE (upsert): rows of `source` replace target
@@ -598,8 +599,7 @@ final case class TxTable(spark: SparkSession, root: String) {
   def merge(source: DataFrame, key: String,
       statsCols: Seq[String] = Nil, targetFiles: Int = 0,
       beforeCommit: () => Unit = () => ()): Long = {
-    val snap = latest().getOrElse(
-      throw new IllegalStateException(s"cannot merge into empty table at $root"))
+    val snap = latestOr("cannot merge into empty table")
     val Seq(srcLo, srcHi) = {
       val r = source.agg(min(col(key).cast("long")), max(col(key).cast("long")))
         .collect().head // two longs — metadata, not data
@@ -607,49 +607,60 @@ final case class TxTable(spark: SparkSession, root: String) {
       Seq(r.getLong(0), r.getLong(1))
     }
     val affected = liveEntriesFor(snap, key, srcLo, srcHi)
-    val affectedSet = affected.toSet
-    val merged = {
-      val kept =
-        if (affected.isEmpty) source.limit(0)
-        else readEntries(affected, pinnedSchemaOf(snap.version))
-          .join(source, Seq(key), "left_anti")
-      val all = kept.unionByName(source, allowMissingColumns = true)
-      if (targetFiles > 0) all.repartitionByRange(targetFiles, col(key))
-      else all
-    }
-    val staged = stage(merged, statsCols)
-    beforeCommit()
-    val v = guardStaged(staged) {
+    val kept =
+      if (affected.isEmpty) source.limit(0)
+      else readEntries(affected, snap.schema).join(source, Seq(key), "left_anti")
+    val all = kept.unionByName(source, allowMissingColumns = true)
+    rewrite("merge", snap, affected,
+      if (targetFiles > 0) all.repartitionByRange(targetFiles, col(key)) else all,
+      statsCols, range = Some((key, srcLo, srcHi)), beforeCommit = beforeCommit,
+      evolveSchema = appendEvolution(source.schema))
+  }
+
+  /** The one copy-on-write commit of [[merge]], [[delete]], [[zorder]]
+    * and [[compact]]: stages `rows`, runs `beforeCommit` (a test seam
+    * for injecting a concurrent writer at the worst moment), then
+    * commits `cur − inputs ∪ staged` against the FRESH current list.
+    * It aborts when any input has left `cur` (a racing rewrite replaced
+    * it: committing would resurrect replaced rows, or, once a racing
+    * compactor's filterNot is a no-op, append a second copy of every
+    * row), and, with a key `range`, when [[rangeConflict]] finds a
+    * racing append that may hold keys in it. An abort unstages and
+    * throws `ConcurrentModificationException` naming `op`: the caller
+    * re-reads the latest snapshot and retries. */
+  private def rewrite(op: String, snap: Snapshot, inputs: Seq[String],
+      rows: DataFrame, statsCols: Seq[String], bloomCols: Seq[String] = Nil,
+      range: Option[(String, Long, Long)] = None,
+      beforeCommit: () => Unit = () => (),
+      evolveSchema: Option[StructType] => Option[StructType] = identity): Long = {
+    val replaced = inputs.toSet
+    val staged = stage(rows, statsCols, bloomCols)
+    guardStaged(staged) {
+      beforeCommit()
       commit(
         cur =>
-          if (!affectedSet.subsetOf(cur.toSet)) None // inputs replaced
-          else if (rangeConflict(cur, snap.files, key, srcLo, srcHi)) None
-          else Some(cur.filterNot(affectedSet) ++ staged),
-        evolveSchema = appendEvolution(source.schema))
-    }
-    v.getOrElse {
+          if (!replaced.subsetOf(cur.toSet)) None
+          else if (range.exists { case (c, lo, hi) => rangeConflict(cur, snap.files, c, lo, hi) })
+            None
+          else Some(cur.filterNot(replaced) ++ staged),
+        evolveSchema = evolveSchema)
+    }.getOrElse {
       unstage(staged)
       throw new java.util.ConcurrentModificationException(
-        s"merge inputs at $root changed under us (concurrent rewrite, or " +
-          "a concurrent append whose keys may fall in the merge range); " +
-          "re-read the latest snapshot and retry")
+        s"$op inputs at $root changed under us (a concurrent rewrite" +
+          range.fold("")(_ => s", or a concurrent append whose keys may fall in the $op range") +
+          "); re-read the latest snapshot and retry")
     }
   }
 
   /** True when `cur` contains entries that were NOT in the snapshot
-    * this rewrite read (`base`) and whose recorded [min,max] for
-    * `column` may intersect [lo, hi] — a stats-less new entry counts
-    * (unknown ⇒ cannot be ruled out). Such rows would be carried over
-    * verbatim by a merge/delete commit, silently escaping it. */
+    * this rewrite read (`base`) and that may hold rows with `column` ∈
+    * [lo, hi]. Such rows would be carried over verbatim by a
+    * merge/delete commit, silently escaping it. */
   private def rangeConflict(cur: Seq[String], base: Seq[String],
       column: String, lo: Long, hi: Long): Boolean = {
     val known = base.toSet
-    cur.exists { e =>
-      !known(e) && (entryStats(e).get(column) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      })
-    }
+    cur.exists(e => !known(e) && mayHold(e, column, lo, hi))
   }
 
   /** Copy-on-write DELETE of rows with `column` ∈ [lo, hi]: files
@@ -666,10 +677,8 @@ final case class TxTable(spark: SparkSession, root: String) {
   def delete(column: String, lo: Long, hi: Long,
       statsCols: Seq[String] = Nil,
       beforeCommit: () => Unit = () => ()): Long = {
-    val snap = latest().getOrElse(
-      throw new IllegalStateException(s"cannot delete from empty table at $root"))
+    val snap = latestOr("cannot delete from empty table")
     val affected = liveEntriesFor(snap, column, lo, hi)
-    val affectedSet = affected.toSet
     if (affected.isEmpty) return snap.version // nothing can match
     // null-safe BOTH ways: a NULL key is never "in range" (bare
     // `!between` is NULL for NULL input and would drop the row), and a
@@ -680,24 +689,9 @@ final case class TxTable(spark: SparkSession, root: String) {
     // on a malformed string — a delete on a string column would crash
     // instead of keeping the row
     val k = col(column).try_cast("long")
-    val remaining = readEntries(affected, pinnedSchemaOf(snap.version))
-      .filter(k.isNull || !k.between(lo, hi))
-    val staged = stage(remaining, statsCols)
-    beforeCommit()
-    val v = guardStaged(staged) {
-      commit { cur =>
-        if (!affectedSet.subsetOf(cur.toSet)) None
-        else if (rangeConflict(cur, snap.files, column, lo, hi)) None
-        else Some(cur.filterNot(affectedSet) ++ staged)
-      }
-    }
-    v.getOrElse {
-      unstage(staged)
-      throw new java.util.ConcurrentModificationException(
-        s"delete inputs at $root changed under us (concurrent rewrite, or " +
-          "a concurrent append whose keys may fall in the delete range); " +
-          "re-read the latest snapshot and retry")
-    }
+    rewrite("delete", snap, affected,
+      readEntries(affected, snap.schema).filter(k.isNull || !k.between(lo, hi)),
+      statsCols, range = Some((column, lo, hi)), beforeCommit = beforeCommit)
   }
 
   /** Row-level change-data-capture between two committed versions,
@@ -708,18 +702,19 @@ final case class TxTable(spark: SparkSession, root: String) {
     * an update appears as its delete + insert pair, rows merely
     * rewritten by compaction cancel out. */
   def changes(fromVersion: Long, toVersion: Long): DataFrame = {
-    val from = manifestFiles(fromVersion)
-    val to = manifestFiles(toVersion)
+    val fromSnap = snapshotAt(fromVersion)
+    val toSnap = snapshotAt(toVersion)
+    val (from, to) = (fromSnap.files, toSnap.files)
     // both sides read under the TO version's pinned schema (additive
     // evolution: older files null-fill), so the multiset difference
     // compares congruent rows
-    val pin = pinnedSchemaOf(toVersion).orElse(pinnedSchemaOf(fromVersion))
+    val pin = toSnap.schema.orElse(fromSnap.schema)
     val added = to.filterNot(from.toSet)
     val removed = from.filterNot(to.toSet)
     def rows(es: Seq[String], schemaOf: Seq[String]): DataFrame =
       if (es.nonEmpty) readEntries(es, pin)
       else if (schemaOf.nonEmpty) readEntries(schemaOf, pin).filter(lit(false))
-      else emptyLike(Snapshot(toVersion, to))
+      else emptyLike(toSnap)
     if (added.isEmpty && removed.isEmpty)
       return rows(Nil, to).withColumn("_change", lit(""))
     val a = rows(added, removed)
@@ -736,27 +731,16 @@ final case class TxTable(spark: SparkSession, root: String) {
     * BY). Stats are recorded for both dimensions. */
   def zorder(colA: String, colB: String, targetFiles: Int,
       extraStatsCols: Seq[String] = Nil): Long = {
-    val snap = latest().getOrElse(
-      throw new IllegalStateException(s"nothing to zorder at $root"))
+    val snap = latestOr("nothing to zorder")
     if (snap.files.isEmpty) return snap.version // empty snapshot: no-op
-    val inputs = snap.files.toSet
     val z = graft.functions.ZOrder.interleave16(col(colA), col(colB))
-    val rewritten = stage(
-      readEntries(snap.files, pinnedSchemaOf(snap.version))
+    rewrite("zorder", snap, snap.files,
+      readEntries(snap.files, snap.schema)
         .withColumn("_z", z)
         .repartitionByRange(targetFiles, col("_z"))
         .sortWithinPartitions(col("_z"))
         .drop("_z"),
       statsCols = Seq(colA, colB) ++ extraStatsCols)
-    val v = commit { cur =>
-      if (!inputs.subsetOf(cur.toSet)) None
-      else Some(cur.filterNot(inputs) ++ rewritten)
-    }
-    v.getOrElse {
-      unstage(rewritten)
-      throw new java.util.ConcurrentModificationException(
-        s"zorder inputs at $root were replaced by a concurrent rewrite")
-    }
   }
 
   /** Transactional compaction: rewrites the snapshot it read into
@@ -772,38 +756,22 @@ final case class TxTable(spark: SparkSession, root: String) {
     * correctly (a file with no bitmap is always read) but every point
     * read would scan every compacted file, which defeats the index.
     *
-    * Concurrent-compaction conflict is detected, not re-based through:
-    * if a racing compactor already replaced this one's inputs, blindly
-    * committing `cur.filterNot(inputs) ++ rewritten` would append a
-    * second full copy of every row (filterNot is a no-op once the
-    * inputs are gone). When any input file has left the current
-    * snapshot, the loser unstages its rewrite and throws — the caller
-    * re-runs against the new snapshot if it still wants a compaction.
+    * Concurrent-compaction conflict is detected, not re-based through
+    * (see [[rewrite]]): the loser unstages its rewrite and throws — the
+    * caller re-runs against the new snapshot if it still wants a
+    * compaction.
     */
   def compact(targetFiles: Int, statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil, clusterBy: Seq[String] = Nil,
       beforeCommit: () => Unit = () => ()): Long = {
-    val snap = latest().getOrElse(
-      throw new IllegalStateException(s"nothing to compact at $root"))
+    val snap = latestOr("nothing to compact")
     if (snap.files.isEmpty) return snap.version // empty snapshot: no-op
-    val inputs = snap.files.toSet
-    val base = readEntries(snap.files, pinnedSchemaOf(snap.version))
-    val rewritten = stage(
+    val base = readEntries(snap.files, snap.schema)
+    rewrite("compaction", snap, snap.files,
       if (clusterBy.nonEmpty)
         base.repartitionByRange(targetFiles, clusterBy.map(col): _*)
       else base.repartition(targetFiles),
-      statsCols = statsCols, bloomCols = bloomCols)
-    beforeCommit()
-    val v = commit { cur =>
-      if (!inputs.subsetOf(cur.toSet)) None // inputs replaced under us
-      else Some(cur.filterNot(inputs) ++ rewritten)
-    }
-    v.getOrElse {
-      unstage(rewritten)
-      throw new java.util.ConcurrentModificationException(
-        s"compaction inputs at $root were replaced by a concurrent " +
-          "rewrite; re-read the latest snapshot and retry")
-    }
+      statsCols, bloomCols, beforeCommit = beforeCommit)
   }
 
   /** Delete data files the latest version does not reference — once
@@ -837,7 +805,7 @@ final case class TxTable(spark: SparkSession, root: String) {
     val snap = latest().getOrElse(return 0)
     val live = snap.files.map(entryName).toSet
     val everCommitted =
-      manifestVersions().flatMap(manifestFiles).map(entryName).toSet
+      manifestVersions().flatMap(snapshotAt(_).files).map(entryName).toSet
     val s = Files.list(dataDir)
     val all =
       try s.iterator().asScala.toSeq

@@ -239,8 +239,7 @@ object Dedup {
           7), lit(2)) === 0, 1L).otherwise(-1L))
     val qv = e.select(col("vec_id"), col("label"),
         posexplode(col("embedding")).as(Seq("d", "x")))
-      .withColumn("q", floor(col("x").cast("double") * 10000 + lit(0.5))
-        .cast("long"))
+      .withColumn("q", expr(Similarity.E4))
     // per-dim corpus sums (64 rows) → per-hyperplane mean projection,
     // rounded half-up over the exact-integer IEEE division
     val dimSums = qv.groupBy(col("d"))
@@ -248,9 +247,7 @@ object Dedup {
     val mu = dimSums.join(broadcast(hp), Seq("d"))
       .groupBy(col("j"))
       .agg(sum(col("s") * col("sd")).as("num"), min(col("n")).as("n"))
-      .select(col("j"),
-        expr("CAST(floor(CAST(num AS DOUBLE) / CAST(n AS DOUBLE) + 0.5) AS BIGINT)")
-          .as("cmu"))
+      .select(col("j"), Similarity.halfUpMean("num", "n").as("cmu"))
     val bits = qv.join(broadcast(hp), Seq("d"))
       .groupBy(col("vec_id"), col("j"))
       .agg(sum(col("q") * col("s")).as("proj"))

@@ -48,7 +48,7 @@ object Similarity {
 
   /** The half-up integer mean floor(s/n + 0.5) of integer columns `s`
     * and `n`: exact-integer IEEE division, identical on every engine. */
-  private def halfUpMean(s: String, n: String): Column =
+  private[graft] def halfUpMean(s: String, n: String): Column =
     expr(s"CAST(floor(CAST($s AS DOUBLE) / CAST($n AS DOUBLE) + 0.5) AS BIGINT)")
 
   /** Each query's first `n` rows of `df` by `order`, numbered from 1 in

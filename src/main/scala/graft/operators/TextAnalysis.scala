@@ -766,19 +766,15 @@ object TextAnalysis {
         .crossJoin(broadcast(stats)))
       .groupBy(col("qid"), col("doc_id"))
       .agg(sum(col("idf_e4") * col("ratio_e3")).as("score_e7"))
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("score_e7").desc, col("doc_id"))
-    val rk = scored.withColumn("rank", row_number().over(wq).cast("long"))
-      .filter(col("rank") <= topK)
+    val rk = Similarity.perQuery(scored, topK, "rank")(col("score_e7").desc, col("doc_id"))
+      .withColumn("rank", col("rank").cast("long"))
     val rel = tf.groupBy(col("qid"), col("doc_id"))
       .agg(count(lit(1)).as("rel")) // rows are distinct terms present
     val dcg = rk.join(rel, Seq("qid", "doc_id"))
       .groupBy(col("qid"))
       .agg(sum(expr("(1000000 * rel) div (rank + 1)")).as("dcg_e6"))
-    val wi = Window.partitionBy(col("qid"))
-      .orderBy(col("rel").desc, col("doc_id"))
-    val idcg = rel.withColumn("irank", row_number().over(wi).cast("long"))
-      .filter(col("irank") <= topK)
+    val idcg = Similarity.perQuery(rel, topK, "irank")(col("rel").desc, col("doc_id"))
+      .withColumn("irank", col("irank").cast("long"))
       .groupBy(col("qid"))
       .agg(sum(expr("(1000000 * rel) div (irank + 1)")).as("idcg_e6"))
     val mrr = rk.join(rel, Seq("qid", "doc_id")).join(nq, Seq("qid"))

@@ -41,6 +41,26 @@ class LakeSpec extends SparkSpec with TempDirs {
     assert(lake.list("processed", "vehicle").nonEmpty)
   }
 
+  test("a zone write whose column type clashes with the pinned one commits nothing") {
+    import spark.implicits._
+    val root = tempDir("graft-lake").toString
+    val lake = Lake(spark, root)
+    lake.writeZoneTable(Seq((1L, 0.5), (2L, 0.9)).toDF("tracker_id", "confidence"),
+      "processed", "vehicle", "v1.json")
+    val t = lake.txTable("processed", "vehicle")
+    val version = t.latest().get.version
+    val data = new java.io.File(lake.zonePath("processed", "vehicle"), "data")
+    def dataFiles() = data.list().toSet
+    val files = dataFiles()
+    intercept[IllegalArgumentException] {
+      lake.writeZoneTable(Seq(("3", 0.7)).toDF("tracker_id", "confidence"),
+        "processed", "vehicle", "v2.json")
+    }
+    assert(t.latest().get.version === version)
+    assert(lake.readZoneTable("processed", "vehicle").count() === 2)
+    assert(dataFiles() === files)
+  }
+
   test("schema-given read skips inference and keeps _corrupt_record (S1 §4.2)") {
     val root = tempDir("graft-lake").toString
     val lake = Lake(spark, root)

@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
 import graft.lake.Lake
 import graft.operators.Cluster
 
@@ -26,18 +25,23 @@ class PagerankCompactionSpec extends SparkSpec with TempDirs {
   test("compaction collapses per-ingest files, preserves rows") {
     val root = tempDir("graft-lake").toString
     val lake = Lake(spark, root)
-    (1 to 3).foreach { i =>
-      lake.writeZoneTable(
-        Seq((i.toLong, s"v$i")).toDF("id", "v"), "processed", "t", s"f$i.json")
-    }
-    val before = lake.readZoneTable("processed", "t")
+    def write(i: Int): Unit = lake.writeZoneTable(
+      Seq((i.toLong, s"v$i")).toDF("id", "v"), "processed", "t", s"f$i.json")
+    (1 to 3).foreach(write)
+    def rows() = lake.readZoneTable("processed", "t")
       .select("id", "v", "_source_file").collect().toSet
-    lake.compact("processed", "t", targetFiles = 1)
-    val dir = new java.io.File(lake.zonePath("processed", "t"))
-    val dataFiles = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(dataFiles.length === 1)
-    val after = lake.readZoneTable("processed", "t")
-      .select("id", "v", "_source_file").collect().toSet
-    assert(after === before)
+    val before = rows()
+    val t = lake.txTable("processed", "t")
+    val inputs = t.latest().get.files.toSet
+    // an upload that commits while the compaction runs survives it
+    var injected = Set.empty[String]
+    t.compact(targetFiles = 1, beforeCommit = () => {
+      write(4)
+      injected = t.latest().get.files.toSet -- inputs
+    })
+    val files = t.latest().get.files
+    assert(files.filterNot(injected).length === 1)
+    assert(files.count(injected) === 1 && files.toSet.intersect(inputs).isEmpty)
+    assert(rows() === before + Row(4L, "v4", "f4.json"))
   }
 }

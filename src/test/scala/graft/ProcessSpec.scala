@@ -8,9 +8,10 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import scala.jdk.CollectionConverters._
 import graft.app.Process
+import graft.lake.Lake
 
 /** End-to-end lifecycle drive of the Process CLI body (§3.1 steps 2-6):
-  * raw JSON → processed zone (wrapped parity JSON + parquet) → refine
+  * raw JSON → processed zone (wrapped parity JSON + zone table) → refine
   * zone, for a schema-given domain (vehicle, with a corrupt sibling
   * file quarantined), inferred ones (retail; people's wrapped layout)
   * and parking's slot-map sessionization. Also pins the per-upload
@@ -99,13 +100,13 @@ class ProcessSpec extends SparkSpec {
       val (lines, jobs) = upload("vehicle", s"$dir/*.json", root)
       assert(jobs <= VehicleUploadJobs, s"$jobs jobs for one upload")
       assert(spark.sharedState.cacheManager.isEmpty, "the parsed document stayed cached")
-      val refined = spark.read.parquet(s"$root/refine/vehicle_detection")
+      val refined = Lake(spark, root).readZoneTable("refine", "vehicle")
       assert(refined.count() == 1)
       val r = refined.collect().head
       assert(r.getAs[String]("vehicle_type") == "car")
       assert(r.getAs[Long]("frame_count") == 2L)
       // the report prints what the sinks wrote
-      val processed = spark.read.parquet(s"$root/processed/vehicle_detection")
+      val processed = Lake(spark, root).readZoneTable("processed", "vehicle")
       assert(reported(lines, "refined entities") == refined.count())
       assert(reported(lines, "frames processed") ==
         processed.select("frame_number").distinct().count())
@@ -147,8 +148,8 @@ class ProcessSpec extends SparkSpec {
       val json = spark.read.option("multiLine", true)
         .json(s"$root/processed/vehicle_detection/preprocessed_v1.json")
       assert(json.selectExpr("size(frame_detections)").head().getInt(0) == 2)
-      assert(Files.exists(Paths.get(s"$root/processed/vehicle_detection/_SUCCESS")))
-      assert(spark.read.parquet(s"$root/processed/vehicle_detection").count() == 2)
+      assert(Lake(spark, root).txTable("processed", "vehicle").latest().nonEmpty)
+      assert(Lake(spark, root).readZoneTable("processed", "vehicle").count() == 2)
       assert(spark.sharedState.cacheManager.isEmpty, "the parsed document stayed cached")
       val alive = Thread.getAllStackTraces.keySet.asScala.map(_.getName)
         .filter(_.startsWith("graft-process"))
@@ -188,7 +189,7 @@ class ProcessSpec extends SparkSpec {
               "price": 2.5, "stock_level": 9.0, "picked_by_customer": true,
               "expiry_date": "2025-01-01"}]}]""")
       upload("retail", f.toString, root)
-      val refined = spark.read.parquet(s"$root/refine/retail_detection")
+      val refined = Lake(spark, root).readZoneTable("refine", "retail")
       val r = refined.collect().head
       assert(r.getAs[String]("product_id") == "p1")
       assert(r.getAs[Boolean]("picked_by_customer"))
@@ -217,7 +218,7 @@ class ProcessSpec extends SparkSpec {
       val (lines, jobs) = upload("people", f.toString, root)
       assert(jobs <= PeopleUploadJobs, s"$jobs jobs for one upload")
       val refined = rowsByKey[Long](
-        spark.read.parquet(s"$root/refine/people_detection"), "tracker_id")
+        Lake(spark, root).readZoneTable("refine", "people"), "tracker_id")
       assert(refined.keySet == Set(2L, 3L))
       assert(refined(2L).getAs[String]("gender") == "Woman")
       assert(refined(2L).getAs[Boolean]("entered_restricted_area"))
@@ -248,7 +249,7 @@ class ProcessSpec extends SparkSpec {
            ]}""")
       val (lines, _) = upload("parking", f.toString, root)
       val slots = rowsByKey[String](
-        spark.read.parquet(s"$root/refine/parking_detection"), "slot_id")
+        Lake(spark, root).readZoneTable("refine", "parking"), "slot_id")
       assert(slots.keySet == Set("1", "2"))
       assert(slots("1").getAs[Long]("became_free") == 1)
       assert(slots("1").getAs[String]("slot_status") == "occupied")

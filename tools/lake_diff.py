@@ -7,10 +7,14 @@
   must exist on both sides with the same bytes.
 - Every parquet zone table (a `<zone>/<domain>_detection` directory
   with `*.parquet` files below it) must hold the same multiset of rows.
-  Rows are read with pyarrow, file by file, with the `k=v` partition
-  directories added as string columns, and compared as sorted
-  canonical JSON lines, so part-file names, UUIDs and how rows are
-  split across files do not count.
+  A table with a `_log/` directory is a transaction-log table: only
+  the data files its latest manifest lists are read (each entry's
+  text before the first tab, under `data/`). Otherwise every parquet
+  file below the table is read, with the `k=v` partition directories
+  added as string columns, so a partitioned lake and a log-table lake
+  compare by rows. Rows are read with pyarrow, file by file, and
+  compared as sorted canonical JSON lines, so part-file names, UUIDs
+  and how rows are split across files do not count.
 
 Prints one line per difference and a summary; exits 1 if anything
 differs. `tools/lake_fixtures.py` makes lakes to compare.
@@ -34,6 +38,18 @@ def json_objects(root):
     return {p: Path(root, p).read_bytes() for p in walk(root) if p.endswith(".json")}
 
 
+def live_files(table_dir):
+    """Data files of a log table's latest manifest, relative to the table."""
+    log = os.path.join(table_dir, "_log")
+    versions = [f for f in os.listdir(log) if f.startswith("v") and f.endswith(".txt")]
+    if not versions:
+        return []
+    with open(os.path.join(log, max(versions))) as f:
+        lines = f.read().splitlines()
+    return [os.path.join("data", line.split("\t", 1)[0])
+            for line in lines if line and not line.startswith("#")]
+
+
 def zone_tables(root):
     """{table dir: [parquet file paths relative to the table]}."""
     tables = {}
@@ -41,7 +57,9 @@ def zone_tables(root):
         if p.endswith(".parquet"):
             parts = p.split(os.sep)
             tables.setdefault(os.path.join(*parts[:2]), []).append(os.path.join(*parts[2:]))
-    return tables
+    return {t: live_files(os.path.join(root, t))
+            if os.path.isdir(os.path.join(root, t, "_log")) else files
+            for t, files in tables.items()}
 
 
 def rows(root, table, files):
