@@ -40,6 +40,11 @@ object Bench {
     }.min
 
   def main(args: Array[String]): Unit = {
+    // dev knob: comma-separated query names (unset or empty = the full
+    // suite); lets a perf investigation time one query in the same
+    // warmed-session conditions as the full bench
+    val selected = SparkEntry.select(
+      sys.env.get("SPARK_GRAFT_BENCH_SUBSET").toSeq.flatMap(_.split(",")))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
@@ -48,23 +53,12 @@ object Bench {
     // so the first timed query doesn't absorb startup cost
     val t = graft.core.Tables(spark, sfDir)
     t.lineitem.count(); t.events.count(); t.documents.count(); t.embeddings.count()
-    // dev knob: comma-separated query names (unset = full suite, what
-    // the driver runs); lets a perf investigation time one query in
-    // the same warmed-session conditions as the real bench
-    val subset = sys.env.get("SPARK_GRAFT_BENCH_SUBSET")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty) // set-but-empty means the full suite
     // each serving query pre-builds exactly the standing index it
-    // reads (IndexCatalog), so subset runs pay only the warm-ups they
-    // need and no timed serving row folds its index build in. The
-    // sim_*_build / text_fts_build queries own the build costs as
-    // their own timed entries.
-    IndexCatalog.warm(spark, sfDir,
-      subset.getOrElse(IndexCatalog.byQuery.keySet))
-    val selected = subset match {
-      case Some(s) => SparkEntry.queries.filter { case (n, _) => s(n) }
-      case None => SparkEntry.queries
-    }
+    // declares, so subset runs pay only the warm-ups they need and no
+    // timed serving row folds its index build in. The sim_*_build /
+    // text_fts_build queries own the build costs as their own timed
+    // entries.
+    SparkEntry.warm(spark, sfDir, selected)
     // measurement protocol (BASELINE.md r9): each query runs TWICE and
     // reports the min. A single-JVM 170-query sweep manufactures 2-4x
     // singleton outliers from GC pressure and codegen-cache churn
@@ -202,7 +196,7 @@ object Bench {
     val cert = scala.collection.mutable.LinkedHashMap[String, Boolean]()
     val retried = scala.collection.mutable.LinkedHashMap[String, Int]()
     val seedSec = scala.collection.mutable.LinkedHashMap[String, Double]()
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    selected.sortBy(_._1).foreach { case (name, fn) =>
       val (sec, rowLegs, seed) = measureRow(name, fn, legPrev)
       if (calibEach) {
         legs(name) = rowLegs; legPrev = rowLegs.last

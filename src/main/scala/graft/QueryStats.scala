@@ -9,7 +9,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * (index builds, churn lifecycles, streamed seeds) whose work happens
   * inside the query function, where a single explain() can't see it.
   *
-  *   SPARK_GRAFT_SF_DIR=... runMain graft.QueryStats <query ...>
+  *   SPARK_GRAFT_SF_DIR=... runMain graft.QueryStats [query ...]
+  *
+  * No query names select every query.
   *
   * Output: one JSON line per query on stdout:
   *   {"query":..., "jobs":n, "stages":n, "tasks":n,
@@ -17,7 +19,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   */
 object QueryStats {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: QueryStats <query ...>")
+    val selected = SparkEntry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
@@ -45,24 +47,20 @@ object QueryStats {
       }
     })
 
-    args.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[qstats] unknown query: $name")
-        case Some(fn) =>
-          // settle listener events from warmup/previous query
-          Thread.sleep(300)
-          jobs.set(0); stages.set(0); tasks.set(0)
-          shufRead.set(0L); shufWrite.set(0L)
-          spark.sparkContext.setJobDescription(s"qstats: $name")
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          spark.sparkContext.setJobDescription(null)
-          // let straggling listener events drain before reading counts
-          Thread.sleep(500)
-          println(f"""{"query":"$name","jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},"shuffle_read_mb":${shufRead.get / 1048576.0}%.2f,"shuffle_write_mb":${shufWrite.get / 1048576.0}%.2f,"sec":$sec%.2f}""")
-          spark.catalog.clearCache()
-      }
+    selected.foreach { case (name, fn) =>
+      // settle listener events from warmup/previous query
+      Thread.sleep(300)
+      jobs.set(0); stages.set(0); tasks.set(0)
+      shufRead.set(0L); shufWrite.set(0L)
+      spark.sparkContext.setJobDescription(s"qstats: $name")
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val sec = (System.nanoTime() - t0) / 1e9
+      spark.sparkContext.setJobDescription(null)
+      // let straggling listener events drain before reading counts
+      Thread.sleep(500)
+      println(f"""{"query":"$name","jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},"shuffle_read_mb":${shufRead.get / 1048576.0}%.2f,"shuffle_write_mb":${shufWrite.get / 1048576.0}%.2f,"sec":$sec%.2f}""")
+      spark.catalog.clearCache()
     }
     spark.stop()
   }

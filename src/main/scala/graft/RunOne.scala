@@ -22,22 +22,11 @@ object RunOne {
     // this query's oracle SQL (if any) in check.py's expected layout,
     // so `tools/check.py <outDir> <sfDir>` verifies the one query
     SparkEntry.oracleSql.get(name).foreach { sql =>
-      val json = s"""{"$name": ${ujsonEscape(sql)}}"""
+      val json = s"""{"$name": ${Verify.jsonString(sql)}}"""
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, "oracle_sql.json"),
         json.getBytes("UTF-8"))
     }
     spark.stop()
   }
-
-  private def ujsonEscape(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

@@ -28,6 +28,30 @@ object SparkEntry {
     graft.registry.SimReg.queries ++
     graft.registry.PipelineReg.queries
 
+  /** The queries `names` selects, in the order given, for the mains'
+    * subset knobs and arguments: each name is trimmed, and no names (an
+    * unset or empty list) select every query. Throws before any work,
+    * naming every unregistered name. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val wanted = names.map(_.trim).filter(_.nonEmpty).distinct
+    val unknown = wanted.filterNot(all.contains)
+    require(unknown.isEmpty, s"unregistered queries: ${unknown.mkString(", ")}")
+    if (wanted.isEmpty) all.toSeq else wanted.map(n => n -> all(n))
+  }
+
+  /** Get-or-build the standing index each `selected` query declares
+    * ([[StandingIndex.Served]]), so a timed serving row or a dumped
+    * serving plan is the point read, not a build folded into it. The
+    * `*_build` queries and the streamed `stream_*_serve` lifecycles own
+    * their builds and declare none. */
+  def warm(spark: SparkSession, dir: String,
+      selected: Seq[(String, (SparkSession, String) => DataFrame)]): Unit =
+    selected.foreach {
+      case (_, q: StandingIndex.Served[_]) => q.index(spark, dir)
+      case _ =>
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     *

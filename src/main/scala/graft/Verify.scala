@@ -6,19 +6,15 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev knob (mirrors Bench): comma-separated query names — unset or
+    // empty = the full suite; lets a correctness investigation re-dump
+    // just the queries under study
+    val selected = SparkEntry.select(
+      sys.env.get("SPARK_GRAFT_VERIFY_SUBSET").toSeq.flatMap(_.split(",")))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // dev knob (mirrors Bench): comma-separated query names — unset =
-    // full suite, what the driver runs; lets a correctness
-    // investigation re-dump just the queries under study
-    val subset = sys.env.get("SPARK_GRAFT_VERIFY_SUBSET")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = subset match {
-      case Some(s) => SparkEntry.queries.filter { case (n, _) => s(n) }
-      case None => SparkEntry.queries
-    }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -33,21 +29,24 @@ object Verify {
       }
       spark.catalog.clearCache() // drop per-query caches (e.g. LSH shingles)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** `s` as a JSON string literal. Escapes backslash, quote, and ALL
+    * control chars (<0x20) — a tab or CR in oracle SQL would otherwise
+    * make the checker's json.load fail and silently zero every
+    * correctness result. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -18,9 +18,10 @@ import graft.core.Tables
   * - The standing indexes (label-seeded, √N and sample-trained cells;
   *   flat, SQ8 and PQ codes; batch, streamed and grow lifecycles) are
   *   one [[VectorIndex]] type with one registry, one loader and one
-  *   commit path; the queries here name a family and serve through it.
-  *   `graft.IndexCatalog` maps each serving query to the index it
-  *   reads, for the warm-ups in `Bench` and `PlanDump`.
+  *   commit path. Each serving query declares the family it reads at
+  *   its registry entry ([[StandingIndex.Served]]) and calls
+  *   `VectorIndex.buildAudit` / `serve` and [[recallOf]] directly;
+  *   only the √N build and serve the benchmark calls keep a name here.
   *
   * Every cell-probe query, indexed or not, is built from one of each:
   * - one ranker: [[probeList]] ranks each query's nearest cells (the
@@ -269,9 +270,10 @@ object Similarity {
     * near-uniform synthetic embeddings, recall@5 vs brute force):
     * nprobe=1 → 0.16, nprobe=3 → 0.52 — the knob is the point.
     * Members live only in their argmin cell of the label-seeded
-    * quantizer. This is the indexed serve ([[annIndexed]]) over the
-    * corpus instead of the postings table: the same [[probeList]] and
-    * [[topkByCell]], so the two answers are equal. */
+    * quantizer. This is the `Ivf` family's indexed serve
+    * ([[VectorIndex.serve]]) over the corpus instead of the postings
+    * table: the same [[probeList]] and [[topkByCell]], so the two
+    * answers are equal. */
   def annIvfMultiprobe(spark: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 3): DataFrame = {
     val cents = labelCentroids(qe4(spark, dir)).localCheckpoint()
@@ -280,41 +282,23 @@ object Similarity {
       probeList(spark, dir, cents, nprobe, bounded = true), k)
   }
 
-  /** Recall@k of the IVF ANN path against the brute-force ground
-    * truth — "measure, don't guess" applied to retrieval QUALITY, not
-    * just speed: an ANN index whose recall nobody measured is a wrong-
-    * answers generator with good latency. Per query: how many of
-    * [[annIvfTrue]]'s top-k appear in the exact top-k ([[topk]], no
-    * label blocking). Both sides are already-verified small results
-    * (k rows per query), so the comparison is metadata-sized; the
-    * recall ratio is an exact e6 integer. A query whose probed cell
-    * holds fewer than k true neighbors scores honestly low — that IS
-    * the single-probe trade-off this measures. */
-  def annRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
-    recallOf(spark, dir, annIvfTrue(spark, dir, k), k)
-
-  /** Recall@k of [[annIvfMultiprobe]] — the measured other end of the
-    * nprobe dial (see that method's numbers). */
-  def annRecallMultiprobe(spark: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = 3): DataFrame =
-    recallOf(spark, dir, annIvfMultiprobe(spark, dir, k, nprobe), k)
-
+  /** Recall@k of an ANN answer `approxDf` against the brute-force
+    * ground truth ([[topk]], no label blocking) — "measure, don't
+    * guess" applied to retrieval QUALITY, not just speed: an ANN index
+    * whose recall nobody measured is a wrong-answers generator with
+    * good latency. Per query: how many of the approximate top-k appear
+    * in the exact top-k; both sides are k rows per query, so the
+    * comparison is metadata-sized, and the ratio is an exact e6
+    * integer. A filtered serve passes its predicate as `cand`, so the
+    * ground truth is the exact top-k AMONG THE PREDICATE'S SURVIVORS:
+    * against unfiltered truth any filtered serve looks bad in
+    * proportion to selectivity, revealing nothing (the classic
+    * filtered-ANN measurement error). */
   private[graft] def recallOf(spark: SparkSession, dir: String,
-      approxDf: DataFrame, k: Int): DataFrame =
-    recallVs(approxDf,
-      topk(spark, dir, k, sameLabelOnly = false), k)
-
-  /** Recall@k of `approxDf` against an arbitrary exact ground truth —
-    * the shared tail of every recall query; the unfiltered paths pass
-    * the brute-force [[topk]], the filtered path the
-    * predicate-constrained variant (recall against the WRONG ground
-    * truth is the classic filtered-ANN measurement error: an
-    * unfiltered baseline makes any filtered serve look bad in
-    * proportion to selectivity, revealing nothing). */
-  private def recallVs(approxDf: DataFrame, exactDf: DataFrame,
-      k: Int): DataFrame = {
+      approxDf: DataFrame, k: Int, cand: Option[Column] = None): DataFrame = {
     val approx = approxDf.select(col("qid"), col("nid"))
-    val exact = exactDf.select(col("qid"), col("nid"))
+    val exact = topk(spark, dir, k, sameLabelOnly = false, cand)
+      .select(col("qid"), col("nid"))
     val hits = approx.join(exact, Seq("qid", "nid"))
       .groupBy(col("qid")).agg(count(lit(1)).as("n_hits"))
     exact.select(col("qid")).distinct()
@@ -331,13 +315,6 @@ object Similarity {
     * the real quantizer. */
   def annIvfTrue(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
     annIvfMultiprobe(spark, dir, k, nprobe = 1)
-
-  /** The label-seeded index's BUILD as its own declared query: trains
-    * the quantizer, commits postings and centroids, re-registers the
-    * standing index, and returns the cell-population audit
-    * ([[VectorIndex.buildAudit]]). */
-  def ivfBuild(spark: SparkSession, dir: String): DataFrame =
-    VectorIndex.buildAudit(spark, dir, VectorIndex.Ivf)
 
   /** Incremental IVF maintenance + serve, as one verified lifecycle —
     * the production pattern every vector store follows: the quantizer
@@ -661,21 +638,6 @@ object Similarity {
       probeList(spark, dir, cents, nprobe, bounded), k)
   }
 
-  /** Multi-probe ANN served FROM THE STANDING INDEX — semantically
-    * identical to [[annIvfMultiprobe]] (same probe ranking, same
-    * exact-cosine scoring; an index never changes the answer — it
-    * shares that query's oracle), but the per-query work is one
-    * Bloom-pruned point read of the probed cells' postings instead of
-    * a corpus re-cluster: probe ranking touches the build-pinned k·d
-    * centroid table, and the |Q|·nprobe probe-cell ids — the IVF
-    * analogue of the FTS query's term list, metadata-sized by
-    * definition — drive the postings read. Per-query cost scales with
-    * the probed cells' population, not the corpus. */
-  def annIndexed(spark: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = 3): DataFrame =
-    VectorIndex.serve(spark, dir, StandingIndex.ensure(spark, dir, VectorIndex.Ivf),
-      k, nprobe)
-
   /** The √N-index BUILD as its own declared query: trains the ⌈√N⌉
     * Lloyd quantizer, commits postings (with `label` in the row),
     * centroids and the per-label selectivity histogram, and returns the
@@ -684,7 +646,8 @@ object Similarity {
     * ONLY the cell alphabet, and turns the served fraction from nprobe/k
     * (constant) into nprobe/√N (shrinking). n_cells here GROWS with the
     * corpus — the audit row is the measurable witness of the scale
-    * rule, where [[ivfBuild]]'s stays pinned at the label alphabet. */
+    * rule, where the label-seeded `Ivf` build's stays pinned at the
+    * label alphabet. */
   def ivfBuildSqrt(spark: SparkSession, dir: String): DataFrame =
     VectorIndex.buildAudit(spark, dir, VectorIndex.Sqrt)
 
@@ -693,7 +656,7 @@ object Similarity {
     * actually survives a growing corpus: per-query candidates are
     * nprobe/⌈√N⌉ of the postings (shrinking fraction, [[annIvfSqrtK]])
     * AND the read is a Bloom-pruned point read of just the probed
-    * cells' files ([[annIndexed]]'s mechanics). Probe ranking touches
+    * cells' files (the `Ivf` serve's mechanics). Probe ranking touches
     * the build-pinned centroid table only — ⌈√N⌉·d rows, read from
     * its tx table with stats known to the planner, so no static hint
     * is needed or given (the √N side GROWS with the corpus; AQE keeps
@@ -706,68 +669,46 @@ object Similarity {
     VectorIndex.serve(spark, dir, StandingIndex.ensure(spark, dir, VectorIndex.Sqrt),
       k, nprobe)
 
-  /** Predicate-FILTERED ANN from the standing √N index — vector search
-    * with a WHERE clause (pgvector's `WHERE … ORDER BY embedding`,
-    * ES kNN `filter`), the form every retrieval deployment actually
-    * runs: top-k nearest AMONG the members satisfying a metadata
-    * predicate (here `label % 2 = 1` — the odd-labeled half).
-    *
-    * Pre-filter inside the probed cells: the attribute was written
-    * INTO the postings rows at build ([[ivfBuildSqrt]]), so the
-    * serve is probe → Bloom point read → predicate on the postings
-    * row → exact-cosine top-k — no join back to the corpus, and the
-    * predicate prunes BEFORE the distance kernel runs. Post-filtering
-    * a plain top-k would instead return < k (or wrong) rows whenever
-    * the filter is selective — the classic filtered-ANN failure. Probe
-    * ranking is unfiltered (cell geometry doesn't depend on the
-    * predicate), so this shares the quantizer — and the recall
-    * properties — of [[annIndexedSqrt]]. */
-  def annFilteredSqrt(spark: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = 3,
-      pred: Column = pmod(col("label"), lit(2)) === 1): DataFrame =
-    VectorIndex.serve(spark, dir, StandingIndex.ensure(spark, dir, VectorIndex.Sqrt),
-      k, nprobe, pred = Some(pred))
-
   /** The nprobe-widening rule for filtered ANN, as a number a spec can
     * pin: to hold the UNFILTERED design point's candidate count under
     * a predicate of selectivity s = n_match/N, the probe list must
     * grow 1/s× — candidates in probed cells thin out in proportion to
     * s (the starvation law `FilteredAnnSpec` measured), so
     * nprobe = min(maxProbe, ⌈baseNprobe · N / n_match⌉), exact integer
-    * ceiling. Selectivity comes from ONE aggregate over the corpus
-    * label column (column-pruned scan; a deployment caches this per
-    * predicate next to the index's cell populations — it changes only
-    * on append, never per query). */
-  def adaptiveNprobe(spark: SparkSession, dir: String, baseNprobe: Int = 3,
-      maxProbe: Int = 8,
+    * ceiling. Selectivity comes from [[selectivityFrame]]: a point
+    * read of the histogram `stats` the √N index pinned, or one
+    * aggregate over the corpus without one (it changes only on append,
+    * never per query). */
+  def adaptiveNprobe(spark: SparkSession, dir: String, stats: Option[String],
+      baseNprobe: Int = 3, maxProbe: Int = 8,
       pred: Column = col("label") === 1): Int = {
-    val r = selectivityFrame(spark, dir, pred).head
+    val r = selectivityFrame(spark, dir, stats, pred).head
     val n = r.getLong(0)
     val nm = math.max(r.getLong(1), 1L)
     math.min(maxProbe.toLong, (baseNprobe.toLong * n + nm - 1L) / nm).toInt
   }
 
   /** The (n, n_match) selectivity aggregate behind [[adaptiveNprobe]],
-    * exposed as a frame so `AdaptiveStatsSpec` can pin its plan: when
-    * the standing √N index has pinned its per-label histogram
-    * ([[ivfBuildSqrt]]) AND the predicate references only the
-    * `label` column — the one key the histogram groups by — the
-    * estimate is a weighted sum over that |labels|-row tx table, NO
-    * corpus scan at serve time. Any OTHER predicate (the public
-    * pred: Column contract admits every embeddings column) keeps the full-row corpus aggregate, as does an unbuilt index or
-    * a cold session without [[StandingIndex.load]]: same exact counts either
-    * way — the cache can never change an answer, only the plan. */
+    * exposed as a frame so `AdaptiveStatsSpec` can pin its plan: given
+    * the per-label histogram root `stats` the standing √N index pinned
+    * ([[ivfBuildSqrt]], its handle's `labelStats`) AND a predicate
+    * that references only the `label` column — the one key the
+    * histogram groups by — the estimate is a weighted sum over that
+    * |labels|-row tx table, NO corpus scan at serve time. Any OTHER
+    * predicate (the public pred: Column contract admits every
+    * embeddings column) keeps the full-row corpus aggregate, as does a
+    * caller without a histogram: same exact counts either way — the
+    * cache can never change an answer, only the plan. */
   private[graft] def selectivityFrame(spark: SparkSession, dir: String,
-      pred: Column): DataFrame = {
+      stats: Option[String], pred: Column): DataFrame = {
     import graft.lake.TxTable
-    val cached = StandingIndex.registered(dir, VectorIndex.Sqrt)
-      .flatMap(_.labelStats).flatMap { stats =>
+    val cached = stats.flatMap { root =>
       // expose ONLY `label` to the predicate (the count column is
       // renamed away): a label-only predicate analyzes and takes the
       // histogram path; any other reference fails analysis here and
       // falls through — never a silent mis-estimate against the
       // histogram's own columns
-      val hist = TxTable(spark, stats).read()
+      val hist = TxTable(spark, root).read()
         .select(col("label"), col("n").as("__hist_n"))
       // frame construction analyzes eagerly — an unresolvable (non-
       // label) predicate throws right here and takes the fallback
@@ -781,50 +722,21 @@ object Similarity {
           sum(when(pred, 1L).otherwise(0L)).cast("long").as("nm")))
   }
 
-  /** Predicate-filtered ANN with the ADAPTIVE probe width — the coded
-    * form of the fix `FilteredAnnSpec` demonstrates: the serve estimates the predicate's selectivity and
-    * widens nprobe by [[adaptiveNprobe]]'s rule, so a ~10%-selective
-    * filter probes maxProbe cells (recall equal to fixed nprobe=8 by
-    * construction) while a permissive filter stays at baseNprobe and
-    * never pays the widened probe fan-out. Serving mechanics are
-    * [[annFilteredSqrt]] verbatim at the chosen width. */
-  def annFilteredAdaptive(spark: SparkSession, dir: String, k: Int = 5,
-      baseNprobe: Int = 3, maxProbe: Int = 8,
-      pred: Column = col("label") === 1): DataFrame = {
-    // ensure first so the selectivity estimate reads the histogram
-    // pinned beside the index, not a per-serve corpus aggregate
-    StandingIndex.ensure(spark, dir, VectorIndex.Sqrt)
-    annFilteredSqrt(spark, dir, k,
-      adaptiveNprobe(spark, dir, baseNprobe, maxProbe, pred), pred)
-  }
-
-  /** Recall@k of the adaptive filtered serve vs the brute-force exact
-    * top-k AMONG the predicate's survivors — the measured witness that
-    * the widening recovers the starved recall at selective predicates
-    * (compare [[annFilteredRecall]] at the same predicate and fixed
-    * baseNprobe). */
-  def annFilteredAdaptiveRecall(spark: SparkSession, dir: String,
+  /** Predicate-filtered ANN from the standing √N index `idx` with the
+    * ADAPTIVE probe width — the coded form of the fix `FilteredAnnSpec`
+    * demonstrates: the serve estimates the predicate's selectivity from
+    * the histogram the handle carries and widens nprobe by
+    * [[adaptiveNprobe]]'s rule, so a ~10%-selective filter probes
+    * maxProbe cells (recall equal to fixed nprobe=8 by construction)
+    * while a permissive filter stays at baseNprobe and never pays the
+    * widened probe fan-out. Serving mechanics are the filtered
+    * [[VectorIndex.serve]] verbatim at the chosen width. */
+  def annFilteredAdaptive(spark: SparkSession, dir: String, idx: VectorIndex,
       k: Int = 5, baseNprobe: Int = 3, maxProbe: Int = 8,
       pred: Column = col("label") === 1): DataFrame =
-    recallVs(annFilteredAdaptive(spark, dir, k, baseNprobe, maxProbe, pred),
-      topk(spark, dir, k, sameLabelOnly = false, Some(pred)), k)
-
-  /** Recall@k of the FILTERED serve ([[annFilteredSqrt]]) against the
-    * brute-force exact top-k AMONG THE PREDICATE'S SURVIVORS — the
-    * missing quality number: filtered ANN's classic failure is probe
-    * starvation, where a selective predicate empties the probed cells'
-    * candidate lists while matching members sit in unprobed cells, and no unfiltered recall query can see it
-    * (the probe geometry is identical; only the SURVIVING candidate
-    * count changes). Measured sweep at sf0.1 (nprobe=3, k=5,
-    * `FilteredAnnSpec`): selectivity 1/2 → recall ≈ the unfiltered
-    * ceiling; 1/8 → measurably below it; widening nprobe restores it —
-    * the standard production fix (raise nprobe under selective
-    * filters), here demonstrated by the spec rather than asserted. */
-  def annFilteredRecall(spark: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = 3,
-      pred: Column = pmod(col("label"), lit(2)) === 1): DataFrame =
-    recallVs(annFilteredSqrt(spark, dir, k, nprobe, pred),
-      topk(spark, dir, k, sameLabelOnly = false, Some(pred)), k)
+    VectorIndex.serve(spark, dir, idx, k,
+      adaptiveNprobe(spark, dir, idx.labelStats, baseNprobe, maxProbe, pred),
+      pred = Some(pred))
 
   // ----------------------------------------------------------------
   // Sample-trained √N quantizer: cap the N^1.5 training term.
@@ -888,36 +800,6 @@ object Similarity {
     val (cents, bounded) = lloyd(sample, kk, 2, d)
     (cents, kk, bounded)
   }
-
-  /** The sample-trained build as its own declared query: the
-    * [[ivfBuildSqrt]] layout over the sample-trained cell alphabet
-    * (different training set ⇒ different centroids, so this family
-    * carries its own oracle), with `n_sample` in the audit — the
-    * measured training-set size, the witness that the N^1.5 term was
-    * actually capped (n_sample ≈ 8·⌈√N⌉ ≪ n_vecs in the mod > 1
-    * regime). */
-  def ivfBuildSample(spark: SparkSession, dir: String): DataFrame =
-    VectorIndex.buildAudit(spark, dir, VectorIndex.Sample)
-
-  /** Multi-probe ANN served from the standing sample-trained index —
-    * [[annIndexedSqrt]]'s serving mechanics (build-pinned centroid
-    * probe ranking, Bloom-pruned point read of the probed cells) over
-    * the sample-trained cell alphabet. */
-  def annIndexedSample(spark: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = 3): DataFrame =
-    VectorIndex.serve(spark, dir,
-      StandingIndex.ensure(spark, dir, VectorIndex.Sample), k, nprobe)
-
-  /** Recall@k of the sample-trained serving path vs the brute-force
-    * exact top-k — the number that prices what sample training COSTS
-    * in quality: compared against [[annSqrtRecall]] (the full-trained
-    * probe-limited ceiling at the same nprobe), the delta is the
-    * centroid-quality loss from training on 8·⌈√N⌉ vectors instead of
-    * N. The build-cost claim (linear training) is only honest next to
-    * this measured parity. */
-  def annSampleRecall(spark: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = 3): DataFrame =
-    recallOf(spark, dir, annIndexedSample(spark, dir, k, nprobe), k)
 
   /** The standing VECTOR index's churn lifecycle as one verified
     * query — the IVF twin of [[graft.operators.TextAnalysis.ftsChurn]]:
@@ -1006,87 +888,7 @@ object Similarity {
   }
 
   // ----------------------------------------------------------------
-  // IVF-SQ8: the composed standing index — √N Lloyd cells carrying
-  // SQ8 compact codes IN the postings, exact rerank on survivors only.
-  // ----------------------------------------------------------------
-
-  /** The IVF-SQ8 BUILD as its own declared query: trains the ⌈√N⌉
-    * quantizer (deterministic Lloyd — the same cell alphabet as the √N
-    * index), pins the global SQ8 range, encodes every vector on the row,
-    * and commits postings with codes AND exact vectors side by side
-    * (codes serve candidate generation; the exact column serves only
-    * the candK rerank and column-prunes out of the scoring scan). The
-    * audit extends the cell populations with the pinned code range —
-    * the two build-time decisions a deployment monitors for drift. This
-    * is the at-scale layout every production vector store converges on
-    * (FAISS `IVF…,SQ8`): probe 1/√N of the cells, scan 1 byte per dim
-    * (4× less memory bandwidth than floats), exact-rerank the
-    * survivors. */
-  def ivfSq8Build(spark: SparkSession, dir: String): DataFrame =
-    VectorIndex.buildAudit(spark, dir, VectorIndex.Sq8Sqrt)
-
-  /** The SAMPLE-trained IVF-SQ8 build: gate-sampled Lloyd training
-    * (linear instead of N^1.5, [[sampleQuantizer]]) under the same SQ8
-    * machinery, the full-corpus argmin as the only N·k term; the audit
-    * adds `n_sample`. */
-  def ivfSq8BuildSample(spark: SparkSession, dir: String): DataFrame =
-    VectorIndex.buildAudit(spark, dir, VectorIndex.Sq8Sample)
-
-  /** Multi-probe ANN served from the composed IVF-SQ8 index. Per query:
-    *  1. rank probe cells on the build-pinned centroid table
-    *     (nprobe/⌈√N⌉ of the corpus, a fraction that SHRINKS as N grows);
-    *  2. Bloom-pruned point read of the probed cells' postings, the
-    *     scoring scan projecting ONLY (cell, vec_id, codes, code_sum);
-    *  3. score candidates with the DECODED integer dot, keep candK;
-    *  4. exact-rerank ONLY the survivors against vectors from the SAME
-    *     probed cells (never a corpus join).
-    * Codes are exact integers against the pinned range, so candidate
-    * sets are bit-identical cross-engine and the path shares one oracle
-    * with the unindexed algebra. */
-  def annIvfSq8(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = VectorIndex.Sq8CandK, nprobe: Int = 3): DataFrame =
-    VectorIndex.serve(spark, dir,
-      StandingIndex.ensure(spark, dir, VectorIndex.Sq8Sqrt), k, nprobe, Some(candK))
-
-  /** [[annIvfSq8]] over the SAMPLE-trained composed index — the serve
-    * never knows how its centroids were trained; different training
-    * set ⇒ different cells ⇒ its own oracle. */
-  def annIvfSq8Sample(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = VectorIndex.Sq8CandK, nprobe: Int = 3): DataFrame =
-    VectorIndex.serve(spark, dir,
-      StandingIndex.ensure(spark, dir, VectorIndex.Sq8Sample), k, nprobe, Some(candK))
-
-  /** Recall@k of the sample-trained composed serve ([[annIvfSq8Sample]])
-    * vs the brute-force exact top-k — prices all three approximations
-    * together (sampled centroids, probed-cell candidate loss, 8-bit
-    * code ranking before the rerank); read against
-    * [[annSampleRecall]] (same centroids, uncompressed candidates) the
-    * delta isolates what the codes cost on this alphabet. */
-  def annIvfSq8SampleRecall(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = VectorIndex.Sq8CandK, nprobe: Int = 3): DataFrame =
-    recallOf(spark, dir, annIvfSq8Sample(spark, dir, k, candK, nprobe), k)
-
-  /** Recall@k of the EXACT √N-cell probe path ([[annIvfSqrtK]]) — the
-    * probe-limited ceiling every compressed variant of this index is
-    * graded against: [[annIvfSq8Recall]] minus this number is the
-    * ranking loss the 8-bit codes cost (measured 0 after the
-    * decoded-dot fix), while this number vs 1.0 is pure candidate
-    * loss from the nprobe/⌈√N⌉ dial. */
-  def annSqrtRecall(spark: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = 3): DataFrame =
-    recallOf(spark, dir, annIvfSqrtK(spark, dir, k, nprobe), k)
-
-  /** Recall@k of the composed IVF-SQ8 serve — prices candidate loss
-    * from probing nprobe/⌈√N⌉ cells AND ranking loss from cutting to
-    * candK on the code dot before the exact rerank. */
-  def annIvfSq8Recall(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = VectorIndex.Sq8CandK, nprobe: Int = 3): DataFrame =
-    recallOf(spark, dir, annIvfSq8(spark, dir, k, candK, nprobe), k)
-
-  // ----------------------------------------------------------------
-  // IVF-PQ: the composed standing index at the higher-compression
-  // point on the same curve as IVF-SQ8 — √N Lloyd cells carrying
-  // 8-byte PQ codes, ADC candidate scoring, exact rerank on survivors.
+  // Codec and quantizer pieces the index lifecycle composes.
   // ----------------------------------------------------------------
 
   /** Dims per PQ subspace: 8 subspaces on d = 64 (~32× compression).
@@ -1102,68 +904,6 @@ object Similarity {
       .groupBy(col("sub"), col("label").as("code"), col("dim"))
       .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
       .select(col("sub"), col("code"), col("dim"), halfUpMean("s", "n").as("c"))
-
-  /** The IVF-PQ BUILD as its own declared query: trains the ⌈√N⌉
-    * quantizer (the same cell alphabet as the √N/SQ8 indices), pins the
-    * PQ codebook, encodes every vector on the row as its 8 argmin
-    * sub-centroids, and commits postings with codes AND exact vectors
-    * side by side — the FAISS `IVF…,PQ8` layout: where SQ8 stores
-    * 1 B/dim, PQ stores 8 codes for 64 dims. The audit adds the
-    * codebook row count (the code alphabet size). */
-  def ivfPqBuild(spark: SparkSession, dir: String): DataFrame =
-    VectorIndex.buildAudit(spark, dir, VectorIndex.PqSqrt)
-
-  /** The SAMPLE-trained IVF-PQ build: gate-sampled coarse training
-    * under the unchanged PQ machinery. The codebook stays a
-    * full-corpus aggregate — one linear N·d pass, so sampling it would
-    * save nothing asymptotic while forking the code alphabet; the
-    * N^1.5 term removed is Lloyd's alone. The audit adds `n_sample`. */
-  def ivfPqBuildSample(spark: SparkSession, dir: String): DataFrame =
-    VectorIndex.buildAudit(spark, dir, VectorIndex.PqSample)
-
-  /** Multi-probe ANN served from the standing IVF-PQ index — the ADC
-    * form of [[annIvfSq8]]: probe cells on the pinned centroids,
-    * Bloom-pruned point read projecting ONLY (cell, vec_id, codes) for
-    * scoring, ADC against the query's constant-size distance table,
-    * exact rerank of the candK survivors from the same probed cells.
-    * Codebook, codes and distance tables are exact integers, so
-    * candidate sets are bit-identical cross-engine. candK = 100 by
-    * measurement (the r12 frontier sweep in BASELINE.md): at 8
-    * subspaces the ADC ranking loss reaches zero there — recall equals
-    * the nprobe = 3 probe-limited ceiling — where candK = 20 left a 20%
-    * relative recall gap; the rerank grows to |Q|·100 rows, still
-    * metadata-sized. */
-  def annIvfPq(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = VectorIndex.PqCandK, nprobe: Int = 3): DataFrame =
-    VectorIndex.serve(spark, dir,
-      StandingIndex.ensure(spark, dir, VectorIndex.PqSqrt), k, nprobe, Some(candK))
-
-  /** [[annIvfPq]] over the SAMPLE-trained IVF-PQ index — its own
-    * oracle, mirroring the SQ8 sample family. */
-  def annIvfPqSample(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = VectorIndex.PqCandK, nprobe: Int = 3): DataFrame =
-    VectorIndex.serve(spark, dir,
-      StandingIndex.ensure(spark, dir, VectorIndex.PqSample), k, nprobe, Some(candK))
-
-  /** Recall@k of the IVF-PQ serve vs the brute-force exact top-k —
-    * prices the probed-cell candidate loss plus the 8-byte ADC
-    * ranking loss before the rerank; read against [[annSqrtRecall]]
-    * (same cells, exact candidates) the delta is what PQ's 32×
-    * compression costs in candidate quality. */
-  def annIvfPqRecall(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = VectorIndex.PqCandK, nprobe: Int = 3): DataFrame =
-    recallOf(spark, dir, annIvfPq(spark, dir, k, candK, nprobe), k)
-
-  /** Recall@k of the sample-trained IVF-PQ serve — read against
-    * [[annIvfPqRecall]] at the same nprobe/candK, the delta isolates
-    * what sample training costs on this index family. */
-  def annIvfPqSampleRecall(spark: SparkSession, dir: String, k: Int = 5,
-      candK: Int = VectorIndex.PqCandK, nprobe: Int = 3): DataFrame =
-    recallOf(spark, dir, annIvfPqSample(spark, dir, k, candK, nprobe), k)
-
-  // ----------------------------------------------------------------
-  // Codec and quantizer pieces the index lifecycle composes.
-  // ----------------------------------------------------------------
 
   /** Largest-remainder seat allocation of `k` rebuild seeds across the
     * old cells, proportional to population and capped by it (a cell

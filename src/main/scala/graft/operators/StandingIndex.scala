@@ -59,6 +59,25 @@ object StandingIndex {
     standing.computeIfAbsent((dir, family.name), _ => family.build(spark, dir))
       .asInstanceOf[I]
 
+  /** A serving query's one declaration of the standing index it reads:
+    * as a registry query it gets-or-builds `family`'s index over the
+    * corpus dir and serves from that handle. The warm-ups in `Bench` and
+    * `PlanDump` read `family` from here, so nothing else records which
+    * index a query reads. */
+  final class Served[I <: StandingIndex](val family: Family[I],
+      serve: (SparkSession, String, I) => DataFrame)
+      extends ((SparkSession, String) => DataFrame) {
+    def index(spark: SparkSession, dir: String): I = ensure(spark, dir, family)
+    def apply(spark: SparkSession, dir: String): DataFrame =
+      serve(spark, dir, index(spark, dir))
+  }
+
+  object Served {
+    def apply[I <: StandingIndex](family: Family[I])(
+        serve: (SparkSession, String, I) => DataFrame): Served[I] =
+      new Served(family, serve)
+  }
+
   /** Builds fresh and registers (last build wins) — the build queries and
     * the streamed full lifecycles. */
   private[graft] def rebuild[I <: StandingIndex](spark: SparkSession, dir: String,
@@ -156,14 +175,14 @@ object StandingIndex {
 
   /** Family guard for the loader: loading the WRONG family's postings
     * root must fail typed, not construct a structurally mismatched
-    * handle. Every builder stamps its family into the manifest. Lenient
-    * when the key is absent (pre-r14 layouts). */
+    * handle. Every builder stamps its family into the manifest, so a
+    * manifest without one is torn. */
   private def requireFamily(m: Map[String, String], root: String,
-      expected: String): Unit =
-    m.get("family").filter(_ != expected).foreach { got =>
-      throw new IndexManifestError(root,
-        s"family mismatch: manifest says '$got', loader expects '$expected'")
-    }
+      expected: String): Unit = {
+    val got = manifestKey(m, root, "family")
+    if (got != expected) throw new IndexManifestError(root,
+      s"family mismatch: manifest says '$got', loader expects '$expected'")
+  }
 
   // ----------------------------------------------------------------
   // Streamed driver

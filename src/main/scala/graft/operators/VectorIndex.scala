@@ -35,9 +35,10 @@ final case class VectorIndex(family: VectorIndex.Family, postings: String,
   *  - one serve ([[serve]]): probe, Bloom-pruned point read, then the
   *    codec's scoring;
   *  - one grow append-and-trigger ([[growAppend]]).
-  * `graft.streaming.StreamVector` seeds and tails the streamed families
-  * and `graft.IndexCatalog` maps each serving query to the family it
-  * reads. */
+  * `graft.streaming.StreamVector` seeds and tails the streamed families.
+  * The registry queries call [[buildAudit]] and [[serve]] directly; each
+  * serving one declares the family it reads at its entry
+  * ([[StandingIndex.Served]]). */
 object VectorIndex {
 
   /** What the postings carry beside the exact vector. */
@@ -143,8 +144,12 @@ object VectorIndex {
   val PqGrow = Family("ivf_pq#grow", "tx_pq_grow", SampleCells, PqKind,
     Seq("cell", "vec_id", "codes", "label", "embedding"))
 
-  /** Default candidate cuts before the exact rerank (PQ's is argued at
-    * [[Similarity.annIvfPq]]). */
+  /** Default candidate cuts before the exact rerank. PQ's is 100 by
+    * measurement (the r12 frontier sweep in BASELINE.md): at 8
+    * subspaces the ADC ranking loss reaches zero there — recall equals
+    * the nprobe = 3 probe-limited ceiling — where candK = 20 left a 20%
+    * relative recall gap; the rerank grows to |Q|·100 rows, still
+    * metadata-sized. */
   val Sq8CandK = 20
   val PqCandK = 100
 

@@ -3,6 +3,7 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit, max}
 import graft.operators._
+import graft.operators.StandingIndex.Served
 import graft.registry.RegShared._
 import graft.streaming.StreamVector
 
@@ -99,18 +100,15 @@ object PipelineReg {
     "stream_ivfpq_serve" -> ((s: SparkSession, dir: String) =>
       StreamVector.serve(s, dir, VectorIndex.PqStream)),
     // the SERVE half alone, against the get-or-streamed standing
-    // snapshot: Bench warms the seed+stream through IndexCatalog, so
-    // these rows time what a deployment pays per query on a
-    // stream-maintained index — the *_serve rows keep owning the whole
-    // lifecycle
-    "stream_ivfsq8_serve_only" -> ((s: SparkSession, dir: String) =>
-      StreamVector.serveOnly(s, dir, VectorIndex.Sq8Stream)),
-    "stream_ivfpq_serve_only" -> ((s: SparkSession, dir: String) =>
-      StreamVector.serveOnly(s, dir, VectorIndex.PqStream)),
-    "stream_fts_serve_only" -> ((s: SparkSession, dir: String) =>
-      graft.streaming.StreamFts.streamFtsServeOnly(s, dir)),
-    "stream_ivf_serve_only" -> ((s: SparkSession, dir: String) =>
-      StreamVector.serveOnly(s, dir, VectorIndex.IvfStream)),
+    // snapshot: each row declares its streamed family, so Bench warms
+    // the seed+stream before timing and these rows time what a
+    // deployment pays per query on a stream-maintained index — the
+    // *_serve rows keep owning the whole lifecycle
+    "stream_ivfsq8_serve_only" -> served(VectorIndex.Sq8Stream),
+    "stream_ivfpq_serve_only" -> served(VectorIndex.PqStream),
+    "stream_fts_serve_only" -> Served(TextIndex.FtsStream)((s, _, idx) =>
+      TextIndex.serve(s, idx, Seq("spark", "join", "vector"), 10)),
+    "stream_ivf_serve_only" -> served(VectorIndex.IvfStream),
     "sample_mixture" -> Sampling.sampleMixture _,
     "sample_shuffle" -> Sampling.sampleShuffle _,
     "sample_token_budget" -> Sampling.sampleTokenBudget _,

@@ -1,8 +1,9 @@
 package graft.registry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, lit, max}
+import org.apache.spark.sql.functions.{col, expr, lit, max, pmod}
 import graft.operators._
+import graft.operators.StandingIndex.Served
 import graft.registry.RegShared._
 
 /** Similarity/vector slice of the driver contract: brute-force cosine, IVF (label, trained, √N, sampled), SQ8, PQ, recall measurements, and index lifecycles with oracles.
@@ -27,69 +28,65 @@ object SimReg {
     "sim_ann_ivf_true" -> ((s: SparkSession, dir: String) =>
       Similarity.annIvfTrue(s, dir)),
     "sim_ann_recall" -> ((s: SparkSession, dir: String) =>
-      Similarity.annRecall(s, dir)),
+      Similarity.recallOf(s, dir, Similarity.annIvfTrue(s, dir), 5)),
     "sim_ann_multiprobe" -> ((s: SparkSession, dir: String) =>
       Similarity.annIvfMultiprobe(s, dir)),
     "sim_ann_recall_mp" -> ((s: SparkSession, dir: String) =>
-      Similarity.annRecallMultiprobe(s, dir)),
+      Similarity.recallOf(s, dir, Similarity.annIvfMultiprobe(s, dir), 5)),
     "sim_ivf_build" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivfBuild(s, dir)),
-    "sim_ann_indexed" -> ((s: SparkSession, dir: String) =>
-      Similarity.annIndexed(s, dir)),
+      VectorIndex.buildAudit(s, dir, VectorIndex.Ivf)),
+    "sim_ann_indexed" -> served(VectorIndex.Ivf),
     "sim_ivf_append" -> ((s: SparkSession, dir: String) =>
       Similarity.ivfAppendServe(s, dir)),
     "sim_ann_sqrtk" -> ((s: SparkSession, dir: String) =>
       Similarity.annIvfSqrtK(s, dir)),
     "sim_ivf_build_sqrt" -> ((s: SparkSession, dir: String) =>
       Similarity.ivfBuildSqrt(s, dir)),
-    "sim_ann_indexed_sqrt" -> ((s: SparkSession, dir: String) =>
-      Similarity.annIndexedSqrt(s, dir)),
-    "sim_ann_filtered" -> ((s: SparkSession, dir: String) =>
-      Similarity.annFilteredSqrt(s, dir)),
+    "sim_ann_indexed_sqrt" -> served(VectorIndex.Sqrt),
+    // vector search with a WHERE clause: top-5 among the odd-labelled
+    // members, the predicate applied to the postings rows of the probed
+    // cells before the distance kernel
+    "sim_ann_filtered" -> Served(VectorIndex.Sqrt)(VectorIndex.serve(_, _, _,
+      pred = Some(pmod(col("label"), lit(2)) === 1))),
     "sim_ivf_churn" -> ((s: SparkSession, dir: String) =>
       Similarity.ivfChurn(s, dir)),
     "sim_ivfsq8_build" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivfSq8Build(s, dir)),
-    "sim_ann_ivfsq8" -> ((s: SparkSession, dir: String) =>
-      Similarity.annIvfSq8(s, dir)),
-    "sim_ann_ivfsq8_recall" -> ((s: SparkSession, dir: String) =>
-      Similarity.annIvfSq8Recall(s, dir)),
+      VectorIndex.buildAudit(s, dir, VectorIndex.Sq8Sqrt)),
+    "sim_ann_ivfsq8" -> served(VectorIndex.Sq8Sqrt),
+    "sim_ann_ivfsq8_recall" -> servedRecall(VectorIndex.Sq8Sqrt),
     "sim_ann_recall_sqrt" -> ((s: SparkSession, dir: String) =>
-      Similarity.annSqrtRecall(s, dir)),
+      Similarity.recallOf(s, dir, Similarity.annIvfSqrtK(s, dir), 5)),
     "sim_ivf_build_sample" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivfBuildSample(s, dir)),
-    "sim_ann_indexed_sample" -> ((s: SparkSession, dir: String) =>
-      Similarity.annIndexedSample(s, dir)),
-    "sim_ann_recall_sample" -> ((s: SparkSession, dir: String) =>
-      Similarity.annSampleRecall(s, dir)),
+      VectorIndex.buildAudit(s, dir, VectorIndex.Sample)),
+    "sim_ann_indexed_sample" -> served(VectorIndex.Sample),
+    "sim_ann_recall_sample" -> servedRecall(VectorIndex.Sample),
     "sim_ivfsq8_build_sample" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivfSq8BuildSample(s, dir)),
-    "sim_ann_ivfsq8_sample" -> ((s: SparkSession, dir: String) =>
-      Similarity.annIvfSq8Sample(s, dir)),
-    "sim_ann_ivfsq8_sample_recall" -> ((s: SparkSession, dir: String) =>
-      Similarity.annIvfSq8SampleRecall(s, dir)),
-    "sim_ann_filtered_recall" -> ((s: SparkSession, dir: String) =>
-      Similarity.annFilteredRecall(s, dir)),
-    "sim_ann_filtered_adaptive" -> ((s: SparkSession, dir: String) =>
-      Similarity.annFilteredAdaptive(s, dir)),
-    "sim_ann_filtered_adaptive_recall" -> ((s: SparkSession, dir: String) =>
-      Similarity.annFilteredAdaptiveRecall(s, dir)),
+      VectorIndex.buildAudit(s, dir, VectorIndex.Sq8Sample)),
+    "sim_ann_ivfsq8_sample" -> served(VectorIndex.Sq8Sample),
+    "sim_ann_ivfsq8_sample_recall" -> servedRecall(VectorIndex.Sq8Sample),
+    // graded against the exact top-5 among the predicate's survivors
+    "sim_ann_filtered_recall" -> Served(VectorIndex.Sqrt) { (s, dir, idx) =>
+      val odd = pmod(col("label"), lit(2)) === 1
+      Similarity.recallOf(s, dir, VectorIndex.serve(s, dir, idx, pred = Some(odd)),
+        5, Some(odd))
+    },
+    "sim_ann_filtered_adaptive" -> Served(VectorIndex.Sqrt)(
+      Similarity.annFilteredAdaptive(_, _, _)),
+    "sim_ann_filtered_adaptive_recall" -> Served(VectorIndex.Sqrt)((s, dir, idx) =>
+      Similarity.recallOf(s, dir, Similarity.annFilteredAdaptive(s, dir, idx),
+        5, Some(col("label") === 1))),
     "sim_centroids" -> Similarity.centroids _,
     "sim_knn_classify" -> Similarity.knnClassify _,
     "sim_pq_adc" -> ((s: SparkSession, dir: String) =>
       Similarity.pqAdc(s, dir)),
     "sim_ivfpq_build" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivfPqBuild(s, dir)),
-    "sim_ann_ivfpq" -> ((s: SparkSession, dir: String) =>
-      Similarity.annIvfPq(s, dir)),
-    "sim_ann_ivfpq_recall" -> ((s: SparkSession, dir: String) =>
-      Similarity.annIvfPqRecall(s, dir)),
+      VectorIndex.buildAudit(s, dir, VectorIndex.PqSqrt)),
+    "sim_ann_ivfpq" -> served(VectorIndex.PqSqrt),
+    "sim_ann_ivfpq_recall" -> servedRecall(VectorIndex.PqSqrt),
     "sim_ivfpq_build_sample" -> ((s: SparkSession, dir: String) =>
-      Similarity.ivfPqBuildSample(s, dir)),
-    "sim_ann_ivfpq_sample" -> ((s: SparkSession, dir: String) =>
-      Similarity.annIvfPqSample(s, dir)),
-    "sim_ann_ivfpq_sample_recall" -> ((s: SparkSession, dir: String) =>
-      Similarity.annIvfPqSampleRecall(s, dir)),
+      VectorIndex.buildAudit(s, dir, VectorIndex.PqSample)),
+    "sim_ann_ivfpq_sample" -> served(VectorIndex.PqSample),
+    "sim_ann_ivfpq_sample_recall" -> servedRecall(VectorIndex.PqSample),
   )
 
   /** Shared IVF-assignment CTEs (mirror `Similarity.ivfAssign`):
@@ -281,7 +278,7 @@ object SimReg {
         SELECT qid, nid, cos_e6, CAST(rn AS BIGINT) AS rn
         FROM ranked WHERE rn <= 5 ORDER BY qid, rn"""
 
-  /** Mirror of `Similarity.annIndexedSample`: the √N-cell serve under
+  /** Mirror of the `sim_ann_indexed_sample` serve: the √N-cell serve under
     * the SAMPLE-trained quantizer — iterations read only the
     * hash-gated training sample, the final assignment the full
     * corpus. A different training set means a different cell alphabet,
@@ -316,7 +313,7 @@ object SimReg {
         FROM (SELECT DISTINCT qid FROM gt) q
         LEFT JOIN hits h USING (qid) ORDER BY qid"""
 
-  /** Mirror of `Similarity.annFilteredSqrt`: the same √N-quantizer
+  /** Mirror of the `sim_ann_filtered` serve: the same √N-quantizer
     * probe, with the metadata predicate applied to MEMBERS before the
     * per-query ranking — the pre-filter semantics (top-k among
     * matches), not a post-filter of an unfiltered top-k. */
@@ -326,7 +323,7 @@ object SimReg {
         SELECT qid, nid, cos_e6, CAST(rn AS BIGINT) AS rn
         FROM ranked WHERE rn <= 5 ORDER BY qid, rn"""
 
-  /** Mirror of `Similarity.annFilteredRecall`: the filtered serve's
+  /** Mirror of `sim_ann_filtered_recall`: the filtered serve's
     * recall against the brute-force top-5 AMONG the predicate's
     * survivors — the ground truth carries the same filter, so the
     * number isolates probe starvation rather than punishing the serve
@@ -399,7 +396,7 @@ object SimReg {
         FROM (SELECT DISTINCT qid FROM gt) q
         LEFT JOIN hits h USING (qid) ORDER BY qid"""
 
-  /** Mirror of `Similarity.annIvfSq8` — the composed IVF-SQ8 serving
+  /** Mirror of the `sim_ann_ivfsq8` serve — the composed IVF-SQ8 serving
     * stack: √N Lloyd cell membership/probes ([[lloydCtes]]'s `asgk`),
     * SQ8 candidate scoring by exact integer code dot against the
     * global [mn,mx] range, candK=20 survivors, exact cosine rerank.
@@ -461,7 +458,7 @@ object SimReg {
         SELECT qid, nid, sq8_dot, cos_e6, CAST(rn AS BIGINT) AS rn
         FROM ranked WHERE rn <= 5 ORDER BY qid, rn"""
 
-  /** Mirror of `Similarity.annIvfSq8Sample`: the composed SQ8 serve
+  /** Mirror of the `sim_ann_ivfsq8_sample` serve: the composed SQ8 serve
     * over the SAMPLE-trained cell alphabet — only the Lloyd training
     * input changes; range, codes, candidates, and rerank are the
     * full-corpus algebra. */
@@ -519,7 +516,7 @@ object SimReg {
         FROM (SELECT DISTINCT qid FROM gt) q
         LEFT JOIN hits h USING (qid) ORDER BY qid"""
 
-  /** Mirror of `Similarity.annIvfPq` — the composed IVF-PQ serving
+  /** Mirror of the `sim_ann_ivfpq` serve — the composed IVF-PQ serving
     * stack: √N Lloyd cell membership/probes ([[lloydCtes]]'s `asgk`),
     * per-(subspace, label) codebook ([[pqAdcOracle]]'s construction),
     * every vector encoded as its 8 argmin sub-centroids, ADC candidate
@@ -589,7 +586,7 @@ object SimReg {
         SELECT qid, nid, adc_dist2, cos_e6, CAST(rn AS BIGINT) AS rn
         FROM ranked WHERE rn <= 5 ORDER BY qid, rn"""
 
-  /** Mirror of `Similarity.annIvfPqSample`: the ADC serve over the
+  /** Mirror of the `sim_ann_ivfpq_sample` serve: the ADC serve over the
     * SAMPLE-trained coarse alphabet — only the Lloyd training input
     * changes; codebook, codes, ADC, and rerank are the full-corpus
     * algebra. */

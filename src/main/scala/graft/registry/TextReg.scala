@@ -3,6 +3,7 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit, max}
 import graft.operators._
+import graft.operators.StandingIndex.Served
 import graft.registry.RegShared._
 
 /** Text-analysis/search slice of the driver contract: quality, langid, BM25/FTS, phrase/bool search, TF-IDF, chunking, contamination, and hybrid retrieval with DuckDB oracles.
@@ -38,8 +39,8 @@ object TextReg {
       TextAnalysis.significantTerms(s, dir)),
     "text_bool_search" -> ((s: SparkSession, dir: String) =>
       TextAnalysis.boolSearch(s, dir)),
-    "text_bm25_indexed" -> ((s: SparkSession, dir: String) =>
-      TextAnalysis.bm25Indexed(s, dir)),
+    "text_bm25_indexed" -> Served(TextIndex.Fts)((s, _, idx) =>
+      TextIndex.serve(s, idx, Seq("spark", "join", "vector"), 10)),
     "text_fts_build" -> ((s: SparkSession, dir: String) =>
       TextAnalysis.ftsBuild(s, dir)),
     "text_fts_churn" -> ((s: SparkSession, dir: String) =>

@@ -33,10 +33,10 @@ import graft.operators.TextAnalysis.{corpusStats, corpusStatsCols, postingsOf, t
   *
   * Lifecycle/serve split (VERDICT r14 task 3, the SQ8/PQ pattern):
   * `stream_fts_serve` owns the whole seed+stream+serve lifecycle;
-  * `stream_fts_serve_only` serves against the get-or-streamed
-  * standing snapshot, so the streamed transport's per-query serving
-  * cost is its own row — directly comparable to the batch-built
-  * `text_bm25_indexed`.
+  * the `stream_fts_serve_only` registry row declares the `FtsStream`
+  * family and serves against the get-or-streamed standing snapshot,
+  * so the streamed transport's per-query serving cost is its own row —
+  * directly comparable to the batch-built `text_bm25_indexed`.
   */
 object StreamFts {
 
@@ -110,16 +110,4 @@ object StreamFts {
       StandingIndex.rebuild(spark, dir, TextIndex.FtsStream))
     TextIndex.serve(spark, idx, terms, topK)
   }
-
-  /** The SERVE half on its own (VERDICT r14 task 3): the same answer
-    * over the get-or-streamed standing snapshot, so the streamed
-    * transport's serving cost is its own decade-flat row —
-    * `stream_fts_serve` keeps owning the full seed+stream+serve
-    * lifecycle; this is the FTS analogue of the r14 SQ8/PQ serve-only
-    * split, directly comparable to the batch-built `text_bm25_indexed`. */
-  def streamFtsServeOnly(spark: SparkSession, dir: String,
-      terms: Seq[String] = Seq("spark", "join", "vector"),
-      topK: Int = 10): DataFrame =
-    TextIndex.serve(spark, StandingIndex.ensure(spark, dir, TextIndex.FtsStream),
-      terms, topK)
 }

@@ -76,10 +76,4 @@ object StreamVector {
       StandingIndex.rebuild(spark, dir, family))
     VectorIndex.serve(spark, dir, idx)
   }
-
-  /** `stream_<tag>_serve_only`: the SERVE half alone, over the
-    * get-or-streamed snapshot — the streamed transport's serving cost
-    * as its own row. */
-  def serveOnly(spark: SparkSession, dir: String, family: Family): DataFrame =
-    VectorIndex.serve(spark, dir, StandingIndex.ensure(spark, dir, family))
 }

@@ -13,9 +13,10 @@ class AdaptiveStatsSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("selectivity estimate reads the pinned histogram, not the corpus") {
-    StandingIndex.ensure(spark, sf, VectorIndex.Sqrt) // pins the stats beside the index
-    val plan = Similarity.selectivityFrame(spark, sf, col("label") === 1)
-      .queryExecution.executedPlan.toString
+    // the build pins the stats beside the index; the handle names them
+    val idx = StandingIndex.ensure(spark, sf, VectorIndex.Sqrt)
+    val plan = Similarity.selectivityFrame(spark, sf, idx.labelStats,
+      col("label") === 1).queryExecution.executedPlan.toString
     assert(!plan.contains("embeddings.parquet"),
       s"selectivity estimate still scans the corpus:\n$plan")
     assert(plan.contains("tx_ivf_sqrt_stats"),
@@ -31,16 +32,16 @@ class AdaptiveStatsSpec extends SparkSpec {
     // corpus-aggregate recomputation.
     val built = StandingIndex.ensure(spark, sf, VectorIndex.Sqrt)
     StandingIndex.dropForTest(sf)
-    val cold = Similarity.selectivityFrame(spark, sf, col("label") === 1)
+    val cold = Similarity.selectivityFrame(spark, sf, None, col("label") === 1)
       .queryExecution.executedPlan.toString
     assert(cold.contains("embeddings.parquet"),
-      "precondition: with no registration the estimate must fall back " +
+      "precondition: with no histogram the estimate must fall back " +
         s"to the corpus aggregate, got:\n$cold")
     val loaded = StandingIndex.load(spark, sf, VectorIndex.Sqrt,
       built.postings)
     assert(loaded === built, "manifest round-trip changed the handle")
-    val plan = Similarity.selectivityFrame(spark, sf, col("label") === 1)
-      .queryExecution.executedPlan.toString
+    val plan = Similarity.selectivityFrame(spark, sf, loaded.labelStats,
+      col("label") === 1).queryExecution.executedPlan.toString
     assert(!plan.contains("embeddings.parquet"),
       s"cold-loaded estimate still scans the corpus:\n$plan")
     assert(plan.contains("tx_ivf_sqrt_stats"),
@@ -51,9 +52,9 @@ class AdaptiveStatsSpec extends SparkSpec {
     // the public contract admits predicates over ANY embeddings column
     // (ADVICE r12): the histogram covers label-only predicates; others
     // must compute against the corpus — correctly, not throw
-    StandingIndex.ensure(spark, sf, VectorIndex.Sqrt)
-    val r = Similarity.selectivityFrame(spark, sf, col("vec_id") < 100)
-      .head
+    val idx = StandingIndex.ensure(spark, sf, VectorIndex.Sqrt)
+    val r = Similarity.selectivityFrame(spark, sf, idx.labelStats,
+      col("vec_id") < 100).head
     val expected = graft.core.Tables(spark, sf).embeddings
       .agg(count(lit(1)), sum(when(col("vec_id") < 100, 1L).otherwise(0L)))
       .head
@@ -62,7 +63,7 @@ class AdaptiveStatsSpec extends SparkSpec {
   }
 
   test("cached estimate computes the same probe width as the corpus aggregate") {
-    StandingIndex.ensure(spark, sf, VectorIndex.Sqrt)
+    val stats = StandingIndex.ensure(spark, sf, VectorIndex.Sqrt).labelStats
     // corpus-truth recomputation of the widening rule, bypassing the cache
     val t = graft.core.Tables(spark, sf).embeddings
     val r = t.agg(count(lit(1)).as("n"),
@@ -70,10 +71,10 @@ class AdaptiveStatsSpec extends SparkSpec {
     val n = r.getLong(0)
     val nm = math.max(r.getLong(1), 1L)
     val expected = math.min(8L, (3L * n + nm - 1L) / nm).toInt
-    assert(Similarity.adaptiveNprobe(spark, sf) === expected)
+    assert(Similarity.adaptiveNprobe(spark, sf, stats) === expected)
     // a permissive predicate must stay at the base width through the
     // same cached path (the never-pay-the-fan-out half of the law)
-    assert(Similarity.adaptiveNprobe(spark, sf,
+    assert(Similarity.adaptiveNprobe(spark, sf, stats,
       pred = col("label") >= 0) === 3)
   }
 }

@@ -124,7 +124,7 @@ class AnalyticsSamplingSpec extends SparkSpec {
     val exact = graft.operators.Similarity.cosineTopk(spark, sf).collect()
       .filter(_.getAs[Long]("rn") <= 5)
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nid"))).toSet
-    val got = graft.operators.Similarity.annRecall(spark, sf).collect()
+    val got = SparkEntry.queries("sim_ann_recall")(spark, sf).collect()
     assert(got.map(_.getAs[Long]("qid")).toSet === exact.map(_._1))
     got.foreach { r =>
       val (qid, hits, rec) = (r.getAs[Long]("qid"),
@@ -162,9 +162,9 @@ class AnalyticsSamplingSpec extends SparkSpec {
     // probing more cells yields a candidate SUPERSET; a true top-k hit
     // can only be displaced by a globally-closer candidate, which is
     // itself a hit — so n_hits is monotone in nprobe
-    val one = graft.operators.Similarity.annRecall(spark, sf).collect()
+    val one = SparkEntry.queries("sim_ann_recall")(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getAs[Long]("n_hits")).toMap
-    val three = graft.operators.Similarity.annRecallMultiprobe(spark, sf)
+    val three = SparkEntry.queries("sim_ann_recall_mp")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getAs[Long]("n_hits")).toMap
     assert(one.keySet === three.keySet)
     one.foreach { case (qid, h1) =>
@@ -341,7 +341,7 @@ class AnalyticsSamplingSpec extends SparkSpec {
   test("indexed ANN equals the re-clustering multiprobe path, Bloom-" +
       "prunes postings files, and the build audit is consistent") {
     import graft.operators.Similarity
-    val served = Similarity.annIndexed(spark, sf).collect().toSeq
+    val served = SparkEntry.queries("sim_ann_indexed")(spark, sf).collect().toSeq
     val direct = Similarity.annIvfMultiprobe(spark, sf).collect().toSeq
     assert(served === direct, "an index must never change the answer")
     // a cell probe must touch a strict subset of the postings files
@@ -354,7 +354,8 @@ class AnalyticsSamplingSpec extends SparkSpec {
     assert(live.nonEmpty && live.size < snap.files.size,
       s"bloom pruned nothing: ${live.size} of ${snap.files.size} files live")
     // build audit: every vector in exactly one cell
-    val audit = Similarity.ivfBuild(spark, sf).head()
+    val audit = graft.operators.VectorIndex.buildAudit(spark, sf,
+      graft.operators.VectorIndex.Ivf).head()
     val nVecs = graft.core.Tables(spark, sf).embeddings.count()
     assert(audit.getAs[Long]("n_vecs") === nVecs)
     assert(audit.getAs[Long]("n_cells") >= 1L)

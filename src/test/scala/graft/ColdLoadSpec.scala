@@ -1,9 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.operators.{Similarity, StandingIndex, TextAnalysis, TextIndex, VectorIndex}
+import graft.operators.{StandingIndex, TextAnalysis, TextIndex, VectorIndex}
 import graft.operators.VectorIndex._
-import graft.streaming.{StreamFts, StreamVector}
 
 /** Cold-session lifecycle for EVERY standing index family (VERDICT r13
   * task 4): build, forget the JVM registration, reload the handle from
@@ -21,6 +20,10 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
 
   private def sorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
+
+  /** The registry query `name`, as a serve to repeat. */
+  private def query(name: String): () => DataFrame =
+    () => SparkEntry.queries(name)(spark, sf)
 
   private def baseName(p: String): String =
     java.nio.file.Paths.get(p).getFileName.toString
@@ -57,35 +60,35 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
   }
 
   test("exact-k IVF: cold load serves the standing index") {
-    roundTrip(Ivf, () => Similarity.annIndexed(spark, sf))
+    roundTrip(Ivf, query("sim_ann_indexed"))
   }
 
   test("sample-trained IVF: cold load serves the standing index") {
-    roundTrip(Sample, () => Similarity.annIndexedSample(spark, sf))
+    roundTrip(Sample, query("sim_ann_indexed_sample"))
   }
 
   test("IVF-SQ8: cold load serves the standing index") {
-    roundTrip(Sq8Sqrt, () => Similarity.annIvfSq8(spark, sf))
+    roundTrip(Sq8Sqrt, query("sim_ann_ivfsq8"))
   }
 
   test("sample-trained IVF-SQ8: cold load serves the standing index") {
-    roundTrip(Sq8Sample, () => Similarity.annIvfSq8Sample(spark, sf))
+    roundTrip(Sq8Sample, query("sim_ann_ivfsq8_sample"))
   }
 
   test("IVF-PQ: cold load serves the standing index") {
-    roundTrip(PqSqrt, () => Similarity.annIvfPq(spark, sf))
+    roundTrip(PqSqrt, query("sim_ann_ivfpq"))
   }
 
   test("sample-trained IVF-PQ: cold load serves the standing index") {
-    roundTrip(PqSample, () => Similarity.annIvfPqSample(spark, sf))
+    roundTrip(PqSample, query("sim_ann_ivfpq_sample"))
   }
 
   test("streamed SQ8 snapshot: cold load serves without re-streaming") {
-    roundTrip(Sq8Stream, () => StreamVector.serveOnly(spark, sf, Sq8Stream))
+    roundTrip(Sq8Stream, query("stream_ivfsq8_serve_only"))
   }
 
   test("streamed PQ snapshot: cold load serves without re-streaming") {
-    roundTrip(PqStream, () => StreamVector.serveOnly(spark, sf, PqStream))
+    roundTrip(PqStream, query("stream_ivfpq_serve_only"))
   }
 
   test("FTS: cold load serves the standing postings, no corpus re-tokenize") {
@@ -93,11 +96,11 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
   }
 
   test("streamed exact-IVF snapshot: cold load serves without re-streaming") {
-    roundTrip(IvfStream, () => StreamVector.serveOnly(spark, sf, IvfStream))
+    roundTrip(IvfStream, query("stream_ivf_serve_only"))
   }
 
   test("streamed FTS snapshot: cold load serves without re-streaming") {
-    roundTrip(TextIndex.FtsStream, () => StreamFts.streamFtsServeOnly(spark, sf))
+    roundTrip(TextIndex.FtsStream, query("stream_fts_serve_only"))
   }
 
   /** Mid-churn cold load (VERDICT r14 stretch task 7): the plain
@@ -140,7 +143,8 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
   }
 
   private def vectorChurnTrip(family: Family): Unit =
-    churnTrip(family, "cell", () => StreamVector.serveOnly(spark, sf, family))
+    churnTrip(family, "cell", () =>
+      VectorIndex.serve(spark, sf, StandingIndex.ensure(spark, sf, family)))
 
   test("streamed exact-IVF: mid-churn cold load (compaction + redelivery marker)") {
     vectorChurnTrip(IvfStream)
@@ -155,7 +159,7 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
   }
 
   test("streamed FTS: mid-churn cold load (compaction + redelivery marker)") {
-    churnTrip(TextIndex.FtsStream, "tok", () => StreamFts.streamFtsServeOnly(spark, sf))
+    churnTrip(TextIndex.FtsStream, "tok", query("stream_fts_serve_only"))
   }
 
   test("missing manifest fails typed, naming the root") {
@@ -178,6 +182,18 @@ class ColdLoadSpec extends SparkSpec with TempDirs {
     assert(e.getMessage.contains("centroids"))
     assert(e.getMessage.contains("family"),
       "error should list the keys that ARE present")
+  }
+
+  test("a manifest without a family fails typed, naming root and key") {
+    val root = tempDir("graft-no-family")
+    // every other key an exact-k IVF manifest carries
+    StandingIndex.writeIndexManifest(root.toString, "centroids" -> "/c",
+      "bounded" -> "true")
+    val e = intercept[StandingIndex.IndexManifestError] {
+      StandingIndex.load(spark, sf, Ivf, root.toString)
+    }
+    assert(e.root === root.toString)
+    assert(e.getMessage.contains("'family'"))
   }
 
   test("loading the wrong family's root fails typed, not mismatched") {

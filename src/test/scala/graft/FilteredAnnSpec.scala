@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{Similarity, StandingIndex, VectorIndex}
 
 /** Filtered-ANN recall under a selectivity sweep (round-10 task 7):
   * the declared `sim_ann_filtered_recall` query measures the default
@@ -17,9 +17,16 @@ import graft.operators.Similarity
 class FilteredAnnSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.01"
 
+  private def sqrtIndex: VectorIndex =
+    StandingIndex.ensure(spark, sf, VectorIndex.Sqrt)
+
+  /** Mean recall@5 of the filtered serve, graded against the exact
+    * top-5 among the predicate's survivors. */
   private def meanRecall(nprobe: Int,
       pred: org.apache.spark.sql.Column): Double =
-    Similarity.annFilteredRecall(spark, sf, 5, nprobe, pred)
+    Similarity.recallOf(spark, sf,
+      VectorIndex.serve(spark, sf, sqrtIndex, 5, nprobe, pred = Some(pred)),
+      5, Some(pred))
       .agg(avg(col("recall_e6"))).head().getDouble(0) / 1e6
 
   test("widening nprobe monotonically restores recall under a selective filter") {
@@ -36,10 +43,11 @@ class FilteredAnnSpec extends SparkSpec {
     // the widening rule itself (r11 task 6): ~10% selectivity must
     // saturate at the cap, ~50% must widen but stay under it, and a
     // predicate keeping everything must stay at the base width
-    val atTen = Similarity.adaptiveNprobe(spark, sf, 3, 8, col("label") === 1)
-    val atHalf = Similarity.adaptiveNprobe(spark, sf, 3, 8,
+    val stats = sqrtIndex.labelStats
+    val atTen = Similarity.adaptiveNprobe(spark, sf, stats, 3, 8, col("label") === 1)
+    val atHalf = Similarity.adaptiveNprobe(spark, sf, stats, 3, 8,
       pmod(col("label"), lit(2)) === 1)
-    val atAll = Similarity.adaptiveNprobe(spark, sf, 3, 8, lit(true))
+    val atAll = Similarity.adaptiveNprobe(spark, sf, stats, 3, 8, lit(true))
     info(s"adaptive nprobe: sel~10% -> $atTen, sel~50% -> $atHalf, sel=1 -> $atAll")
     assert(atTen == 8, s"~10% selectivity should cap at 8, got $atTen")
     assert(atHalf > 3 && atHalf < 8,
@@ -50,8 +58,9 @@ class FilteredAnnSpec extends SparkSpec {
   test("adaptive serve matches the fixed-cap recall at ~10% selectivity") {
     val selective = col("label") === 1
     val fixedCap = meanRecall(8, selective)
-    val adaptive = Similarity
-      .annFilteredAdaptiveRecall(spark, sf, 5, 3, 8, selective)
+    val adaptive = Similarity.recallOf(spark, sf,
+        Similarity.annFilteredAdaptive(spark, sf, sqrtIndex, 5, 3, 8, selective),
+        5, Some(selective))
       .agg(avg(col("recall_e6"))).head().getDouble(0) / 1e6
     info(f"recall@5 at ~10%% selectivity: fixed nprobe=8 $fixedCap%.2f, adaptive $adaptive%.2f")
     // the rule saturates at the cap here, so the serves are identical
@@ -61,7 +70,7 @@ class FilteredAnnSpec extends SparkSpec {
 
   test("half-selectivity recall at default nprobe stays in family with unfiltered") {
     val half = meanRecall(3, pmod(col("label"), lit(2)) === 1)
-    val unfiltered = Similarity.annSqrtRecall(spark, sf)
+    val unfiltered = SparkEntry.queries("sim_ann_recall_sqrt")(spark, sf)
       .agg(avg(col("recall_e6"))).head().getDouble(0) / 1e6
     info(f"recall@5: filtered(1/2) $half%.2f vs unfiltered $unfiltered%.2f")
     // a mild filter removes competitors as often as true neighbors;

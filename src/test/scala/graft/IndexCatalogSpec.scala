@@ -1,16 +1,18 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.StandingIndex
 
-/** `IndexCatalog` is the warm-up map Bench and PlanDump share: a key
-  * that is not a registered query (a renamed or removed query) would
-  * silently lose its warm-up, and the row would time a build. */
-class IndexCatalogSpec extends AnyFunSuite {
+/** The standing-index catalog is the registry itself: each serving
+  * query declares the family it reads at its entry
+  * ([[StandingIndex.Served]]), and Bench and PlanDump warm exactly the
+  * declared families of the queries they select. A serving query
+  * without a declaration would lose its warm-up silently, and its row
+  * would time a build. */
+class IndexCatalogSpec extends SparkSpec {
+  private val sf = "/root/testdata/sf0.001"
 
-  test("every catalog key is a registered query") {
-    val unknown = IndexCatalog.byQuery.keySet -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty, s"catalog names unregistered queries: $unknown")
-  }
+  private def declared: Map[String, StandingIndex.Family[_ <: StandingIndex]] =
+    SparkEntry.queries.collect { case (n, q: StandingIndex.Served[_]) => n -> q.family }
 
   test("every standing-index serving query has a catalog entry") {
     // serving queries over a standing index, by naming convention; the
@@ -20,7 +22,15 @@ class IndexCatalogSpec extends AnyFunSuite {
     val serving = SparkEntry.queries.keySet.filter(q =>
       prefixes.exists(q.startsWith) || q.endsWith("_indexed") ||
         q.endsWith("_serve_only"))
-    val missing = serving -- IndexCatalog.byQuery.keySet
+    val missing = serving -- declared.keySet
     assert(missing.isEmpty, s"serving queries without a warm-up: $missing")
+  }
+
+  test("warming one query registers exactly the family it declares") {
+    StandingIndex.dropForTest(sf)
+    SparkEntry.warm(spark, sf, SparkEntry.select(Seq("sim_ann_ivfpq")))
+    val registered = declared.values.toSet
+      .filter(f => StandingIndex.registered(sf, f).isDefined).map(_.name)
+    assert(registered === Set(graft.operators.VectorIndex.PqSqrt.name))
   }
 }

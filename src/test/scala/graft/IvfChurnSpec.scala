@@ -44,7 +44,7 @@ class IvfChurnSpec extends SparkSpec {
     val t = graft.core.Tables(spark, sf)
     val odd = t.embeddings.filter(pmod(col("label"), lit(2)) === 1)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-    val rows = Similarity.annFilteredSqrt(spark, sf).collect()
+    val rows = SparkEntry.queries("sim_ann_filtered")(spark, sf).collect()
     assert(rows.nonEmpty, "the filtered serve must still find neighbors")
     // every served neighbor satisfies the predicate
     assert(rows.forall(r => odd(r.getAs[Long]("nid"))),

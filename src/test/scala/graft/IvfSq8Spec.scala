@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{Similarity, StandingIndex, VectorIndex}
 
 /** The composed IVF-SQ8 standing index (round-9 task 1): √N Lloyd
   * cells carrying SQ8 codes in the postings, candK-survivor exact
@@ -28,7 +28,8 @@ class IvfSq8Spec extends SparkSpec {
     // is exactly what annIvfSqrtK computes without codes. Any
     // disagreement means the codes or the probe list drifted.
     val n = graft.core.Tables(spark, sf).embeddings.count().toInt
-    val wide = Similarity.annIvfSq8(spark, sf, k = 5, candK = n)
+    val wide = VectorIndex.serve(spark, sf,
+        StandingIndex.ensure(spark, sf, VectorIndex.Sq8Sqrt), k = 5, candK = Some(n))
       .select(col("qid"), col("nid"), col("cos_e6"), col("rn"))
       .collect().toSeq
     val plain = Similarity.annIvfSqrtK(spark, sf, k = 5)
@@ -39,7 +40,7 @@ class IvfSq8Spec extends SparkSpec {
   }
 
   test("build audit pins the global code range and the sqrt cell count") {
-    val row = Similarity.ivfSq8Build(spark, sf).head()
+    val row = VectorIndex.buildAudit(spark, sf, VectorIndex.Sq8Sqrt).head()
     val t = graft.core.Tables(spark, sf)
     val nVecs = t.embeddings.count()
     val kExpected = math.ceil(math.sqrt(nVecs.toDouble)).toInt
@@ -59,8 +60,8 @@ class IvfSq8Spec extends SparkSpec {
   }
 
   test("serving from the standing index is deterministic across calls") {
-    val a = Similarity.annIvfSq8(spark, sf).collect().toSeq
-    val b = Similarity.annIvfSq8(spark, sf).collect().toSeq
+    val a = SparkEntry.queries("sim_ann_ivfsq8")(spark, sf).collect().toSeq
+    val b = SparkEntry.queries("sim_ann_ivfsq8")(spark, sf).collect().toSeq
     assert(a == b, "standing-index serving must be a pure read")
     assert(a.nonEmpty && a.forall(_.getAs[Long]("rn") <= 5))
   }

@@ -164,8 +164,9 @@ class PlanSpec extends SparkSpec {
       // (VectorIndex.serve) over the get-or-streamed standing snapshot;
       // same bounded kernel crosses as their lifecycle rows
       "stream_ivfsq8_serve_only", "stream_ivfpq_serve_only",
-      // r11: adaptive filtered serve = annFilteredSqrt at a computed
-      // width — same kernel cross; recall adds the ground-truth leg
+      // r11: adaptive filtered serve = the sim_ann_filtered serve at a
+      // computed width — same kernel cross; recall adds the ground-truth
+      // leg
       "sim_ann_filtered_adaptive", "sim_ann_filtered_adaptive_recall",
       // r11: IVF-PQ — centroid kernel cross at build and serve (probe
       // ranking); recall embeds the ground-truth cross

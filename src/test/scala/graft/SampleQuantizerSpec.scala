@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.VectorIndex
 
 /** Sample-trained √N quantizer (round-10 task 1): the Lloyd training
   * reads only the hash-gated 8·⌈√N⌉ sample, the full corpus is
@@ -18,7 +18,7 @@ class SampleQuantizerSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.01"
 
   test("build audit: sampling is real and postings cover the corpus") {
-    val audit = Similarity.ivfBuildSample(spark, sf).head()
+    val audit = VectorIndex.buildAudit(spark, sf, VectorIndex.Sample).head()
     val n = graft.core.Tables(spark, sf).embeddings.count()
     assert(audit.getAs[Long]("n_vecs") === n,
       "every vector must land in exactly one cell")
@@ -31,8 +31,8 @@ class SampleQuantizerSpec extends SparkSpec {
   test("sample-trained recall stays within family of the full-trained ceiling") {
     def mean(df: org.apache.spark.sql.DataFrame): Double =
       df.agg(avg(col("recall_e6"))).head().getDouble(0)
-    val sample = mean(Similarity.annSampleRecall(spark, sf))
-    val full = mean(Similarity.annSqrtRecall(spark, sf))
+    val sample = mean(SparkEntry.queries("sim_ann_recall_sample")(spark, sf))
+    val full = mean(SparkEntry.queries("sim_ann_recall_sqrt")(spark, sf))
     // the dial is nprobe, shared; the sample's centroid-quality loss
     // must not collapse recall (degenerate centroids — e.g. an empty
     // or skew-captured sample — would show up here first)

@@ -49,6 +49,8 @@ class ServeJobsSpec extends SparkSpec with TempDirs {
     n
   }
 
+  private def query(name: String): DataFrame = SparkEntry.queries(name)(spark, sf)
+
   private def answer(df: DataFrame): Seq[Row] =
     df.select(col("qid"), col("nid"), col("cos_e6"), col("rn")).collect().toSeq
 
@@ -59,21 +61,23 @@ class ServeJobsSpec extends SparkSpec with TempDirs {
   }
 
   test("the label-cell and filtered serves probe once") {
-    assert(warmJobs("annIndexed")(Similarity.annIndexed(spark, sf)) <= 10)
-    assert(Similarity.annIndexed(spark, sf).collect().toSeq ===
+    assert(warmJobs("sim_ann_indexed")(query("sim_ann_indexed")) <= 10)
+    assert(query("sim_ann_indexed").collect().toSeq ===
       Similarity.annIvfMultiprobe(spark, sf).collect().toSeq)
-    assert(warmJobs("annFilteredSqrt")(Similarity.annFilteredSqrt(spark, sf)) <= 10)
+    assert(warmJobs("sim_ann_filtered")(query("sim_ann_filtered")) <= 10)
   }
 
   test("the SQ8 and PQ serves probe once; a lossless cut equals annIvfSqrtK") {
-    assert(warmJobs("annIvfSq8")(Similarity.annIvfSq8(spark, sf)) <= 11)
-    assert(warmJobs("annIvfPq")(Similarity.annIvfPq(spark, sf)) <= 14)
+    assert(warmJobs("sim_ann_ivfsq8")(query("sim_ann_ivfsq8")) <= 11)
+    assert(warmJobs("sim_ann_ivfpq")(query("sim_ann_ivfpq")) <= 14)
     // candK ≥ every probed population: the rerank ranks all probed
     // members by exact cosine, with the query vector from the probe rows
     val n = graft.core.Tables(spark, sf).embeddings.count().toInt
     val plain = answer(Similarity.annIvfSqrtK(spark, sf))
-    assert(answer(Similarity.annIvfSq8(spark, sf, candK = n)) === plain)
-    assert(answer(Similarity.annIvfPq(spark, sf, candK = n)) === plain)
+    def lossless(family: VectorIndex.Family): DataFrame = VectorIndex.serve(spark, sf,
+      StandingIndex.ensure(spark, sf, family), candK = Some(n))
+    assert(answer(lossless(VectorIndex.Sq8Sqrt)) === plain)
+    assert(answer(lossless(VectorIndex.PqSqrt)) === plain)
   }
 
   test("indexed BM25 runs two jobs") {
